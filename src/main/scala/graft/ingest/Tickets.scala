@@ -128,8 +128,9 @@ object Tickets {
   /** J1 nested form — SURVEY §1.4's Ticket row: comments collected to an
     * ARRAY<STRUCT> ordered by (created_at, comment_id). sort_array (not
     * collect order) keeps the result deterministic under any shuffle. */
-  def bindComments(s: SparkSession, tickets: DataFrame): DataFrame = {
-    val flat = allComments(s, tickets)
+  def bindComments(s: SparkSession, tickets: DataFrame,
+      commentsDir: String = s"$FixturesDir/comments"): DataFrame = {
+    val flat = allComments(s, tickets, commentsDir)
       .select(col("ticket_id"),
         struct(col("created_at"), col("comment_id"), col("body")).as("c"))
       .groupBy(col("ticket_id"))
@@ -140,8 +141,9 @@ object Tickets {
   /** T6 corpus: one document per ticket — subject + every comment body in
     * (created_at, body) order, full cleanse chain (T1 unescape → T2 NFKC →
     * T4 line filter → T5 PII scrub). Never a driver-side global string. */
-  def corpus(s: SparkSession, tickets: DataFrame): DataFrame = {
-    val bodies = allComments(s, tickets)
+  def corpus(s: SparkSession, tickets: DataFrame,
+      commentsDir: String = s"$FixturesDir/comments"): DataFrame = {
+    val bodies = allComments(s, tickets, commentsDir)
       .select(col("ticket_id"), struct(col("created_at"), col("body")).as("c"))
       .groupBy(col("ticket_id"))
       .agg(array_join(transform(sort_array(collect_list(col("c"))),

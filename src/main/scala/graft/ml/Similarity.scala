@@ -767,9 +767,11 @@ object Similarity {
       cents, mSub, k, sub)
 
   /** Approximate distance: mSub table lookups + (mSub−1) adds, left fold
-    * in fixed subspace order so both engines produce identical doubles. */
-  private def pqAdcDist(mSub: Int) =
-    (0 until mSub).map(m => expr(s"t$m[c$m]")).reduce(_ + _)
+    * in fixed subspace order so both engines produce identical doubles.
+    * `get` makes the off-contract code −1 (all-NaN scores, see
+    * PqUtil.argminCode) a null distance; ANSI `t[c]` would throw. */
+  private[ml] def pqAdcDist(mSub: Int) =
+    (0 until mSub).map(m => expr(s"get(t$m, c$m)")).reduce(_ + _)
 
   private def pqAdcTopK(e: DataFrame,
       cents: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],

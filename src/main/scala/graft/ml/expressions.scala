@@ -78,7 +78,8 @@ object PqUtil {
     * the value the retired `array_position(sc, array_min(sc)) − 1`
     * expression returned in that case (ADVICE r20: the unclamped scan
     * returned k, an out-of-range code a downstream ADC lookup would
-    * index past). */
+    * index past). The ADC lookup (`Similarity.pqAdcDist`) reads −1 as a
+    * null distance; PqSpec pins both. */
   def argminCode(xs: ArrayData, cb: Array[Double], ss: Array[Double],
       k: Int, sub: Int): Int = {
     val n = math.min(xs.numElements(), sub)

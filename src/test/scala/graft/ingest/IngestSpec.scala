@@ -68,6 +68,32 @@ class IngestSpec extends AnyFunSuite {
     assert(flat == nested)
   }
 
+  test("J1/T6 bindComments and corpus read the comments directory they are given") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-comments")
+    try {
+      // a copy of the fixture comments without ticket 1001's file
+      new java.io.File(s"${Tickets.FixturesDir}/comments").listFiles()
+        .filter(_.getName != "1001_comments.json")
+        .foreach(f => java.nio.file.Files.copy(f.toPath, tmp.resolve(f.getName)))
+      def sizes(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("ticket_id"), size(col("comments"))).collect()
+          .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val fixture = sizes(Tickets.bindComments(spark, tickets))
+      val copied = sizes(Tickets.bindComments(spark, tickets, tmp.toString))
+      assert(fixture(1001L) > 1 && copied(1001L) == 1, "only the seeded comment is left")
+      assert(copied - 1001L == fixture - 1001L)
+      def docs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val fixtureDocs = docs(Tickets.corpus(spark, tickets))
+      val copiedDocs = docs(Tickets.corpus(spark, tickets, tmp.toString))
+      assert(copiedDocs(1001L) != fixtureDocs(1001L))
+      assert(copiedDocs - 1001L == fixtureDocs - 1001L)
+    } finally {
+      tmp.toFile.listFiles().foreach(_.delete())
+      tmp.toFile.delete()
+    }
+  }
+
   test("S3 sink round-trip: encoded shape survives write.json → read") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
     val nested = Tickets.bindComments(spark, tickets)

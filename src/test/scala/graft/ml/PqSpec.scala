@@ -92,4 +92,20 @@ class PqSpec extends AnyFunSuite {
       col("emb"), cs, ss).as("c")).head().getInt(0)
     assert(got == 1, s"tie must resolve to first minimal index, got $got")
   }
+  test("all-NaN scores give code -1, whose ADC lookup is null, not an error") {
+    // off-contract input: a NaN embedding makes every score NaN
+    val cs: IndexedSeq[IndexedSeq[Double]] =
+      IndexedSeq(IndexedSeq(1.0, 0.0), IndexedSeq(0.0, 1.0))
+    val ss = cs.map(_.map(x => x * x).sum)
+    import spark.implicits._
+    val df = Seq((1L, Array(Double.NaN, Double.NaN), Array(0.5, 0.5)))
+      .toDF("vec_id", "emb", "qemb")
+    val r = df.select(
+        VecFunctions.pq_argmin_code(col("emb"), cs, ss).as("c0"),
+        VecFunctions.pq_adc_table(col("qemb"), cs, ss).as("t0"))
+      .select(col("c0"), Similarity.pqAdcDist(1).as("adist"))
+      .head()
+    assert(r.getInt(0) == -1)
+    assert(r.isNullAt(1), s"ADC distance of code -1 must be null, got ${r.get(1)}")
+  }
 }
