@@ -1,20 +1,65 @@
 package graft.ml
 
+import breeze.linalg.{all, sum => bsum, DenseMatrix => BDM, DenseVector => BDV}
+import breeze.numerics.{exp, trigamma}
+import breeze.stats.distributions.{Gamma, RandBasis}
 import graft.Tables
 import graft.text.Cleanse
-import org.apache.spark.ml.clustering.{LDA, LDAModel}
+import org.apache.commons.math3.random.MersenneTwister
+import org.apache.spark.TaskContext
+import org.apache.spark.ml.attribute.AttributeGroup
+import org.apache.spark.ml.clustering.{GraftLdaBridge, LDA, LDAModel, LocalLDAModel}
 import org.apache.spark.ml.feature.CountVectorizerModel
+import org.apache.spark.mllib.clustering.{GraftLdaBridge => OldBridge}
+import org.apache.spark.mllib.linalg.{Vectors => OldVectors, Vector => OldVector}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.random.PoissonSampler
 
 /** LDA topic modeling (SURVEY.md §2.6 M2/M3/M5/M6) — the Spark-native
   * replacement for gensim `LdaMulticore` (LDA_logic.py:69-95, 338-341).
   *
-  * MLlib's online variational optimizer is the same algorithm family as
-  * LdaMulticore; seeds are fixed (M6 — the reference seeds from
-  * random.randint, LDA_logic.py:59-67, which is untestable; determinism is
-  * a correctness-gate requirement). All engine-only: topic-term weights are
+  * The model is online variational Bayes (Hoffman, Blei & Bach, NIPS
+  * 2010), the algorithm family of LdaMulticore, run by [[train]] exactly
+  * as MLlib's `OnlineLDAOptimizer` runs it under `LDA.fit`, but driven
+  * from a loop here so that each iteration is ONE Spark job:
+  *
+  *  - every task samples its partition as `RDD.sample(withReplacement =
+  *    true)` does (a `PoissonSampler` seeded by the i-th draw of the
+  *    iteration's sample seed), runs MLlib's own per-document E-step on
+  *    each sampled document that has a term, and returns its k × V
+  *    sufficient statistics, summed Dirichlet expectations and counts;
+  *    in the first iteration it also counts its rows, the corpus size D;
+  *  - the driver merges the partials in partition order (so the fit does
+  *    not depend on which task finishes first) and applies MLlib's lambda
+  *    and alpha updates with MLlib's step size; an iteration that samples
+  *    nothing changes nothing and does not count, as at MLlib.
+  *
+  * MLlib spends three jobs per iteration (the sample's `isEmpty`, and a
+  * two-stage tree aggregation) plus two at start (`count`, `first`).
+  * Here the vocabulary size V comes from the features column's
+  * `AttributeGroup` metadata (CountVectorizer sets it); only without it
+  * does one `take(1)` job read V from a row. The seeds are MLlib's, drawn
+  * in MLlib's order, so the fitted `LocalLDAModel` (same uid, params and
+  * parent as `LDA.fit`'s) is bit-identical to `LDA.fit`'s (LdaOnlineSpec).
+  * The inputs `LDA.fit` rejects are rejected, and so are a frame with no
+  * rows and rows whose size is not V.
+  *
+  * Persistence follows `ml.LDA`: the converted (id, vector) RDD is
+  * persisted only when the input Dataset is not cached, and unpersisted
+  * (blocking) before `train` returns. The `private` MLlib pieces are
+  * reached through the two `GraftLdaBridge` objects in
+  * `org.apache.spark.{ml,mllib}.clustering`. Driver memory per iteration:
+  * a few k × V matrices (lambda, its expectation, the update's
+  * temporaries) plus the task results, at most one k × V partial per
+  * partition — P × k × V × 8 bytes, 3 × 6 × V × 8 bytes at most in the
+  * benchmark's sweep (k ≤ 6 on 3 partitions).
+  *
+  * Seeds are fixed (M6 — the reference seeds from random.randint,
+  * LDA_logic.py:59-67, which is untestable; determinism is a
+  * correctness-gate requirement). All engine-only: topic-term weights are
   * optimizer-specific, never DuckDB-oracle-gated (SURVEY §5.2).
   */
 object Lda {
@@ -45,9 +90,171 @@ object Lda {
   }
 
   def train(features: DataFrame, k: Int, maxIter: Int = MaxIter): LDAModel =
-    new LDA().setK(k).setMaxIter(maxIter).setSeed(Seed)
-      .setFeaturesCol("features")
-      .fit(features)
+    fitOnline(new LDA().setK(k).setMaxIter(maxIter).setSeed(Seed)
+      .setFeaturesCol("features"), features)
+
+  /** `OnlineLDAOptimizer`'s gamma shape, which `ml.LDA` leaves at its
+    * default (as it leaves sampling with replacement on). */
+  private val GammaShape = 100.0
+
+  /** One task's E-step output: the k × V sufficient statistics (column-
+    * major, null when no sampled document had a term), the summed
+    * Dirichlet expectations of the documents' gammas, the sampled and the
+    * non-empty sampled document counts, and the partition's row count
+    * (counted in the first iteration only, -1 otherwise). */
+  private final case class EStep(stat: Array[Double], logphat: Array[Double],
+      sampled: Long, nonEmpty: Long, rows: Long)
+
+  /** `lda.fit(dataset)` for `lda`'s default online optimizer, one Spark
+    * job per iteration (see the object doc). Same checks, same model, same
+    * numbers: each step below names the MLlib code it stands for. */
+  private[ml] def fitOnline(lda: LDA, dataset: DataFrame): LocalLDAModel = {
+    lda.transformSchema(dataset.schema)
+    val featuresCol = lda.getFeaturesCol
+    val k = lda.getK
+    val fraction = lda.getSubsamplingRate
+    val tau0 = lda.getLearningOffset
+    val kappa = lda.getLearningDecay
+    val optimizeAlpha = lda.getOptimizeDocConcentration
+    val docs = GraftLdaBridge.trainingRdd(dataset, featuresCol).setName("training instances")
+    val persist = dataset.storageLevel == StorageLevel.NONE
+    if (persist) docs.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val sc = docs.sparkContext
+      val empty = s"LDA features column '$featuresCol' has no rows"
+      // V from CountVectorizer's metadata; MLlib reads the first row's size
+      val metaSize = AttributeGroup.fromStructField(dataset.schema(featuresCol)).size
+      val vocabSize =
+        if (metaSize >= 0 && lda.getMaxIter > 0) metaSize
+        else {
+          val first = docs.take(1)
+          require(first.nonEmpty, empty)
+          if (metaSize >= 0) metaSize else first.head._2.size
+        }
+      // OnlineLDAOptimizer.initialize: alpha and eta default to 1/k
+      // (transformSchema has checked a set alpha's length and signs)
+      val alpha0 =
+        if (lda.isSet(lda.docConcentration)) lda.getDocConcentration else Array(1.0 / k)
+      var alpha = if (alpha0.length == 1) BDV.fill(k)(alpha0(0)) else BDV(alpha0)
+      val eta =
+        if (lda.isSet(lda.topicConcentration)) lda.getTopicConcentration else 1.0 / k
+      // MLlib draws (gamma seed, then per iteration sample seed and, if the
+      // sample is non-empty, E-step seed, then the model seed) from one
+      // Random. The E-step seed must reach the tasks before the job tells
+      // whether the sample is empty, so it is drawn up front and, when the
+      // sample is empty, handed back as the next draw.
+      val rng = new java.util.Random(lda.getSeed)
+      var pending: Option[Long] = None
+      def draw(): Long = pending match {
+        case Some(x) => pending = None; x
+        case None => rng.nextLong()
+      }
+      // OnlineLDAOptimizer.getGammaMatrix
+      val gamma = new Gamma(GammaShape, 1.0 / GammaShape)(
+        new RandBasis(new MersenneTwister(draw())))
+      val lambda: BDM[Double] = new BDM[Double](vocabSize, k, gamma.sample(k * vocabSize).toArray).t
+      var corpusSize = -1L
+      var iteration = 0
+      for (_ <- 0 until lda.getMaxIter) {
+        val sampleSeed = draw()
+        val eSeed = draw()
+        // RDD.sample(withReplacement = true): partition i's PoissonSampler
+        // takes the i-th draw of new Random(sampleSeed)
+        val partSeeds = {
+          val r = new java.util.Random(sampleSeed)
+          Array.fill(docs.getNumPartitions)(r.nextLong())
+        }
+        val expElogbeta = exp(OldBridge.dirichletExpectation(lambda)).t
+        val expElogbetaBc = sc.broadcast(expElogbeta)
+        val alphaNow = alpha
+        val countRows = corpusSize < 0
+        val eStep = (ctx: TaskContext, rows: Iterator[(Long, OldVector)]) => {
+          val part = ctx.partitionId()
+          var n = 0L
+          val seen = if (!countRows) rows else rows.map { r =>
+            require(r._2.size == vocabSize,
+              s"LDA features column '$featuresCol': a row has size ${r._2.size}, expected $vocabSize")
+            n += 1
+            r
+          }
+          val sampler = new PoissonSampler[(Long, OldVector)](fraction)
+          sampler.setSeed(partSeeds(part))
+          var stat: Array[Double] = null
+          val logphat = if (optimizeAlpha) new Array[Double](k) else null
+          var sampled = 0L
+          var nonEmpty = 0L
+          // submitMiniBatch's partition function, per sampled document
+          sampler.sample(seen).foreach { case (_, termCounts) =>
+            sampled += 1
+            if (termCounts.numNonzeros > 0) {
+              nonEmpty += 1
+              val (gammad, sstats, ids) = OldBridge.variationalTopicInference(
+                termCounts, expElogbetaBc.value, alphaNow, GammaShape, k, eSeed + part)
+              if (stat == null) stat = new Array[Double](k * vocabSize)
+              var j = 0
+              ids.foreach { id =>
+                var t = 0
+                while (t < k) { stat(id * k + t) += sstats(t, j); t += 1 }
+                j += 1
+              }
+              if (logphat != null) {
+                val e = OldBridge.dirichletExpectation(gammad)
+                var t = 0
+                while (t < k) { logphat(t) += e(t); t += 1 }
+              }
+            }
+          }
+          EStep(stat, logphat, sampled, nonEmpty, if (countRows) n else -1L)
+        }
+        val parts = sc.runJob(docs, eStep)
+        expElogbetaBc.destroy()
+        if (countRows) {
+          corpusSize = parts.map(_.rows).sum
+          require(corpusSize > 0, empty)
+        }
+        if (parts.exists(_.sampled > 0)) {
+          // submitMiniBatch: partials merged in partition order
+          iteration += 1
+          val nonEmptyN = parts.map(_.nonEmpty).sum
+          if (nonEmptyN > 0) {
+            val statsSum = new BDM[Double](k, vocabSize, parts.iterator.map(_.stat)
+              .filter(_ != null).reduce { (a, b) =>
+                var i = 0
+                while (i < a.length) { a(i) += b(i); i += 1 }
+                a
+              })
+            val batchResult = statsSum *:* expElogbeta.t
+            val batchSize = (fraction * corpusSize).ceil.toInt
+            // updateLambda, with rho() as MLlib's step size
+            val rho = math.pow(tau0 + iteration, -kappa)
+            lambda := (1 - rho) * lambda +
+              rho * (batchResult * (corpusSize.toDouble / batchSize.toDouble) + eta)
+            if (optimizeAlpha) {
+              val logphat = BDV.zeros[Double](k)
+              parts.foreach(p => logphat += BDV(p.logphat))
+              logphat /= nonEmptyN.toDouble
+              // updateAlpha
+              val a = alpha.copy
+              val n = nonEmptyN.toDouble
+              val gradf = n * (-OldBridge.dirichletExpectation(a) + logphat)
+              val c = n * trigamma(bsum(a))
+              val q = -n * trigamma(a)
+              val b = bsum(gradf / q) / (1D / c + bsum(1D / q))
+              val dalpha = -(gradf - b) / q
+              if (all((rho * dalpha + a) >:> 0D)) {
+                a :+= rho * dalpha
+                alpha = a
+              }
+            }
+          }
+        } else pending = Some(eSeed)
+      }
+      // OnlineLDAOptimizer.getLDAModel, then LDA.fit's wrapping
+      val old = OldBridge.localModel(lambda, OldVectors.dense(alpha.toArray), eta,
+        GammaShape, draw())
+      GraftLdaBridge.localModel(lda, vocabSize, old, dataset.sparkSession)
+    } finally if (persist) docs.unpersist(blocking = true)
+  }
 
   /** M5: topics described as (topic, rank, term, weight). */
   def describe(s: SparkSession, model: LDAModel,
@@ -76,7 +283,8 @@ object Lda {
 
   /** M3 model-selection sweep (reference trains k=1..19 per click,
     * LDA_logic.py:338-350): k=2..6 here, scoring each k by log-likelihood,
-    * log-perplexity and c_v coherence. Sweep models train at half MaxIter
+    * log-perplexity (one likelihood pass per k, one token count per sweep)
+    * and c_v coherence. Sweep models train at half MaxIter
     * (model *selection* needs ranking stability, not convergence), and all
     * ks' topics go through ONE combined coherence computation — one corpus
     * co-occurrence pass instead of one per k. */
@@ -96,8 +304,13 @@ object Lda {
     val cohByK = Coherence.cv(s, tokensDf, trained.flatMap(_._3))
       .select(element_at(kOf, col("topic").cast("int") + 1).as("k"), col("coherence"))
       .groupBy(col("k")).agg(avg(col("coherence")).as("coherence_cv"))
+    // MLlib's logPerplexity is -logLikelihood / corpus token count, and it
+    // recomputes both: one likelihood pass per k and one token count here
+    val tokens = feats.select(col("features")).rdd
+      .map(_.getAs[org.apache.spark.ml.linalg.Vector](0).toArray.sum).sum()
     val scores = trained.map { case (k, m, _) =>
-      (k, m.logLikelihood(feats), m.logPerplexity(feats))
+      val ll = m.logLikelihood(feats)
+      (k, ll, -ll / tokens)
     }.toDF("k", "log_likelihood", "log_perplexity")
     feats.unpersist()
     scores.join(cohByK, Seq("k"), "left_outer").orderBy(col("k"))

@@ -4,8 +4,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` Column↔Expression conversion (the classic
   * extension-point pattern for libraries that add native Catalyst
-  * expressions). Nothing else in this repo lives outside the `graft`
-  * namespace. */
+  * expressions). The only other program code outside the `graft`
+  * namespace is the pair of `GraftLdaBridge` objects in
+  * `org.apache.spark.ml.clustering` and `org.apache.spark.mllib.clustering`
+  * (MLlib's online-LDA internals for `graft.ml.Lda`). */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)

@@ -107,6 +107,29 @@ class MlSpec extends AnyFunSuite {
     }
   }
 
+  test("m_lda_sweep scores each k once: the LDA.fit-era log_likelihood and log_perplexity, bit for bit") {
+    val got = Lda.m_lda_sweep(spark, dir).collect()
+      .map(r => (r.getAs[Int]("k"), r.getAs[Double]("log_likelihood"), r.getAs[Double]("log_perplexity")))
+      .toSeq
+    // the values the sweep returned when it fitted with LDA.fit and called
+    // logLikelihood and logPerplexity per k (sf0.001)
+    val pinned = Seq(
+      (2, -96226.36197812499, 3.44415913161262),
+      (3, -96941.54449381435, 3.4697571313867477),
+      (4, -97452.21151803146, 3.4880350591657345),
+      (5, -97769.03475889732, 3.4993748795195723),
+      (6, -97811.89003998452, 3.5009087669560297))
+    assert(got == pinned)
+    // and the same through MLlib's own fit and scoring calls
+    val (feats, _) = Lda.prepare(spark, dir)
+    val mllib = (2 to 6).map { k =>
+      val m = new org.apache.spark.ml.clustering.LDA().setK(k).setMaxIter(Lda.MaxIter / 2)
+        .setSeed(Lda.Seed).setFeaturesCol("features").fit(feats)
+      (k, m.logLikelihood(feats), m.logPerplexity(feats))
+    }
+    assert(got == mllib)
+  }
+
   test("M7 doc-topic distributions: one row per doc, valid simplex, deterministic") {
     val rows = Lda.m_lda_doc_topics(spark, dir).collect()
     val nDocs = graft.Tables.documents(spark, dir).count()
