@@ -117,8 +117,8 @@ object Bench {
       .config("spark.ui.enabled", "false")
       // ui.enabled=false does NOT stop the app-status listeners: they
       // retain up to 1000 executions / 1000 jobs of state, and a
-      // 90-query bench emits thousands (the component fixpoints alone
-      // are ~50 jobs each). The growing store throttles the listener
+      // 90-query bench emits thousands (the distributed fixpoints run
+      // one to a few jobs per round). The growing store throttles the listener
       // bus, which many-small-job queries feel hardest — q70 measured
       // 7.4s isolated vs 24.6s at the end of a full sequence. Keep the
       // retained state tiny; the bench needs none of it.
@@ -498,7 +498,8 @@ object Bench {
       // INVARIANT: this global unpersist is safe ONLY because Bench runs
       // queries strictly sequentially on a private SparkSession — with any
       // concurrent query it would truncate a live checkpoint's lineage
-      // (see componentsWithRounds' per-loop tracking for the safe form).
+      // (the safe form releases only the RDDs a call persisted itself, as
+      // Similarity.pinnedRdds callers and componentsWithRounds do).
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))

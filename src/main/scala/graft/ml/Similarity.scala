@@ -1505,7 +1505,7 @@ object Similarity {
     // input in one pass — a distinct here would just add a shuffle
     // adaptive since round 13: the union's pair graph is thresholded-
     // candidate output (metadata-scale on a well-dedup'd corpus; the
-    // local path saves ~6 fixpoint jobs of scheduling), with the
+    // local path saves one fixpoint job per round), with the
     // distributed fixpoint automatic above 2^20 edges. q55 keeps the
     // PURE fixpoint so its cost stays a bench-visible line.
     val labels = componentsAdaptive(
@@ -2017,22 +2017,25 @@ object Similarity {
     * edge set converges to one star per component centered on the
     * component's minimum id in O(log²) rounds — unlike plain min-label
     * propagation, whose O(diameter) rounds made a 50-round cap reachable
-    * on adversarial chains, and whose cap exit silently mislabeled them
-    * (round-4 "what's wrong" item 1). Per round: two groupBy-min aggs +
-    * two equi-joins, all hash-partitioned on node id; the driver holds
-    * only the convergence counter. Convergence is now ASSERTED, never
-    * truncated: MaxRounds = 64 covers graphs past 2^64 nodes with margin,
-    * so hitting it means a bug, not big data. */
+    * on adversarial chains, and whose cap exit silently mislabeled them.
+    * Each round is ONE Spark job over per-node adjacency RDDs (see
+    * [[componentsWithRounds]]) whose tasks also report whether their
+    * partition changed, so convergence is exact with no extra job; the
+    * driver holds only one flag per partition. Convergence is ASSERTED,
+    * never truncated: MaxRounds = 64 covers graphs past 2^64 nodes with
+    * margin, so hitting it means a bug, not big data. The endpoint
+    * columns must be integral; rows with a null endpoint and self-loops
+    * are dropped, so a node only they touch gets no label. */
   def components(pairs: DataFrame): DataFrame = componentsWithRounds(pairs)._1
 
   /** ADAPTIVE connected components (round-13, the q70 shave): the
-    * distributed large-star/small-star fixpoint pays ~6 driver jobs of
-    * fixed scheduling cost per call — the right price for a corpus-scale
-    * edge set, pure overhead for the metadata-scale pair graphs a
-    * THRESHOLDED candidate generator emits (q70's funnel measured 220
-    * pairs at sf0.1 spending ~2.4 s in fixpoint scheduling). This is the
-    * GraphFrames-style local fallback: ONE job counts the canonical edge
-    * set; at or under `maxLocalEdges` (default 2^20 edges = 16 MB of
+    * distributed fixpoint pays one driver job of fixed scheduling cost
+    * per round (~6 on a typical pair graph) — the right price for a
+    * corpus-scale edge set, pure overhead for the metadata-scale pair
+    * graphs a THRESHOLDED candidate generator emits (q70's funnel measured
+    * 220 pairs at sf0.1 spending ~2.4 s in fixpoint scheduling). This is
+    * the GraphFrames-style local fallback: ONE job counts the canonical
+    * edge set; at or under `maxLocalEdges` (default 2^20 edges = 16 MB of
     * longs — driver metadata scale, the same budget as a broadcast join
     * side) the edges collect to a driver union-find whose roots are
     * component minima; above it, the distributed fixpoint runs unchanged.
@@ -2040,14 +2043,11 @@ object Similarity {
     * so the threshold is a pure latency knob — ComponentsSpec asserts
     * equality on both sides of it. Used by the multi-stage consumers
     * (q70's funnel pass, q92's refine) where the component pass is one
-    * stage of many; q55/q73 keep the pure fixpoint so its cost stays a
+    * stage of many; q55 keeps the pure fixpoint so its cost stays a
     * bench-visible line. */
   private[graft] def componentsAdaptive(pairs: DataFrame,
       maxLocalEdges: Long = 1L << 20): DataFrame = {
-    val init = pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-        least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+    val init = canonicalEdges(pairs).distinct().localCheckpoint()
     val n = init.count() // free: counts the just-materialized checkpoint
     val out = if (n > maxLocalEdges) {
       componentsWithRounds(
@@ -2078,10 +2078,8 @@ object Similarity {
         val root = find(id)
         org.apache.spark.sql.Row(id, root, id == root)
       }
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id LONG, component LONG, is_canonical BOOLEAN")
       spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+        spark.sparkContext.parallelize(rows.toSeq, 1), LabelSchema)
         .localCheckpoint() // pinned, matching components()' contract
     }
     pinnedRdds(init).foreach(_.unpersist(blocking = false))
@@ -2105,119 +2103,185 @@ object Similarity {
 
   val MaxRounds = 64
 
-  /** (labels, rounds-to-converge) — rounds exposed for ComponentsSpec's
-    * O(log) convergence assertion on a long chain. */
-  private[graft] def componentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
-    // canonical orientation: (u, v) with u > v, deduped
-    // localCheckpoint (not cache) each round: star ops reference their
-    // input ~6 times, so the composed logical plan grows 6^rounds —
-    // Catalyst ANALYSIS of the tree becomes the bottleneck long before
-    // execution does. Checkpointing truncates lineage to a constant-size
-    // LogicalRDD per round (on a cluster: reliable checkpoint to the DFS).
-    // Every localCheckpoint below caches an RDD; without cleanup a bench
-    // loop leaks one per round per run, and the accumulated block-manager
-    // debt quintupled q55's time 70 queries into a bench sequence. Track
-    // exactly the RDDs THIS loop checkpointed — each checkpointed Dataset's
-    // plan is a LogicalRDD wrapping the persisted RDD — and drop them once
-    // the result is pinned. (A global persistent-RDD set-diff would also
-    // unpersist RDDs a concurrent query on the shared session persisted
-    // in the meantime, which is fatal for its truncated lineage.)
-    val loopRdds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def tracked(df: DataFrame): DataFrame = { loopRdds ++= pinnedRdds(df); df }
-    val init = tracked(pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-        least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint())
-    // Commutative set fingerprint (cardinality, XOR of row hashes): equal
-    // fingerprints on consecutive rounds almost certainly mean equal edge
-    // sets (both are distinct; a false match needs a 64-bit XOR collision
-    // at equal cardinality). The per-round convergence probe is then a
-    // map-side-partial aggregate over NEXT alone — no union, no groupBy
-    // re-shuffle of both edge sets (the round-7 verdict's bench-variance
-    // item: each fixpoint round's driver-job weight compounds scheduling
-    // noise). Convergence is still EXACTLY asserted: a fingerprint match
-    // triggers the one-shot set-equality check below, so a collision can
-    // only cost one extra round, never a wrong exit.
-    def fingerprint(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var edges = init
-    var prevFp = fingerprint(init)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < MaxRounds) {
-      // LAZY checkpoint: the fingerprint probe below is the round's only
-      // job — it materializes next's cache as a side effect, instead of
-      // paying one checkpoint job + one comparison job per round.
-      // (Measured dead end, recorded so it isn't retried: TWO star
-      // contractions per materialization — halving checkpoint/check
-      // overhead — benched consistently SLOWER at sf0.1 (fixpoint trio
-      // 19.8s → 22.8/23.7s): the doubled per-job plan depth costs more
-      // than the fixed costs it saves.)
-      val next = tracked(smallStar(largeStar(edges)).localCheckpoint(eager = false))
-      val fp = fingerprint(next)
-      if (fp == prevFp) {
-        // exact set equality in ONE job (both sides are distinct): tag
-        // +1/-1, any group summing nonzero is a difference either way
-        converged = edges.select(col("u"), col("v"), lit(1).as("tag"))
-          .union(next.select(col("u"), col("v"), lit(-1).as("tag")))
-          .groupBy(col("u"), col("v")).agg(sum(col("tag")).as("d"))
-          .filter(col("d") =!= 0).isEmpty
+  private val LabelSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id LONG, component LONG, is_canonical BOOLEAN")
+
+  /** The canonical edges of a pair list: (u, v) = (greatest, least) of
+    * (doc_a, doc_b) as LONG, self-loops and rows with a null endpoint
+    * dropped (greatest/least skip a null, so such a row reads u = v or
+    * null), duplicates kept. The endpoints must be integral: a fractional
+    * id would be silently truncated by the cast. */
+  private def canonicalEdges(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
+    Seq("doc_a", "doc_b").foreach { c =>
+      pairs.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType => ()
+        case t => throw new IllegalArgumentException(
+          s"components: pair column $c must be integral, got ${t.sql}")
       }
-      prevFp = fp
-      edges = next
-      rounds += 1
     }
-    require(converged,
-      s"large-star/small-star did not converge in $MaxRounds rounds — " +
-        "impossible for any finite graph; investigate input")
-    // at the fixpoint every edge is (member, component-min)
-    val nodes = init
-      .select(explode(array(col("u"), col("v"))).as("doc_id")).distinct()
-    val labels = nodes
-      .join(edges.select(col("u").as("doc_id"), col("v").as("label")),
-        Seq("doc_id"), "left")
-      .groupBy(col("doc_id"))
-      .agg(coalesce(min(col("label")), first(col("doc_id"))).as("component"))
-      .select(col("doc_id"), col("component"),
-        (col("doc_id") === col("component")).as("is_canonical"))
-      // eagerly pin the (tiny, one-row-per-node) label table so every
-      // loop checkpoint can be dropped before this returns — callers see
-      // a plan with no reference to the fixpoint's intermediate state
-      .localCheckpoint()
-    loopRdds.foreach(_.unpersist(blocking = false))
-    (labels, rounds)
-  }
-
-  /** Large-star: every node u connects its strictly-larger neighbors to
-    * m(u) = min(N(u) ∪ {u}). Input/output edges are canonically oriented
-    * (first col > second). */
-  private def largeStar(edges: DataFrame): DataFrame = {
-    val nbrs = edges.select(col("u").as("x"), col("v").as("y"))
-      .unionByName(edges.select(col("v").as("x"), col("u").as("y")))
-    val m = nbrs.groupBy(col("x")).agg(min(col("y")).as("mn"))
-      .select(col("x"), least(col("mn"), col("x")).as("m"))
-    nbrs.join(m, "x")
-      .filter(col("y") > col("x"))
-      .select(col("y").as("u"), col("m").as("v"))
+    val (a, b) = (col("doc_a").cast(LongType), col("doc_b").cast(LongType))
+    pairs.select(greatest(a, b).as("u"), least(a, b).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
   }
 
-  /** Small-star: every node u connects its smaller-or-equal neighbors
-    * (canonical edges already point large→small) plus itself to
-    * m(u) = min of those neighbors. */
-  private def smallStar(edges: DataFrame): DataFrame = {
-    val m = edges.groupBy(col("u")).agg(min(col("v")).as("m"))
-    val viaNbr = edges.join(m, "u")
-      .select(col("v").as("u2"), col("m").as("v2"))
-    val self = m.select(col("u").as("u2"), col("m").as("v2"))
-    viaNbr.unionByName(self)
-      .filter(col("u2") =!= col("v2"))
-      .select(col("u2").as("u"), col("v2").as("v"))
-      .distinct()
+  /** (labels, rounds-to-converge) — rounds exposed for ComponentsSpec's
+    * O(log) convergence assertion on a long chain.
+    *
+    * The state is each node's sorted distinct neighbors in the undirected
+    * edge set, hash-partitioned on the node into `defaultParallelism`
+    * partitions (the core count AQE coalesces these tiny shuffles to),
+    * one [[AdjacencyBlock]] per partition. One round is ONE job of three
+    * stages and no Catalyst plan:
+    *  1. large-star, on the state's partitions: node x with
+    *     m = min(x, N(x)) emits (y, m) for every neighbor y > x;
+    *  2. small-star, after a shuffle on y: node u with m' = the least
+    *     value it received emits {v, m'} for every other received v and
+    *     {u, m'}, both orientations;
+    *  3. a shuffle on the node rebuilds the new state's partition, zipped
+    *     (same partitioner: a narrow dependency) with the previous state's
+    *     partition; each task returns whether its partition is unchanged.
+    * Every partition unchanged ⇔ the edge set is unchanged, so the exit
+    * test is exact. Each node's output depends only on the sorted,
+    * de-duplicated values it receives, so shuffle-block arrival order and
+    * task retries cannot change a result. The first round's job also
+    * builds the initial state from the canonical edges.
+    *
+    * Each state is persisted in memory with its lineage intact (a lost
+    * block recomputes from the round's shuffle files, where a lost
+    * localCheckpoint block would not); state r−2 is dropped once round r
+    * is done, and every loop RDD is unpersisted (blocking) before this
+    * returns. A partition's arcs are grouped in task memory, as its
+    * cached state is held. At the fixpoint each node's label is
+    * min(x, N(x)): the center's neighbors are all larger, every other
+    * member's only neighbor is the center. The labels are eagerly pinned
+    * (one more job), so callers see a plan with no reference to the
+    * loop's state. */
+  private[graft] def componentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
+    import org.apache.spark.HashPartitioner
+    import org.apache.spark.rdd.{RDD, ShuffledRDD}
+    import org.apache.spark.storage.StorageLevel
+    val spark = pairs.sparkSession
+    val part = new HashPartitioner(spark.sparkContext.defaultParallelism)
+    val loopRdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def grouped(arcs: RDD[(Long, Long)]): RDD[AdjacencyBlock] =
+      new ShuffledRDD[Long, Long, Long](arcs, part).setSerializer(LongPairSerializer)
+        .mapPartitions(it => Iterator.single(AdjacencyBlock(it)), preservesPartitioning = true)
+    def adjacency(arcs: RDD[(Long, Long)]): RDD[AdjacencyBlock] = {
+      val s = grouped(arcs).persist(StorageLevel.MEMORY_ONLY)
+      loopRdds += s
+      s
+    }
+    try {
+      var state = adjacency(canonicalEdges(pairs).queryExecution.toRdd
+        .flatMap { r => val (u, v) = (r.getLong(0), r.getLong(1)); Iterator((u, v), (v, u)) })
+      var previous: RDD[AdjacencyBlock] = null
+      var rounds = 0
+      var converged = false
+      while (!converged && rounds < MaxRounds) {
+        val largeStar = state.flatMap(_.nodesWithNeighbors.flatMap { case (x, n) =>
+          val m = math.min(x, n(0))
+          n.iterator.dropWhile(_ < x).map(y => (y, m))
+        })
+        val smallStar = grouped(largeStar).flatMap(_.nodesWithNeighbors.flatMap { case (u, vs) =>
+          val m = vs(0)
+          (vs.iterator.drop(1) ++ Iterator.single(u)).flatMap(v => Iterator((v, m), (m, v)))
+        })
+        val next = adjacency(smallStar)
+        // the round's one job: builds and caches next, and compares it
+        converged = next.zipPartitions(state) { (a, b) => Iterator.single(a.next().sameAs(b.next())) }
+          .collect().forall(identity)
+        if (previous != null) {
+          previous.unpersist(blocking = true)
+          loopRdds -= previous
+        }
+        previous = state
+        state = next
+        rounds += 1
+      }
+      require(converged,
+        s"large-star/small-star did not converge in $MaxRounds rounds — " +
+          "impossible for any finite graph; investigate input")
+      val labels = spark.createDataFrame(state.flatMap(_.nodesWithNeighbors.map { case (x, n) =>
+        val c = math.min(x, n(0))
+        org.apache.spark.sql.Row(x, c, x == c)
+      }), LabelSchema).localCheckpoint()
+      (labels, rounds)
+    } finally loopRdds.foreach(_.unpersist(blocking = true))
+  }
+
+  /** One partition of the components state in compressed-sparse-row form:
+    * `nodes` ascending, and node i's sorted distinct neighbors are
+    * `nbrs(offsets(i) until offsets(i + 1))`. Three primitive arrays, so
+    * caching a partition costs no per-object size estimation. */
+  private final class AdjacencyBlock(val nodes: Array[Long], val offsets: Array[Int],
+      val nbrs: Array[Long]) extends Serializable {
+    def nodesWithNeighbors: Iterator[(Long, Array[Long])] = nodes.indices.iterator
+      .map(i => (nodes(i), java.util.Arrays.copyOfRange(nbrs, offsets(i), offsets(i + 1))))
+    def sameAs(o: AdjacencyBlock): Boolean = java.util.Arrays.equals(nodes, o.nodes) &&
+      java.util.Arrays.equals(offsets, o.offsets) && java.util.Arrays.equals(nbrs, o.nbrs)
+  }
+
+  private object AdjacencyBlock {
+    /** Groups (node, value) arcs by node: sorted nodes, each with its
+      * sorted distinct values, whatever order the arcs arrive in. */
+    def apply(arcs: Iterator[Product2[Long, Long]]): AdjacencyBlock = {
+      import scala.collection.mutable.{ArrayBuilder, LongMap}
+      val byNode = LongMap.empty[ArrayBuilder.ofLong]
+      arcs.foreach(a => byNode.getOrElseUpdate(a._1, new ArrayBuilder.ofLong) += a._2)
+      val nodes = byNode.keysIterator.toArray
+      java.util.Arrays.sort(nodes)
+      val offsets = new Array[Int](nodes.length + 1)
+      val nbrs = new ArrayBuilder.ofLong
+      var i = 0
+      while (i < nodes.length) {
+        val vs = byNode(nodes(i)).result()
+        java.util.Arrays.sort(vs)
+        var j = 0
+        while (j < vs.length) {
+          if (j == 0 || vs(j) != vs(j - 1)) { nbrs += vs(j); offsets(i + 1) += 1 }
+          j += 1
+        }
+        offsets(i + 1) += offsets(i)
+        i += 1
+      }
+      new AdjacencyBlock(nodes, offsets, nbrs.result())
+    }
+  }
+
+  /** Shuffle serializer for the loop's (Long, Long) records: a key or
+    * value is 8 raw bytes, where Java serialization of each Tuple2 costs
+    * microseconds of reflection. Shuffle streams only. */
+  private object LongPairSerializer
+      extends org.apache.spark.serializer.Serializer with Serializable {
+    import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
+    import org.apache.spark.serializer.{DeserializationStream, SerializationStream,
+      SerializerInstance}
+    import scala.reflect.ClassTag
+
+    override def newInstance(): SerializerInstance = new SerializerInstance {
+      private def unsupported =
+        throw new UnsupportedOperationException("LongPairSerializer: shuffle streams only")
+      override def serialize[T: ClassTag](t: T): java.nio.ByteBuffer = unsupported
+      override def deserialize[T: ClassTag](bytes: java.nio.ByteBuffer): T = unsupported
+      override def deserialize[T: ClassTag](bytes: java.nio.ByteBuffer,
+          loader: ClassLoader): T = unsupported
+      override def serializeStream(s: OutputStream): SerializationStream =
+        new SerializationStream {
+          private val out = new DataOutputStream(s)
+          override def writeObject[T: ClassTag](t: T): SerializationStream = {
+            out.writeLong(t.asInstanceOf[Long]); this
+          }
+          override def flush(): Unit = out.flush()
+          override def close(): Unit = out.close()
+        }
+      override def deserializeStream(s: InputStream): DeserializationStream =
+        new DeserializationStream {
+          private val in = new DataInputStream(s)
+          override def readObject[T: ClassTag](): T = in.readLong().asInstanceOf[T]
+          override def close(): Unit = in.close()
+        }
+    }
   }
 
   // ------------------------------------------------------------- registry

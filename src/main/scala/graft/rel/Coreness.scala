@@ -23,8 +23,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * results: everything is exact integers.
   *
   * Rounds are CAPPED at [[Rounds]] (the depth the oracle replays in SQL)
-  * with a fingerprint-probe early exit (the q73 `componentsWithRounds`
-  * pattern): each round's lazy checkpoint is materialized by a map-side
+  * with a fingerprint-probe early exit (`hIndexWithRounds` below): each
+  * round's lazy checkpoint is materialized by a map-side
   * (count, bit_xor(xxhash64)) probe, and a probe match — confirmed by
   * one exact set-equality job, so a 64-bit collision can only cost an
   * extra round, never a wrong exit — stops the loop. Because the H-index

@@ -74,7 +74,7 @@ object Graph {
 
   /** The exact-integer power iteration over a SYMMETRIC (src, dst) edge
     * list (every node must appear as a src — symmetry guarantees it and
-    * rules out dangling mass), with the q73 fingerprint-probe early
+    * rules out dangling mass), with a fingerprint-probe early
     * exit: each round's lazy checkpoint is materialized by a map-side
     * (count, bit_xor(xxhash64)) probe, and a probe match — confirmed by
     * an exact set-equality job, so a collision can only cost one extra

@@ -1,19 +1,37 @@
 package graft.ml
 
 import graft.text.SparkTestSession
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Large-star/small-star connected components on hand-built graphs where
   * convergence takes multiple rounds (chains) — the oracle-gated q55 runs
   * on shallow real components only. */
 class ComponentsSpec extends AnyFunSuite {
+  import ComponentsSpec._
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** A nullable (doc_a LONG, doc_b LONG) frame over `parts` partitions. */
+  private def frame(rows: Seq[Pair], parts: Int = 3): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (a, b) =>
+      Row(a.map(Long.box).orNull, b.map(Long.box).orNull) }, parts),
+      StructType.fromDDL("doc_a LONG, doc_b LONG"))
+
+  private def labelMap(labels: DataFrame): Map[Long, (Long, Boolean)] = {
+    val rows = labels.collect()
+    val m = rows.map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    assert(m.size == rows.length, "one label row per node")
+    m
+  }
+
+  private val propertyInputs: Seq[(String, Seq[Pair])] =
+    (1 to 8).map(s => s"seed $s" -> randomGraph(s)) ++
+      Seq("empty" -> Seq.empty[Pair], "adaptive" -> adaptiveGraph)
 
   private def comps(pairs: Seq[(Long, Long)]): Map[Long, (Long, Boolean)] = {
     import spark.implicits._
-    Similarity.components(pairs.toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    labelMap(Similarity.components(pairs.toDF("doc_a", "doc_b")))
   }
 
   test("q92 IVF list cap: skewed list sub-samples deterministically, healthy list untouched") {
@@ -48,11 +66,9 @@ class ComponentsSpec extends AnyFunSuite {
       (200L until 280L).map(i => (i + 1, i)) ++ // 80-chain, high-to-low
       Seq((500L, 400L), (400L, 300L), (300L, 500L)) // triangle w/ cycle
     val df = edges.toDF("doc_a", "doc_b")
-    def toMap(got: org.apache.spark.sql.DataFrame) =
-      got.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    val local = toMap(Similarity.componentsAdaptive(df)) // n≪2^20 → local
-    val forcedDistributed = toMap(Similarity.componentsAdaptive(df, maxLocalEdges = 0))
-    val pure = toMap(Similarity.components(df))
+    val local = labelMap(Similarity.componentsAdaptive(df)) // n≪2^20 → local
+    val forcedDistributed = labelMap(Similarity.componentsAdaptive(df, maxLocalEdges = 0))
+    val pure = labelMap(Similarity.components(df))
     assert(local == pure, "local union-find must be bit-identical to the fixpoint")
     assert(forcedDistributed == pure, "over-threshold path is the fixpoint itself")
   }
@@ -110,6 +126,69 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got.keySet == (1L to 80L).toSet)
     assert(got.values.toSet == Set(1L), "whole chain labeled by its minimum")
     assert(rounds <= 10, s"star-contraction must be logarithmic, took $rounds")
+    assert(rounds == ParentRounds("chain 80"))
+  }
+
+  test("equivalence property: components and componentsAdaptive (local and " +
+    "forced distributed) label by a driver union-find's min-id roots on " +
+    "seeded graphs, the empty input and the componentsAdaptive graph; " +
+    "rounds equal the SQL loop's") {
+    propertyInputs.foreach { case (name, rows) =>
+      val want = unionFind(rows)
+      val df = frame(rows)
+      val (labels, rounds) = Similarity.componentsWithRounds(df)
+      assert(labels.schema == StructType.fromDDL(
+        "doc_id LONG, component LONG, is_canonical BOOLEAN"), name)
+      assert(labelMap(labels) == want, name)
+      assert(rounds == ParentRounds(name), name)
+      assert(labelMap(Similarity.componentsAdaptive(df, maxLocalEdges = 0)) == want,
+        s"$name: componentsAdaptive forced distributed")
+      assert(labelMap(Similarity.componentsAdaptive(df)) == want,
+        s"$name: componentsAdaptive local")
+    }
+    assert(unionFind(propertyInputs.head._2).size > 500, "the seeded graphs are not trivial")
+  }
+
+  test("one call runs one job per round plus at most three, and leaves only " +
+    "the labels' pinned RDD persisted") {
+    val sc = spark.sparkContext
+    for ((name, rows) <- propertyInputs.take(2) :+ propertyInputs.find(_._1 == "empty").get) {
+      val df = frame(rows)
+      val before = sc.getPersistentRDDs.keySet
+      var out: (DataFrame, Int) = null
+      val jobs = JobCount.of(spark) { out = Similarity.componentsWithRounds(df) }
+      val (labels, rounds) = out
+      assert(jobs <= rounds + 3, s"$name: $jobs jobs for $rounds rounds")
+      val pinned = Similarity.pinnedRdds(labels).map(_.id).toSet
+      assert(pinned.size == 1, name)
+      assert(sc.getPersistentRDDs.keySet -- before == pinned,
+        s"$name: the loop left RDDs persisted")
+      pinned.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+    }
+  }
+
+  test("robustness: 1 and 7 input partitions give identical labels and " +
+    "rounds; non-integral pair columns fail naming the column") {
+    import spark.implicits._
+    for (seed <- Seq(1, 2)) {
+      val rows = randomGraph(seed)
+      val (l1, r1) = Similarity.componentsWithRounds(frame(rows, 1))
+      val (l7, r7) = Similarity.componentsWithRounds(frame(rows, 7))
+      assert(labelMap(l1) == labelMap(l7) && r1 == r7, s"seed $seed")
+    }
+    // integral columns narrower than LONG are widened, not rejected
+    val ints = Seq((3, 2), (2, 1)).toDF("doc_a", "doc_b")
+    assert(labelMap(Similarity.components(ints)) ==
+      Map(1L -> (1L, true), 2L -> (1L, false), 3L -> (1L, false)))
+    val bad = Seq(
+      "doc_a" -> Seq((1.5, 2L)).toDF("doc_a", "doc_b"),
+      "doc_b" -> Seq((1L, "2")).toDF("doc_a", "doc_b"))
+    for ((column, df) <- bad) {
+      val e = intercept[IllegalArgumentException](Similarity.components(df))
+      assert(e.getMessage.contains(column), e.getMessage)
+      val a = intercept[IllegalArgumentException](Similarity.componentsAdaptive(df))
+      assert(a.getMessage.contains(column), a.getMessage)
+    }
   }
 
   test("chain graph converges to one component labeled by its minimum") {
@@ -382,4 +461,87 @@ class ComponentsSpec extends AnyFunSuite {
     // Chapman dominates both captures (m <= nB makes (nB+1)/(m+1) >= 1)
     assert(est >= nA && est >= nB, "estimator dominance")
   }
+}
+
+object ComponentsSpec {
+  type Pair = (Option[Long], Option[Long])
+
+  /** A seeded pair list holding every input shape the fixpoint must
+    * handle: a sparse random graph, stars, disjoint pairs, triangles,
+    * chains written high-to-low (one of 2 or 200 nodes, one of random
+    * length), extreme ids, duplicate and reversed edges, self-loops, and
+    * rows with a null endpoint. */
+  def randomGraph(seed: Int): Seq[Pair] = {
+    val rnd = new scala.util.Random(seed)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Pair]
+    var next = rnd.nextInt(2000).toLong - 1000 // negative ids too
+    def fresh(n: Int): IndexedSeq[Long] = {
+      val ids = (0 until n).map(next + _)
+      next += n + rnd.nextInt(40)
+      rnd.shuffle(ids)
+    }
+    def edge(a: Long, b: Long): Unit = rows += ((Some(a), Some(b)))
+    val pool = fresh(150)
+    (1 to 170).foreach(_ => edge(pool(rnd.nextInt(150)), pool(rnd.nextInt(150))))
+    (1 to 3).foreach { _ =>
+      val ids = fresh(2 + rnd.nextInt(40))
+      ids.tail.foreach(l => if (rnd.nextBoolean()) edge(ids.head, l) else edge(l, ids.head))
+    }
+    (1 to 6).foreach { _ => val p = fresh(2); edge(p(0), p(1)) }
+    (1 to 4).foreach { _ =>
+      val t = fresh(3); edge(t(0), t(1)); edge(t(1), t(2)); edge(t(2), t(0))
+    }
+    Seq(if (seed % 2 == 0) 2 else 200, 2 + rnd.nextInt(199)).foreach { n =>
+      val base = next
+      next += n + 1 + rnd.nextInt(40)
+      (base + n - 1 until base by -1).foreach(i => edge(i, i - 1))
+    }
+    edge(Long.MaxValue, Long.MinValue)
+    edge(Long.MaxValue - 1, Long.MaxValue)
+    (1 to 30).foreach { _ =>
+      val (a, b) = rows(rnd.nextInt(rows.size))
+      rows += (if (rnd.nextBoolean()) (a, b) else (b, a))
+    }
+    (1 to 5).foreach { _ => val x = pool(rnd.nextInt(150)); edge(x, x) }
+    val lone = fresh(1).head
+    edge(lone, lone) // a node only a self-loop touches gets no label
+    rows += ((None, Some(pool(rnd.nextInt(150)))))
+    rows += ((Some(fresh(1).head), None))
+    rows += ((None, None))
+    rnd.shuffle(rows.toSeq)
+  }
+
+  /** The componentsAdaptive test's pair list: random edges over 120 ids
+    * (duplicates, reversed copies and self-loops among them), an 80-chain
+    * written high-to-low, and a triangle. */
+  def adaptiveGraph: Seq[Pair] = {
+    val rnd = new scala.util.Random(13)
+    val edges = (1 to 300).map(_ => (rnd.nextInt(120).toLong + 1, rnd.nextInt(120).toLong + 1)) ++
+      (200L until 280L).map(i => (i + 1, i)) ++
+      Seq((500L, 400L), (400L, 300L), (300L, 500L))
+    edges.map { case (a, b) => (Some(a), Some(b)) }
+  }
+
+  /** Each node's (min-id root, is root) by a driver union-find. */
+  def unionFind(rows: Seq[Pair]): Map[Long, (Long, Boolean)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      r
+    }
+    for ((Some(a), Some(b)) <- rows if a != b) {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.map { x => val r = find(x); x -> (r, x == r) }.toMap
+  }
+
+  /** Rounds the SQL star-contraction loop took on each input before the
+    * loop moved onto RDDs; the RDD loop must take exactly as many. */
+  val ParentRounds: Map[String, Int] = Map(
+    "seed 1" -> 9, "seed 2" -> 9, "seed 3" -> 9, "seed 4" -> 6,
+    "seed 5" -> 9, "seed 6" -> 8, "seed 7" -> 9, "seed 8" -> 6,
+    "empty" -> 1, "adaptive" -> 8, "chain 80" -> 8)
 }

@@ -1,13 +1,10 @@
 package graft.ml
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.text.SparkTestSession
 import org.apache.spark.SparkException
 import org.apache.spark.ml.clustering.{LDA, LDAModel}
 import org.apache.spark.ml.feature.CountVectorizerModel
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.Metadata
@@ -137,38 +134,16 @@ class LdaOnlineSpec extends AnyFunSuite {
     assert(ours.transform(df).columns.contains("td"))
   }
 
-  /** Jobs started by `f` on this thread, counted by a SparkListener. */
-  private def jobsOf(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"lda-jobs-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "LdaOnlineSpec job count")
-    try { f; drain(); n.get } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("one Spark job per iteration with size metadata, one more without") {
     val df = corpus(160, 3)
     assert(org.apache.spark.ml.attribute.AttributeGroup
       .fromStructField(df.schema("features")).size == Vocab.length)
     for (iters <- Seq(1, 5)) {
-      assert(jobsOf(Lda.train(df, k = 4, maxIter = iters)) == iters)
+      assert(JobCount.of(spark)(Lda.train(df, k = 4, maxIter = iters)) == iters)
     }
     val bare = df.select(col("doc_id"), col("features").as("features", Metadata.empty))
     assert(org.apache.spark.ml.attribute.AttributeGroup.fromStructField(bare.schema("features")).size == -1)
-    assert(jobsOf(Lda.train(bare, k = 4, maxIter = 5)) == 6)
+    assert(JobCount.of(spark)(Lda.train(bare, k = 4, maxIter = 5)) == 6)
     assertSameModel(Lda.train(bare, k = 4, maxIter = 5), lda(4, 5).fit(df), df, "no metadata")
   }
 
