@@ -1,14 +1,16 @@
 #!/usr/bin/env python3
 """Local pre-check of the driver's DuckDB oracle gate.
 
-Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir> [--only q30,q31,...]
 
 Replicates the driver contract: run each SparkEntry.oracleSql statement in
 DuckDB over the shared parquet tables, load the Spark result parquet written
 by graft.Verify, sort columns by name + rows by all columns, and compare
-values exactly. Dev tooling only — the engine itself never depends on this.
+values exactly. `--only` checks just the named statements: a name is a full
+oracle name (q33_ngram_jaccard) or its query id (q33); a name that matches no
+statement is an error. Without it every statement is checked. Dev tooling only — the engine itself never depends on this.
 """
-import sys, json, glob, math
+import argparse, sys, json, glob, math
 import duckdb
 import pandas as pd
 import numpy as np
@@ -45,14 +47,32 @@ def cells_equal(a, b):
     return a == b
 
 
+def selected(names, only):
+    """The oracle names `only` (comma-separated full names or query ids) picks."""
+    if only is None:
+        return sorted(names)
+    wanted = [w for w in only.split(",") if w]
+    picked = {n for n in names for w in wanted if n == w or n.startswith(w + "_")}
+    unknown = [w for w in wanted
+               if not any(n == w or n.startswith(w + "_") for n in names)]
+    if unknown:
+        sys.exit(f"--only: no oracle statement named {', '.join(unknown)}")
+    return sorted(picked)
+
+
 def main():
-    sfdir, outdir = sys.argv[1], sys.argv[2]
+    ap = argparse.ArgumentParser(description="Compare graft.Verify outputs with the DuckDB oracle.")
+    ap.add_argument("sfdir")
+    ap.add_argument("outdir")
+    ap.add_argument("--only", help="comma-separated oracle names or query ids to check")
+    args = ap.parse_args()
+    sfdir, outdir = args.sfdir, args.outdir
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(oracle):
+    for name in selected(oracle, args.only):
         sql = oracle[name]
         files = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
         if not files:

@@ -65,108 +65,89 @@ object Similarity {
 
   /** The q33 kernel over any (doc_id, t) token frame — also the near-dup
     * stage of the q70 curation funnel, which feeds it the corpus-bucket
-    * docs only. */
+    * docs only. Output: (doc_a, doc_b, jaccard) for every pair of rows
+    * whose token-3-gram Jaccard, rounded to 6 places, is ≥ 0.5; doc_a
+    * orders before doc_b. Unsorted and unpinned.
+    *
+    * Shingles are 64-bit hashes of token triples
+    * ([[NgramJaccard.distinctShingles]]): distinctness, sizes and
+    * intersections equal the string form's modulo 64-bit collisions. At
+    * ~10^12 distinct shingles birthday collisions do occur, each moving
+    * one pair's Jaccard by ±1/|union|: noise far below the 0.5 decision
+    * for a lossy kernel whose cap already drops hot shingles; q79's prefix
+    * kernel is the exact one. Rows with fewer than 3 tokens have no
+    * shingle; n = a row's distinct-shingle count. A shingle pairs the rows
+    * holding it only when 2 ≤ df ≤ 20 rows do (the stop-shingle cap keeps
+    * pair volume linear), and a pair's intersection counts only such
+    * shingles, while its n's are full.
+    *
+    * Shape: one Spark job of three stages over `toks`' RDD, no Catalyst
+    * row per incidence.
+    *  1. map: each row's distinct shingle hashes, read straight from its
+    *     token array, emitted as (shingle, [doc, n]);
+    *  2. after a shuffle on the shingle: a partition's incidences are
+    *     grouped in primitive arrays, each bucket of 2-20 rows sorted by
+    *     (doc, n) (null first, as `sort_array` orders the structs), and
+    *     its C(m, 2) pairs counted map-side in a primitive hash map keyed
+    *     by (doc_a, na, doc_b, nb);
+    *  3. after a shuffle on the pair: counts summed into rows
+    *     (doc_a, doc_b, na, nb, inter), and jaccard =
+    *     round(inter / (na + nb − inter), 6) in Catalyst.
+    * Both shuffles carry raw longs ([[LongRecordSerializer]]). The reduce
+    * side has max(defaultParallelism, input partitions) partitions, so a
+    * task's grouping grows with the input's own partitioning. A shingle
+    * task holds 40-140 bytes per incidence it receives (three longs
+    * collected, two in its bucket, and at most one shingle-table slot of
+    * 25 bytes with its bucket offsets, at load 1/4-1/2), plus 80-170
+    * bytes per distinct pair it counts (41-byte slots of 4-long keys at
+    * load 1/4-1/2; at most C(20, 2) = 190 pairs per pairable shingle); a
+    * pair task holds 80-170 bytes per distinct pair it receives. Nothing
+    * is persisted. Building the frame runs no
+    * job unless `toks`' own plan has exchanges, which adaptive execution
+    * runs when its RDD is taken.
+    *
+    * doc_id must be integral: it is widened to LONG, and the output
+    * carries the input's type. Rows sharing a doc_id stay separate rows,
+    * so two of them can form a (d, d) pair; a null doc_id pairs as null. */
   private[graft] def ngramJaccardPairs(toks: DataFrame): DataFrame = {
-    // HASHED shingle representation (round-13; the q79 long-ids lesson
-    // applied to the lossy kernel too): the shingle key is a 64-bit hash
-    // of the token triple (see [[hashedShingles]]) — an 8-byte long —
-    // instead of the concat_ws string (~20+ chars). Distinctness, sizes and pair
-    // intersections are identical to the string form modulo 64-bit
-    // collisions; nothing downstream reads the shingle value. Honesty at
-    // scale: at ~10^12 distinct shingles birthday collisions DO occur,
-    // each perturbing one pair's jaccard by ±1/|union| — noise far below
-    // the 0.5-threshold decision for a lossy near-dup kernel whose cap
-    // already drops hot shingles; the exact-string path remains q79's
-    // lossless prefix kernel.
-    //
-    // Doc sizes RIDE THE EXPLODED ROWS (round-13): n = |distinct shingles|
-    // is computed map-side on the pre-explode array and carried as an
-    // 8-byte column on every (shingle, doc) incidence, so the pair
-    // expansion emits (doc_a, na, doc_b, nb) complete and the jaccard is
-    // a pure per-group expression — the previous shape re-derived sizes
-    // by re-exploding the bucket lists and joined them back onto the pair
-    // aggregate twice. One groupBy(shingle) shuffle + one (tiny,
-    // cap-bounded) pair shuffle is now the whole kernel: no sizes pass,
-    // no joins, one consumer per exchange. Measured at sf0.1 the kernel
-    // dropped ~40 % wall-clock (strings→longs + this).
-    val sh = toks
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), hashedShingles(col("t")).as("shs"))
-      .select(col("doc_id"), size(col("shs")).as("n"),
-        explode(col("shs")).as("shingle"))
-    // Candidate pairs come from ONE groupBy(shingle) pass that buckets the
-    // (≤ 20) (doc_id, n) structs per pairable shingle and expands C(df,2)
-    // ordered pairs in-task (sort_array orders by doc_id first, so
-    // doc_a < doc_b orientation is preserved).
-    // Hot-shingle ceiling (df ≤ 20): a shingle shared by many documents
-    // generates O(df²) candidate pairs while carrying no near-dup signal —
-    // the classic "stop-shingle" guard that keeps pair volume linear at
-    // 100 TB. df=1 shingles can't form a pair, so they're dropped too
-    // (pure pruning; the DuckDB twin keeps them and agrees — a lone
-    // shingle never reaches `inter`). collect_list buffers O(df) structs
-    // per shingle before the filter — fine for real shingle-frequency
-    // tails; a pathological ultra-hot head would get a count-min/sample
-    // prefilter in production, the documented guard.
-    val buckets = sh.groupBy(col("shingle"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds"))
-    val pairs = buckets
-      .filter(size(col("ds")).between(2, 20))
-      .select(explode(expr(
-        """flatten(transform(ds, (x, i) ->
-          |  transform(slice(ds, i + 2, size(ds)), y ->
-          |    struct(x.doc_id AS doc_a, x.n AS na,
-          |           y.doc_id AS doc_b, y.n AS nb))))""".stripMargin)).as("p"))
-      .select(col("p.doc_a"), col("p.na"), col("p.doc_b"), col("p.nb"))
-    pairs
-      .groupBy(col("doc_a"), col("na"), col("doc_b"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("doc_a"), col("doc_b"),
+    import org.apache.spark.HashPartitioner
+    import org.apache.spark.rdd.ShuffledRDD
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType, StructField,
+      StructType}
+    val idType = toks.schema("doc_id").dataType
+    idType match {
+      case ByteType | ShortType | IntegerType | LongType => ()
+      case t => throw new IllegalArgumentException(
+        s"ngramJaccardPairs: column doc_id must be integral, got ${t.sql}")
+    }
+    val spark = toks.sparkSession
+    val rows = toks.select(col("doc_id").cast(LongType), col("t")).queryExecution.toRdd
+    val part = new HashPartitioner(
+      math.max(spark.sparkContext.defaultParallelism, rows.getNumPartitions))
+    val incidences = rows.flatMap { r =>
+      if (r.isNullAt(1) || r.getArray(1).numElements() < 3) Iterator.empty
+      else {
+        val sh = NgramJaccard.distinctShingles(r.getArray(1))
+        val (doc, n) = if (r.isNullAt(0)) (0L, -sh.length.toLong) else (r.getLong(0), sh.length.toLong)
+        sh.iterator.map(s => (s, Array(doc, n)))
+      }
+    }
+    val pairs = new ShuffledRDD[Long, Array[Long], Array[Long]](incidences, part)
+      .setSerializer(LongRecordSerializer(1, 2))
+      .mapPartitions(NgramJaccard.bucketPairs)
+    val counted = new ShuffledRDD[Long, Array[Long], Array[Long]](pairs, part)
+      .setSerializer(LongRecordSerializer(1, 4))
+      .mapPartitions(NgramJaccard.pairRows)
+    val idNullable = toks.schema("doc_id").nullable
+    val schema = StructType(Seq(StructField("doc_a", LongType, idNullable),
+      StructField("doc_b", LongType, idNullable), StructField("na", IntegerType),
+      StructField("nb", IntegerType), StructField("inter", LongType)))
+    GraftSqlBridge.fromInternalRows(spark, counted, schema)
+      .select(col("doc_a").cast(idType).as("doc_a"), col("doc_b").cast(idType).as("doc_b"),
         round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= 0.5)
-  }
-
-  /** Distinct hashed 3-shingles of a token array, as one compiled UDF:
-    * the `transform(sequence(...), i -> xxhash64(...))` lambda form is
-    * INTERPRETED per shingle instance (the round-4 HOF lesson — no
-    * codegen inside higher-order functions), which dominated the kernel's
-    * map side. Here each token hashes ONCE (FNV-1a 64 over its UTF-16
-    * chars), triples combine with splitmix64 finalizers, and dedup is a
-    * primitive sort + unique sweep — O(n log n) with zero boxing. The
-    * hash need not match any engine function: shingle values never
-    * surface (see the kernel scaladoc), only their equality does. */
-  private val hashedShingles = udf { (t: Seq[String]) =>
-    def mix(z0: Long): Long = { // splitmix64 finalizer — public domain
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    val n = t.length
-    val th = new Array[Long](n)
-    var i = 0
-    while (i < n) { // FNV-1a 64 per token, computed once
-      val s = t(i)
-      var h = 0xcbf29ce484222325L
-      var j = 0
-      while (j < s.length) { h = (h ^ s.charAt(j)) * 0x100000001b3L; j += 1 }
-      th(i) = h
-      i += 1
-    }
-    val sh = new Array[Long](n - 2)
-    i = 0
-    while (i < n - 2) {
-      sh(i) = mix(mix(mix(th(i)) ^ th(i + 1)) ^ th(i + 2))
-      i += 1
-    }
-    java.util.Arrays.sort(sh)
-    var k = 0
-    i = 0
-    while (i < sh.length) { // unique sweep in place
-      if (i == 0 || sh(i) != sh(i - 1)) { sh(k) = sh(i); k += 1 }
-      i += 1
-    }
-    java.util.Arrays.copyOf(sh, k)
   }
 
   /** LOSSLESS exact Jaccard ≥ 0.5 pairs via PREFIX FILTERING (Chaudhuri
@@ -1459,9 +1440,9 @@ object Similarity {
 
   /** Same kernel over an already-exploded (doc_id, band, h) band table —
     * the shape the streaming `Sessions.BandIndex` maintains incrementally
-    * (`streamBandRows` derives h with the same seeds + md5 min as
-    * `TextOps.minhashSignaturesOf`, so index-sourced pairs are exactly
-    * the batch minhash signal). Stop-bucket cap (≤ 20) and distinct match
+    * (`streamBandRows` derives h with the same per-row
+    * `minhash_signature` as `TextOps.minhashSignaturesOf`, so
+    * index-sourced pairs are exactly the batch minhash signal). Stop-bucket cap (≤ 20) and distinct match
     * the signature-frame path above. */
   private[graft] def bandRowPairsOf(bands: DataFrame): DataFrame = {
     bands.groupBy(col("band"), col("h"))
@@ -2165,7 +2146,7 @@ object Similarity {
     val part = new HashPartitioner(spark.sparkContext.defaultParallelism)
     val loopRdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
     def grouped(arcs: RDD[(Long, Long)]): RDD[AdjacencyBlock] =
-      new ShuffledRDD[Long, Long, Long](arcs, part).setSerializer(LongPairSerializer)
+      new ShuffledRDD[Long, Long, Long](arcs, part).setSerializer(LongRecordSerializer(1, 1))
         .mapPartitions(it => Iterator.single(AdjacencyBlock(it)), preservesPartitioning = true)
     def adjacency(arcs: RDD[(Long, Long)]): RDD[AdjacencyBlock] = {
       val s = grouped(arcs).persist(StorageLevel.MEMORY_ONLY)
@@ -2246,41 +2227,6 @@ object Similarity {
         i += 1
       }
       new AdjacencyBlock(nodes, offsets, nbrs.result())
-    }
-  }
-
-  /** Shuffle serializer for the loop's (Long, Long) records: a key or
-    * value is 8 raw bytes, where Java serialization of each Tuple2 costs
-    * microseconds of reflection. Shuffle streams only. */
-  private object LongPairSerializer
-      extends org.apache.spark.serializer.Serializer with Serializable {
-    import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
-    import org.apache.spark.serializer.{DeserializationStream, SerializationStream,
-      SerializerInstance}
-    import scala.reflect.ClassTag
-
-    override def newInstance(): SerializerInstance = new SerializerInstance {
-      private def unsupported =
-        throw new UnsupportedOperationException("LongPairSerializer: shuffle streams only")
-      override def serialize[T: ClassTag](t: T): java.nio.ByteBuffer = unsupported
-      override def deserialize[T: ClassTag](bytes: java.nio.ByteBuffer): T = unsupported
-      override def deserialize[T: ClassTag](bytes: java.nio.ByteBuffer,
-          loader: ClassLoader): T = unsupported
-      override def serializeStream(s: OutputStream): SerializationStream =
-        new SerializationStream {
-          private val out = new DataOutputStream(s)
-          override def writeObject[T: ClassTag](t: T): SerializationStream = {
-            out.writeLong(t.asInstanceOf[Long]); this
-          }
-          override def flush(): Unit = out.flush()
-          override def close(): Unit = out.close()
-        }
-      override def deserializeStream(s: InputStream): DeserializationStream =
-        new DeserializationStream {
-          private val in = new DataInputStream(s)
-          override def readObject[T: ClassTag](): T = in.readLong().asInstanceOf[T]
-          override def close(): Unit = in.close()
-        }
     }
   }
 

@@ -4,7 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** S4 structured run log (SURVEY §2.1; app.py:343-355 writes a JSON-lines
@@ -22,6 +24,24 @@ object RunLog {
       case c => c.toString
     }
 
+  /** The rows the query's root operator output: its `numOutputRows` SQL
+    * metric, read from the final plan under adaptive execution and through
+    * a whole-stage-codegen wrapper. A `CollectLimit` root (the driver-side
+    * limit of `limit(n).collect()`) keeps no such metric: its rows are its
+    * limit and offset applied to its child's count. None when no such
+    * metric is found. */
+  private[sink] def rootRows(qe: QueryExecution): Option[Long] = {
+    def rows(p: SparkPlan): Option[Long] = p match {
+      case a: AdaptiveSparkPlanExec => rows(a.executedPlan)
+      case w: WholeStageCodegenExec => rows(w.child)
+      case c: CollectLimitExec => rows(c.child).map { n =>
+        math.max(0L, (if (c.limit >= 0) math.min(c.limit.toLong, n) else n) - c.offset)
+      }
+      case p => p.metrics.get("numOutputRows").map(_.value)
+    }
+    rows(qe.executedPlan)
+  }
+
   /** Register a listener appending JSON lines to `path`. Returns the
     * listener so callers/tests can unregister it. */
   def attach(spark: SparkSession, path: String): QueryExecutionListener = {
@@ -32,7 +52,7 @@ object RunLog {
           detail: String): Unit = {
         val line =
           s"""{"status":"$status","duration_sec":${durationNs / 1e9},""" +
-            s""""rows_hint":${qe.observedMetrics.size},""" +
+            s""""rows_hint":${rootRows(qe).map(_.toString).getOrElse("null")},""" +
             s""""plan":"${esc(qe.executedPlan.nodeName)}"""" +
             (if (detail.isEmpty) "}" else s""","detail":"${esc(detail)}"}""") +
             "\n"

@@ -208,9 +208,9 @@ object Sessions {
 
   /** Streaming near-dup candidate gate: the continuous-ingest twin of the
     * batch keep-list (q73). Each arriving document computes its 4 MinHash
-    * band keys MAP-SIDE — `array_min` over the md5'd token array is the
-    * same minimum q30's explode→groupBy takes, but needs no aggregation,
-    * so the stream side stays stateless — then probes a static corpus
+    * band keys MAP-SIDE — the per-row `minhash_signature` q30 takes its
+    * per-doc minima over, with no aggregation, so the stream side stays
+    * stateless — then probes a static corpus
     * band index (`text.TextOps.minhashBands`) with a stream-static
     * equi-join on (band, h). Output is one row per (arriving doc ×
     * colliding corpus doc) candidate: the downstream sink re-scores
@@ -256,24 +256,19 @@ object Sessions {
   }
 
   /** Map-side MinHash band rows (idCol, band, h) for a batch OR streaming
-    * doc frame — `array_min` over the md5'd token array is the same
-    * minimum q30's explode→groupBy takes, but needs no aggregation, so a
+    * doc frame — the per-row signature q30's kernel takes its minima
+    * over (`TextFunctions.minhash_signature`), with no aggregation, so a
     * stream side using it stays stateless. Shared by the probe below and
     * the index upsert in [[incrementalNearDupGate]]. */
-  def streamBandRows(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sig = graft.text.TextOps.MinhashSeeds.zipWithIndex.map { case (seed, i) =>
-      array_min(transform(col("__t"),
-        x => md5(concat(lit(seed), x).cast("binary")))).as(s"h${i + 1}")
-    }
+  def streamBandRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
       .withColumn("__t", graft.text.Cleanse.tokens(col(textCol)))
       .filter(size(col("__t")) > 0)
-      .select(col(idCol) +: sig: _*)
+      .select(col(idCol), graft.text.TextFunctions.minhash_signature(col("__t")).as("__sig"))
       .select(col(idCol), explode(array(
-        (1 to 4).map(i => struct(lit(i).as("band"), col(s"h$i").as("h"))): _*))
+        (1 to 4).map(i => struct(lit(i).as("band"), col(s"__sig.h$i").as("h"))): _*))
         .as("bh"))
       .select(col(idCol), col("bh.band").as("band"), col("bh.h").as("h"))
-  }
 
   /** PRECONDITION: doc ids are unique across the arriving stream AND the
     * corpus index — self-matches are suppressed by id equality alone, so

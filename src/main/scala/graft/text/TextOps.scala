@@ -225,15 +225,16 @@ object TextOps {
 
   /** The signature kernel over any (doc_id, t) token frame — q73 feeds it
     * the shared checkpointed frame so its three near-dup signals tokenize
-    * the corpus once. */
-  def minhashSignaturesOf(toks: DataFrame): DataFrame = {
-    val hashes = MinhashSeeds.zipWithIndex.map { case (seed, i) =>
-      min(md5(concat(lit(seed), col("term")).cast("binary"))).as(s"h${i + 1}")
-    }
-    toks.select(col("doc_id"), explode(col("t")).as("term"))
+    * the corpus once. Each row's signature is one compiled
+    * `minhash_signature` call ([[MinhashKernel]]); rows with a null or
+    * empty array give none, and rows sharing a doc_id merge through a
+    * min per hash, so the aggregation shuffles one row per document. */
+  def minhashSignaturesOf(toks: DataFrame): DataFrame =
+    toks.filter(size(col("t")) > 0) // on the input: a filter on sig would compute it twice
+      .select(col("doc_id"), TextFunctions.minhash_signature(col("t")).as("sig"))
       .groupBy(col("doc_id"))
-      .agg(hashes.head, hashes.tail: _*)
-  }
+      .agg(min(col("sig.h1")).as("h1"), min(col("sig.h2")).as("h2"),
+        min(col("sig.h3")).as("h3"), min(col("sig.h4")).as("h4"))
 
   def q30_minhash_signature(s: SparkSession, dir: String): DataFrame =
     minhashSignatures(s, dir).orderBy(col("doc_id"))

@@ -3,7 +3,11 @@ package graft.text
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField,
+  StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static helpers referenced from generated code — must be stable, public,
@@ -292,6 +296,83 @@ case class JaroWinkler(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The 4-permutation MinHash signature of one token array: for each seed
+  * s of `TextOps.MinhashSeeds`, the least md5(s ‖ token) over the
+  * array's tokens, as the 32-character lowercase hex string Spark's `md5`
+  * returns. Each token's UTF-8 bytes are digested in place; digests
+  * compare as unsigned 128-bit numbers, the order of their hex strings,
+  * and only the winners are hex-encoded. Null tokens are skipped (a
+  * non-empty array of nulls gives null fields); an empty array gives no
+  * signature (null). */
+object MinhashKernel {
+  private val seeds: Array[Array[Byte]] =
+    TextOps.MinhashSeeds.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+  val Fields: StructType =
+    StructType(seeds.indices.map(i => StructField(s"h${i + 1}", StringType)))
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+  private val Hex = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  def signature(t: ArrayData): InternalRow = {
+    val n = t.numElements()
+    if (n == 0) return null
+    val k = seeds.length
+    val best = new Array[Byte](16 * k)
+    val d = new Array[Byte](16)
+    val md = md5.get()
+    var found = false
+    var i = 0
+    while (i < n) {
+      if (!t.isNullAt(i)) {
+        val bb = t.getUTF8String(i).getByteBuffer
+        var s = 0
+        while (s < k) {
+          md.update(seeds(s))
+          md.update(bb.array, bb.arrayOffset + bb.position, bb.remaining)
+          md.digest(d, 0, 16)
+          if (!found || java.util.Arrays.compareUnsigned(d, 0, 16, best, 16 * s, 16 * s + 16) < 0)
+            System.arraycopy(d, 0, best, 16 * s, 16)
+          s += 1
+        }
+        found = true
+      }
+      i += 1
+    }
+    val out = new Array[Any](k)
+    if (found) {
+      var s = 0
+      while (s < k) {
+        val hex = new Array[Byte](32)
+        var j = 0
+        while (j < 16) {
+          val b = best(16 * s + j) & 0xff
+          hex(2 * j) = Hex(b >>> 4); hex(2 * j + 1) = Hex(b & 0xf)
+          j += 1
+        }
+        out(s) = UTF8String.fromBytes(hex)
+        s += 1
+      }
+    }
+    new GenericInternalRow(out)
+  }
+}
+
+/** `minhash_signature(tokens)`: struct<h1..h4 STRING> of
+  * [[MinhashKernel.signature]], one codegen'd static call per row. */
+case class MinhashSignature(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = MinhashKernel.Fields
+  override def nullable: Boolean = true
+  override def prettyName: String = "minhash_signature"
+  override protected def nullSafeEval(input: Any): Any =
+    MinhashKernel.signature(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.text.MinhashKernel.signature($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): MinhashSignature =
+    copy(child = newChild)
+}
+
 /** Column-level API for the custom expressions. */
 object TextFunctions {
   def normalize_nfkc(c: Column): Column =
@@ -301,4 +382,6 @@ object TextFunctions {
   def jaro_winkler(a: Column, b: Column): Column =
     GraftSqlBridge.column(JaroWinkler(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+  def minhash_signature(tokens: Column): Column =
+    GraftSqlBridge.column(MinhashSignature(GraftSqlBridge.expression(tokens)))
 }

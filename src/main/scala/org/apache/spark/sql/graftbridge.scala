@@ -18,6 +18,14 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over an RDD of Catalyst rows matching `schema` (the
+    * private[sql] internalCreateDataFrame), for kernels that compute rows
+    * outside Catalyst and hand them back without a Row conversion. */
+  def fromInternalRows(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** A DataFrame's analyzed logical plan (for composing custom nodes). */
   def analyzedPlan(df: Dataset[_]):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

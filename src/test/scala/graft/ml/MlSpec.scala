@@ -186,6 +186,9 @@ class MlSpec extends AnyFunSuite {
       val lines = scala.io.Source.fromFile(path).getLines().toList
       assert(lines.nonEmpty)
       assert(lines.forall(_.contains("\"status\":\"ok\"")))
+      // the CollectLimit root keeps no row metric: its limit applied to
+      // the scan's count
+      assert(lines.head.contains("\"rows_hint\":3,"), lines.head)
     } finally spark.listenerManager.unregister(l)
   }
 
