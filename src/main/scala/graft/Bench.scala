@@ -499,7 +499,7 @@ object Bench {
       // queries strictly sequentially on a private SparkSession — with any
       // concurrent query it would truncate a live checkpoint's lineage
       // (the safe form releases only the RDDs a call persisted itself, as
-      // Similarity.pinnedRdds callers and componentsWithRounds do).
+      // Similarity.pinnedRdds callers and the graft.rel.Fixpoint loops do).
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))

@@ -10,12 +10,14 @@ import org.apache.spark.serializer.{DeserializationStream, SerializationStream, 
 /** Shuffle serializer for records of fixed-width longs: a key or value of
   * width 1 is a `Long`, a wider one an `Array[Long]` of exactly that
   * width, and each long travels as 8 raw bytes, where Java serialization
-  * of every tuple costs microseconds of reflection. Used by the components
-  * loop ((node, value) arcs, widths 1/1) and the n-gram Jaccard kernel
+  * of every tuple costs microseconds of reflection. Used by the graph
+  * fixpoint loop's grouping shuffle (`graft.rel.Fixpoint.grouped`:
+  * (node, value) arcs and messages, widths 1/1, for components, coreness,
+  * label propagation and PageRank) and the n-gram Jaccard kernel
   * ((shingle, [doc, n]), widths 1/2, and (doc_a, [na, doc_b, nb, count]),
   * widths 1/4). Shuffle streams only: the widths tell `readKey` and
   * `readValue` what to rebuild, so a stream carries no per-record header. */
-private[ml] final case class LongRecordSerializer(keyWidth: Int, valueWidth: Int)
+private[graft] final case class LongRecordSerializer(keyWidth: Int, valueWidth: Int)
     extends Serializer {
   require(keyWidth >= 1 && valueWidth >= 1, "record widths must be positive")
 

@@ -2110,76 +2110,45 @@ object Similarity {
     * O(log) convergence assertion on a long chain.
     *
     * The state is each node's sorted distinct neighbors in the undirected
-    * edge set, hash-partitioned on the node into `defaultParallelism`
-    * partitions (the core count AQE coalesces these tiny shuffles to),
-    * one [[AdjacencyBlock]] per partition. One round is ONE job of three
+    * edge set, one [[graft.rel.AdjacencyBlock]] per partition, iterated
+    * by [[graft.rel.Fixpoint.iterate]]: one round is ONE job of three
     * stages and no Catalyst plan:
     *  1. large-star, on the state's partitions: node x with
     *     m = min(x, N(x)) emits (y, m) for every neighbor y > x;
     *  2. small-star, after a shuffle on y: node u with m' = the least
     *     value it received emits {v, m'} for every other received v and
     *     {u, m'}, both orientations;
-    *  3. a shuffle on the node rebuilds the new state's partition, zipped
-    *     (same partitioner: a narrow dependency) with the previous state's
-    *     partition; each task returns whether its partition is unchanged.
-    * Every partition unchanged ⇔ the edge set is unchanged, so the exit
-    * test is exact. Each node's output depends only on the sorted,
-    * de-duplicated values it receives, so shuffle-block arrival order and
-    * task retries cannot change a result. The first round's job also
-    * builds the initial state from the canonical edges.
-    *
-    * Each state is persisted in memory with its lineage intact (a lost
-    * block recomputes from the round's shuffle files, where a lost
-    * localCheckpoint block would not); state r−2 is dropped once round r
-    * is done, and every loop RDD is unpersisted (blocking) before this
-    * returns. A partition's arcs are grouped in task memory, as its
-    * cached state is held. At the fixpoint each node's label is
-    * min(x, N(x)): the center's neighbors are all larger, every other
+    *  3. a shuffle on the node rebuilds the new state's partition, with
+    *     its neighbors de-duplicated, and compares it with the previous
+    *     state's partition.
+    * Each node's output depends only on the sorted, de-duplicated values
+    * it receives, so shuffle-block arrival order and task retries cannot
+    * change a result. The first round's job also builds the initial
+    * state from the canonical edges. At the fixpoint each node's label
+    * is min(x, N(x)): the center's neighbors are all larger, every other
     * member's only neighbor is the center. The labels are eagerly pinned
     * (one more job), so callers see a plan with no reference to the
     * loop's state. */
   private[graft] def componentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.{RDD, ShuffledRDD}
-    import org.apache.spark.storage.StorageLevel
+    import graft.rel.Fixpoint
     val spark = pairs.sparkSession
-    val part = new HashPartitioner(spark.sparkContext.defaultParallelism)
-    val loopRdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    def grouped(arcs: RDD[(Long, Long)]): RDD[AdjacencyBlock] =
-      new ShuffledRDD[Long, Long, Long](arcs, part).setSerializer(LongRecordSerializer(1, 1))
-        .mapPartitions(it => Iterator.single(AdjacencyBlock(it)), preservesPartitioning = true)
-    def adjacency(arcs: RDD[(Long, Long)]): RDD[AdjacencyBlock] = {
-      val s = grouped(arcs).persist(StorageLevel.MEMORY_ONLY)
-      loopRdds += s
-      s
-    }
-    try {
-      var state = adjacency(canonicalEdges(pairs).queryExecution.toRdd
-        .flatMap { r => val (u, v) = (r.getLong(0), r.getLong(1)); Iterator((u, v), (v, u)) })
-      var previous: RDD[AdjacencyBlock] = null
-      var rounds = 0
-      var converged = false
-      while (!converged && rounds < MaxRounds) {
-        val largeStar = state.flatMap(_.nodesWithNeighbors.flatMap { case (x, n) =>
-          val m = math.min(x, n(0))
-          n.iterator.dropWhile(_ < x).map(y => (y, m))
-        })
-        val smallStar = grouped(largeStar).flatMap(_.nodesWithNeighbors.flatMap { case (u, vs) =>
-          val m = vs(0)
-          (vs.iterator.drop(1) ++ Iterator.single(u)).flatMap(v => Iterator((v, m), (m, v)))
-        })
-        val next = adjacency(smallStar)
-        // the round's one job: builds and caches next, and compares it
-        converged = next.zipPartitions(state) { (a, b) => Iterator.single(a.next().sameAs(b.next())) }
-          .collect().forall(identity)
-        if (previous != null) {
-          previous.unpersist(blocking = true)
-          loopRdds -= previous
-        }
-        previous = state
-        state = next
-        rounds += 1
-      }
+    val arcs = canonicalEdges(pairs).queryExecution.toRdd
+      .flatMap { r => val (u, v) = (r.getLong(0), r.getLong(1)); Iterator((u, v), (v, u)) }
+    val part = Fixpoint.partitioner(arcs)
+    Fixpoint.scoped { scope =>
+      val (state, rounds, converged) =
+        Fixpoint.iterate(scope, Fixpoint.grouped(arcs, part, distinct = true), MaxRounds) { state =>
+          val largeStar = state.flatMap(_.nodesWithNeighbors.flatMap { case (x, n) =>
+            val m = math.min(x, n(0))
+            n.iterator.dropWhile(_ < x).map(y => (y, m))
+          })
+          val smallStar = Fixpoint.grouped(largeStar, part, distinct = true)
+            .flatMap(_.nodesWithNeighbors.flatMap { case (u, vs) =>
+              val m = vs(0)
+              (vs.iterator.drop(1) ++ Iterator.single(u)).flatMap(v => Iterator((v, m), (m, v)))
+            })
+          Fixpoint.grouped(smallStar, part, distinct = true)
+        }(_ sameAs _)
       require(converged,
         s"large-star/small-star did not converge in $MaxRounds rounds — " +
           "impossible for any finite graph; investigate input")
@@ -2188,45 +2157,6 @@ object Similarity {
         org.apache.spark.sql.Row(x, c, x == c)
       }), LabelSchema).localCheckpoint()
       (labels, rounds)
-    } finally loopRdds.foreach(_.unpersist(blocking = true))
-  }
-
-  /** One partition of the components state in compressed-sparse-row form:
-    * `nodes` ascending, and node i's sorted distinct neighbors are
-    * `nbrs(offsets(i) until offsets(i + 1))`. Three primitive arrays, so
-    * caching a partition costs no per-object size estimation. */
-  private final class AdjacencyBlock(val nodes: Array[Long], val offsets: Array[Int],
-      val nbrs: Array[Long]) extends Serializable {
-    def nodesWithNeighbors: Iterator[(Long, Array[Long])] = nodes.indices.iterator
-      .map(i => (nodes(i), java.util.Arrays.copyOfRange(nbrs, offsets(i), offsets(i + 1))))
-    def sameAs(o: AdjacencyBlock): Boolean = java.util.Arrays.equals(nodes, o.nodes) &&
-      java.util.Arrays.equals(offsets, o.offsets) && java.util.Arrays.equals(nbrs, o.nbrs)
-  }
-
-  private object AdjacencyBlock {
-    /** Groups (node, value) arcs by node: sorted nodes, each with its
-      * sorted distinct values, whatever order the arcs arrive in. */
-    def apply(arcs: Iterator[Product2[Long, Long]]): AdjacencyBlock = {
-      import scala.collection.mutable.{ArrayBuilder, LongMap}
-      val byNode = LongMap.empty[ArrayBuilder.ofLong]
-      arcs.foreach(a => byNode.getOrElseUpdate(a._1, new ArrayBuilder.ofLong) += a._2)
-      val nodes = byNode.keysIterator.toArray
-      java.util.Arrays.sort(nodes)
-      val offsets = new Array[Int](nodes.length + 1)
-      val nbrs = new ArrayBuilder.ofLong
-      var i = 0
-      while (i < nodes.length) {
-        val vs = byNode(nodes(i)).result()
-        java.util.Arrays.sort(vs)
-        var j = 0
-        while (j < vs.length) {
-          if (j == 0 || vs(j) != vs(j - 1)) { nbrs += vs(j); offsets(i + 1) += 1 }
-          j += 1
-        }
-        offsets(i + 1) += offsets(i)
-        i += 1
-      }
-      new AdjacencyBlock(nodes, offsets, nbrs.result())
     }
   }
 

@@ -16,100 +16,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Why this shape at 100 TB: peeling is a serial frontier algorithm
   * (remove the global min-degree node, repeat) — unusable distributed.
-  * The H-index round is ONE join (neighbor values) + ONE window (rank
-  * within node) + ONE aggregate (max of min(rank, value)), all keyed on
-  * the node — the partitioning is reused round over round. The H-index
-  * is tie-order-insensitive, so the window's tie behavior cannot perturb
-  * results: everything is exact integers.
+  * The H-index round is one message per arc and a per-node H-index
+  * ([[Fixpoint.propagate]]: one job per round), and the H-index is a
+  * function of the multiset of neighbor values alone, so message order
+  * cannot perturb results: everything is exact integers.
   *
   * Rounds are CAPPED at [[Rounds]] (the depth the oracle replays in SQL)
-  * with a fingerprint-probe early exit (`hIndexWithRounds` below): each
-  * round's lazy checkpoint is materialized by a map-side
-  * (count, bit_xor(xxhash64)) probe, and a probe match — confirmed by
-  * one exact set-equality job, so a 64-bit collision can only cost an
-  * extra round, never a wrong exit — stops the loop. Because the H-index
+  * and the loop exits at the first round that changes no value (an
+  * exact per-partition comparison). Because the H-index
   * iterate is a deterministic function of the previous round, a fixpoint
   * PERSISTS: the early-exit values equal the oracle's round-[[Rounds]]
   * values exactly, and the gated `converged` column is the same
   * c(R) = c(R−1) predicate the SQL twin computes. If the cap were ever
   * too small for a corpus, both engines report false and the gate fails
   * loudly rather than shipping a wrong coreness (measured: this graph
-  * family converges in ≤ 4 rounds at every bench SF — the probe saves
-  * the wasted tail rounds AND adapts to graphs that need every round).
+  * family converges in ≤ 4 rounds at every bench SF).
   */
 object Coreness {
 
   private val Rounds = 6
   private val TopK = 25
 
-  /** H-index iteration with convergence probe: runs `hRound` up to
-    * `maxRounds` times from `c0`, exiting early at the first exact
-    * fixpoint. Returns (final values pinned, rounds executed, converged).
-    * All per-round checkpoints (and c0's) are released before returning;
-    * only the returned frame stays pinned (pin-and-release — the
-    * round-14 advice item: the old loop left every round's |V|-frame
-    * pinned for the session). */
-  private[rel] def hIndexWithRounds(adj: DataFrame, c0: DataFrame,
+  /** The H-index iteration over the symmetric `(u, v)` arc list `arcs`
+    * from c₀ = degree, up to `maxRounds` rounds, exiting at the first
+    * exact fixpoint. Returns (the (n, c) values, pinned; rounds run;
+    * converged); the loop's RDDs are released before returning. */
+  private[rel] def hIndexWithRounds(arcs: DataFrame,
       maxRounds: Int): (DataFrame, Int, Boolean) = {
-    val loopRdds =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def tracked(df: DataFrame): DataFrame = {
-      loopRdds ++= graft.ml.Similarity.pinnedRdds(df); df
-    }
-    // commutative set fingerprint — map-side-partial only (no shuffle of
-    // both rounds); the probe job doubles as the lazy checkpoint's
-    // materialization job (one Spark job per round)
-    def fingerprint(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(n, c))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var c = tracked(c0.localCheckpoint())
-    var prevFp = fingerprint(c)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = tracked(hRound(adj, c).localCheckpoint(eager = false))
-      val fp = fingerprint(next)
-      if (fp == prevFp) {
-        // exact set equality in one job: tag +1/-1, any nonzero group is
-        // a difference either way (both sides are one-row-per-node)
-        converged = c.select(col("n"), col("c"), lit(1).as("tag"))
-          .union(next.select(col("n"), col("c"), lit(-1).as("tag")))
-          .groupBy(col("n"), col("c")).agg(sum(col("tag")).as("d"))
-          .filter(col("d") =!= 0).isEmpty
-      }
-      prevFp = fp
-      c = next
-      rounds += 1
-    }
-    val pinned = c.localCheckpoint()
-    loopRdds.foreach(_.unpersist(blocking = false))
-    (pinned, rounds, converged)
+    val (c, rounds, converged) = Fixpoint.propagate(arcs, maxRounds)(
+      (_, degree) => degree, (c, _) => c, hIndex)
+    (c.toDF("n", "c"), rounds, converged)
   }
 
-  private[rel] def hRoundForTest(adj: DataFrame, c: DataFrame): DataFrame =
-    hRound(adj, c)
-
-  /** One H-index round over the adjacency: c'(v) = H(c(u) : u ~ v). */
-  private def hRound(adj: DataFrame, c: DataFrame): DataFrame = {
-    val nb = adj.join(c.withColumnRenamed("n", "u"), Seq("u"))
-      .select(col("v"), col("c").as("cn"))
-    val w = Window.partitionBy(col("v")).orderBy(col("cn").desc)
-    nb.withColumn("i", row_number().over(w))
-      .groupBy(col("v"))
-      .agg(max(least(col("i").cast("long"), col("cn"))).as("c"))
-      .select(col("v").as("n"), col("c"))
+  /** The H-index of a multiset of values: max over i of min(i, the i-th
+    * largest value), i from 1 — the largest h with ≥ h values ≥ h. */
+  private[rel] def hIndex(values: Array[Long]): Long = {
+    val v = values.clone()
+    java.util.Arrays.sort(v)
+    var h = Long.MinValue
+    var i = 1
+    while (i <= v.length) {
+      h = math.max(h, math.min(i.toLong, v(v.length - i)))
+      i += 1
+    }
+    h
   }
 
   def q148_coreness(s: SparkSession, dir: String): DataFrame = {
     val edges = Triangles.significantEdges(s, dir)
-    val adj = edges.select(col("sa").as("u"), col("sb").as("v"))
-      .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
-      .localCheckpoint() // reused every round
     val deg = Triangles.degreesOf(edges)
-    val c0 = deg.select(col("n"), col("deg").as("c"))
-    val (c, _, converged) = hIndexWithRounds(adj, c0, Rounds)
+    val (c, _, converged) = hIndexWithRounds(Triangles.arcsOf(edges), Rounds)
     val w = Window.orderBy(col("c").desc, col("n"))
     val out = c.join(deg, Seq("n"))
       .withColumn("rk", row_number().over(w))
@@ -118,11 +74,10 @@ object Coreness {
         col("deg").as("degree"), col("c").as("coreness"),
         lit(converged).as("converged"))
       .orderBy(col("rank"))
-      // pin the TopK result, release the adjacency + edge checkpoints
+      // pin the TopK result, release the edge checkpoint and the values
       // (deg's lineage runs through edges, so release follows the pin)
       .localCheckpoint()
-    (graft.ml.Similarity.pinnedRdds(adj) ++
-      graft.ml.Similarity.pinnedRdds(edges) ++
+    (graft.ml.Similarity.pinnedRdds(edges) ++
       graft.ml.Similarity.pinnedRdds(c))
       .foreach(_.unpersist(blocking = false))
     out

@@ -20,12 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mass per node per round: deterministic, identical in both engines,
   * and ~10^-9 of total mass — irrelevant to ranking.
   *
-  * Scale shape: edges materialize ONCE (localCheckpoint — reused by all
-  * rounds; at 100 TB this is the one corpus-scale shuffle, hash-keyed on
-  * src so the per-round join + dst-aggregate reuse its partitioning).
-  * Each round is one join + one map-side-combined aggregate; driver state
-  * is two scalars (N, base). Five fixed rounds — the gated variant of a
-  * convergence loop (the q73 fixpoint shows the convergence-probe form).
+  * Scale shape: edges materialize ONCE (localCheckpoint — read by the
+  * degree count, the loop's adjacency build and the report's degree
+  * join). Each round is one message per arc and a per-node sum
+  * ([[Fixpoint.propagate]]: one job per round over an adjacency built
+  * once); driver state is two scalars (N, base). At most five rounds —
+  * the gated variant of a convergence loop.
   */
 object Graph {
 
@@ -38,17 +38,7 @@ object Graph {
     * Node encoding: customer c → 2c, supplier s → 2s+1. Damping 0.85 in
     * exact rational form. Returns the top-25 nodes by final rank. */
   def q138_pagerank(s: SparkSession, dir: String): DataFrame = {
-    val e0 = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("cn"),
-        (col("l_suppkey") * 2 + 1).as("sn"))
-      .distinct()
-    val edges = e0.select(col("cn").as("src"), col("sn").as("dst"))
-      .unionByName(e0.select(col("sn").as("src"), col("cn").as("dst")))
-      .localCheckpoint() // materialized once, reused by all rounds
+    val edges = tradeEdges(s, dir)
     val (ranks, deg, _, converged) = pagerankRanks(edges, Iters)
     val w = Window.orderBy(col("r").desc, col("node"))
     val out = ranks
@@ -72,109 +62,53 @@ object Graph {
     out
   }
 
+  /** q138's symmetric (src, dst) trade graph, pinned: three readers (the
+    * node count, the loop's adjacency, the report's degrees). */
+  private[rel] def tradeEdges(s: SparkSession, dir: String): DataFrame = {
+    val e0 = Tables.orders(s, dir)
+      .select(col("o_orderkey"), col("o_custkey"))
+      .join(Tables.lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_suppkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("cn"),
+        (col("l_suppkey") * 2 + 1).as("sn"))
+      .distinct()
+    e0.select(col("cn").as("src"), col("sn").as("dst"))
+      .unionByName(e0.select(col("sn").as("src"), col("cn").as("dst")))
+      .localCheckpoint()
+  }
+
   /** The exact-integer power iteration over a SYMMETRIC (src, dst) edge
-    * list (every node must appear as a src — symmetry guarantees it and
-    * rules out dangling mass), with a fingerprint-probe early
-    * exit: each round's lazy checkpoint is materialized by a map-side
-    * (count, bit_xor(xxhash64)) probe, and a probe match — confirmed by
-    * an exact set-equality job, so a collision can only cost one extra
-    * round — stops the loop at the first EXACT integer fixpoint (which
-    * the integer arithmetic makes reachable: regular components land on
+    * list of LONG node ids (every node must appear as a src — symmetry
+    * guarantees it and rules out dangling mass; duplicated edges count
+    * as often as they appear, in the degree and in the sums), run by
+    * [[Fixpoint.propagate]] up to `maxIters` rounds. It stops at the
+    * first EXACT integer fixpoint (which the integer arithmetic makes
+    * reachable: regular components land on
     * `r = base + (85·deg·(r div deg)) div 100` exactly). A fixpoint
     * persists under the deterministic update, so early-exit values equal
     * the oracle's round-`maxIters` values bit-for-bit. Exposed for
     * GraphSpec's hand-computed fixture.
     *
-    * Returns (final ranks pinned, out-degrees, rounds executed,
-    * converged). Every loop checkpoint — including the degree-annotated
-    * adjacency — is released before returning (pin-and-release). */
+    * Returns ((node, r) ranks pinned, (src, deg) out-degrees, rounds
+    * run, converged): one job counts the nodes, then one per round and
+    * one for the pin; the loop's RDDs are released before returning. */
   private[graft] def pagerankRanks(edges: DataFrame, maxIters: Int)
       : (DataFrame, DataFrame, Int, Boolean) = {
-    val loopRdds =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def tracked(df: DataFrame): DataFrame = {
-      loopRdds ++= graft.ml.Similarity.pinnedRdds(df); df
-    }
-    def fingerprint(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(node, r))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // deg rides ALONG the edge list (one join, before the loop) so each
-    // round is exactly one join + one aggregate — at 100 TB this is the
-    // adjacency-list-with-degree layout every Pregel-style runner keeps
-    val degEdges = tracked(edges.join(deg, Seq("src"))
-      .select(col("src"), col("dst"), col("deg"))
-      .localCheckpoint())
-    val n = deg.count()
-    val init = Mass / n
+    val arcs = edges.select(col("src"), col("dst"))
+    // one job (an RDD distinct; the DataFrame form runs three under AQE)
+    val init = Mass / arcs.queryExecution.toRdd.map(_.getLong(0)).distinct().count()
     val base = (15L * init) / 100L
-    var ranks = tracked(
-      deg.select(col("src").as("node"), lit(init).as("r")).localCheckpoint())
-    var prevFp = fingerprint(ranks)
-    var rounds = 0
-    var converged = false
-    def stepOnce(r: DataFrame): DataFrame = tracked(degEdges
-      .join(r.withColumnRenamed("node", "src"), Seq("src"))
-      .select(col("dst").as("node"), expr("r div deg").as("contrib"))
-      .groupBy(col("node"))
-      .agg((lit(base) + expr("(85 * sum(contrib)) div 100")).as("r"))
-      .localCheckpoint(eager = false))
-    def exactMatch(a: DataFrame, b: DataFrame): Boolean =
-      a.select(col("node"), col("r"), lit(1).as("tag"))
-        .union(b.select(col("node"), col("r"), lit(-1).as("tag")))
-        .groupBy(col("node"), col("r")).agg(sum(col("tag")).as("d"))
-        .filter(col("d") =!= 0).isEmpty
-    while (!converged && rounds < maxIters) {
-      // TWO update rounds per fingerprint job (r20 — the q239 paired-
-      // round trick applied to the other fixpoint barrier): next1 is a
-      // shared subplan of next2, both lazy checkpoints materialize under
-      // ONE tagged (count, bit_xor) probe, and a probe match still
-      // confirms with the exact set-equality job before exiting. The
-      // ranks sequence, round count and converged flag are bit-identical
-      // to the one-round-per-job form (a fixpoint persists under the
-      // deterministic update, so the pre-computed second round of a
-      // converged pair is a no-op that is simply discarded) — only the
-      // sequential job-barrier count halves, which IS the wall cost of
-      // a small-graph round (GraphSpec pins rounds/converged on both
-      // regular and irregular fixtures).
-      val two = rounds + 1 < maxIters
-      val next1 = stepOnce(ranks)
-      val next2 = if (two) stepOnce(next1) else next1
-      val fps: Map[Int, (Long, Long)] =
-        if (two)
-          next1.withColumn("tg", lit(1))
-            .unionByName(next2.withColumn("tg", lit(2)))
-            .groupBy(col("tg")).agg(count(lit(1)),
-              coalesce(expr("bit_xor(xxhash64(node, r))"), lit(0L)))
-            .collect()
-            .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-        else Map(1 -> fingerprint(next1))
-      // empty-frame guard (ADVICE r20): groupBy on an empty frame yields
-      // no rows, where the old global-agg fingerprint returned one —
-      // preserve that (0, 0) fingerprint rather than throwing; currently
-      // unreachable (Mass/n fails first on an empty graph)
-      val fp1 = fps.getOrElse(1, (0L, 0L))
-      if (fp1 == prevFp) converged = exactMatch(ranks, next1)
-      prevFp = fp1
-      ranks = next1
-      rounds += 1
-      if (!converged && two) {
-        val fp2 = fps.getOrElse(2, (0L, 0L))
-        if (fp2 == prevFp) converged = exactMatch(ranks, next2)
-        prevFp = fp2
-        ranks = next2
-        rounds += 1
-      }
-    }
-    // pin the |V|-sized result, release every loop checkpoint — ranks'
-    // lineage runs through degEdges, so the release must follow the
-    // checkpoint's materialization
-    val pinned = ranks.localCheckpoint()
-    loopRdds.foreach(_.unpersist(blocking = false))
-    (pinned, deg, rounds, converged)
+    val (ranks, rounds, converged) = Fixpoint.propagate(arcs, maxIters)(
+      (_, _) => init, (r, d) => r / d, rankUpdate(base, _))
+    (ranks.toDF("node", "r"), edges.groupBy(col("src")).agg(count(lit(1)).as("deg")),
+      rounds, converged)
   }
+
+  /** One node's new rank from the `r div deg` contributions it
+    * received: `base + (85·Σ) div 100`. */
+  private[rel] def rankUpdate(base: Long, contribs: Array[Long]): Long =
+    base + (85L * contribs.sum) / 100L
 
   /** Edge cap for [[pagerankRanksDriver]] — compute-derived (the LinkPred
     * DriverClosureCap discipline): the kernel is O(maxIters·E) long ops
@@ -183,18 +117,16 @@ object Graph {
     * milliseconds on one core. Callers may take this path ONLY for
     * budget-bounded graphs (q246's TrV-vocabulary co-occurrence graph:
     * ≤ TrV·(TrV−1) = 89,700 symmetric edges at ANY corpus scale); a
-    * corpus-scaled graph (q138) keeps the distributed fixpoint. */
+    * corpus-scaled graph (q138) runs the distributed [[pagerankRanks]]. */
   private[graft] val PagerankDriverCap = 1 << 17
 
   /** Driver-side twin of [[pagerankRanks]] for budget-bounded edge lists
-    * (the q201 componentsAdaptive discipline: below-cap driver kernel,
-    * distributed kernel retained as the above-cap path, GraphSpec asserts
-    * both paths bit-identical). Same exact-integer update, same
-    * first-exact-fixpoint early exit, same (ranks, deg, rounds, converged)
-    * contract — ranks/deg come back as LOCAL relations, so the ~30
-    * sequential fixpoint jobs a 10-round distributed run schedules (the
-    * whole wall cost of a 300-node graph) collapse to driver microseconds.
-    * Node type is whatever the edge columns carry (q246: strings). */
+    * (q246; GraphSpec asserts both kernels bit-identical). Same
+    * exact-integer update, same first-exact-fixpoint early exit, same
+    * (ranks, deg, rounds, converged) contract — ranks/deg come back as
+    * LOCAL relations, so a 300-node graph's rounds cost driver
+    * microseconds instead of one Spark job each. Node type is whatever
+    * the edge columns carry (q246: strings). */
   private[graft] def pagerankRanksDriver(edges: DataFrame, maxIters: Int)
       : (DataFrame, DataFrame, Int, Boolean) = {
     import org.apache.spark.sql.Row
@@ -217,15 +149,14 @@ object Graph {
       val acc = new scala.collection.mutable.HashMap[Any, Long]()
       rows.foreach { r =>
         val src = r.get(0)
-        // mirror the distributed join semantics (ADVICE r20): after round
-        // 1 the rank map holds only DESTINATION nodes, so an edge whose
-        // src never appears as a dst contributes nothing — the fixpoint's
-        // inner join drops it silently; unreachable for the symmetric
-        // graphs pagerankRanks contracts for, where src set == dst set
+        // after round 1 the rank map holds only DESTINATION nodes, so an
+        // edge whose src never appears as a dst contributes nothing (the
+        // oracle's inner join drops it too); pagerankRanks rejects such a
+        // non-symmetric graph instead — the two agree wherever both run
         ranks.get(src).foreach { rk =>
           val contrib = rk / deg(src) // floor div, both positive —
           acc.update(r.get(1), acc.getOrElse(r.get(1), 0L) + contrib)
-        } // identical to the fixpoint's `r div deg`
+        } // identical to the distributed kernel's `r div deg`
       }
       val next: scala.collection.Map[Any, Long] =
         acc.map { case (node, sum) => node -> (base + (85L * sum) / 100L) }

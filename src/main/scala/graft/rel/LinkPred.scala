@@ -139,7 +139,7 @@ object LinkPred {
     * expands one join per round with an anti-join against the reached
     * set, first discovery = shortest distance (unweighted BFS
     * invariant), with the loop exiting as soon as a frontier empties
-    * (probe-exit discipline, cf. [[Graph.pagerankRanks]]) and a gated
+    * (a frontier-count job per round) and a gated
     * `converged` flag (frontier empty by round [[MaxDist]] — the oracle
     * derives the same flag as r8 == r7). Output: one row per distance
     * with exact pair counts, cumulative ECDF, the 90 % effective

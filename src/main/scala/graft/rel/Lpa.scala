@@ -22,13 +22,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Q = Σ_c (e_c/m − (d_c/2m)²) scales to the INTEGER
   * Q·4m² = Σ_c (4·m·e_c − d_c²) — summation-order-proof, no doubles.
   *
-  * Scale shape: each round is one shuffle keyed by node (neighbor-label
-  * counts, map-side combined, fan-out bounded by the sparsified degree)
-  * plus a bounded-heap argmax window per node; labels ride a
-  * localCheckpoint per round with pin-and-release (the q138/q148
-  * discipline), and a fingerprint probe exits early when the labeling
-  * stabilizes — at stability every remaining synchronous round is a
-  * no-op, so early exit and the unrolled twin agree by induction. */
+  * Scale shape: each round is one message per arc, shuffled to its
+  * target node, and a per-node plurality ([[Fixpoint.propagate]]: one
+  * job per round, the labels pinned once at the end), and the loop exits
+  * at the first round that changes no label — at stability every
+  * remaining synchronous round is a no-op, so early exit and the
+  * unrolled twin agree by induction. */
 object Lpa {
 
   private val Rounds = 4
@@ -36,51 +35,34 @@ object Lpa {
 
   /** The synchronous propagation loop on an explicit `(sa, sb)` edge
     * frame — exposed so specs drive it on handcrafted graphs. Returns
-    * the final (pinned) labeling and the number of rounds actually
-    * executed (probe-exit may stop before [[Rounds]]). */
-  private[graft] def propagateLabels(edges: DataFrame): (DataFrame, Int) = {
-    val both = edges.select(col("sa").as("u"), col("sb").as("v"))
-      .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
-    val nodes = both.select(col("u").as("n")).distinct()
-    var labels = nodes.select(col("n"), col("n").as("lbl"))
-      .localCheckpoint()
-    var prevFp: (Long, Long) = null
-    var round = 0
-    var ran = 0
-    while (round < Rounds) {
-      val w = Window.partitionBy(col("v"))
-        .orderBy(col("cnt").desc, col("nl"))
-      val next = both.join(labels, col("u") === col("n"))
-        .select(col("v"), col("lbl").as("nl"))
-        .groupBy(col("v"), col("nl")).agg(count(lit(1)).as("cnt"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("v").as("n"), col("nl").as("lbl"))
-        .localCheckpoint()
-      // map-side-partial fingerprint; bit_xor, not sum (ANSI overflow)
-      val fp = next.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("n"), col("lbl"))), lit(0L))).head()
-      val fpPair = (fp.getLong(0), fp.getLong(1))
-      // probe-exit protocol: the exact set check runs ONLY on fingerprint
-      // match, so a hash collision costs one comparison, never a wrong exit
-      val stable = prevFp == fpPair &&
-        next.join(labels, Seq("n", "lbl"), "left_anti").isEmpty
-      MlSim.pinnedRdds(labels).foreach(_.unpersist(false))
-      labels = next
-      round += 1
-      ran += 1
-      if (stable) round = Rounds // stable: remaining rounds are no-ops
-      prevFp = fpPair
+    * the final (n, lbl) labeling, pinned; the rounds run (≤ [[Rounds]]);
+    * and whether the last round changed no label. */
+  private[graft] def propagateLabels(edges: DataFrame): (DataFrame, Int, Boolean) = {
+    val (labels, rounds, converged) = Fixpoint.propagate(Triangles.arcsOf(edges), Rounds)(
+      (node, _) => node, (label, _) => label, plurality)
+    (labels.toDF("n", "lbl"), rounds, converged)
+  }
+
+  /** The most frequent of `labels`, ties going to the smallest. */
+  private[rel] def plurality(labels: Array[Long]): Long = {
+    val l = labels.clone()
+    java.util.Arrays.sort(l)
+    var best = l(0)
+    var bestCount = 0
+    var i = 0
+    while (i < l.length) {
+      var j = i
+      while (j < l.length && l(j) == l(i)) j += 1
+      if (j - i > bestCount) { best = l(i); bestCount = j - i }
+      i = j
     }
-    (labels, ran)
+    best
   }
 
   def q166_lpa_communities(s: SparkSession, dir: String): DataFrame = {
     val edges = Triangles.significantEdges(s, dir) // (sa < sb), pinned
-    val both = edges.select(col("sa").as("u"), col("sb").as("v"))
-      .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
-    val (labels, _) = propagateLabels(edges)
-    val deg = both.groupBy(col("u").as("n")).agg(count(lit(1)).as("deg"))
+    val (labels, _, _) = propagateLabels(edges)
+    val deg = Triangles.arcsOf(edges).groupBy(col("u").as("n")).agg(count(lit(1)).as("deg"))
     val m = edges.count()
     val byLbl = labels.join(deg, "n")
       .groupBy(col("lbl"))

@@ -53,6 +53,11 @@ object Triangles {
       .localCheckpoint() // multiple consumers in every caller
   }
 
+  /** Both orientations of each (sa, sb) edge, as (u, v) arcs. */
+  private[graft] def arcsOf(edges: DataFrame): DataFrame =
+    edges.select(col("sa").as("u"), col("sb").as("v"))
+      .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
+
   /** Undirected degree of [[significantEdges]]. */
   private[graft] def degreesOf(edges: DataFrame): DataFrame =
     edges.select(col("sa").as("n")).unionByName(

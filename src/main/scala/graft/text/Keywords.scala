@@ -187,7 +187,7 @@ object Keywords {
     * the paper's keyword configuration, unweighted/undirected) over
     * the budgeted vocabulary and run the q138 INTEGER PageRank kernel
     * (damping 0.85 as the exact 85/100 split of 10¹² rank mass,
-    * fingerprint-probe early exit, pin-and-release) — the whole fit
+    * exact-fixpoint early exit) — the whole fit
     * replays in DuckDB as [[TrIters]] unrolled rounds, so TextRank's
     * actual rank integers are hash-gated, not just the top-k names.
     *
@@ -220,18 +220,13 @@ object Keywords {
       .distinct()
     val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(pairs.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint() // materialized once: count probe + rank kernel
-    // Budget-bounded graph (≤ TrV·(TrV−1) symmetric edges at ANY corpus
-    // scale — the node set is a top-TrV constant) → the q201
-    // componentsAdaptive discipline (r20): exact-integer PageRank runs as
-    // a driver kernel below Graph.PagerankDriverCap, the distributed
-    // fixpoint is retained as the above-cap path, and GraphSpec asserts
-    // the two bit-identical. A 10-round distributed run schedules ~30
-    // sequential shuffle jobs — the whole wall cost of a 300-node graph.
+    // Budget-bounded graph: at most TrV·(TrV−1) = 89,700 symmetric edges
+    // at ANY corpus scale (the node set is a top-TrV constant), below
+    // Graph.PagerankDriverCap, so exact-integer PageRank always runs as
+    // the driver kernel (its cap `require` is the guard); GraphSpec
+    // asserts it bit-identical to the distributed Graph.pagerankRanks.
     val (ranks, deg, _, converged) =
-      if (edges.count() <= graft.rel.Graph.PagerankDriverCap)
-        graft.rel.Graph.pagerankRanksDriver(edges, TrIters)
-      else graft.rel.Graph.pagerankRanks(edges, TrIters)
+      graft.rel.Graph.pagerankRanksDriver(edges, TrIters)
     val out = ranks
       .join(deg.select(col("src").as("node"), col("deg")), Seq("node"))
       .withColumn("rank", row_number().over(
@@ -243,12 +238,9 @@ object Keywords {
         lit(converged).as("converged"))
       .orderBy(col("rank"))
       // pin the ≤TrTopK-row result, release the corpus-scale token frame
-      // and the loop inputs (q88 pin-and-release discipline)
+      // (q88 pin-and-release discipline)
       .localCheckpoint()
-    (graft.ml.Similarity.pinnedRdds(toks) ++
-      graft.ml.Similarity.pinnedRdds(edges) ++
-      graft.ml.Similarity.pinnedRdds(ranks))
-      .foreach(_.unpersist(blocking = false))
+    graft.ml.Similarity.pinnedRdds(toks).foreach(_.unpersist(blocking = false))
     out
   }
 

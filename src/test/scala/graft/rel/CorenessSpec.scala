@@ -51,64 +51,87 @@ class CorenessSpec extends AnyFunSuite {
     }
   }
 
-  test("hand-built graph: clique + pendant path peels correctly") {
+  /** K4 on {1,2,3,4} plus path 4-5-6: coreness 3 for the clique, 1 for
+    * the path. */
+  private val k4Path = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+    (3L, 4L), (4L, 5L), (5L, 6L))
+
+  private def arcs(edges: Seq[(Long, Long)]) = {
     import spark.implicits._
-    // K4 on {1,2,3,4} plus path 4-5-6: coreness 3 for the clique, 1 for
-    // the path
-    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L), (4L, 5L), (5L, 6L))
-    val adj = edges.flatMap(p => Seq(p, p.swap))
+    edges.flatMap(p => Seq(p, p.swap)).toDF("u", "v")
+  }
+
+  test("hand-built graph: clique + pendant path peels correctly") {
+    val adj = k4Path.flatMap(p => Seq(p, p.swap))
       .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
     val expected = peelCoreness(adj)
     assert(expected == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       5L -> 1L, 6L -> 1L), "peeling reference is itself correct")
-    // the distributed rounds, driven directly on the tiny adjacency
-    val adjDf = edges.flatMap(p => Seq(p, p.swap))
-      .toDF("u", "v")
-    var c = adjDf.groupBy(col("u").as("n"))
-      .agg(count(lit(1)).as("c"))
-    (1 to 6).foreach { _ => c = CorenessTestHook.round(adjDf, c) }
-    val got = c.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expected)
+    // the per-node rule, iterated on the driver from c0 = degree
+    var c = adj.map { case (n, ns) => n -> ns.size.toLong }
+    (1 to 6).foreach { _ =>
+      c = adj.map { case (n, ns) => n -> Coreness.hIndex(ns.toArray.map(c)) }
+    }
+    assert(c == expected)
+  }
+
+  test("H-index rule: repeated neighbour values count once per arc") {
+    assert(Coreness.hIndex(Array(3L, 3L, 3L)) == 3)
+    assert(Coreness.hIndex(Array(2L, 2L, 2L, 2L)) == 2)
+    assert(Coreness.hIndex(Array(5L, 1L, 5L)) == 2)
+    assert(Coreness.hIndex(Array(1L, 1L, 1L, 1L)) == 1)
+    assert(Coreness.hIndex(Array(4L)) == 1)
+    assert(Coreness.hIndex(Array(0L, 0L)) == 0)
+    // order-insensitive, and the argument is left as it was
+    val v = Array(1L, 9L, 2L, 9L, 9L)
+    assert(Coreness.hIndex(v) == 3 && v.sameElements(Array(1L, 9L, 2L, 9L, 9L)))
   }
 
   test("convergence probe: K4+path exits early, values equal peeling") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L), (4L, 5L), (5L, 6L))
-    val adjDf = edges.flatMap(p => Seq(p, p.swap)).toDF("u", "v")
-    val c0 = adjDf.groupBy(col("u").as("n")).agg(count(lit(1)).as("c"))
-    // round 1 already lands on the coreness; the round-2 probe detects it
-    val (c, rounds, converged) = Coreness.hIndexWithRounds(adjDf, c0, 6)
+    // round 1 already lands on the coreness; round 2 changes nothing
+    val (c, rounds, converged) = Coreness.hIndexWithRounds(arcs(k4Path), 6)
     assert(converged, "fixpoint must be detected")
     assert(rounds < 6, s"expected early exit, ran $rounds rounds")
+    assert(rounds == ParentRounds("k4+path"))
     val got = c.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       5L -> 1L, 6L -> 1L))
   }
 
   test("convergence probe: starved round budget reports NOT converged") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L), (4L, 5L), (5L, 6L))
-    val adjDf = edges.flatMap(p => Seq(p, p.swap)).toDF("u", "v")
-    val c0 = adjDf.groupBy(col("u").as("n")).agg(count(lit(1)).as("c"))
     // c1 ≠ c0 (degrees are not the coreness here), so one round cannot
     // confirm a fixpoint — the late case must gate loudly, not lie
-    val (_, rounds, converged) = Coreness.hIndexWithRounds(adjDf, c0, 1)
+    val (_, rounds, converged) = Coreness.hIndexWithRounds(arcs(k4Path), 1)
     assert(!converged, "one round cannot certify this graph")
     assert(rounds == 1)
   }
 
-  private def col(n: String) = org.apache.spark.sql.functions.col(n)
-  private def count(c: org.apache.spark.sql.Column) =
-    org.apache.spark.sql.functions.count(c)
-  private def lit(v: Any) = org.apache.spark.sql.functions.lit(v)
-}
+  test("q148's loop takes the pinned rounds at sf0.001 and sf0.01") {
+    for (dir <- Seq(sf, "/root/testdata/sf0.01")) {
+      val edges = Triangles.significantEdges(spark, dir)
+      val (c, rounds, converged) = Coreness.hIndexWithRounds(Triangles.arcsOf(edges), 6)
+      assert((rounds, converged) == (ParentRounds(dir), true), dir)
+      (graft.ml.Similarity.pinnedRdds(c) ++ graft.ml.Similarity.pinnedRdds(edges))
+        .foreach(_.unpersist(blocking = true))
+    }
+  }
 
-/** Exposes the per-round kernel for the hand-built-graph case. */
-private[rel] object CorenessTestHook {
-  def round(adj: org.apache.spark.sql.DataFrame,
-      c: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Coreness.hRoundForTest(adj, c)
+  test("one call runs at most rounds + 3 jobs and leaves only its result pinned") {
+    import graft.ml.{JobCount, Similarity}
+    val sc = spark.sparkContext
+    val in = arcs(k4Path)
+    val before = sc.getPersistentRDDs.keySet
+    var out: (org.apache.spark.sql.DataFrame, Int, Boolean) = null
+    val jobs = JobCount.of(spark) { out = Coreness.hIndexWithRounds(in, 6) }
+    assert(jobs <= out._2 + 3, s"$jobs jobs for ${out._2} rounds")
+    val pinned = Similarity.pinnedRdds(out._1).map(_.id).toSet
+    assert(pinned.size == 1)
+    assert(sc.getPersistentRDDs.keySet -- before == pinned, "the loop left RDDs persisted")
+    pinned.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+  }
+
+  /** Rounds the fingerprint-probe loop took before the loop moved onto
+    * RDDs; the RDD loop must take exactly as many. */
+  private val ParentRounds: Map[String, Int] = Map(
+    "k4+path" -> 2, sf -> 1, "/root/testdata/sf0.01" -> 1)
 }

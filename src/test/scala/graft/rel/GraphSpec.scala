@@ -28,16 +28,19 @@ class GraphSpec extends AnyFunSuite {
     r
   }
 
-  private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+  /** Runs the distributed kernel, checks its (rounds, converged) against
+    * `expected`, and returns its ranks. */
+  private def run(edges: Seq[(Long, Long)], iters: Int,
+      expected: (Int, Boolean)): Map[Long, Long] = {
     import spark.implicits._
-    val df = edges.toDF("src", "dst")
-    Graph.pagerankRanks(df, iters)._1.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (ranks, _, rounds, converged) = Graph.pagerankRanks(edges.toDF("src", "dst"), iters)
+    assert((rounds, converged) == expected)
+    ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   test("path graph A-B-C: distributed == in-memory reference, ends symmetric") {
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
-    val got = run(edges, 5)
+    val got = run(edges, 5, ParentRounds("path"))
     assert(got == reference(edges, 5))
     assert(got(1L) == got(3L), "symmetric endpoints must tie EXACTLY")
     assert(got(2L) > got(1L), "the hub must outrank the leaves")
@@ -46,7 +49,7 @@ class GraphSpec extends AnyFunSuite {
   test("star graph: hub dominates, leaves tie exactly, mass bounded") {
     val leaves = (2L to 6L)
     val edges = leaves.flatMap(l => Seq((1L, l), (l, 1L)))
-    val got = run(edges, 4)
+    val got = run(edges, 4, ParentRounds("star"))
     assert(got == reference(edges, 4))
     assert(leaves.map(got).toSet.size == 1, "all leaves identical")
     assert(got(1L) > got(2L))
@@ -56,9 +59,56 @@ class GraphSpec extends AnyFunSuite {
 
   test("two disconnected pairs rank identically (no cross-component leakage)") {
     val edges = Seq((1L, 2L), (2L, 1L), (10L, 11L), (11L, 10L))
-    val got = run(edges, 5)
+    val got = run(edges, 5, ParentRounds("two pairs"))
     assert(got == reference(edges, 5))
     assert(got.values.toSet.size == 1, "four symmetric nodes, one rank value")
+  }
+
+  test("a duplicated arc counts twice, as the reference counts it") {
+    import spark.implicits._
+    // path 1-2-3 with the arc 1→2 listed twice: node 1 has out-degree 2
+    // and node 2 hears node 1 twice
+    val edges = Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
+    val got = run(edges, 5, (5, false))
+    assert(got == reference(edges, 5))
+    assert(got != reference(edges.distinct, 5), "the duplicate must matter")
+    val (dr, dd, drounds, dconv) = Graph.pagerankRanksDriver(edges.toDF("src", "dst"), 5)
+    assert(dr.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == got)
+    assert(dd.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 2L, 2L -> 2L, 3L -> 1L))
+    assert((drounds, dconv) == (5, false))
+  }
+
+  test("rank rule: base plus 85 % of the contributions, floored") {
+    assert(Graph.rankUpdate(150L, Array(100L)) == 235L)
+    assert(Graph.rankUpdate(0L, Array(1L, 1L)) == 1L, "170 div 100")
+    assert(Graph.rankUpdate(7L, Array(33L, 33L, 34L)) == 92L, "7 + 8500 div 100")
+    assert(Graph.rankUpdate(10L, Array(99L)) == 94L, "10 + 8415 div 100")
+  }
+
+  test("one call runs at most rounds + 3 jobs and leaves only its result pinned") {
+    import graft.ml.{JobCount, Similarity}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val in = (2L to 6L).flatMap(l => Seq((1L, l), (l, 1L))).toDF("src", "dst")
+    val before = sc.getPersistentRDDs.keySet
+    var out: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Int, Boolean) = null
+    val jobs = JobCount.of(spark) { out = Graph.pagerankRanks(in, 4) }
+    assert(jobs <= out._3 + 3, s"$jobs jobs for ${out._3} rounds")
+    val pinned = Similarity.pinnedRdds(out._1).map(_.id).toSet
+    assert(pinned.size == 1)
+    assert(sc.getPersistentRDDs.keySet -- before == pinned, "the loop left RDDs persisted")
+    pinned.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+  }
+
+  test("q138's loop takes the pinned rounds at sf0.001 and sf0.01") {
+    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+      val edges = Graph.tradeEdges(spark, dir)
+      val (ranks, _, rounds, converged) = Graph.pagerankRanks(edges, 5)
+      assert((rounds, converged) == ParentRounds(dir), dir)
+      (graft.ml.Similarity.pinnedRdds(ranks) ++ graft.ml.Similarity.pinnedRdds(edges))
+        .foreach(_.unpersist(blocking = true))
+    }
   }
 
   test("convergence probe: 1-regular graph hits its exact fixpoint round 1") {
@@ -95,6 +145,7 @@ class GraphSpec extends AnyFunSuite {
       assert(drounds == xrounds && dconv == xconv,
         s"loop contract diverges at iters=$iters: " +
           s"driver ($drounds,$dconv) vs distributed ($xrounds,$xconv)")
+      assert((xrounds, xconv) == ParentRounds(s"star+pair $iters"))
       assert(m(dr) == reference(edges, xrounds))
     }
   }
@@ -140,4 +191,11 @@ class GraphSpec extends AnyFunSuite {
     val got = ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == reference(edges, 4))
   }
+
+  /** (rounds, converged) of the fingerprint-probe loop before the loop
+    * moved onto RDDs; the RDD loop must match them exactly. */
+  private val ParentRounds: Map[String, (Int, Boolean)] = Map(
+    "path" -> (5, false), "star" -> (4, false), "two pairs" -> (1, true),
+    "star+pair 1" -> (1, false), "star+pair 4" -> (4, false),
+    "/root/testdata/sf0.001" -> (5, false), "/root/testdata/sf0.01" -> (5, false))
 }
