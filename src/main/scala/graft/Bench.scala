@@ -106,43 +106,39 @@ object Bench {
       // item 1a)
       "q201_distance_histogram")
 
+  /** One sample; wall = -1 marks a failure. */
+  case class Sample(wall: Double, tt: Double, gc: Double, swB: Double,
+    srB: Double, spB: Double, inB: Double, load: Double, jvms: Int,
+    steal: Double, psiCpu: Double, psiIo: Double)
+
+  case class QResult(name: String, official: Double, samples: Seq[Sample],
+    allTainted: Boolean, budgetHit: Boolean)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ui.enabled=false does NOT stop the app-status listeners: they
-      // retain up to 1000 executions / 1000 jobs of state, and a
-      // 90-query bench emits thousands (the distributed fixpoints run
-      // one to a few jobs per round). The growing store throttles the listener
-      // bus, which many-small-job queries feel hardest — q70 measured
-      // 7.4s isolated vs 24.6s at the end of a full sequence. Keep the
-      // retained state tiny; the bench needs none of it.
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.worker.ui.retainedExecutors", "10")
-      .config("spark.appStateStore.asyncTracking.enable", "false")
-    // Shuffle spill on the container's overlay rootfs intermittently stalls
-    // tasks for 10-100s; tmpfs sidesteps it (local-mode only — a real
-    // cluster would use fast local SSDs for spark.local.dir).
-    // SPARK_GRAFT_LOCAL_DIR overrides: at the 100× scale probe (r17) the
-    // RAM-backed tmpfs spill competed with the enlarged heap for the same
-    // physical memory and the OS OOM-killed the JVM — big-corpus probes
-    // point this at real disk.
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-local"
-      else "")
-    if (localDir.nonEmpty) builder.config("spark.local.dir", localDir)
-    val spark = builder.getOrCreate()
-    GraftExtensions.register(spark) // SQL functions + optimizer rules
-    // ERROR: keep the single JSON result line easy for the driver to find
-    spark.sparkContext.setLogLevel("ERROR")
+    val cores = GraftSession.envCores
+    // validate the probe-mode sample override BEFORE the run starts, not
+    // mid-bench inside times.min (ADVICE r17)
+    val envSamples = sys.env.get("SPARK_GRAFT_SAMPLES").map { v =>
+      val n = try v.toInt catch { case _: NumberFormatException =>
+        sys.error(s"SPARK_GRAFT_SAMPLES must be a positive int, got '$v'") }
+      require(n >= 1, s"SPARK_GRAFT_SAMPLES must be >= 1, got $n")
+      n
+    }
+    // GLOBAL sampling budget (r19 verdict item 1): taint-resampling
+    // (≤8/query) plus spread escalation (≤3/query) had no aggregate
+    // ceiling, and a sustained steal phase stretched the r19 official
+    // run past its timeout (BENCH_r19 rc=124 — no artifact at all). Once the
+    // soft budget is spent, escalation loops stop firing and every later
+    // query takes its base samples only, annotated budgetExhausted. The
+    // clock starts after warmup.
+    val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map { v =>
+      val b = try v.toDouble catch { case _: NumberFormatException =>
+        sys.error(s"SPARK_GRAFT_BENCH_BUDGET must be seconds, got '$v'") }
+      require(b > 0, s"SPARK_GRAFT_BENCH_BUDGET must be > 0, got $b")
+      b
+    }.getOrElse(1200.0)
+    val spark = GraftSession.local(cores)
 
     // SPARK_GRAFT_TIER=trainer (r17 verdict item 5): time the
     // model-fit/streaming-replay entries the main loop excludes — one
@@ -153,19 +149,10 @@ object Bench {
     // total — but a trainer-path regression (a fit suddenly 10×) now
     // has a recorded number to regress FROM.
     val trainerTier = sys.env.get("SPARK_GRAFT_TIER").contains("trainer")
-    val benchSet = {
-      val base =
-        if (trainerTier)
-          SparkEntry.queries.view.filterKeys(heavyModelFits).toMap
-        else if (sys.env.contains("SPARK_GRAFT_BENCH_ALL")) SparkEntry.queries
-        else SparkEntry.queries -- heavyModelFits
-      // dev-only subset (comma-separated names), like Verify's; driver
-      // leaves it unset
-      sys.env.get("SPARK_GRAFT_ONLY") match {
-        case Some(names) => base.view.filterKeys(names.split(",").toSet).toMap
-        case None => base
-      }
-    }
+    val benchSet = GraftSession.only(
+      if (trainerTier) SparkEntry.queries.view.filterKeys(heavyModelFits).toMap
+      else if (sys.env.contains("SPARK_GRAFT_BENCH_ALL")) SparkEntry.queries
+      else SparkEntry.queries -- heavyModelFits)
 
     // Materialize EVERY projected column (count() would let Catalyst prune
     // the expensive projections and final sorts — round-1 advice): the noop
@@ -188,322 +175,21 @@ object Bench {
       try graft.rel.LinkPred.exactDistance(spark, sfDir)
       catch { case _: Throwable => () }
 
-    // SPARK_GRAFT_DIAG=1: per-run [diag] lines attributing wall to stage
-    // wall / executor task time / GC — the tool for chasing long-sequence
-    // degradation (tail queries inflating 2-3x over their isolated times).
-    // The listener itself ALWAYS runs (its cost is one atomic add per
-    // stage) so BENCH_FULL can carry {taskTime, gcTime} beside every wall
-    // sample — environment phases (uniform all-boats inflation, executor
-    // CPU blowups with gc≈0) become separable from plan cost in the
-    // artifact without a rerun (round-15 verdict item 7).
-    val diag = sys.env.contains("SPARK_GRAFT_DIAG")
-    val stageWall = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskTime = new java.util.concurrent.atomic.AtomicLong(0)
-    val stageCount = new java.util.concurrent.atomic.AtomicLong(0)
-    // Shuffle/spill/input bytes (r17): local[32] timings cannot prove
-    // cluster behavior — what transfers is the DATA MOVEMENT the plan
-    // asks for. Shuffle write bytes per query is exactly the network
-    // cost a 1000-executor run would pay, so the scaling ladder records
-    // it alongside wall time: a kernel whose shuffle bytes scale
-    // linearly with the corpus stays network-feasible at 100 TB even if
-    // local wall time is memory-bandwidth-bound.
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    locally {
-      import org.apache.spark.scheduler._
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          stageWall.addAndGet(
-            si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L))
-          val tm = si.taskMetrics
-          taskTime.addAndGet(tm.executorRunTime)
-          shufWrite.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(tm.shuffleReadMetrics.localBytesRead +
-            tm.shuffleReadMetrics.remoteBytesRead)
-          spillBytes.addAndGet(tm.diskBytesSpilled)
-          inputBytes.addAndGet(tm.inputMetrics.bytesRead)
-          stageCount.incrementAndGet()
-        }
-      })
-    }
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    // Machine-load attribution (r17 verdict item 1b): the r17 artifact
-    // inflated 1.33× over r16 with 3-7× taskTime swings on IDENTICAL
-    // plans — environment contention, but nothing in the artifact could
-    // prove it. Record the 1-minute loadavg and the count of OTHER java
-    // processes alongside every sample, so a contended run is
-    // attributable from the artifact alone.
-    def loadAvg: Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    // Hypervisor steal (r18): loadavg and otherJvms see only INSIDE the
-    // VM; /proc/stat's steal column counts cycles the HOST withheld.
-    // The r18 probe that motivated this read 7% steal at idle and ~13%
-    // of active CPU stolen cumulatively — enough to inflate identical
-    // plans' executor taskTime 1.5-2× and breach the bench contract
-    // with zero in-VM signal. Per-sample steal-seconds make that
-    // attribution readable straight from BENCH_FULL.
-    def stealJiffies: Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          val f = src.getLines().next().trim.split("\\s+")
-          if (f.length > 8) f(8).toLong else -1L
-        } finally src.close()
-      } catch { case _: Throwable => -1L }
-    // PSI some-stall totals (r19 verdict item 3): /proc/pressure/{cpu,io}
-    // "some ... total=<µs>" counts wall-µs during which ≥1 runnable task
-    // stalled on that resource. Steal can read ≈0 while IO-bandwidth
-    // contention still doubles wall+taskTime; the per-sample stall-second
-    // DELTA closes that blind spot the same way stealSec closed the steal
-    // one. Recorded per sample; NOT (yet) part of the taint rule — one
-    // round of recorded data first, per the r19 verdict's "optionally".
-    def psiTotalUs(res: String): Long =
-      try {
-        val src = scala.io.Source.fromFile(s"/proc/pressure/$res")
-        try {
-          src.getLines().find(_.startsWith("some")) match {
-            case Some(l) =>
-              val i = l.indexOf("total=")
-              if (i < 0) -1L else l.substring(i + 6).trim.toLong
-            case None => -1L
-          }
-        } finally src.close()
-      } catch { case _: Throwable => -1L }
-    val selfPid = ProcessHandle.current().pid()
-    def otherJvms: Int =
-      try {
-        val procs = new java.io.File("/proc").listFiles()
-        if (procs == null) -1
-        else procs.count { f =>
-          f.getName.forall(_.isDigit) && f.getName.toLong != selfPid && {
-            val comm = new java.io.File(f, "comm")
-            comm.isFile && {
-              try {
-                val s = scala.io.Source.fromFile(comm)
-                try s.mkString.trim == "java" finally s.close()
-              } catch { case _: Throwable => false }
-            }
-          }
-        }
-      } catch { case _: Throwable => -1 }
-    // SparkListener events arrive on an async bus: without a drain,
-    // trailing onStageCompleted events get attributed to the NEXT
-    // sample (ADVICE r17). The bus exposes waitUntilEmpty() as
-    // private[spark] — public in bytecode, so reflection reaches it
-    // without an org.apache.spark shim; the fallback sleep bounds the
-    // skew at one scheduling quantum.
-    def drainListenerBus(): Unit =
-      try {
-        val bus = spark.sparkContext.getClass
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(30) }
-
-    // one sample; wall = -1 marks a failure
-    case class Sample(wall: Double, tt: Double, gc: Double, swB: Double,
-      srB: Double, spB: Double, inB: Double, load: Double, jvms: Int,
-      steal: Double, psiCpu: Double, psiIo: Double)
-    // validate the probe-mode sample override BEFORE the run starts, not
-    // mid-bench inside times.min (ADVICE r17)
-    val envSamples = sys.env.get("SPARK_GRAFT_SAMPLES").map { v =>
-      val n = try v.toInt catch { case _: NumberFormatException =>
-        sys.error(s"SPARK_GRAFT_SAMPLES must be a positive int, got '$v'") }
-      require(n >= 1, s"SPARK_GRAFT_SAMPLES must be >= 1, got $n")
-      n
-    }
-    // GLOBAL sampling budget (r19 verdict item 1): taint-resampling
-    // (≤8/query) plus spread escalation (≤3/query) had no aggregate
-    // ceiling, and a sustained steal phase stretched the r19 driver run
-    // past its timeout (BENCH_r19 rc=124 — no artifact at all). Once the
-    // soft budget is spent, escalation loops stop firing and every later
-    // query takes its base samples only, annotated budgetExhausted. The
-    // clock starts after warmup (validated before the loop, like
-    // SPARK_GRAFT_SAMPLES).
-    val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map { v =>
-      val b = try v.toDouble catch { case _: NumberFormatException =>
-        sys.error(s"SPARK_GRAFT_BENCH_BUDGET must be seconds, got '$v'") }
-      require(b > 0, s"SPARK_GRAFT_BENCH_BUDGET must be > 0, got $b")
-      b
-    }.getOrElse(1200.0)
+    val capture = new BenchCapture(spark, diag = sys.env.contains("SPARK_GRAFT_DIAG"))
     val samplingStart = System.nanoTime()
     def budgetExhausted: Boolean =
       (System.nanoTime() - samplingStart) / 1e9 > budgetSec
-    // Steal-taint threshold, normalized by core count (ADVICE r19,
-    // medium): /proc/stat steal aggregates across ALL vCPUs, so the old
-    // absolute rule (steal > wall/2 — half of ONE core) tainted every
-    // sample under a steady ~1.6% background steal on 32 cores, driving
-    // every query to the 8-sample cap (~4× bench wall) and shipping the
-    // fallback instead of the intended untainted basis. Taint now means
-    // "the host withheld >10% of the machine during the sample" — steal
-    // comparable to the query's CPU budget (the r18 q283 incident, ~70
-    // steal-s on a 15.5 s wall at 32 cores = 14%, still taints).
-    val nCores = try cpus.toInt catch {
-      case _: NumberFormatException => Runtime.getRuntime.availableProcessors }
-    // PSI stall-taint (r21, VERDICT r20 item 1): steal is blind to the
-    // contention mode the r20 builder measured (steal ≈ 0, psiCpu > 0,
-    // taskTime 2-3× on identical plans — IO-bandwidth / cgroup-throttle
-    // weather), so the recorded-since-r20 PSI some-stall deltas now
-    // taint too. Threshold calibrated against one round of recorded
-    // data: across 658 quiet-window samples (r21 baseline run) the
-    // self-inflicted (psiCpu+psiIo)/wall noise floor is p99 = 0.04,
-    // max = 0.068 — 0.2·wall taints only when the host stalls ≥20% of
-    // the sample's wall-clock, 3× above the observed self-noise, while
-    // a 2-3× inflation phase (the q70 incident mode) sits far above it.
-    // PSI "some" counts wall-µs with ≥1 stalled task, so wall (not
-    // wall·cores) is the right normalizer; -1 (hidden /proc/pressure)
-    // skips the rule, same as steal.
-    def tainted(s: Sample): Boolean =
-      (s.steal >= 0 && s.steal > 0.1 * s.wall * nCores) ||
-        (s.psiCpu >= 0 && s.psiIo >= 0 &&
-          s.psiCpu + s.psiIo > 0.2 * s.wall)
-    case class QResult(name: String, official: Double, samples: Seq[Sample],
-      allTainted: Boolean, budgetHit: Boolean)
-    // COMPLETE per-query artifact on disk (round-14 verdict item 8), now
-    // REWRITTEN after every query (r19 verdict item 1b): the r19 driver
-    // run was killed mid-sequence and left NOTHING — an incrementally
-    // flushed artifact degrades to a parseable partial instead. Cost is
-    // one ~300 KB file write per query, invisible next to a timed run.
-    def r1(v: Double): String =
-      BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
-    def r3(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    def fullJson(rs: Seq[QResult]): String =
-      rs.sortBy(_.name).map { q =>
-        val ts = q.samples
-        "\"" + q.name + "\":{\"time\":" + r3(q.official) +
-          ",\"samples\":[" + ts.map(s => r3(s.wall)).mkString(",") + "]" +
-          ",\"taskTime\":[" + ts.map(s => r3(s.tt)).mkString(",") + "]" +
-          ",\"gcTime\":[" + ts.map(s => r3(s.gc)).mkString(",") + "]" +
-          // data-movement profile (MB, r17): shuffle write is the
-          // cluster-network cost the plan would pay at scale; spill > 0
-          // flags partitions outgrowing executor memory at this SF
-          ",\"shufWriteMB\":[" + ts.map(s => r1(s.swB)).mkString(",") + "]" +
-          ",\"shufReadMB\":[" + ts.map(s => r1(s.srB)).mkString(",") + "]" +
-          ",\"spillMB\":[" + ts.map(s => r1(s.spB)).mkString(",") + "]" +
-          ",\"inputMB\":[" + ts.map(s => r1(s.inB)).mkString(",") + "]" +
-          // machine-load attribution (r18): 1-min loadavg + count of
-          // OTHER jvm processes at each sample's start — a 3× wall
-          // inflation with load ≫ cpus and jvms > 0 is the environment,
-          // not the plan
-          ",\"loadAvg\":[" + ts.map(s => r1(s.load)).mkString(",") + "]" +
-          ",\"otherJvms\":[" + ts.map(_.jvms).mkString(",") + "]" +
-          // hypervisor steal-seconds during the sample (r18): taskTime
-          // inflating on an identical plan while stealSec tracks wall is
-          // the HOST, not the plan — the one contention source loadavg
-          // and otherJvms cannot see
-          ",\"stealSec\":[" + ts.map(s => r1(s.steal)).mkString(",") + "]" +
-          // PSI some-stall seconds during the sample (r19 verdict item
-          // 3): cpu/io pressure-stall deltas — contention that steal
-          // cannot see (IO bandwidth, cgroup throttling)
-          ",\"psiCpu\":[" + ts.map(s => r1(s.psiCpu)).mkString(",") + "]" +
-          ",\"psiIo\":[" + ts.map(s => r1(s.psiIo)).mkString(",") + "]" +
-          // count of samples the steal-taint rule excluded from the
-          // official basis: >0 with a sane official time means the
-          // protocol caught a steal phase; == samples.size means the
-          // phase outlived the resample cap and the official time is
-          // the min-wall lower bound, flagged allTainted below
-          ",\"taintedSamples\":" + ts.count(s => s.wall >= 0 && tainted(s)) +
-          ",\"allTainted\":" + q.allTainted +
-          ",\"budgetExhausted\":" + q.budgetHit + "}"
-      }.mkString("{", ",", "}")
-    val flushArtifact = !sys.env.contains("SPARK_GRAFT_ONLY") &&
-      !sys.env.contains("SPARK_GRAFT_SAMPLES")
-    def writeArtifact(rs: Seq[QResult], partial: Boolean): Unit = if (flushArtifact) try {
-      val nf = rs.count(_.official < 0)
-      val tot = rs.collect { case q if q.official >= 0 => q.official }.sum
-      val totU = rs.collect {
-        case q if q.official >= 0 && !q.allTainted => q.official }.sum
-      if (trainerTier) {
-        // trainer tier writes its OWN artifact; the next official run
-        // embeds it, so BENCH_FULL always carries the latest recorded
-        // trainer-path costs without the official total absorbing them
-        val w = new java.io.PrintWriter("BENCH_TRAINER.json")
-        try w.println(
-          s"""{"sf":"$sfDir","n_queries":${rs.size},"n_failed":$nf,"partial":$partial,"total":${r3(tot)},"queries":${fullJson(rs)}}""")
-        finally w.close()
-      } else {
-        val trainer = try {
-          val f = new java.io.File("BENCH_TRAINER.json")
-          if (f.isFile)
-            scala.io.Source.fromFile(f).mkString.trim match {
-              // a truncated trainer artifact (writer crash mid-line) must
-              // not render the whole embedding unparseable (ADVICE r18):
-              // require the blob to CLOSE as well as open
-              case s if s.startsWith("{") && s.endsWith("}") => s
-              case _ => "null"
-            }
-          else "null"
-        } catch { case _: Throwable => "null" }
-        val w = new java.io.PrintWriter("BENCH_FULL.json")
-        try w.println(
-          s"""{"sf":"$sfDir","n_queries":${rs.size},"n_failed":$nf,"partial":$partial,"total":${r3(tot)},"total_untainted":${r3(totU)},"queries":${fullJson(rs)},"trainer":$trainer}""")
-        finally w.close()
-      }
-    } catch { case _: Throwable => () } // artifact is best-effort
+    // SPARK_GRAFT_ONLY / SPARK_GRAFT_SAMPLES runs never write the artifact
+    // (round-15 lesson: a 2-query probe overwrote the certified run;
+    // ADVICE r17: probe-mode SAMPLES must not replace the median-of-5
+    // artifact)
+    val flushArtifact = !sys.env.contains("SPARK_GRAFT_ONLY") && envSamples.isEmpty
+    def writeArtifact(rs: Seq[QResult], partial: Boolean): Unit =
+      if (flushArtifact) BenchArtifact.write(rs, sfDir, cores, trainerTier, partial)
     val acc = scala.collection.mutable.ArrayBuffer.empty[QResult]
     benchSet.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      def once(): Sample = {
-        drainListenerBus() // don't inherit the predecessor's stragglers
-        val (load0, jvms0, st0) = (loadAvg, otherJvms, stealJiffies)
-        val (pc0, pi0) = (psiTotalUs("cpu"), psiTotalUs("io"))
-        val (g0, sw0, tt0, sc0) =
-          (gcMs, stageWall.get, taskTime.get, stageCount.get)
-        val (sw1, sr1, sp1, in1) =
-          (shufWrite.get, shufRead.get, spillBytes.get, inputBytes.get)
-        def stealSec: Double = {
-          val s1 = stealJiffies
-          if (st0 < 0 || s1 < 0) -1.0 else (s1 - st0) / 100.0
-        }
-        def psiSec(res: String, t0: Long): Double = {
-          val t1 = psiTotalUs(res)
-          if (t0 < 0 || t1 < 0) -1.0 else (t1 - t0) / 1e6
-        }
-        val t0 = System.nanoTime()
-        try run(fn, sfDir)
-        catch { case _: Throwable =>
-          return Sample(-1.0, 0, 0, 0, 0, 0, 0, load0, jvms0, stealSec,
-            psiSec("cpu", pc0), psiSec("io", pi0)) }
-        val w = (System.nanoTime() - t0) / 1e9
-        drainListenerBus() // attribute every stage to THIS sample
-        val (tt, gc) = ((taskTime.get - tt0) / 1e3, (gcMs - g0) / 1e3)
-        val mb = 1024.0 * 1024.0
-        val (swB, srB, spB, inB) = ((shufWrite.get - sw1) / mb,
-          (shufRead.get - sr1) / mb, (spillBytes.get - sp1) / mb,
-          (inputBytes.get - in1) / mb)
-        val stealNow = stealSec
-        val (psiC, psiI) = (psiSec("cpu", pc0), psiSec("io", pi0))
-        if (diag)
-          println(f"[diag] $name wall=$w%.2f stageWall=${(stageWall.get - sw0) / 1e3}%.2f " +
-            f"taskTime=$tt%.2f gc=$gc%.2f " +
-            f"stages=${stageCount.get - sc0} " +
-            f"shufWriteMB=$swB%.1f shufReadMB=$srB%.1f spillMB=$spB%.1f " +
-            f"inputMB=$inB%.1f load=$load0%.1f jvms=$jvms0 " +
-            f"steal=$stealNow%.1f psiCpu=$psiC%.1f psiIo=$psiI%.1f")
-        Sample(w, tt, gc, swB, srB, spB, inB, load0, jvms0, stealNow,
-          psiC, psiI)
-      }
-      // measurement hygiene: drop every block a predecessor left pinned
-      // (eager localCheckpoints, lingering .cache()s) and then drain heap
-      // garbage, so each timing measures this plan, not accumulated
-      // block-manager debt — the round-5 verdict measured q55 at 2.7× its
-      // isolated cost 70 queries into the sequence from exactly this.
-      // INVARIANT: this global unpersist is safe ONLY because Bench runs
-      // queries strictly sequentially on a private SparkSession — with any
-      // concurrent query it would truncate a live checkpoint's lineage
-      // (the safe form releases only the RDDs a call persisted itself, as
-      // Similarity.pinnedRdds callers and the graft.rel.Fixpoint loops do).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
+      GraftSession.sweep(spark)
+      def once(): Sample = capture.once(name)(run(fn, sfDir))
       // median-of-5 for the multi-job set since round 14: the round-13
       // official run medianed q73 at 33s against a 2.7-5s isolated time —
       // diag showed executor CPU itself inflated ~6x (gc≈0, same stages),
@@ -519,66 +205,316 @@ object Bench {
         else if (multiJobQueries(name)) 5 else 2)
       val budgetHit = budgetExhausted // one read; annotates this query
       var samples = Seq.fill(nSamples)(once())
-      // A sample is TAINTED per the core-normalized rule above; steal < 0
-      // means /proc/stat is unreadable — no evidence either way, treat as
-      // clean rather than resample forever on a host hiding the counter.
-      def untaintedOf(ss: Seq[Sample]): Seq[Sample] =
-        ss.filter(s => s.wall >= 0 && !tainted(s))
-      // a deterministically-throwing query is condemned to official = -1
-      // after ONE failure — resampling it 8 more times only burns budget
-      // (ADVICE r19, low)
-      def anyFailed = samples.exists(_.wall < 0)
       if (envSamples.isEmpty && !trainerTier && !budgetHit) {
-        // Steal-taint resample FIRST (r18 verdict item 1): a steal phase
-        // inflates every sample it covers UNIFORMLY, so the spread check
-        // below is blind to it — r18's q283 read 16.4/15.5 s (spread
-        // 1.06, no escalation) with ~70 steal-s per sample against a
-        // 3.8 s certified intrinsic. Resample until ≥2 untainted samples
-        // exist, cap 8 — if the phase outlives the cap, the fallback
-        // below reports the min-wall lower bound and the artifact's
-        // taintedSamples/allTainted say why. Both loops also yield to
-        // the global budget so a sustained phase cannot stretch the run
-        // past the driver's timeout (the r19 rc=124 failure mode).
-        while (untaintedOf(samples).size < 2 && samples.size < 8 &&
-            !anyFailed && !budgetExhausted)
+        // Both loops yield to the global budget so a sustained phase
+        // cannot stretch the run past its time limit (the r19 rc=124
+        // failure mode).
+        while (BenchPolicy.wantsTaintResample(samples, cores) && !budgetExhausted)
           samples :+= once()
-        // Escalate on spread (r17 verdict item 1c): a >2× spread across
-        // UNTAINTED samples means residual contention (load, other JVMs)
-        // crossed the run — q201's official 15.4 s was min-of-2 over
-        // {15.4, 54.5}. Take up to 3 more samples so the reported number
-        // comes from the quiet side of the phase. Only when the caller
-        // didn't pin the count (probe mode) and the query is big enough
-        // for spread to mean contention rather than timer noise.
-        def spreadHigh = {
-          val ok = untaintedOf(samples).map(_.wall)
-          ok.nonEmpty && ok.min >= 0.5 && ok.max / ok.min > 2.0
-        }
         var extra = 0
-        while (spreadHigh && extra < 3 && !anyFailed && !budgetExhausted) {
+        while (extra < 3 && BenchPolicy.wantsSpreadResample(samples, cores) &&
+            !budgetExhausted) {
           samples :+= once(); extra += 1 }
       }
-      // official basis: untainted samples only; if a steal phase tainted
-      // everything, report the MIN-wall sample — under additive steal the
-      // minimum is the best available lower-bound estimator (the r19
-      // least-stolen-pair median shipped 3-12× inflated lines through a
-      // sustained phase: q115 7.66 s vs 0.79 s certified) — and flag the
-      // line allTainted so total_untainted can exclude it.
-      val untainted = untaintedOf(samples)
-      val okSamples = samples.filter(_.wall >= 0)
-      val allTainted = untainted.isEmpty && okSamples.nonEmpty
-      val basis =
-        if (untainted.nonEmpty) untainted
-        else okSamples.sortBy(_.wall).take(1)
-      val times = basis.map(_.wall)
-      val official = if (samples.exists(_.wall < 0) || times.isEmpty) -1.0
-        // lower-middle median: the upper-middle of an even-sized escalated
-        // set biased the official number high (ADVICE r18)
-        else if (multiJobQueries(name)) times.sorted.apply((times.size - 1) / 2)
-        else times.min
+      val (official, allTainted) =
+        BenchPolicy.official(samples, multiJobQueries(name), cores)
       acc += QResult(name, official, samples, allTainted, budgetHit)
       writeArtifact(acc.toSeq, partial = true)
     }
-    val results = acc.toSeq.map(q => q.name -> q)
+    val metric = if (trainerTier) "trainer_total" else "total"
+    BenchArtifact.resultLines(acc.toSeq, sfDir, metric).foreach(println)
+    // final artifact rewrite: same shape as the incremental flushes, with
+    // partial:false marking a run that completed its full sequence
+    writeArtifact(acc.toSeq, partial = false)
+    spark.stop()
+  }
+}
+
+/** Bench's measurement side: a stage listener that ALWAYS runs (its cost
+  * is one atomic add per stage) so BENCH_FULL can carry {taskTime, gcTime}
+  * and data movement beside every wall sample — environment phases
+  * (uniform all-boats inflation, executor CPU blowups with gc≈0) become
+  * separable from plan cost in the artifact without a rerun (round-15
+  * verdict item 7) — plus the machine-load readers. With `diag`
+  * (SPARK_GRAFT_DIAG=1) each sample also prints a [diag] line attributing
+  * wall to stage wall / executor task time / GC, and its top stages by
+  * wall time — the tool for chasing long-sequence degradation (tail
+  * queries inflating 2-3x over their isolated times) and single-task
+  * stages (the 6.1 s map stage behind q70's 1-row-group scan trap). */
+final class BenchCapture(spark: SparkSession, diag: Boolean) {
+  import java.util.concurrent.atomic.AtomicLong
+  private val stageWall, taskTime, stageCount = new AtomicLong(0)
+  // Shuffle/spill/input bytes (r17): local[32] timings cannot prove
+  // cluster behavior — what transfers is the DATA MOVEMENT the plan
+  // asks for. Shuffle write bytes per query is exactly the network
+  // cost a 1000-executor run would pay, so the scaling ladder records
+  // it alongside wall time: a kernel whose shuffle bytes scale
+  // linearly with the corpus stays network-feasible at 100 TB even if
+  // local wall time is memory-bandwidth-bound.
+  private val shufWrite, shufRead, spillBytes, inputBytes = new AtomicLong(0)
+  // (stage id, wall ms, tasks, call site) of the current sample, diag only
+  private val stages =
+    new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Int, String)]
+  private val TopStages = 10 // stages per sample the diag dump lists
+
+  locally {
+    import org.apache.spark.scheduler._
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        val wall = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
+        stageWall.addAndGet(wall)
+        val tm = si.taskMetrics
+        taskTime.addAndGet(tm.executorRunTime)
+        shufWrite.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
+        shufRead.addAndGet(tm.shuffleReadMetrics.localBytesRead +
+          tm.shuffleReadMetrics.remoteBytesRead)
+        spillBytes.addAndGet(tm.diskBytesSpilled)
+        inputBytes.addAndGet(tm.inputMetrics.bytesRead)
+        stageCount.incrementAndGet()
+        if (diag)
+          stages.add((si.stageId, wall, si.numTasks, si.name.take(90).replace("\n", " ")))
+      }
+    })
+  }
+
+  private def gcMs: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
+  }
+  // Machine-load attribution (r17 verdict item 1b): the r17 artifact
+  // inflated 1.33× over r16 with 3-7× taskTime swings on IDENTICAL
+  // plans — environment contention, but nothing in the artifact could
+  // prove it. Record the 1-minute loadavg and the count of OTHER java
+  // processes alongside every sample, so a contended run is
+  // attributable from the artifact alone.
+  private def loadAvg: Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .getSystemLoadAverage
+  // Hypervisor steal (r18): loadavg and otherJvms see only INSIDE the
+  // VM; /proc/stat's steal column counts cycles the HOST withheld.
+  // The r18 probe that motivated this read 7% steal at idle and ~13%
+  // of active CPU stolen cumulatively — enough to inflate identical
+  // plans' executor taskTime 1.5-2× and breach the bench contract
+  // with zero in-VM signal. Per-sample steal-seconds make that
+  // attribution readable straight from BENCH_FULL.
+  private def stealJiffies: Long =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try {
+        val f = src.getLines().next().trim.split("\\s+")
+        if (f.length > 8) f(8).toLong else -1L
+      } finally src.close()
+    } catch { case _: Throwable => -1L }
+  // PSI some-stall totals (r19 verdict item 3): /proc/pressure/{cpu,io}
+  // "some ... total=<µs>" counts wall-µs during which ≥1 runnable task
+  // stalled on that resource. Steal can read ≈0 while IO-bandwidth
+  // contention still doubles wall+taskTime; the per-sample stall-second
+  // DELTA closes that blind spot the same way stealSec closed the steal
+  // one.
+  private def psiTotalUs(res: String): Long =
+    try {
+      val src = scala.io.Source.fromFile(s"/proc/pressure/$res")
+      try {
+        src.getLines().find(_.startsWith("some")) match {
+          case Some(l) =>
+            val i = l.indexOf("total=")
+            if (i < 0) -1L else l.substring(i + 6).trim.toLong
+          case None => -1L
+        }
+      } finally src.close()
+    } catch { case _: Throwable => -1L }
+  private val selfPid = ProcessHandle.current().pid()
+  private def otherJvms: Int =
+    try {
+      val procs = new java.io.File("/proc").listFiles()
+      if (procs == null) -1
+      else procs.count { f =>
+        f.getName.forall(_.isDigit) && f.getName.toLong != selfPid && {
+          val comm = new java.io.File(f, "comm")
+          comm.isFile && {
+            try {
+              val s = scala.io.Source.fromFile(comm)
+              try s.mkString.trim == "java" finally s.close()
+            } catch { case _: Throwable => false }
+          }
+        }
+      }
+    } catch { case _: Throwable => -1 }
+  // SparkListener events arrive on an async bus: without a drain,
+  // trailing onStageCompleted events get attributed to the NEXT
+  // sample (ADVICE r17). The bus exposes waitUntilEmpty() as
+  // private[spark] — public in bytecode, so reflection reaches it
+  // without an org.apache.spark shim; the fallback sleep bounds the
+  // skew at one scheduling quantum.
+  private def drainListenerBus(): Unit =
+    try {
+      val bus = spark.sparkContext.getClass
+        .getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } catch { case _: Throwable => Thread.sleep(30) }
+
+  /** Time one run of `body` as sample `name`; a throwing body yields a
+    * wall of -1. */
+  def once(name: String)(body: => Unit): Bench.Sample = {
+    drainListenerBus() // don't inherit the predecessor's stragglers
+    stages.clear()
+    val (load0, jvms0, st0) = (loadAvg, otherJvms, stealJiffies)
+    val (pc0, pi0) = (psiTotalUs("cpu"), psiTotalUs("io"))
+    val (g0, sw0, tt0, sc0) =
+      (gcMs, stageWall.get, taskTime.get, stageCount.get)
+    val (sw1, sr1, sp1, in1) =
+      (shufWrite.get, shufRead.get, spillBytes.get, inputBytes.get)
+    def stealSec: Double = {
+      val s1 = stealJiffies
+      if (st0 < 0 || s1 < 0) -1.0 else (s1 - st0) / 100.0
+    }
+    def psiSec(res: String, t0: Long): Double = {
+      val t1 = psiTotalUs(res)
+      if (t0 < 0 || t1 < 0) -1.0 else (t1 - t0) / 1e6
+    }
+    val t0 = System.nanoTime()
+    try body
+    catch { case _: Throwable =>
+      return Bench.Sample(-1.0, 0, 0, 0, 0, 0, 0, load0, jvms0, stealSec,
+        psiSec("cpu", pc0), psiSec("io", pi0)) }
+    val w = (System.nanoTime() - t0) / 1e9
+    drainListenerBus() // attribute every stage to THIS sample
+    val (tt, gc) = ((taskTime.get - tt0) / 1e3, (gcMs - g0) / 1e3)
+    val mb = 1024.0 * 1024.0
+    val (swB, srB, spB, inB) = ((shufWrite.get - sw1) / mb,
+      (shufRead.get - sr1) / mb, (spillBytes.get - sp1) / mb,
+      (inputBytes.get - in1) / mb)
+    val stealNow = stealSec
+    val (psiC, psiI) = (psiSec("cpu", pc0), psiSec("io", pi0))
+    if (diag) {
+      println(f"[diag] $name wall=$w%.2f stageWall=${(stageWall.get - sw0) / 1e3}%.2f " +
+        f"taskTime=$tt%.2f gc=$gc%.2f " +
+        f"stages=${stageCount.get - sc0} " +
+        f"shufWriteMB=$swB%.1f shufReadMB=$srB%.1f spillMB=$spB%.1f " +
+        f"inputMB=$inB%.1f load=$load0%.1f jvms=$jvms0 " +
+        f"steal=$stealNow%.1f psiCpu=$psiC%.1f psiIo=$psiI%.1f")
+      import scala.jdk.CollectionConverters._
+      stages.asScala.toSeq.sortBy(-_._2).take(TopStages).foreach {
+        case (id, sw, nt, site) =>
+          println(f"[stage] $name $id%5d $sw%6d ms $nt%4d tasks  $site")
+      }
+    }
+    Bench.Sample(w, tt, gc, swB, srB, spB, inB, load0, jvms0, stealNow,
+      psiC, psiI)
+  }
+}
+
+/** Bench's sampling policy, pure functions of the samples. A sample is
+  * TAINTED when the host stole more than 10% of the machine's CPU budget
+  * during it, or when PSI cpu+io some-stall exceeded 20% of its wall; the
+  * official number comes from the untainted samples alone. */
+object BenchPolicy {
+  import Bench.Sample
+
+  // Steal-taint threshold, normalized by core count (ADVICE r19,
+  // medium): /proc/stat steal aggregates across ALL vCPUs, so the old
+  // absolute rule (steal > wall/2 — half of ONE core) tainted every
+  // sample under a steady ~1.6% background steal on 32 cores, driving
+  // every query to the 8-sample cap (~4× bench wall) and shipping the
+  // fallback instead of the intended untainted basis. Taint now means
+  // "the host withheld >10% of the machine during the sample" — steal
+  // comparable to the query's CPU budget (the r18 q283 incident, ~70
+  // steal-s on a 15.5 s wall at 32 cores = 14%, still taints).
+  // PSI stall-taint (r21, VERDICT r20 item 1): steal is blind to the
+  // contention mode measured in r20 (steal ≈ 0, psiCpu > 0,
+  // taskTime 2-3× on identical plans — IO-bandwidth / cgroup-throttle
+  // weather), so the recorded-since-r20 PSI some-stall deltas now
+  // taint too. Threshold calibrated against one round of recorded
+  // data: across 658 quiet-window samples (r21 baseline run) the
+  // self-inflicted (psiCpu+psiIo)/wall noise floor is p99 = 0.04,
+  // max = 0.068 — 0.2·wall taints only when the host stalls ≥20% of
+  // the sample's wall-clock, 3× above the observed self-noise, while
+  // a 2-3× inflation phase (the q70 incident mode) sits far above it.
+  // PSI "some" counts wall-µs with ≥1 stalled task, so wall (not
+  // wall·cores) is the right normalizer. A -1 reading (hidden
+  // /proc/stat or /proc/pressure) is no evidence either way and skips
+  // its rule, rather than resample forever on a host hiding the counter.
+  def tainted(s: Sample, cores: Int): Boolean =
+    (s.steal >= 0 && s.steal > 0.1 * s.wall * cores) ||
+      (s.psiCpu >= 0 && s.psiIo >= 0 &&
+        s.psiCpu + s.psiIo > 0.2 * s.wall)
+
+  def untainted(ss: Seq[Sample], cores: Int): Seq[Sample] =
+    ss.filter(s => s.wall >= 0 && !tainted(s, cores))
+
+  // a deterministically-throwing query is condemned to official = -1
+  // after ONE failure — resampling it more only burns budget (ADVICE
+  // r19, low)
+  private def anyFailed(ss: Seq[Sample]): Boolean = ss.exists(_.wall < 0)
+
+  /** Steal-taint resample, checked FIRST (r18 verdict item 1): a steal
+    * phase inflates every sample it covers UNIFORMLY, so the spread check
+    * is blind to it — r18's q283 read 16.4/15.5 s (spread 1.06, no
+    * escalation) with ~70 steal-s per sample against a 3.8 s certified
+    * intrinsic. Resample until ≥2 untainted samples exist, cap 8. */
+  def wantsTaintResample(ss: Seq[Sample], cores: Int): Boolean =
+    untainted(ss, cores).size < 2 && ss.size < 8 && !anyFailed(ss)
+
+  /** Spread escalation (r17 verdict item 1c): a >2× spread across
+    * UNTAINTED samples means residual contention (load, other JVMs)
+    * crossed the run — q201's official 15.4 s was min-of-2 over
+    * {15.4, 54.5}. The caller takes up to 3 more samples so the reported
+    * number comes from the quiet side of the phase — only for queries big
+    * enough (≥0.5 s) for spread to mean contention, not timer noise. */
+  def wantsSpreadResample(ss: Seq[Sample], cores: Int): Boolean = {
+    val ok = untainted(ss, cores).map(_.wall)
+    !anyFailed(ss) && ok.nonEmpty && ok.min >= 0.5 && ok.max / ok.min > 2.0
+  }
+
+  /** (official seconds, allTainted). Any failed sample makes it -1. The
+    * basis is the untainted samples; if a steal phase tainted everything,
+    * the MIN-wall sample — under additive steal the minimum is the best
+    * available lower-bound estimator (the r19 least-stolen-pair median
+    * shipped 3-12× inflated lines through a sustained phase: q115 7.66 s
+    * vs 0.79 s certified) — flagged allTainted so total_untainted can
+    * exclude it. Multi-job queries report the lower-middle median (the
+    * upper-middle of an even-sized escalated set biased the official
+    * number high, ADVICE r18), the rest the minimum. */
+  def official(ss: Seq[Sample], multiJob: Boolean, cores: Int): (Double, Boolean) = {
+    val clean = untainted(ss, cores)
+    val okSamples = ss.filter(_.wall >= 0)
+    val allTainted = clean.isEmpty && okSamples.nonEmpty
+    val times =
+      (if (clean.nonEmpty) clean else okSamples.sortBy(_.wall).take(1)).map(_.wall)
+    val official =
+      if (anyFailed(ss) || times.isEmpty) -1.0
+      else if (multiJob) times.sorted.apply((times.size - 1) / 2)
+      else times.min
+    (official, allTainted)
+  }
+}
+
+/** Bench's output: the two stdout result lines and BENCH_FULL.json /
+  * BENCH_TRAINER.json. */
+object BenchArtifact {
+  import Bench.QResult
+
+  def r1(v: Double): String =
+    BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
+  def r3(v: Double): String =
+    if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  private def totals(rs: Seq[QResult]): (Int, Double, Double) = (
+    rs.count(_.official < 0),
+    rs.collect { case q if q.official >= 0 => q.official }.sum,
+    // phase-free headline (r19 verdict item 2): the sum over lines whose
+    // basis had ≥1 untainted sample — allTainted lines are lower bounds,
+    // not measurements, so they are reported but not silently summed into
+    // the number rounds compare
+    rs.collect { case q if q.official >= 0 && !q.allTainted => q.official }.sum)
+
+  /** The per-query line, then a SHORT line with the headline numbers
+    * alone: short enough to survive truncation from EITHER direction, so
+    * the official artifact always records the total even if the
+    * per-query line is cut (round-8 verdict item 2). */
+  def resultLines(rs: Seq[QResult], sfDir: String, metric: String): Seq[String] = {
     // 3-decimal rounding (1 ms resolution — below run-to-run noise): the
     // full-precision doubles doubled the line length and the driver's tail
     // capture truncated the cheap half of the suite out of BENCH_r{5,6}.
@@ -590,32 +526,87 @@ object Bench {
     // ~48 expensive ones; round-12 advice: failures sorted FIRST were the
     // first content truncated, inverting the intent). The short trailing
     // summary line still carries n_failed even if every name is cut.
-    val qs = results.sortBy { case (k, q) => (q.official < 0, q.official, k) }
-      .map { case (k, q) => "\"" + k + "\":" + r3(q.official) }
+    val qs = rs.sortBy(q => (q.official < 0, q.official, q.name))
+      .map(q => "\"" + q.name + "\":" + r3(q.official))
       .mkString("{", ",", "}")
-    val nFailed = results.count(_._2.official < 0)
-    val total = results.collect {
-      case (_, q) if q.official >= 0 => q.official }.sum
-    // phase-free headline (r19 verdict item 2): the sum over lines whose
-    // basis had ≥1 untainted sample — allTainted lines are lower bounds,
-    // not measurements, so they are reported but not silently summed into
-    // the number rounds compare
-    val totalUntainted = results.collect {
-      case (_, q) if q.official >= 0 && !q.allTainted => q.official }.sum
-    val metric = if (trainerTier) "trainer_total" else "total"
-    println(s"""{"metric":"$metric","value":${r3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFailed,"total_untainted":${r3(totalUntainted)},"queries":$qs}""")
-    // Second, SHORT line with the headline numbers alone: short enough to
-    // survive truncation from EITHER direction, so the official artifact
-    // always records the total even if the per-query line is cut
-    // (round-8 verdict item 2).
-    println(s"""{"metric":"$metric","value":${r3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFailed,"total_untainted":${r3(totalUntainted)}}""")
-    // final artifact rewrite: same shape as the incremental flushes, with
-    // partial:false marking a run that completed its full sequence.
-    // SPARK_GRAFT_ONLY / SPARK_GRAFT_SAMPLES runs never write it at all
-    // (round-15 lesson: a 2-query probe overwrote the certified run;
-    // ADVICE r17: probe-mode SAMPLES must not replace the median-of-5
-    // artifact).
-    writeArtifact(acc.toSeq, partial = false)
-    spark.stop()
+    val (nFailed, total, totalUntainted) = totals(rs)
+    val head = s"""{"metric":"$metric","value":${r3(total)},"unit":"sec","sf":"$sfDir","n_queries":${rs.size},"n_failed":$nFailed,"total_untainted":${r3(totalUntainted)}"""
+    Seq(s"""$head,"queries":$qs}""", s"$head}")
   }
+
+  def fullJson(rs: Seq[QResult], cores: Int): String =
+    rs.sortBy(_.name).map { q =>
+      val ts = q.samples
+      "\"" + q.name + "\":{\"time\":" + r3(q.official) +
+        ",\"samples\":[" + ts.map(s => r3(s.wall)).mkString(",") + "]" +
+        ",\"taskTime\":[" + ts.map(s => r3(s.tt)).mkString(",") + "]" +
+        ",\"gcTime\":[" + ts.map(s => r3(s.gc)).mkString(",") + "]" +
+        // data-movement profile (MB, r17): shuffle write is the
+        // cluster-network cost the plan would pay at scale; spill > 0
+        // flags partitions outgrowing executor memory at this SF
+        ",\"shufWriteMB\":[" + ts.map(s => r1(s.swB)).mkString(",") + "]" +
+        ",\"shufReadMB\":[" + ts.map(s => r1(s.srB)).mkString(",") + "]" +
+        ",\"spillMB\":[" + ts.map(s => r1(s.spB)).mkString(",") + "]" +
+        ",\"inputMB\":[" + ts.map(s => r1(s.inB)).mkString(",") + "]" +
+        // machine-load attribution (r18): 1-min loadavg + count of
+        // OTHER jvm processes at each sample's start — a 3× wall
+        // inflation with load ≫ cpus and jvms > 0 is the environment,
+        // not the plan
+        ",\"loadAvg\":[" + ts.map(s => r1(s.load)).mkString(",") + "]" +
+        ",\"otherJvms\":[" + ts.map(_.jvms).mkString(",") + "]" +
+        // hypervisor steal-seconds during the sample (r18): taskTime
+        // inflating on an identical plan while stealSec tracks wall is
+        // the HOST, not the plan — the one contention source loadavg
+        // and otherJvms cannot see
+        ",\"stealSec\":[" + ts.map(s => r1(s.steal)).mkString(",") + "]" +
+        // PSI some-stall seconds during the sample (r19 verdict item
+        // 3): cpu/io pressure-stall deltas — contention that steal
+        // cannot see (IO bandwidth, cgroup throttling)
+        ",\"psiCpu\":[" + ts.map(s => r1(s.psiCpu)).mkString(",") + "]" +
+        ",\"psiIo\":[" + ts.map(s => r1(s.psiIo)).mkString(",") + "]" +
+        // count of samples the taint rule excluded from the official
+        // basis: >0 with a sane official time means the protocol caught
+        // a steal phase; == samples.size means the phase outlived the
+        // resample cap and the official time is the min-wall lower
+        // bound, flagged allTainted below
+        ",\"taintedSamples\":" +
+        ts.count(s => s.wall >= 0 && BenchPolicy.tainted(s, cores)) +
+        ",\"allTainted\":" + q.allTainted +
+        ",\"budgetExhausted\":" + q.budgetHit + "}"
+    }.mkString("{", ",", "}")
+
+  /** COMPLETE per-query artifact on disk (round-14 verdict item 8),
+    * REWRITTEN after every query (r19 verdict item 1b): the r19 official
+    * run was killed mid-sequence and left NOTHING — an incrementally
+    * flushed artifact degrades to a parseable partial instead. Cost is
+    * one ~300 KB file write per query, invisible next to a timed run.
+    * Best-effort: a failed write never fails the bench. */
+  def write(rs: Seq[QResult], sfDir: String, cores: Int, trainerTier: Boolean,
+      partial: Boolean): Unit = try {
+    val (nf, tot, totU) = totals(rs)
+    val head = s"""{"sf":"$sfDir","n_queries":${rs.size},"n_failed":$nf,"partial":$partial,"total":${r3(tot)}"""
+    val queries = fullJson(rs, cores)
+    val (file, body) =
+      // trainer tier writes its OWN artifact; the next official run
+      // embeds it, so BENCH_FULL always carries the latest recorded
+      // trainer-path costs without the official total absorbing them
+      if (trainerTier) ("BENCH_TRAINER.json", s"""$head,"queries":$queries}""")
+      else ("BENCH_FULL.json",
+        s"""$head,"total_untainted":${r3(totU)},"queries":$queries,"trainer":$trainerBlob}""")
+    val w = new java.io.PrintWriter(file)
+    try w.println(body) finally w.close()
+  } catch { case _: Throwable => () }
+
+  private def trainerBlob: String = try {
+    val f = new java.io.File("BENCH_TRAINER.json")
+    if (f.isFile)
+      scala.io.Source.fromFile(f).mkString.trim match {
+        // a truncated trainer artifact (writer crash mid-line) must
+        // not render the whole embedding unparseable (ADVICE r18):
+        // require the blob to CLOSE as well as open
+        case s if s.startsWith("{") && s.endsWith("}") => s
+        case _ => "null"
+      }
+    else "null"
+  } catch { case _: Throwable => "null" }
 }

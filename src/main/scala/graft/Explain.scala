@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for selected queries (all by
   * default, or names as args) — the plan-shape audit loop behind the scale
   * notes in SCALING.md. Usage:
@@ -10,15 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.register(spark) // strategies + functions, like Bench/Verify
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCores)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

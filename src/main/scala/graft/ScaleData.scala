@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic 10× corpus synthesis for the scaling-exponent
@@ -110,23 +110,7 @@ object ScaleData {
     val saltMode = if (args.length > 4) args(4) else "caesar"
     require(Set("caesar", "suffix")(saltMode),
       s"unknown salt mode '$saltMode' (caesar|suffix)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // big-corpus generation on a steal-prone host: a multi-second
-      // stall (GC or hypervisor) must not let the in-process executor
-      // give up heartbeating the driver and shut the context down —
-      // an r18 100× lineitem build died exactly this way ("unable to
-      // send heartbeats to driver more than 60 times")
-      .config("spark.executor.heartbeatInterval", "30s")
-      .config("spark.network.timeout", "600s")
-    if (new java.io.File("/dev/shm").isDirectory)
-      builder.config("spark.local.dir", "/dev/shm/spark-local")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCores)
 
     val outDir = new java.io.File(out)
     org.apache.commons.io.FileUtils.deleteQuietly(outDir)

@@ -2,6 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** A registry module: its queries and the DuckDB oracle SQL of those
+  * that have one. */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracle: Map[String, String] = Map.empty
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries`: one entry per implemented operator from SURVEY.md §2, each a
@@ -17,47 +24,34 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     text.TextOps.q32_corpus_pipeline(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rel.Relational.queries ++ rel.Behavior.queries ++
-      rel.Linkage.queries ++ rel.Graph.queries ++ rel.Triangles.queries ++
-      rel.Expectations.queries ++ rel.Coreness.queries ++
-      rel.SkewAdvisor.queries ++ rel.JoinCard.queries ++ rel.Lpa.queries ++
-      rel.Walks.queries ++ rel.LinkPred.queries ++ rel.Itemsets.queries ++
-      text.TextOps.queries ++ text.Tokenize.queries ++ text.Phrases.queries ++
-      text.Entropy.queries ++ text.Budget.queries ++ text.Overlap.queries ++
-      text.CorpusFilters.queries ++ text.Retrieval.queries ++
-      text.KneserNey.queries ++ text.Keywords.queries ++
-      text.Eval.queries ++ text.Privacy.queries ++ text.Drift.queries ++
-      ml.Vocab.queries ++ ml.Hdr.queries ++ ml.Hll.queries ++
-      ml.LshPlanner.queries ++
-      ml.Projection.queries ++
-      ml.Similarity.queries ++ ml.Lda.queries ++ ml.Bloom.queries ++
-      ml.Cluster.queries ++ ml.Bitext.queries ++ ml.Pca.queries ++
-      ml.Quantize.queries ++ ingest.Tickets.queries ++ ingest.Wet.queries ++
-      multimodal.Media.queries ++ sink.Orc.queries ++ sink.Avro.queries ++
-      sink.Lake.queries ++ sink.Skipping.queries ++ sink.Dpp.queries ++
-      sink.RangeLayout.queries ++ streaming.Sessions.queries
+  /** Every registry module, each named once. */
+  val modules: Seq[QueryModule] = Seq(
+    rel.Relational, rel.Behavior, rel.Linkage, rel.Graph, rel.Triangles,
+    rel.Expectations, rel.Coreness, rel.SkewAdvisor, rel.JoinCard, rel.Lpa,
+    rel.Walks, rel.LinkPred, rel.Itemsets,
+    text.TextOps, text.Tokenize, text.Phrases, text.Entropy, text.Budget,
+    text.Overlap, text.CorpusFilters, text.Retrieval, text.KneserNey,
+    text.Keywords, text.Eval, text.Privacy, text.Drift,
+    ml.Vocab, ml.Hdr, ml.Hll, ml.LshPlanner, ml.Projection, ml.Similarity,
+    ml.Lda, ml.Bloom, ml.Cluster, ml.Bitext, ml.Pca, ml.Quantize,
+    ingest.Tickets, ingest.Wet, multimodal.Media,
+    sink.Orc, sink.Avro, sink.Lake, sink.Skipping, sink.Dpp, sink.RangeLayout,
+    streaming.Sessions)
 
-  def oracleSql: Map[String, String] =
-    rel.Relational.oracle ++ rel.Behavior.oracle ++
-      rel.Linkage.oracle ++ rel.Graph.oracle ++ rel.Triangles.oracle ++
-      rel.Expectations.oracle ++ rel.Coreness.oracle ++
-      rel.SkewAdvisor.oracle ++ rel.JoinCard.oracle ++ rel.Lpa.oracle ++
-      rel.Walks.oracle ++ rel.LinkPred.oracle ++ rel.Itemsets.oracle ++
-      text.TextOps.oracle ++ text.Tokenize.oracle ++ text.Phrases.oracle ++
-      text.Entropy.oracle ++ text.Budget.oracle ++ text.Overlap.oracle ++
-      text.CorpusFilters.oracle ++ text.Retrieval.oracle ++
-      text.KneserNey.oracle ++ text.Keywords.oracle ++
-      text.Eval.oracle ++ text.Privacy.oracle ++ text.Drift.oracle ++
-      ml.Vocab.oracle ++ ml.Hdr.oracle ++ ml.Hll.oracle ++
-      ml.LshPlanner.oracle ++
-      ml.Projection.oracle ++
-      ml.Similarity.oracle ++ ml.Lda.oracle ++ ml.Cluster.oracle ++ ml.Bitext.oracle ++ ml.Pca.oracle ++
-      ml.Bloom.oracle ++ ml.Quantize.oracle ++
-      ingest.Tickets.oracle ++ ingest.Wet.oracle ++
-      multimodal.Media.oracle ++ sink.Orc.oracle ++
-      sink.Avro.oracle ++ sink.Lake.oracle ++ sink.Skipping.oracle ++
-      sink.Dpp.oracle ++ sink.RangeLayout.oracle
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    union(modules.map(_.queries))
+
+  lazy val oracleSql: Map[String, String] = union(modules.map(_.oracle))
+
+  /** The union of the modules' maps; a key two modules define throws
+    * instead of letting the later module silently win. */
+  private[graft] def union[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dup = maps.flatMap(_.keys).groupBy(identity).collect {
+      case (k, ks) if ks.size > 1 => k }
+    require(dup.isEmpty,
+      s"registry keys defined by two modules: ${dup.toSeq.sorted.mkString(", ")}")
+    maps.foldLeft(Map.empty[String, V])(_ ++ _)
+  }
 
   /** Engine-only residue, made provably residual (r15 verdict item 2):
     * every registry entry WITHOUT a DuckDB oracle, annotated with the

@@ -1,38 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded app-status retention (see Bench): the listeners run even
-      // with the UI off, and ~90 queries incl. multi-job fixpoints
-      // otherwise throttle the listener bus late in the sequence
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-    // tmpfs scratch: overlay-rootfs shuffle writes intermittently stall (see Bench)
-    if (new java.io.File("/dev/shm").isDirectory)
-      builder.config("spark.local.dir", "/dev/shm/spark-local")
-    val spark = builder.getOrCreate()
-    GraftExtensions.register(spark) // SQL functions + optimizer rules
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated names); driver leaves it unset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.queries) { names =>
-      SparkEntry.queries.filter { case (n, _) => names(n) }
+    if (args.length != 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir>")
+      sys.exit(2)
     }
-    selected.foreach { case (name, fn) =>
+    val Array(sfDir, outDir) = args
+    val spark = GraftSession.local(GraftSession.envCores)
+    new java.io.File(outDir).mkdirs()
+    GraftSession.only(SparkEntry.queries).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -41,28 +20,17 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same between-query sweep as Bench (and same sequential/private-
-      // session INVARIANT): queries that pin results via localCheckpoint
-      // would otherwise accumulate blocks across the ~100-query dump
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // queries that pin results via localCheckpoint would otherwise
+      // accumulate blocks across the ~100-query dump
+      GraftSession.sweep(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = new java.io.StringWriter
+    val gen = new com.fasterxml.jackson.core.JsonFactory().createGenerator(json)
+    gen.writeStartObject()
+    SparkEntry.oracleSql.foreach { case (k, v) => gen.writeStringField(k, v) }
+    gen.writeEndObject()
+    gen.close()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json.toString)
     spark.stop()
   }
 }

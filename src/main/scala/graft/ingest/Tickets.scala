@@ -32,7 +32,7 @@ import org.apache.spark.sql.types._
   * nested form groups on the already-partitioned key so the groupBy reuses
   * the join's exchange.
   */
-object Tickets {
+object Tickets extends graft.QueryModule {
 
   /** Fixture inputs are repo-local (FIXTURES.md §A) — the shared sf dirs
     * hold only the driver's parquet tables. */
@@ -382,7 +382,7 @@ object Tickets {
        |UNION ALL
        |SELECT ticket_id, comment_id, created_at, body FROM ($DFlatComments)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q78_scan_csv" ->
       s"""SELECT team, CAST(COUNT(*) AS BIGINT) AS n_agents,
          | CAST(SUM(tickets_closed) AS BIGINT) AS closed,

@@ -32,7 +32,7 @@ import java.io.File
   * malformed records (here the fixture is clean by construction and the
   * gate proves the round trip lossless via content signatures).
   */
-object Wet {
+object Wet extends graft.QueryModule {
 
   private val Sentinel = "GRAFT-WET/1.0\n"
 
@@ -109,6 +109,6 @@ object Wet {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q149_wet_ingest" -> (q149_wet_ingest _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q149_wet_ingest" -> wetOracle)
 }

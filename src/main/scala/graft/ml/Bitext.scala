@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * shortlists (margin only needs each side's top-k neighborhood, which
   * ANN supplies) and keeps this kernel as the per-candidate scorer; the
   * per-side top-k is a bounded-heap window either way. */
-object Bitext {
+object Bitext extends graft.QueryModule {
   private val KNn = 4
   private val TopPairs = 20
 
@@ -164,7 +164,7 @@ object Bitext {
     "q181_bitext_margin" -> (q181_bitext_margin _),
     "q197_triplet_mining" -> (q197_triplet_mining _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q181_bitext_margin" -> bitextOracle,
     "q197_triplet_mining" -> tripletOracle)
 }

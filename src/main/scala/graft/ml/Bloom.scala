@@ -127,7 +127,7 @@ case class BloomMightContain(child: Expression,
     copy(child = newChild)
 }
 
-object Bloom {
+object Bloom extends graft.QueryModule {
 
   /** Aggregate a column into a serialized Bloom filter (one BINARY row). */
   def bloom_build(c: Column, expectedItems: Long, fpp: Double = 0.01): Column =
@@ -300,7 +300,7 @@ object Bloom {
 
   /** The exact side recomputed relationally; the sketch-path booleans are
     * asserted as literals — see q80's scaladoc for the contract. */
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q80_bloom_decontaminate" ->
       s"""WITH toks AS (SELECT doc_id, $DToks AS t FROM documents),
          |grams AS (SELECT DISTINCT doc_id,

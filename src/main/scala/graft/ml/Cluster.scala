@@ -90,7 +90,7 @@ case class L2SqDistL(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object Cluster {
+object Cluster extends graft.QueryModule {
   private val K = 4
   private val Dims = 64
   private val Rounds = 3
@@ -532,7 +532,7 @@ object Cluster {
     "q256_calinski_harabasz" -> (q256_calinski_harabasz _),
     "q261_silhouette" -> (q261_silhouette _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q178_kmeans_centroids" ->
       s"""WITH $kmeansCtes
          |SELECT cid, CAST(t.i AS INTEGER) AS dim, c[t.i] AS c_u, n

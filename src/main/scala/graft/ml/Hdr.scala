@@ -30,7 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * multiply + round, identical in both engines (inputs have 2-decimal
   * origin so nothing lands on a .5 knife-edge).
   */
-object Hdr {
+object Hdr extends graft.QueryModule {
 
   private val SubBits = 4
   private val Phis = Seq(500, 900, 950, 990, 999) // permille
@@ -140,6 +140,6 @@ object Hdr {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q130_hdr_quantiles" -> (q130_hdr_quantiles _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q130_hdr_quantiles" -> hdrOracle)
 }

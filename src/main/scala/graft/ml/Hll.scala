@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * math over the register table. The register bit_xor signature gates
   * the sketch CONTENT, not just the estimate.
   */
-object Hll {
+object Hll extends graft.QueryModule {
 
   private val P = 8
   private val M = 1 << P // 256 registers
@@ -467,7 +467,7 @@ object Hll {
     "q226_hll_merge" -> (q226_hll_merge _),
     "q228_kmv_setops" -> (q228_kmv_setops _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q219_hll_distinct" -> hllOracle,
     "q226_hll_merge" -> mergeOracle,
     "q228_kmv_setops" -> setopsOracle)

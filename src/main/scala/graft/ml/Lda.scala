@@ -62,7 +62,7 @@ import org.apache.spark.util.random.PoissonSampler
   * correctness-gate requirement). All engine-only: topic-term weights are
   * optimizer-specific, never DuckDB-oracle-gated (SURVEY §5.2).
   */
-object Lda {
+object Lda extends graft.QueryModule {
 
   val Seed = 42L
   val MaxIter = 20 // reference UI caps iterations < 200, passes < 20
@@ -566,6 +566,6 @@ object Lda {
     "m_lda_relevance"  -> (m_lda_relevance _),
     "q155_lda_recovery" -> (q155_lda_recovery _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q155_lda_recovery" -> recoveryOracle)
 }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * work: choosing (b, r) fixes the band-bucket fan-out of the q30/q84
   * pipelines before any corpus-side pass runs.
   */
-object LshPlanner {
+object LshPlanner extends graft.QueryModule {
 
   private val Configs: Seq[(Int, Int)] =
     Seq((8, 16), (16, 8), (32, 4), (64, 2), (16, 16), (32, 8))
@@ -97,6 +97,6 @@ object LshPlanner {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q151_lsh_planner" -> (q151_lsh_planner _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q151_lsh_planner" -> plannerOracle)
 }

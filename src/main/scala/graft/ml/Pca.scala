@@ -37,7 +37,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * covariance): embeddings are ~zero-mean by construction and centering
   * would need a subtract that re-enters float space; the consumer that
   * needs covariance centers x BEFORE micro-integerization. */
-object Pca {
+object Pca extends graft.QueryModule {
   private val Dims = 64
   private val Rounds = 3
   private val VScale = 1000L
@@ -309,7 +309,7 @@ object Pca {
     "q189_projection_histogram" -> (q189_projection_histogram _),
     "q230_source_separability" -> (q230_source_separability _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q188_power_iteration" -> pcaOracle,
     "q189_projection_histogram" -> projOracle,
     "q230_source_separability" -> sepOracle)

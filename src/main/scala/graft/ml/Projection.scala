@@ -36,7 +36,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * audit panel is a 50-row broadcast join; at 100 TB the same audit
   * runs over any fixed query panel while the projection maps the
   * corpus. */
-object Projection {
+object Projection extends graft.QueryModule {
 
   private val D = 64
   private val K = 32
@@ -166,6 +166,6 @@ object Projection {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q160_jl_projection" -> (q160_jl_projection _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q160_jl_projection" -> jlOracle)
 }

@@ -95,7 +95,7 @@ case class I8Dot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object Quantize {
+object Quantize extends graft.QueryModule {
   def i8_scale(c: Column): Column =
     GraftSqlBridge.column(I8Scale(GraftSqlBridge.expression(c)))
   def i8_quantize(c: Column, scale: Column): Column =
@@ -168,7 +168,7 @@ object Quantize {
     "m_ann_quantized" -> (m_ann_quantized _),
     "q81_ann_quantized_recall" -> (q81_ann_quantized_recall _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q81_ann_quantized_recall" ->
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.LongType
   * 100 TB algorithms — candidate generation via equi-join on bucket keys
   * (hash shuffle, no cross product), exact re-scoring only within buckets.
   */
-object Similarity {
+object Similarity extends graft.QueryModule {
 
   /** Sequential dot product over two double arrays — the native codegen'd
     * expression (see ml.DotProductD); same index-order evaluation as
@@ -2409,7 +2409,7 @@ object Similarity {
        |FROM lab ORDER BY vec_id""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q92_semdedup" -> semdedupOracle,
     "m_ann_pq_seeded" -> annPqSeededOracle,
     // brute inverted-index truth over distinct token sets; the engine's

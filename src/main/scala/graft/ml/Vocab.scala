@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.LongType
   * declared queries use no_above=0.9 to stay meaningful; `countVectorize`
   * exposes the knobs with the reference defaults.
   */
-object Vocab {
+object Vocab extends graft.QueryModule {
 
   val MinDF = 5
   val MaxDFFrac = 0.9
@@ -231,7 +231,7 @@ object Vocab {
     "q169_hashing_fidelity" -> (q169_hashing_fidelity _),
     "m_vocab_countvectorizer" -> (m_vocab_countvectorizer _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q24_dictionary" ->
       s"""WITH $DictSql
          |SELECT term_id, term, df FROM dict ORDER BY term_id""".stripMargin,

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   *    surface are real and tested; swapping in a real codec touches ONLY
   *    `DecodeStub`.
   */
-object Media {
+object Media extends graft.QueryModule {
 
   val FeatureDim = 64
   val BatchSize = 32 // codec batch: bounds per-batch memory at wide blobs
@@ -618,7 +618,7 @@ object Media {
        |FROM attrs WHERE kidx = 2 ORDER BY media_id""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q83_image_text_pairs" -> imageTextPairsOracle,
     "q205_alignment_gate" -> alignmentOracle,
     "q90_interleaved_docs" -> interleavedDocsOracle,

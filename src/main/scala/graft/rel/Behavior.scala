@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * two user-keyed aggregates and one bounded rollup. Nothing is
   * corpus-global except the final tiny result frames.
   */
-object Behavior {
+object Behavior extends graft.QueryModule {
 
   private val WeekUs = 7L * 86400L * 1000000L
   private val DayUs = 86400L * 1000000L
@@ -3278,7 +3278,7 @@ object Behavior {
     "q195_session_paths" -> (q195_session_paths _),
     "q196_revenue_concentration" -> (q196_revenue_concentration _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q259_mann_whitney" -> mwOracle,
     "q262_ljung_box" -> ljungOracle,
     "q263_theil_index" -> theilOracle,

@@ -32,7 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * loudly rather than shipping a wrong coreness (measured: this graph
   * family converges in ≤ 4 rounds at every bench SF).
   */
-object Coreness {
+object Coreness extends graft.QueryModule {
 
   private val Rounds = 6
   private val TopK = 25
@@ -113,6 +113,6 @@ object Coreness {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q148_coreness" -> (q148_coreness _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q148_coreness" -> corenessOracle)
 }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Everything is exact integer counting — no float metrics, so the
   * report hash-gates cross-engine with zero tolerance.
   */
-object Expectations {
+object Expectations extends graft.QueryModule {
 
   def q146_expectations(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -263,7 +263,7 @@ object Expectations {
     "q208_benford_audit" -> (q208_benford_audit _),
     "q235_ri_audit" -> (q235_ri_audit _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q146_expectations" -> expectationsOracle,
     "q208_benford_audit" -> benfordOracle,
     "q235_ri_audit" -> riOracle)

@@ -27,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * once); driver state is two scalars (N, base). At most five rounds —
   * the gated variant of a convergence loop.
   */
-object Graph {
+object Graph extends graft.QueryModule {
 
   private val Mass = 1000000000000L // 10^12: total rank mass, integer units
   private val Iters = 5
@@ -215,6 +215,6 @@ object Graph {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q138_pagerank" -> (q138_pagerank _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q138_pagerank" -> pagerankOracle)
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * corpus-linearly — the reason Apriori survives at scale while
   * all-pairs doesn't.
   */
-object Itemsets {
+object Itemsets extends graft.QueryModule {
 
   private val MinSup = 3L
 
@@ -452,7 +452,7 @@ object Itemsets {
     "q244_kendall_tau" -> (q244_kendall_tau _),
     "q247_sequential_patterns" -> (q247_sequential_patterns _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q272_hhi_concentration" -> hhiOracle,
     "q224_frequent_itemsets" -> itemsetsOracle,
     "q227_rank_stability" -> stabilityOracle,

@@ -69,7 +69,7 @@ case class SplitMix64(child: Expression) extends UnaryExpression {
   * consumer decision (q159b) is ONE memoized scalar — metadata, never
   * corpus data — exactly the q153→q46 advisor→executor contract.
   */
-object JoinCard {
+object JoinCard extends graft.QueryModule {
 
   /** Sampling modulus: keep 1/8 of the key domain. */
   private val PInv = 8L
@@ -565,7 +565,7 @@ object JoinCard {
     "q165_endbiased_estimate" -> (q165_endbiased_estimate _),
     "q289_join_order" -> (q289_join_order _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q159_join_cardinality" -> joinCardOracle,
     "q159b_advised_join" -> advisedJoinOracle,
     "q165_endbiased_estimate" -> endbiasedOracle,

@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus), generated by one self-join of the adjacency keyed by
   * center. Degrees/fits are catalog-sized. q192 fits the q145/q148
   * MinCoOrders graph, the one the other graph kernels share. */
-object LinkPred {
+object LinkPred extends graft.QueryModule {
   private val TopK = 20
   /** Fixed edge BUDGET (top pairs by co-order weight, deterministic
     * (w desc, sa, sb) order): a threshold constant can't serve two
@@ -875,7 +875,7 @@ object LinkPred {
     "q201_distance_histogram" -> (q201_distance_histogram _),
     "q239_distance_approx" -> (q239_distance_approx _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q191_link_prediction" -> linkPredOracle,
     "q192_powerlaw_fit" -> powerlawOracle,
     "q201_distance_histogram" -> distanceOracle,

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    "k-anonymity: a model for protecting privacy"; full-domain
   *    generalization à la Samarati) over quasi-identifiers.
   */
-object Linkage {
+object Linkage extends graft.QueryModule {
 
   // ------------------------------------------------ q137 fuzzy entity match
   /** Minimum Jaro-Winkler (micro-units) for a fuzzy neighbor. */
@@ -391,7 +391,7 @@ object Linkage {
     "q216_l_diversity" -> (q216_l_diversity _),
     "q241_t_closeness" -> (q241_t_closeness _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q137_fuzzy_match" -> fuzzyOracle,
     "q141_k_anonymity" -> anonOracle,
     "q216_l_diversity" -> ldivOracle,

@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * at the first round that changes no label — at stability every
   * remaining synchronous round is a no-op, so early exit and the
   * unrolled twin agree by induction. */
-object Lpa {
+object Lpa extends graft.QueryModule {
 
   private val Rounds = 4
   private val TopK = 25
@@ -148,6 +148,6 @@ object Lpa {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q166_lpa_communities" -> (q166_lpa_communities _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q166_lpa_communities" -> lpaOracle)
 }

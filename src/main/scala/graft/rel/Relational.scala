@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
   *   - timestamps are exposed as DATE or epoch-micros longs, never raw
   *     engine-specific timestamp encodings.
   */
-object Relational {
+object Relational extends graft.QueryModule {
 
   private def d2(c: Column): Column = c.cast(DecimalType(18, 2))
   /** Exact money sum: decimal accumulate (associative+exact), double result. */
@@ -1085,7 +1085,7 @@ object Relational {
     "q_approx_distinct"      -> (q_approx_distinct _),
     "q54_kmv_distinct"       -> (q54_kmv_distinct _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q01_agg_pricing" ->
       """SELECT l_returnflag, l_linestatus,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,

@@ -25,7 +25,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * ingest batch and feeds into q46-style salting and AQE skew-join
   * thresholds.
   */
-object SkewAdvisor {
+object SkewAdvisor extends graft.QueryModule {
 
   def q153_skew_advisor(s: SparkSession, dir: String): DataFrame = {
     // keys are audited as STRINGS (long→string casts render identically
@@ -165,6 +165,6 @@ object SkewAdvisor {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q153_skew_advisor" -> (q153_skew_advisor _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q153_skew_advisor" -> skewOracle)
 }

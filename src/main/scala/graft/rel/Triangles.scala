@@ -27,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Everything is exact integer arithmetic; the clustering coefficient
   * reports as permille `2000·tri div (deg·(deg−1))`.
   */
-object Triangles {
+object Triangles extends graft.QueryModule {
 
   /** Minimum co-orders for a significant edge (sparsifies the
     * co-occurrence graph; see scaladoc). 6 keeps the bench graph sparse
@@ -154,6 +154,6 @@ object Triangles {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q145_triangle_count" -> (q145_triangle_count _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q145_triangle_count" -> triangleOracle)
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frontier's current node — still L bounded passes, no driver state;
   * walk count per node is the knob that sizes the corpus against the
   * downstream trainer's budget. */
-object Walks {
+object Walks extends graft.QueryModule {
 
   private val WalksPerNode = 2
   private val WalkLen = 4
@@ -279,7 +279,7 @@ object Walks {
     "q167_deepwalk_corpus" -> (q167_deepwalk_corpus _),
     "q223_node2vec_walks" -> (q223_node2vec_walks _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q167_deepwalk_corpus" -> walksOracle,
     "q223_node2vec_walks" -> node2vecOracle)
 }

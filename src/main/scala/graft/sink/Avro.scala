@@ -60,7 +60,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * filter, aggregate with a 48-bit md5-prefix text signature — the oracle
   * recomputes from parquet, so any loss in the write/read path (string
   * mangling, row loss, split double-reads) breaks the hash gate. */
-object Avro {
+object Avro extends graft.QueryModule {
 
   // ---------------------------------------------------------------- schema
 
@@ -362,7 +362,7 @@ object Avro {
     "q113_avro_roundtrip" -> (q113_avro_roundtrip _),
     "q132_avro_evolution" -> (q132_avro_evolution _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q113_avro_roundtrip" ->
       """SELECT source, COUNT(*) AS n_docs,
         | CAST(SUM(n_chars) AS BIGINT) AS sum_chars,

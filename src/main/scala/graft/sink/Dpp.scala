@@ -29,7 +29,7 @@ import java.io.File
   * is bench-scale-specific: the fixture's 5 partitions stand in for
   * 10^4 date/tenant partitions.
   */
-object Dpp {
+object Dpp extends graft.QueryModule {
 
   /** Lake + inner (pre-checkpoint) frame, exposed for DppSpec's
     * plan/metrics assertions (the q88 pattern: the returned query pins
@@ -87,6 +87,6 @@ object Dpp {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q142_dpp_star_lake" -> (q142_dpp_star_lake _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q142_dpp_star_lake" -> dppOracle)
 }

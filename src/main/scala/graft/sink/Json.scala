@@ -76,7 +76,7 @@ object Parquet {
   * path directly — see `sink/Avro.scala` for the distributed partitioned
   * writer + DSv2 pruning/splittable source and the q113 round-trip gate
   * (the q88/q91 contract, now on a self-built format). */
-object Orc {
+object Orc extends graft.QueryModule {
   /** Write + pruned-read + aggregate, PRE-checkpoint — exposed so SinkSpec
     * can assert PartitionFilters on the live ORC scan (the q88 wrapper
     * pins the result and deletes the scratch dir, which replaces the plan
@@ -153,7 +153,7 @@ object Orc {
     "q88_orc_roundtrip" -> (q88_orc_roundtrip _),
     "q91_jsonl_roundtrip" -> (q91_jsonl_roundtrip _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q88_orc_roundtrip" ->
       """SELECT source, COUNT(*) AS n_docs,
         | CAST(SUM(n_chars) AS BIGINT) AS sum_chars,

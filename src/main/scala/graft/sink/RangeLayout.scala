@@ -34,7 +34,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per-bucket report is one map-side-combined aggregate. Nothing
   * corpus-scale reaches the driver — the consumer memo is the 7-long
   * boundary array. */
-object RangeLayout {
+object RangeLayout extends graft.QueryModule {
 
   private val K = 8
   private val PInv = 64L
@@ -214,7 +214,7 @@ object RangeLayout {
     "q163_range_boundaries" -> (q163_range_boundaries _),
     "q163b_advised_layout" -> (q163b_advised_layout _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q163_range_boundaries" -> boundariesOracle,
     "q163b_advised_layout" -> layoutOracle)
 }

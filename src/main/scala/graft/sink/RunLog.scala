@@ -16,13 +16,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Driver-side by design (one line per *query*, not per row). */
 object RunLog {
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val Json = new com.fasterxml.jackson.core.JsonFactory()
 
   /** The rows the query's root operator output: its `numOutputRows` SQL
     * metric, read from the final plan under adaptive execution and through
@@ -50,12 +44,21 @@ object RunLog {
     val listener = new QueryExecutionListener {
       private def write(qe: QueryExecution, durationNs: Long, status: String,
           detail: String): Unit = {
-        val line =
-          s"""{"status":"$status","duration_sec":${durationNs / 1e9},""" +
-            s""""rows_hint":${rootRows(qe).map(_.toString).getOrElse("null")},""" +
-            s""""plan":"${esc(qe.executedPlan.nodeName)}"""" +
-            (if (detail.isEmpty) "}" else s""","detail":"${esc(detail)}"}""") +
-            "\n"
+        val out = new java.io.StringWriter
+        val g = Json.createGenerator(out)
+        g.writeStartObject()
+        g.writeStringField("status", status)
+        g.writeNumberField("duration_sec", durationNs / 1e9)
+        g.writeFieldName("rows_hint")
+        rootRows(qe) match {
+          case Some(n) => g.writeNumber(n)
+          case None => g.writeNull()
+        }
+        g.writeStringField("plan", qe.executedPlan.nodeName)
+        if (detail.nonEmpty) g.writeStringField("detail", detail)
+        g.writeEndObject()
+        g.close()
+        val line = out.toString + "\n"
         Files.write(p, line.getBytes(StandardCharsets.UTF_8),
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       }

@@ -39,7 +39,7 @@ import java.io.File
   * manifest (q127), maintained per commit; bits-per-row scales with the
   * same arithmetic (m grows, the sparse rows stay proportional to data).
   */
-object Skipping {
+object Skipping extends graft.QueryModule {
 
   private val Buckets = 8
   private val NProbes = 10
@@ -218,6 +218,6 @@ object Skipping {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q131_data_skipping" -> (q131_data_skipping _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q131_data_skipping" -> skipOracle)
 }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sessionizer's footprint is O(active users × open-session events), not
   * O(stream).
   */
-object Sessions {
+object Sessions extends graft.QueryModule {
 
   case class Ev(user_id: Long, ts: Timestamp)
   case class SessionOut(user_id: Long, start: Timestamp, end: Timestamp,

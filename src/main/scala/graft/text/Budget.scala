@@ -29,7 +29,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * on K rows (K = |sources|, here 20 — catalogs, not corpora) through
   * two windows. At 100 TB identical: count, then O(K) math.
   */
-object Budget {
+object Budget extends graft.QueryModule {
 
   private val MaxEpochs = 3L
 
@@ -1028,7 +1028,7 @@ object Budget {
     "q157_systematic_pps" -> (q157_systematic_pps _),
     "q164_neyman_allocation" -> (q164_neyman_allocation _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q252_rendezvous_shards" -> hrwOracle,
     "q217_split_manifest" -> splitOracle,
     "q218_epoch_shuffle" -> shuffleOracle,

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.DoubleType
   * Every output is deterministic (hash-threshold sampling, not rand()), so
   * each query is oracle-gated against DuckDB.
   */
-object CorpusFilters {
+object CorpusFilters extends graft.QueryModule {
 
   /** ln(2⁴⁸) and ln(10¹⁷) as the single shared double literals the q125
     * Gumbel key subtracts — both derived from the engine-neutral shared
@@ -3174,7 +3174,7 @@ object CorpusFilters {
        |    array_to_string(t[CAST(floor(len(t) / 8.0) AS INT) * 8 + 1 : len(t)], ' ') AS tail_txt
        |  FROM toks)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q51_repetition" ->
       s"""WITH toks AS (SELECT doc_id, $DToks AS t FROM documents),
          |d AS (SELECT doc_id, t FROM toks WHERE len(t) >= 2),

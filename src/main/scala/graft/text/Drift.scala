@@ -41,7 +41,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * no value-level grid). Everything else is one corpus pass plus
   * catalog-sized window algebra.
   */
-object Drift {
+object Drift extends graft.QueryModule {
 
   // ------------------------------------------------------ q202 exact KS
   def q202_ks_drift(s: SparkSession, dir: String): DataFrame = {
@@ -402,7 +402,7 @@ object Drift {
     "q260_jsd_drift" -> (q260_jsd_drift _),
     "q207_quantile_calibrate" -> (q207_quantile_calibrate _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q202_ks_drift" -> ksOracle,
     "q203_psi_drift" -> psiOracle,
     "q260_jsd_drift" -> jsdOracle,

@@ -85,7 +85,7 @@ case class CharEntropyUnat(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object Entropy {
+object Entropy extends graft.QueryModule {
 
   def char_entropy_unat(c: Column): Column =
     GraftSqlBridge.column(CharEntropyUnat(GraftSqlBridge.expression(c)))
@@ -192,7 +192,7 @@ object Entropy {
     "q271_simpson_diversity" -> (q271_simpson_diversity _),
     "q139_char_entropy" -> (q139_char_entropy _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q139_char_entropy" -> entropyOracle,
     "q271_simpson_diversity" -> simpsonOracle)
 }

@@ -34,7 +34,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * BIGINTs (the n² kappa/MCC products are formed AFTER the cast to
   * double), so there is no Long-overflow cliff to guard.
   */
-object Eval {
+object Eval extends graft.QueryModule {
 
   // ------------------------------------------------ shared pred ⋈ label
   /** (doc_id, logit_r, keep, label): q87's prediction joined to the
@@ -1708,7 +1708,7 @@ object Eval {
     "q176_lang_quality" -> (q176_lang_quality _),
     "q177_calibration_bins" -> (q177_calibration_bins _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q266_cramers_v" -> cramersOracle,
     "q270_brier" -> brierOracle,
     "q275_chao1" -> chao1Oracle,

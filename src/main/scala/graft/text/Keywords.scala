@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Heaps-bounded in practice like q195's paths); the top-10 is a bounded
   * heap, never a global sort of the corpus.
   */
-object Keywords {
+object Keywords extends graft.QueryModule {
 
   private val Stop: Seq[String] = TextOps.Stopwords
   private val MaxLen = 4
@@ -289,7 +289,7 @@ object Keywords {
     "q237_term_burstiness" -> (q237_term_burstiness _),
     "q246_textrank" -> (q246_textrank _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q213_rake_keywords" -> rakeOracle,
     "q237_term_burstiness" -> burstOracle,
     "q246_textrank" -> textrankOracle)

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * ≳ 2⁶¹ — the loud assert below names the DECIMAL(38,0) swap, the q202
   * protocol.
   */
-object KneserNey {
+object KneserNey extends graft.QueryModule {
 
   private def docToks(s: SparkSession, dir: String): DataFrame =
     Tables.documentsFanned(s, dir)
@@ -610,7 +610,7 @@ object KneserNey {
     "q249_good_turing" -> (q249_good_turing _),
     "q250_katz_backoff" -> (q250_katz_backoff _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q212_kneser_ney" -> knOracle,
     "q222_kn_holdout" -> holdoutOracle,
     "q249_good_turing" -> gtOracle,

@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is a Bloom of eval grams probed map-side (q80's shape) when even
   * that is too wide: a Bloom false positive only flags an extra doc for
   * review, never drops eval coverage. */
-object Overlap {
+object Overlap extends graft.QueryModule {
 
   private val N = 5
 
@@ -459,7 +459,7 @@ object Overlap {
     "q186_source_contamination" -> (q186_source_contamination _),
     "q206_novelty_curve" -> (q206_novelty_curve _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q276_distinct_n" -> distinctNOracle,
     "q243_winnowing" -> winnowOracle,
     "q144_ngram_decontaminate" -> overlapOracle,

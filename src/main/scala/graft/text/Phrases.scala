@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partitioned by doc_id, no corpus-wide shuffle beyond the explode's
   * own layout.
   */
-object Phrases {
+object Phrases extends graft.QueryModule {
 
   private val Delta = 5L
   private val TopK = 30
@@ -679,7 +679,7 @@ object Phrases {
        |FROM h ORDER BY w""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q253_dunning_collocations" -> dunningOracle,
     "q221_ppmi_pairs" -> ppmiOracle,
     "q211_distinctive_terms" -> distinctiveOracle,

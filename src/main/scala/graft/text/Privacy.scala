@@ -36,7 +36,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the output as the auditor's column (this is an engineering artifact
   * at SF-test scale; a production release drops it).
   */
-object Privacy {
+object Privacy extends graft.QueryModule {
 
   private val Salt = 42405L // 0xA5A5 — decorrelates from q182's plain-id draw
   private val EpsMicroNat = 1098612L // round(1e6 · ln 3)
@@ -104,6 +104,6 @@ object Privacy {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q200_randomized_response" -> (q200_randomized_response _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q200_randomized_response" -> rrOracle)
 }

@@ -39,7 +39,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * swaps to DECIMAL(38,0) before `idf·44·tf·S` exceeds 2^63 (documented,
   * not hit at bench scale: max ≈ 1e7·44·tf·S ≈ 1e17 at sf0.1).
   */
-object Retrieval {
+object Retrieval extends graft.QueryModule {
 
   /** Fixed probe queries over the synthetic corpus vocabulary. */
   private val Bm25Queries: Seq[(Int, Seq[String])] = Seq(
@@ -684,7 +684,7 @@ object Retrieval {
     "q147_prf_expansion" -> (q147_prf_expansion _),
     "q225_retrieval_eval" -> (q225_retrieval_eval _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q242_qlm_topk" -> qlmOracle,
     "q225_retrieval_eval" -> evalOracle,
     "q129_bm25_topk" -> bm25Oracle,

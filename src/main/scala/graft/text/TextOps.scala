@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * codegen'd, no UDFs in any of these paths; at 100 TB these are pure
   * map-side projections that scale linearly with input splits.
   */
-object TextOps {
+object TextOps extends graft.QueryModule {
 
   /** Lucene/classic English stopword list (public domain). */
   val Stopwords: Seq[String] = Seq(
@@ -353,7 +353,7 @@ object TextOps {
     "q32_corpus_pipeline"  -> (q32_corpus_pipeline _),
     "q89_pii_report"       -> (q89_pii_report _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     // same anchored regexes as the Spark side, verbatim (Java ∩ RE2 subset)
     "q89_pii_report" -> {
       val classes = Seq(

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * expressions, so the whole pipe stays inside whole-stage codegen; there
   * is no UDF and no per-row interpreter work.
   */
-object Tokenize {
+object Tokenize extends graft.QueryModule {
 
   /** MLlib's bundled English stopwords (Snowball-derived, same lineage as
     * the NLTK list the reference loads at app.py:37). */
@@ -128,7 +128,7 @@ object Tokenize {
       s"CASE WHEN regexp_matches(t, '$pat') THEN regexp_replace(t, '$pat', '$drep') ELSE $acc END"
   }
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q38_lemma_tokens" ->
       s"""WITH w AS (SELECT doc_id, $DWords AS ws FROM documents),
          |l AS (SELECT doc_id, list_transform(ws, t -> $DLemma) AS lemmas FROM w)

@@ -57,11 +57,4 @@ class CoverageSpec extends AnyFunSuite {
       s"SURVEY §8 mentions queries that are not in the registry — " +
         s"stale rows or typos: ${stale.toSeq.sorted.mkString(", ")}")
   }
-
-  test("every oracle belongs to a registered query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty,
-      s"oracleSql entries with no matching query: " +
-        s"${orphans.toSeq.sorted.mkString(", ")}")
-  }
 }

@@ -5,23 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (new java.io.File("/dev/shm").isDirectory)
-      b.config("spark.local.dir", "/dev/shm/spark-local")
-    val s = b.getOrCreate()
-    // SQL functions (ln_shared, …) + optimizer rules: registered here so
-    // every suite sees the production session surface regardless of
-    // which suites run or in what order — an isolated testOnly of a
-    // suite whose query uses a registered function must not depend on a
-    // sibling suite having registered it first
-    graft.GraftExtensions.register(s)
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // Fixed at 4 cores whatever SPARK_GRAFT_CPUS says: the specs assert
+  // 4-partition job shapes. The factory registers the SQL functions
+  // (ln_shared, …) + optimizer rules, so every suite sees the production
+  // session surface regardless of which suites run or in what order.
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
 }
 
 class CleanseSpec extends AnyFunSuite {
