@@ -79,8 +79,8 @@ object GraftSession {
     * it. INVARIANT: the global unpersist is safe ONLY on a private session
     * that runs queries strictly one after another — beside a concurrent
     * query it would truncate a live checkpoint's lineage (the safe form
-    * releases only the RDDs a call persisted itself, as
-    * Similarity.pinnedRdds callers and the graft.rel.Fixpoint loops do). */
+    * releases only the pins a call made itself: a [[Pins]] scope). Here it
+    * releases the result pins queries return, which no scope owns. */
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

@@ -2,7 +2,7 @@ package graft.ml
 
 import java.io.ByteArrayOutputStream
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
@@ -251,7 +251,7 @@ object Bloom extends graft.QueryModule {
     * A wrong answer anywhere in the sketch path flips a boolean and fails
     * the driver's hash gate. The exact join exists here FOR the gate;
     * production scale runs the join-free m_bloom path. */
-  def q80_bloom_decontaminate(s: SparkSession, dir: String): DataFrame = {
+  def q80_bloom_decontaminate(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
     import graft.text.Cleanse
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), Cleanse.tokens(col("text")).as("t"))
@@ -269,26 +269,24 @@ object Bloom extends graft.QueryModule {
       expectedItems = expected, fpp = 0.01)
     // ONE corpus-gram pass computes both sides; pinned because the
     // aggregate contract below is a second consumer
-    val perDoc = grams.filter(col("bucket") =!= "f")
+    val perDoc = pins.pin(grams.filter(col("bucket") =!= "f")
       .join(broadcast(benchGrams.withColumn("hit", lit(1L))), Seq("g"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         coalesce(sum(col("hit")), lit(0L)).as("n_hit_exact"),
-        sum(bloom_contains(col("g"), filter).cast("long")).as("nb"))
-      .localCheckpoint()
+        sum(bloom_contains(col("g"), filter).cast("long")).as("nb")))
     val fppOk = perDoc.agg(
       coalesce(
         sum(col("nb") - col("n_hit_exact")).cast(DoubleType)
           / sum(col("n_grams") - col("n_hit_exact")) <= 0.05,
         lit(true)) // zero true negatives → contract trivially satisfied
         .as("corpus_fpp_ok"))
-    val out = perDoc.crossJoin(broadcast(fppOk))
+    perDoc.crossJoin(broadcast(fppOk))
       .select(col("doc_id"), col("n_grams"), col("n_hit_exact"),
         (col("nb") >= col("n_hit_exact")).as("bloom_superset"),
         col("corpus_fpp_ok"))
-      .localCheckpoint()
-    Similarity.pinnedRdds(perDoc).foreach(_.unpersist(blocking = false))
-    out.orderBy(col("doc_id"))
+      .localCheckpoint() // pinned before the scope releases perDoc
+      .orderBy(col("doc_id"))
   }
 
   private val DToks =

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.text.Cleanse
 import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -192,7 +192,7 @@ object Similarity extends graft.QueryModule {
     * filtered. Also the exact-truth side of the q84 MLlib-LSH recall gate
     * (item = distinct token, t = 0.7). Returns unsorted pinned pairs;
     * corpus-sized intermediates are released before returning. */
-  private[graft] def prefixJaccardPairs(sh: DataFrame, t: Double): DataFrame = {
+  private[graft] def prefixJaccardPairs(sh: DataFrame, t: Double): DataFrame = Pins.scoped { pins =>
     val df = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     // Unique (not order-carrying) long id per shingle, shuffle-free:
     // monotonically_increasing_id packs (partition, row) bits. ids has
@@ -205,18 +205,17 @@ object Similarity extends graft.QueryModule {
     // joins); without pinning, the whole shingle+df+sort chain re-executes
     // per consumer. localCheckpoint materializes it once — same pattern as
     // the components fixpoint; on a cluster this is a reliable checkpoint
-    // of a corpus-sized table. (Pinned blocks are dropped below once the
-    // pair result — bounded by the true near-dup count, ≪ corpus — is
-    // itself pinned, so a long-lived session does not accumulate a corpus
-    // of shingle arrays per q79 call.)
-    val docsets = sh.join(ids, "shingle")
+    // of a corpus-sized table. (The scope drops it once the pair result —
+    // bounded by the true near-dup count, ≪ corpus — is itself pinned, so
+    // a long-lived session does not accumulate a corpus of shingle arrays
+    // per q79 call.)
+    val docsets = pins.pin(sh.join(ids, "shingle")
       .groupBy(col("doc_id"))
       .agg(expr("transform(array_sort(collect_list(struct(df, shingle, sid))), x -> x.sid)")
         .as("ordered"))
       .select(col("doc_id"), col("ordered"), size(col("ordered")).as("n"),
         expr(s"slice(ordered, 1, size(ordered) - CAST(ceil($t * size(ordered)) AS INT) + 1)")
-          .as("prefix"))
-      .localCheckpoint()
+          .as("prefix")))
     // PPJoin's POSITIONAL filter prunes inside the bucket expansion, before
     // candidates materialize: a pair sharing the element at (0-based)
     // prefix positions (px, py) can overlap at most ub = min(nx−px, ny−py),
@@ -245,7 +244,7 @@ object Similarity extends graft.QueryModule {
       // intersection PER ROW, so fan it out explicitly (measured: the
       // verify stage ran 2.0 s in 1 task at sf0.1)
       .repartition(sh.sparkSession.sparkContext.defaultParallelism)
-    val scored = cands
+    cands
       .join(docsets.select(col("doc_id").as("doc_a"), col("ordered").as("ta"),
         col("n").as("na")), "doc_a")
       .join(docsets.select(col("doc_id").as("doc_b"), col("ordered").as("tb"),
@@ -257,12 +256,9 @@ object Similarity extends graft.QueryModule {
         round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= t)
-    // Eagerly pin the (pair-count-sized) result, then drop docsets' corpus
-    // of pinned shingle arrays — the caller sees a plan over the small
-    // pinned pairs only (same release discipline as componentsWithRounds).
-    val out = scored.localCheckpoint()
-    pinnedRdds(docsets).foreach(_.unpersist(blocking = false))
-    out
+      // the pair-count-sized result, pinned eagerly: the caller sees a
+      // plan over the small pinned pairs only, never over docsets
+      .localCheckpoint()
   }
 
   // ---------------------------------------------------- engine-only: ANN
@@ -1107,52 +1103,44 @@ object Similarity extends graft.QueryModule {
     * work, never corpus-scale; each round is one bounded window argmax +
     * one equi-join on query_id. The oracle unrolls all R rounds as
     * MATERIALIZED CTE stages. */
-  def q108_mmr_rerank(s: SparkSession, dir: String): DataFrame = {
+  def q108_mmr_rerank(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
     val (kCand, rPicks) = (20, 5)
     val e = emb(s, dir)
     val q = e.filter(col("vec_id") < 50)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("cid"))
-    var st = e.crossJoin(broadcast(q))
+    var st = pins.pin(e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("cid"),
         cosine(col("qemb"), col("emb")).as("rel"), col("emb"))
       .withColumn("rk", row_number().over(wTop))
       .filter(col("rk") <= kCand).drop("rk")
-      .withColumn("maxsim", lit(0.0))
-      .localCheckpoint() // queries × K rows
+      .withColumn("maxsim", lit(0.0))) // queries × K rows
     val mmr = lit(0.7) * col("rel") - lit(0.3) * col("maxsim")
     val wPick = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("cid"))
     val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val selPins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to rPicks) {
-      val sel = st.withColumn("score", mmr)
+      val sel = pins.pin(st.withColumn("score", mmr)
         .withColumn("rk", row_number().over(wPick))
         .filter(col("rk") === 1)
         .select(col("query_id"), col("cid").as("sel_cid"),
-          col("emb").as("sel_emb"), col("score"))
-        .localCheckpoint() // query-cardinality
-      selPins += sel
+          col("emb").as("sel_emb"), col("score"))) // query-cardinality
       picks += sel.select(col("query_id"), lit(r).as("rank"),
         col("sel_cid").as("neighbor_id"), round(col("score"), 6).as("score_r"))
-      val next = st.join(sel.select(col("query_id"), col("sel_cid"), col("sel_emb")),
+      val next = pins.pin(st.join(sel.select(col("query_id"), col("sel_cid"), col("sel_emb")),
           "query_id")
         .filter(col("cid") =!= col("sel_cid"))
         .withColumn("maxsim",
           greatest(col("maxsim"), cosine(col("sel_emb"), col("emb"))))
-        .drop("sel_cid", "sel_emb")
-        .localCheckpoint()
-      pinnedRdds(st).foreach(_.unpersist(blocking = false))
+        .drop("sel_cid", "sel_emb"))
+      pins.release(st)
       st = next
     }
-    val out = picks.reduce(_.unionByName(_))
+    picks.reduce(_.unionByName(_))
       .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint() // tiny (queries × R); pin before releasing inputs
-    (selPins :+ st).foreach(f =>
-      pinnedRdds(f).foreach(_.unpersist(blocking = false)))
-    out
+      .localCheckpoint() // tiny (queries × R); pinned before the scope releases its inputs
   }
 
   // ------------------------------------------------ engine-only: MinHashLSH
@@ -1467,33 +1455,39 @@ object Similarity extends graft.QueryModule {
     * component label (= minimum reachable doc_id) and keep/drop flag.
     * Oracle: recursive-CTE transitive closure over the identically-derived
     * union of the three pair sets. */
-  def q73_dedup_union(s: SparkSession, dir: String): DataFrame = {
+  def q73_dedup_union(s: SparkSession, dir: String): DataFrame =
+    unionLabels(s, dir)(signaturePairs).orderBy(col("doc_id"))
+
+  /** MinHash band pairs of a (doc_id, t) token frame. */
+  private def signaturePairs(toks: DataFrame): DataFrame =
+    minhashBandPairsOf(graft.text.TextOps.minhashSignaturesOf(toks))
+
+  /** q73's component labels, eagerly pinned, over the union of the
+    * n-gram Jaccard and SimHash pairs of the corpus at `dir` and the
+    * MinHash band pairs `minhash` derives from its (doc_id, t) tokens. */
+  private def unionLabels(s: SparkSession, dir: String)(minhash: DataFrame => DataFrame)
+      : DataFrame = Pins.scoped { pins =>
     // ONE tokenized frame for all three signals: each kernel accepts a
     // (doc_id, t) frame, so the corpus is scanned + tokenized exactly once
     // (round-6 verdict: the previous version tokenized three times — one
-    // scan per signal). localCheckpoint materializes it; released below
-    // once the fixpoint's labels are pinned.
-    val toks = Tables.documentsFanned(s, dir)
-      .select(col("doc_id"), Cleanse.tokens(col("text")).as("t"))
-      .localCheckpoint()
+    // scan per signal). The scope releases it once the fixpoint's labels
+    // are pinned.
+    val toks = pins.pin(Tables.documentsFanned(s, dir)
+      .select(col("doc_id"), Cleanse.tokens(col("text")).as("t")))
     // unsorted kernels: the dump queries' global sorts are wasted work
     // under a union that re-shuffles into the fixpoint immediately
     val jaccard = ngramJaccardPairs(toks).select(col("doc_a"), col("doc_b"))
     val simhash = simhashPairsOf(simhashOf(toks))
       .select(col("doc_a"), col("doc_b"))
-    val minhash = minhashBandPairsOf(graft.text.TextOps.minhashSignaturesOf(toks))
     // no pre-distinct: components() canonically orients and dedups its
     // input in one pass — a distinct here would just add a shuffle
     // adaptive since round 13: the union's pair graph is thresholded-
     // candidate output (metadata-scale on a well-dedup'd corpus; the
     // local path saves one fixpoint job per round), with the
     // distributed fixpoint automatic above 2^20 edges. q55 keeps the
-    // PURE fixpoint so its cost stays a bench-visible line.
-    val labels = componentsAdaptive(
-      jaccard.unionByName(simhash).unionByName(minhash))
-    // components() returns eagerly-pinned labels with no reference to toks
-    pinnedRdds(toks).foreach(_.unpersist(blocking = false))
-    labels.orderBy(col("doc_id"))
+    // PURE fixpoint so its cost stays a bench-visible line. The labels
+    // are eagerly pinned with no reference to toks.
+    componentsAdaptive(jaccard.unionByName(simhash).unionByName(minhash(toks)))
   }
 
   // ------------------------------------ q274 capture-recapture audit
@@ -1519,10 +1513,9 @@ object Similarity extends graft.QueryModule {
     * Scale shape: the three kernels are q73's bucketed candidate
     * generators off ONE tokenized pass (no all-pairs anywhere); the
     * audit adds pair-keyed joins and scalar aggregates. */
-  def q274_capture_recapture(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documentsFanned(s, dir)
-      .select(col("doc_id"), Cleanse.tokens(col("text")).as("t"))
-      .localCheckpoint()
+  def q274_capture_recapture(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    val toks = pins.pin(Tables.documentsFanned(s, dir)
+      .select(col("doc_id"), Cleanse.tokens(col("text")).as("t")))
     val a = minhashBandPairsOf(graft.text.TextOps.minhashSignaturesOf(toks))
       .select(col("doc_a"), col("doc_b")).distinct()
     val b = simhashPairsOf(simhashOf(toks))
@@ -1536,7 +1529,7 @@ object Similarity extends graft.QueryModule {
     val nj = j.agg(count(lit(1)).as("n_jaccard"))
     val nu = a.unionByName(b).unionByName(j).distinct()
       .agg(count(lit(1)).as("n_union"))
-    val out = na.crossJoin(broadcast(nb)).crossJoin(broadcast(m))
+    na.crossJoin(broadcast(nb)).crossJoin(broadcast(m))
       .crossJoin(broadcast(nj)).crossJoin(broadcast(nu))
       // chapman_est's product is corpus-shaped (ADVICE r16): past ~3e9
       // pairs per detector the raw BIGINT product wraps, so the product
@@ -1565,8 +1558,6 @@ object Similarity extends graft.QueryModule {
           "div (n_both + 1) - 1, 1L)")
           .as("union_coverage_permille"))
       .localCheckpoint()
-    pinnedRdds(toks).foreach(_.unpersist(blocking = false))
-    out
   }
 
   private lazy val captureOracle: String =
@@ -1658,7 +1649,7 @@ object Similarity extends graft.QueryModule {
     // global unpersist hygiene documents). A multi-writer deployment
     // replaces this with the table format's atomic snapshot commit.
     if (!new java.io.File(out, "_SUCCESS").exists())
-      writeStage(s, dir, q73_dedup_union(s, dir), out)
+      writeStage(s, dir, unionLabels(s, dir)(signaturePairs), out)
     s.read.parquet(out)
   }
 
@@ -1666,10 +1657,11 @@ object Similarity extends graft.QueryModule {
     * split-partitioned at `out` — shared by the cold-start path above and
     * the streaming reconcile ([[republishDedupStage]]). `labels0` must be
     * eagerly pinned (components() output is); its blocks are released
-    * once the stage is on disk. */
+    * once the stage is on disk (docs-cardinality — a real leak at 100 TB
+    * if left to the session sweep). */
   private def writeStage(s: SparkSession, dir: String, labels0: DataFrame,
-      out: String): Unit = {
-    val labels = labels0
+      out: String): Unit = Pins.scoped { pins =>
+    val labels = pins.adopt(labels0)
       .select(col("doc_id"), col("component"), col("is_canonical"))
     val stage = Tables.documents(s, dir).select(col("doc_id"), col("source"))
       .join(labels, Seq("doc_id"), "left")
@@ -1685,10 +1677,6 @@ object Similarity extends graft.QueryModule {
           .otherwise("test"))
       .drop("bk")
     graft.sink.Parquet.writePartitioned(stage, out, Seq("split"))
-    // the stage now lives on disk; release the fixpoint's pinned label
-    // blocks (docs-cardinality — a real leak at 100 TB if left to the
-    // session sweep)
-    pinnedRdds(labels).foreach(_.unpersist(blocking = false))
   }
 
   /** STREAMING→BATCH DEDUP RECONCILIATION (round-12 verdict item 1): the
@@ -1718,16 +1706,8 @@ object Similarity extends graft.QueryModule {
     * minus one corpus pass. */
   private[graft] def republishDedupStage(s: SparkSession, dir: String,
       bandIndex: DataFrame): DataFrame = {
-    val toks = Tables.documentsFanned(s, dir)
-      .select(col("doc_id"), Cleanse.tokens(col("text")).as("t"))
-      .localCheckpoint()
-    val jaccard = ngramJaccardPairs(toks).select(col("doc_a"), col("doc_b"))
-    val simhash = simhashPairsOf(simhashOf(toks))
-      .select(col("doc_a"), col("doc_b"))
-    val minhash = bandRowPairsOf(bandIndex)
-    val labels = componentsAdaptive( // matches q73's path — parity with the cold stage
-      jaccard.unionByName(simhash).unionByName(minhash))
-    pinnedRdds(toks).foreach(_.unpersist(blocking = false))
+    // q73's path, the index as the minhash source — parity with the cold stage
+    val labels = unionLabels(s, dir)(_ => bandRowPairsOf(bandIndex))
     val out = dedupStageDir(s, dir)
     // republish = overwrite: a stage for this snapshot may already exist
     // (e.g. a consumer cold-built it mid-stream); the reconcile's closure
@@ -2027,10 +2007,10 @@ object Similarity extends graft.QueryModule {
     * stage of many; q55 keeps the pure fixpoint so its cost stays a
     * bench-visible line. */
   private[graft] def componentsAdaptive(pairs: DataFrame,
-      maxLocalEdges: Long = 1L << 20): DataFrame = {
-    val init = canonicalEdges(pairs).distinct().localCheckpoint()
+      maxLocalEdges: Long = 1L << 20): DataFrame = Pins.scoped { pins =>
+    val init = pins.pin(canonicalEdges(pairs).distinct())
     val n = init.count() // free: counts the just-materialized checkpoint
-    val out = if (n > maxLocalEdges) {
+    if (n > maxLocalEdges) {
       componentsWithRounds(
         init.select(col("u").as("doc_a"), col("v").as("doc_b")))._1
     } else {
@@ -2063,23 +2043,6 @@ object Similarity extends graft.QueryModule {
         spark.sparkContext.parallelize(rows.toSeq, 1), LabelSchema)
         .localCheckpoint() // pinned, matching components()' contract
     }
-    pinnedRdds(init).foreach(_.unpersist(blocking = false))
-    out
-  }
-
-  /** The RDDs a localCheckpoint'd Dataset pinned — each checkpointed
-    * Dataset's plan is a LogicalRDD wrapping the persisted RDD. Used to
-    * release corpus-sized intermediates once a query's (small) result is
-    * itself pinned, so long-lived sessions don't accumulate block-manager
-    * debt per call. (A global persistent-RDD sweep would also unpersist
-    * RDDs a concurrent query persisted — fatal for its truncated lineage.) */
-  private[graft] def pinnedRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => buf += l.rdd
-      case _ => ()
-    }
-    buf.toSeq
   }
 
   val MaxRounds = 64
@@ -2135,9 +2098,9 @@ object Similarity extends graft.QueryModule {
     val arcs = canonicalEdges(pairs).queryExecution.toRdd
       .flatMap { r => val (u, v) = (r.getLong(0), r.getLong(1)); Iterator((u, v), (v, u)) }
     val part = Fixpoint.partitioner(arcs)
-    Fixpoint.scoped { scope =>
+    Pins.scoped { loop =>
       val (state, rounds, converged) =
-        Fixpoint.iterate(scope, Fixpoint.grouped(arcs, part, distinct = true), MaxRounds) { state =>
+        Fixpoint.iterate(loop, Fixpoint.grouped(arcs, part, distinct = true), MaxRounds) { state =>
           val largeStar = state.flatMap(_.nodesWithNeighbors.flatMap { case (x, n) =>
             val m = math.min(x, n(0))
             n.iterator.dropWhile(_ < x).map(y => (y, m))

@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.Pins
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,14 +40,12 @@ object Coreness extends graft.QueryModule {
 
   /** The H-index iteration over the symmetric `(u, v)` arc list `arcs`
     * from c₀ = degree, up to `maxRounds` rounds, exiting at the first
-    * exact fixpoint. Returns (the (n, c) values, pinned; rounds run;
-    * converged); the loop's RDDs are released before returning. */
-  private[rel] def hIndexWithRounds(arcs: DataFrame,
-      maxRounds: Int): (DataFrame, Int, Boolean) = {
-    val (c, rounds, converged) = Fixpoint.propagate(arcs, maxRounds)(
-      (_, degree) => degree, (c, _) => c, hIndex)
-    (c.toDF("n", "c"), rounds, converged)
-  }
+    * exact fixpoint. Returns (the (node, degree, value) coreness values,
+    * pinned by `pins`; rounds run; converged); the loop's RDDs are
+    * released before returning. */
+  private[rel] def hIndexWithRounds(pins: Pins, arcs: DataFrame,
+      maxRounds: Int): (DataFrame, Int, Boolean) =
+    Fixpoint.propagate(pins, arcs, maxRounds)((_, degree) => degree, (c, _) => c, hIndex)
 
   /** The H-index of a multiset of values: max over i of min(i, the i-th
     * largest value), i from 1 — the largest h with ≥ h values ≥ h. */
@@ -62,25 +61,15 @@ object Coreness extends graft.QueryModule {
     h
   }
 
-  def q148_coreness(s: SparkSession, dir: String): DataFrame = {
-    val edges = Triangles.significantEdges(s, dir)
-    val deg = Triangles.degreesOf(edges)
-    val (c, _, converged) = hIndexWithRounds(Triangles.arcsOf(edges), Rounds)
-    val w = Window.orderBy(col("c").desc, col("n"))
-    val out = c.join(deg, Seq("n"))
-      .withColumn("rk", row_number().over(w))
+  def q148_coreness(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    val edges = Triangles.significantEdges(pins, s, dir)
+    val (c, _, converged) = hIndexWithRounds(pins, Triangles.arcsOf(edges), Rounds)
+    c.withColumn("rk", row_number().over(Window.orderBy(col("value").desc, col("node"))))
       .filter(col("rk") <= TopK)
-      .select(col("rk").cast("int").as("rank"), col("n").as("s_suppkey"),
-        col("deg").as("degree"), col("c").as("coreness"),
-        lit(converged).as("converged"))
+      .select(col("rk").cast("int").as("rank"), col("node").as("s_suppkey"),
+        col("degree"), col("value").as("coreness"), lit(converged).as("converged"))
       .orderBy(col("rank"))
-      // pin the TopK result, release the edge checkpoint and the values
-      // (deg's lineage runs through edges, so release follows the pin)
-      .localCheckpoint()
-    (graft.ml.Similarity.pinnedRdds(edges) ++
-      graft.ml.Similarity.pinnedRdds(c))
-      .foreach(_.unpersist(blocking = false))
-    out
+      .localCheckpoint() // the TopK result, pinned before the scope releases edges and c
   }
 
   private lazy val corenessOracle: String = {

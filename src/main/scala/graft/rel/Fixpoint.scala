@@ -2,12 +2,12 @@ package graft.rel
 
 import scala.reflect.ClassTag
 
+import graft.Pins
 import graft.ml.LongRecordSerializer
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{LongType, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** The exact fixpoint loop of the graph operators, on RDDs rather than
   * DataFrames: the components star-contraction
@@ -20,35 +20,12 @@ import org.apache.spark.storage.StorageLevel
   * count: a narrow dependency) with the previous one, each task
   * returning whether its partition is unchanged. Every partition
   * unchanged ⇔ the state is unchanged, so the exit test is exact and
-  * costs no job of its own. Each state is persisted in
-  * memory with its lineage intact (a lost block recomputes from the
-  * round's shuffle files, where a lost localCheckpoint block would not);
-  * state r−2 is dropped once round r is done, and every loop RDD is
-  * unpersisted (blocking) before the loop's caller returns. */
+  * costs no job of its own. Each state is persisted in memory through a
+  * [[graft.Pins]] with its lineage intact (a lost block recomputes from
+  * the round's shuffle files, where a lost localCheckpoint block would
+  * not); state r−2 is released once round r is done, and the rest when
+  * the loop's `Pins.scoped` block ends, whether it returns or throws. */
 private[graft] object Fixpoint {
-
-  /** The loop's RDDs: each persisted in memory, all unpersisted
-    * (blocking) when the [[scoped]] block that made them ends. */
-  final class Scope private[Fixpoint] {
-    private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    def persist[A](rdd: RDD[A]): RDD[A] = {
-      rdds += rdd.persist(StorageLevel.MEMORY_ONLY)
-      rdd
-    }
-    private[Fixpoint] def release(rdd: RDD[_]): Unit = {
-      rdd.unpersist(blocking = true)
-      rdds -= rdd
-    }
-    private[Fixpoint] def releaseAll(): Unit = rdds.foreach(_.unpersist(blocking = true))
-  }
-
-  /** Runs `body`, then unpersists every RDD it persisted through the
-    * scope, whether it returns or throws. Whatever the body returns must
-    * already be materialized outside the scope (an eager localCheckpoint). */
-  def scoped[T](body: Scope => T): T = {
-    val scope = new Scope
-    try body(scope) finally scope.releaseAll()
-  }
 
   def partitioner(rdd: RDD[_]): Partitioner = new HashPartitioner(rdd.sparkContext.defaultParallelism)
 
@@ -63,19 +40,19 @@ private[graft] object Fixpoint {
     * `same` or `maxRounds` rounds have run, one job per round. Returns
     * (the last state, rounds run, whether the last round changed
     * nothing). `step` must keep the partition count; the states are
-    * persisted through `scope`. */
-  def iterate[S: ClassTag](scope: Scope, initial: RDD[S], maxRounds: Int)(step: RDD[S] => RDD[S])(
+    * persisted through `pins`, which releases all but the last two. */
+  def iterate[S: ClassTag](pins: Pins, initial: RDD[S], maxRounds: Int)(step: RDD[S] => RDD[S])(
       same: (S, S) => Boolean): (RDD[S], Int, Boolean) = {
-    var state = scope.persist(initial)
+    var state = pins.persist(initial)
     var previous: RDD[S] = null
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val next = scope.persist(step(state))
+      val next = pins.persist(step(state))
       // the round's one job: builds and caches next, and compares it
       converged = next.zipPartitions(state) { (a, b) => Iterator.single(same(a.next(), b.next())) }
         .collect().forall(identity)
-      if (previous != null) scope.release(previous)
+      if (previous != null) pins.release(previous)
       previous = state
       state = next
       rounds += 1
@@ -83,7 +60,7 @@ private[graft] object Fixpoint {
     (state, rounds, converged)
   }
 
-  private val NodeValue = StructType.fromDDL("node LONG, value LONG")
+  private val NodeDegreeValue = StructType.fromDDL("node LONG, degree LONG NOT NULL, value LONG")
 
   /** Synchronous per-node message passing over the directed arc list
     * `arcs` (two LONG columns, (u, v) by position), up to `maxRounds`
@@ -105,9 +82,11 @@ private[graft] object Fixpoint {
     * of two stages: the messages are sent from the zipped adjacency and
     * state and shuffled as raw longs, then grouped by node beside the
     * adjacency, updated and compared with the previous values. The first
-    * round's job also builds the adjacency. Returns (the (node, value)
-    * frame, eagerly pinned by one more job; rounds run; converged). */
-  def propagate(arcs: DataFrame, maxRounds: Int)(init: (Long, Int) => Long,
+    * round's job also builds the adjacency. Returns (the (node, degree,
+    * value) frame, eagerly pinned by one more job and owned by `pins`;
+    * rounds run; converged). The loop's own RDDs are released before it
+    * returns. */
+  def propagate(pins: Pins, arcs: DataFrame, maxRounds: Int)(init: (Long, Int) => Long,
       send: (Long, Int) => Long, update: Array[Long] => Long): (DataFrame, Int, Boolean) = {
     require(arcs.schema.map(_.dataType) == Seq(LongType, LongType),
       s"propagate: arcs must be two LONG columns, got ${arcs.schema.simpleString}")
@@ -116,10 +95,10 @@ private[graft] object Fixpoint {
       (r.getLong(0), r.getLong(1))
     }
     val part = partitioner(pairs)
-    scoped { scope =>
-      val adjacency = scope.persist(grouped(pairs, part, distinct = false))
+    Pins.scoped { loop =>
+      val adjacency = loop.persist(grouped(pairs, part, distinct = false))
       val initial = adjacency.map(a => Array.tabulate(a.nodes.length)(i => init(a.nodes(i), a.degree(i))))
-      val (state, rounds, converged) = iterate(scope, initial, maxRounds) { values =>
+      val (state, rounds, converged) = iterate(loop, initial, maxRounds) { values =>
         val messages = adjacency.zipPartitions(values) { (as, vs) =>
           val (a, v) = (as.next(), vs.next())
           a.nodes.indices.iterator.flatMap { i =>
@@ -136,9 +115,9 @@ private[graft] object Fixpoint {
       }(java.util.Arrays.equals(_, _))
       val rows = adjacency.zipPartitions(state) { (as, vs) =>
         val (a, v) = (as.next(), vs.next())
-        a.nodes.indices.iterator.map(i => Row(a.nodes(i), v(i)))
+        a.nodes.indices.iterator.map(i => Row(a.nodes(i), a.degree(i).toLong, v(i)))
       }
-      (arcs.sparkSession.createDataFrame(rows, NodeValue).localCheckpoint(), rounds, converged)
+      (pins.pin(arcs.sparkSession.createDataFrame(rows, NodeDegreeValue)), rounds, converged)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,8 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and ~10^-9 of total mass — irrelevant to ranking.
   *
   * Scale shape: edges materialize ONCE (localCheckpoint — read by the
-  * degree count, the loop's adjacency build and the report's degree
-  * join). Each round is one message per arc and a per-node sum
+  * node count and the loop's adjacency build, which also yields each
+  * node's degree). Each round is one message per arc and a per-node sum
   * ([[Fixpoint.propagate]]: one job per round over an adjacency built
   * once); driver state is two scalars (N, base). At most five rounds —
   * the gated variant of a convergence loop.
@@ -37,34 +37,25 @@ object Graph extends graft.QueryModule {
     * per distinct trading pair from orders ⋈ lineitem, symmetrized).
     * Node encoding: customer c → 2c, supplier s → 2s+1. Damping 0.85 in
     * exact rational form. Returns the top-25 nodes by final rank. */
-  def q138_pagerank(s: SparkSession, dir: String): DataFrame = {
-    val edges = tradeEdges(s, dir)
-    val (ranks, deg, _, converged) = pagerankRanks(edges, Iters)
-    val w = Window.orderBy(col("r").desc, col("node"))
-    val out = ranks
-      .join(deg.select(col("src").as("node"), col("deg")), Seq("node"))
-      .withColumn("rk", row_number().over(w))
+  def q138_pagerank(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    val (ranks, _, converged) = pagerankRanks(pins, tradeEdges(pins, s, dir), Iters)
+    ranks.withColumn("rk", row_number().over(Window.orderBy(col("value").desc, col("node"))))
       .filter(col("rk") <= TopK)
       .select(col("rk").cast("int").as("rank"),
         when(col("node") % 2 === 0, lit("customer"))
           .otherwise(lit("supplier")).as("node_type"),
         expr("node div 2").as("orig_id"),
-        col("deg").as("degree"), col("r").as("rank_u"),
+        col("degree"), col("value").as("rank_u"),
         lit(converged).as("converged"))
       .orderBy(col("rank"))
-      // pin-and-release (the q88/Similarity discipline): the result is
-      // TopK rows; the pinned edge list is corpus-scale and would
-      // otherwise accumulate across repeated calls in one session
+      // the TopK result, pinned before the scope releases the
+      // corpus-scale edge list and the ranks
       .localCheckpoint()
-    (graft.ml.Similarity.pinnedRdds(edges) ++
-      graft.ml.Similarity.pinnedRdds(ranks))
-      .foreach(_.unpersist(blocking = false))
-    out
   }
 
-  /** q138's symmetric (src, dst) trade graph, pinned: three readers (the
-    * node count, the loop's adjacency, the report's degrees). */
-  private[rel] def tradeEdges(s: SparkSession, dir: String): DataFrame = {
+  /** q138's symmetric (src, dst) trade graph, pinned by `pins`: two
+    * readers (the node count, the loop's adjacency). */
+  private[rel] def tradeEdges(pins: Pins, s: SparkSession, dir: String): DataFrame = {
     val e0 = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, dir)
@@ -73,9 +64,8 @@ object Graph extends graft.QueryModule {
       .select((col("o_custkey") * 2).as("cn"),
         (col("l_suppkey") * 2 + 1).as("sn"))
       .distinct()
-    e0.select(col("cn").as("src"), col("sn").as("dst"))
-      .unionByName(e0.select(col("sn").as("src"), col("cn").as("dst")))
-      .localCheckpoint()
+    pins.pin(e0.select(col("cn").as("src"), col("sn").as("dst"))
+      .unionByName(e0.select(col("sn").as("src"), col("cn").as("dst"))))
   }
 
   /** The exact-integer power iteration over a SYMMETRIC (src, dst) edge
@@ -90,19 +80,17 @@ object Graph extends graft.QueryModule {
     * the oracle's round-`maxIters` values bit-for-bit. Exposed for
     * GraphSpec's hand-computed fixture.
     *
-    * Returns ((node, r) ranks pinned, (src, deg) out-degrees, rounds
-    * run, converged): one job counts the nodes, then one per round and
-    * one for the pin; the loop's RDDs are released before returning. */
-  private[graft] def pagerankRanks(edges: DataFrame, maxIters: Int)
-      : (DataFrame, DataFrame, Int, Boolean) = {
+    * Returns ((node, degree, value) out-degrees and ranks, pinned by
+    * `pins`; rounds run; converged): one job counts the nodes, then one
+    * per round and one for the pin; the loop's RDDs are released before
+    * returning. */
+  private[graft] def pagerankRanks(pins: Pins, edges: DataFrame, maxIters: Int)
+      : (DataFrame, Int, Boolean) = {
     val arcs = edges.select(col("src"), col("dst"))
     // one job (an RDD distinct; the DataFrame form runs three under AQE)
     val init = Mass / arcs.queryExecution.toRdd.map(_.getLong(0)).distinct().count()
     val base = (15L * init) / 100L
-    val (ranks, rounds, converged) = Fixpoint.propagate(arcs, maxIters)(
-      (_, _) => init, (r, d) => r / d, rankUpdate(base, _))
-    (ranks.toDF("node", "r"), edges.groupBy(col("src")).agg(count(lit(1)).as("deg")),
-      rounds, converged)
+    Fixpoint.propagate(pins, arcs, maxIters)((_, _) => init, (r, d) => r / d, rankUpdate(base, _))
   }
 
   /** One node's new rank from the `r div deg` contributions it
@@ -122,9 +110,9 @@ object Graph extends graft.QueryModule {
 
   /** Driver-side twin of [[pagerankRanks]] for budget-bounded edge lists
     * (q246; GraphSpec asserts both kernels bit-identical). Same
-    * exact-integer update, same first-exact-fixpoint early exit, same
-    * (ranks, deg, rounds, converged) contract — ranks/deg come back as
-    * LOCAL relations, so a 300-node graph's rounds cost driver
+    * exact-integer update, same first-exact-fixpoint early exit; returns
+    * (node, r) ranks, (src, deg) degrees, rounds and converged — ranks/deg
+    * come back as LOCAL relations, so a 300-node graph's rounds cost driver
     * microseconds instead of one Spark job each. Node type is whatever
     * the edge columns carry (q246: strings). */
   private[graft] def pagerankRanksDriver(edges: DataFrame, maxIters: Int)

@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.{SharedLn, SharedLnUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -42,23 +42,22 @@ object LinkPred extends graft.QueryModule {
     * scale, never corpus-coupled. */
   private val EdgeBudget = 4000
 
-  /** The budgeted co-occurrence graph (sa < sb). */
-  private def budgetEdges(s: SparkSession, dir: String): DataFrame = {
+  /** The budgeted co-occurrence graph (sa < sb), pinned by `pins`. */
+  private def budgetEdges(pins: Pins, s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
       .distinct()
-    li.alias("a").join(li.alias("b"),
+    pins.pin(li.alias("a").join(li.alias("b"),
         col("a.ok") === col("b.ok") && col("a.sk") < col("b.sk"))
       .groupBy(col("a.sk").as("sa"), col("b.sk").as("sb"))
       .agg(count(lit(1)).as("w"))
       .orderBy(col("w").desc, col("sa"), col("sb"))
       .limit(EdgeBudget)
-      .select(col("sa"), col("sb"))
-      .localCheckpoint() // three consumers (two wedge legs + anti probe)
+      .select(col("sa"), col("sb"))) // three consumers (two wedge legs + anti probe)
   }
 
-  def q191_link_prediction(s: SparkSession, dir: String): DataFrame = {
-    val edges = budgetEdges(s, dir)
+  def q191_link_prediction(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    val edges = budgetEdges(pins, s, dir)
     val lnd = Triangles.degreesOf(edges)
       .selectExpr("n AS v",
         // shared ln (r18 verdict item 4): the micro-nat is DEFINED by the
@@ -79,6 +78,7 @@ object LinkPred extends graft.QueryModule {
       .orderBy(col("aa_u").desc, col("u"), col("w"))
       .limit(TopK)
       .orderBy(col("u"), col("w"))
+      .localCheckpoint() // TopK rows, pinned before the scope releases the edges
   }
 
   /** Shared sparsified-edge CTEs (the q145/q167 graph). */
@@ -165,14 +165,10 @@ object LinkPred extends graft.QueryModule {
     * distributed pair-frontier fixpoint remains the above-cap path for
     * an unbudgeted graph and is asserted BIT-IDENTICAL to the driver
     * kernel by LinkPredSpec on both testdata graphs. */
-  def q201_distance_histogram(s: SparkSession, dir: String): DataFrame = {
-    val edges = budgetEdges(s, dir)
-    val out =
-      if (EdgeBudget <= DriverClosureCap) distanceHistogramDriver(s, edges)
-      else distanceHistogramDistributed(s, edges)
-    graft.ml.Similarity.pinnedRdds(edges)
-      .foreach(_.unpersist(blocking = false))
-    out
+  def q201_distance_histogram(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    val edges = budgetEdges(pins, s, dir)
+    if (EdgeBudget <= DriverClosureCap) distanceHistogramDriver(s, edges)
+    else distanceHistogramDistributed(s, edges)
   }
 
   /** Edge cap under which the pair-closure BFS runs driver-side. Sized
@@ -255,18 +251,11 @@ object LinkPred extends graft.QueryModule {
   /** Distributed kernel: the pair-frontier fixpoint (one exchange + one
     * probe job per BFS round; min-dist aggregate = first discovery). */
   private[graft] def distanceHistogramDistributed(s: SparkSession,
-      edges: DataFrame): DataFrame = {
+      edges: DataFrame): DataFrame = Pins.scoped { pins =>
     import org.apache.spark.sql.expressions.Window
-    val loopRdds =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def tracked(df: DataFrame): DataFrame = {
-      loopRdds ++= graft.ml.Similarity.pinnedRdds(df); df
-    }
-    val bidir = tracked(edges.select(col("sa").as("a"), col("sb").as("b"))
-      .unionByName(edges.select(col("sb").as("a"), col("sa").as("b")))
-      .localCheckpoint())
-    var reached = tracked(
-      bidir.withColumn("dist", lit(1)).localCheckpoint())
+    val bidir = pins.pin(edges.select(col("sa").as("a"), col("sb").as("b"))
+      .unionByName(edges.select(col("sb").as("a"), col("sa").as("b"))))
+    var reached = pins.pin(bidir.withColumn("dist", lit(1)))
     var frontier = reached
     var converged = false
     var d = 1
@@ -284,9 +273,8 @@ object LinkPred extends graft.QueryModule {
           Seq("m"))
         .filter(col("c") =!= col("a"))
         .select(col("a"), col("c").as("b"), lit(d).as("dist"))
-      val merged = tracked(reached.unionByName(expanded)
-        .groupBy(col("a"), col("b")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(eager = false))
+      val merged = pins.pin(reached.unionByName(expanded)
+        .groupBy(col("a"), col("b")).agg(min(col("dist")).as("dist")), eager = false)
       val newPairs = merged.filter(col("dist") === d).count()
       if (newPairs == 0L) converged = true
       else {
@@ -307,7 +295,7 @@ object LinkPred extends graft.QueryModule {
     val h3 = h2.crossJoin(broadcast(summ))
     val eff = h3.agg(min(when(col("cum_pairs") * 10 >=
       col("reachable_pairs") * 9, col("dist"))).as("eff_diam_p90"))
-    val out = h3.crossJoin(broadcast(eff))
+    h3.crossJoin(broadcast(eff))
       .select(col("dist"), col("n_pairs"), col("cum_pairs"),
         lit(nNodes).as("n_nodes"),
         lit(nNodes * (nNodes - 1L) / 2L).as("total_pairs"),
@@ -315,9 +303,7 @@ object LinkPred extends graft.QueryModule {
         expr("(1000 * dsum) div reachable_pairs").as("avg_dist_milli"),
         lit(converged).as("converged"))
       .orderBy(col("dist"))
-      .localCheckpoint()
-    loopRdds.foreach(_.unpersist(blocking = false)) // edges: caller releases
-    out
+      .localCheckpoint() // pinned before the scope releases the loop's pins
   }
 
   private lazy val distanceOracle: String = {
@@ -361,8 +347,8 @@ object LinkPred extends graft.QueryModule {
        |CROSS JOIN conv ORDER BY dist""".stripMargin
   }
 
-  def q192_powerlaw_fit(s: SparkSession, dir: String): DataFrame = {
-    val deg = Triangles.degreesOf(Triangles.significantEdges(s, dir))
+  def q192_powerlaw_fit(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    val deg = Triangles.degreesOf(Triangles.significantEdges(pins, s, dir))
     val base = deg.agg(min(col("deg")).as("dmin"))
     deg.crossJoin(broadcast(base))
       .selectExpr("deg", "dmin",
@@ -376,6 +362,7 @@ object LinkPred extends graft.QueryModule {
       .selectExpr("n_nodes", "dmin", "dmax", "n_at_dmin", "denom_u",
         "CASE WHEN denom_u = 0 THEN NULL ELSE " +
           "1000 + (1000 * n_nodes * 1000000) div denom_u END AS alpha_milli")
+      .localCheckpoint() // one row, pinned before the scope releases the edges
   }
 
   private lazy val powerlawOracle: String =
@@ -499,9 +486,9 @@ object LinkPred extends graft.QueryModule {
     * pin-and-release like every fixpoint in this file; post-convergence
     * rounds would be no-ops, so the padded N tail equals the oracle's
     * unconditionally-unrolled rounds. */
-  def q239_distance_approx(s: SparkSession, dir: String): DataFrame = {
+  def q239_distance_approx(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
     import s.implicits._
-    val edges = budgetEdges(s, dir)
+    val edges = budgetEdges(pins, s, dir)
     // Budget-bounded register fixpoint path choice (r20) — the q201
     // componentsAdaptive discipline applied to the OTHER budgeted-graph
     // fixpoint in this file: EdgeBudget (4000) ≤ DriverClosureCap (2¹³)
@@ -547,8 +534,6 @@ object LinkPred extends graft.QueryModule {
         nNodes, reachHat, reachExact, errPermille, effHat, effExact,
         within, horizonConverged)
     }
-    graft.ml.Similarity.pinnedRdds(edges)
-      .foreach(_.unpersist(blocking = false))
     rows.toDF("dist", "n_pairs_hat", "cum_pairs_hat", "n_pairs_exact",
       "cum_pairs_exact", "n_nodes", "reach_hat", "reach_exact",
       "reach_err_permille", "eff_diam_hat", "eff_diam_exact",
@@ -662,23 +647,16 @@ object LinkPred extends graft.QueryModule {
     * converged). All loop checkpoints are released before returning —
     * the outputs are scalars. */
   private[graft] def anfNsDistributed(s: SparkSession, edges: DataFrame)
-      : (Seq[Long], Long, Boolean) = {
-    val loopRdds =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def tracked(df: DataFrame): DataFrame = {
-      loopRdds ++= graft.ml.Similarity.pinnedRdds(df); df
-    }
-    val bidir = tracked(edges.select(col("sa").as("a"), col("sb").as("b"))
-      .unionByName(edges.select(col("sb").as("a"), col("sa").as("b")))
-      .localCheckpoint())
-    var regs = tracked(bidir.select(col("a").as("v")).distinct()
+      : (Seq[Long], Long, Boolean) = Pins.scoped { pins =>
+    val bidir = pins.pin(edges.select(col("sa").as("a"), col("sb").as("b"))
+      .unionByName(edges.select(col("sb").as("a"), col("sa").as("b"))))
+    var regs = pins.pin(bidir.select(col("a").as("v")).distinct()
       .select(col("v"), JoinCard.splitmix64(col("v")).as("h"))
       .select(col("v"), pmod(col("h"), lit(AnfM)).as("bucket"),
         expr(s"shiftrightunsigned(h, $AnfP)").as("w"))
       .select(col("v"), col("bucket"),
         when(col("w") === 0L, lit(AnfMaxRho))
-          .otherwise(lit(AnfMaxRho) - length(bin(col("w")))).as("mj"))
-      .localCheckpoint())
+          .otherwise(lit(AnfMaxRho) - length(bin(col("w")))).as("mj")))
     val st0 = anfStats(regs).collect().head
     val nNodes = st0.getLong(0) // one register per node at d = 0
     var prev = (st0.getLong(0), st0.getLong(1))
@@ -702,9 +680,8 @@ object LinkPred extends graft.QueryModule {
           .join(broadcast(bidir.select(col("b").as("v"), col("a").as("dst"))),
             Seq("v"))
           .select(col("dst").as("v"), col("bucket"), col("mj"))
-        tracked(r.unionByName(prop)
-          .groupBy(col("v"), col("bucket")).agg(max(col("mj")).as("mj"))
-          .localCheckpoint(eager = false))
+        pins.pin(r.unionByName(prop)
+          .groupBy(col("v"), col("bucket")).agg(max(col("mj")).as("mj")), eager = false)
       }
       val two = d + 1 < MaxDist
       val merged1 = stepOnce(regs)
@@ -737,10 +714,7 @@ object LinkPred extends graft.QueryModule {
         }
       }
     }
-    // outputs are driver scalars — release every loop checkpoint here
-    // (the caller releases `edges` itself)
-    loopRdds.foreach(_.unpersist(blocking = false))
-    (ns.toSeq, nNodes, converged)
+    (ns.toSeq, nNodes, converged) // driver scalars: the scope releases every loop pin
   }
 
   private lazy val distanceApproxOracle: String = {

@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.ml.{Similarity => MlSim}
+import graft.Pins
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -35,13 +35,12 @@ object Lpa extends graft.QueryModule {
 
   /** The synchronous propagation loop on an explicit `(sa, sb)` edge
     * frame — exposed so specs drive it on handcrafted graphs. Returns
-    * the final (n, lbl) labeling, pinned; the rounds run (≤ [[Rounds]]);
-    * and whether the last round changed no label. */
-  private[graft] def propagateLabels(edges: DataFrame): (DataFrame, Int, Boolean) = {
-    val (labels, rounds, converged) = Fixpoint.propagate(Triangles.arcsOf(edges), Rounds)(
+    * the final (node, degree, value) labeling, pinned by `pins`; the
+    * rounds run (≤ [[Rounds]]); and whether the last round changed no
+    * label. */
+  private[graft] def propagateLabels(pins: Pins, edges: DataFrame): (DataFrame, Int, Boolean) =
+    Fixpoint.propagate(pins, Triangles.arcsOf(edges), Rounds)(
       (node, _) => node, (label, _) => label, plurality)
-    (labels.toDF("n", "lbl"), rounds, converged)
-  }
 
   /** The most frequent of `labels`, ties going to the smallest. */
   private[rel] def plurality(labels: Array[Long]): Long = {
@@ -59,21 +58,19 @@ object Lpa extends graft.QueryModule {
     best
   }
 
-  def q166_lpa_communities(s: SparkSession, dir: String): DataFrame = {
-    val edges = Triangles.significantEdges(s, dir) // (sa < sb), pinned
-    val (labels, _, _) = propagateLabels(edges)
-    val deg = Triangles.arcsOf(edges).groupBy(col("u").as("n")).agg(count(lit(1)).as("deg"))
+  def q166_lpa_communities(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    val edges = Triangles.significantEdges(pins, s, dir) // (sa < sb)
+    val (labels, _, _) = propagateLabels(pins, edges)
     val m = edges.count()
-    val byLbl = labels.join(deg, "n")
-      .groupBy(col("lbl"))
-      .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("d_c"))
+    val byLbl = labels.groupBy(col("value").as("lbl"))
+      .agg(count(lit(1)).as("n_nodes"), sum(col("degree")).as("d_c"))
     val intra = edges
-      .join(labels.select(col("n").as("sa"), col("lbl").as("la")), "sa")
-      .join(labels.select(col("n").as("sb"), col("lbl").as("lb")), "sb")
+      .join(labels.select(col("node").as("sa"), col("value").as("la")), "sa")
+      .join(labels.select(col("node").as("sb"), col("value").as("lb")), "sb")
       .filter(col("la") === col("lb"))
       .groupBy(col("la").as("lbl")).agg(count(lit(1)).as("e_c"))
     val wAll = Window.partitionBy()
-    val out = byLbl.join(intra, Seq("lbl"), "left")
+    byLbl.join(intra, Seq("lbl"), "left")
       .withColumn("e_c", coalesce(col("e_c"), lit(0L)))
       .withColumn("q_term", lit(4L) * lit(m) * col("e_c") -
         col("d_c") * col("d_c"))
@@ -86,10 +83,7 @@ object Lpa extends graft.QueryModule {
         col("d_c"), col("n_communities"), lit(m).as("m_edges"),
         col("q_4m2"))
       .orderBy(col("rk"))
-    val pinned = out.localCheckpoint()
-    MlSim.pinnedRdds(labels).foreach(_.unpersist(false))
-    MlSim.pinnedRdds(edges).foreach(_.unpersist(false))
-    pinned
+      .localCheckpoint()
   }
 
   // ---------------------------------------------------------------- oracle

@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,18 +39,18 @@ object Triangles extends graft.QueryModule {
   private val TopK = 25
 
   /** The significance-thresholded supplier co-occurrence edge set
-    * (sa < sb), checkpointed — shared by q145 and q148's coreness. */
-  private[graft] def significantEdges(s: SparkSession, dir: String): DataFrame = {
+    * (sa < sb), pinned by the caller's `pins` — shared by q145, q148's
+    * coreness, q166, q167, q192 and q223. */
+  private[graft] def significantEdges(pins: Pins, s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
       .distinct()
-    li.as("a").join(li.as("b"),
+    pins.pin(li.as("a").join(li.as("b"),
         col("a.ok") === col("b.ok") && col("a.sk") < col("b.sk"))
       .groupBy(col("a.sk").as("sa"), col("b.sk").as("sb"))
       .agg(count(lit(1)).as("w"))
       .filter(col("w") >= MinCoOrders)
-      .select(col("sa"), col("sb"))
-      .localCheckpoint() // multiple consumers in every caller
+      .select(col("sa"), col("sb"))) // multiple consumers in every caller
   }
 
   /** Both orientations of each (sa, sb) edge, as (u, v) arcs. */
@@ -64,22 +64,21 @@ object Triangles extends graft.QueryModule {
         edges.select(col("sb").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
 
-  def q145_triangle_count(s: SparkSession, dir: String): DataFrame = {
-    val edges = significantEdges(s, dir)
+  def q145_triangle_count(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    val edges = significantEdges(pins, s, dir)
     val deg = degreesOf(edges)
     // orientation key: degree-then-id, packed (deg < 2^20 and id < 2^20
     // at any bench SF; the pack is just a total order both engines share)
     val ordOf = deg.select(col("n"), (col("deg") * 1048576L + col("n")).as("ord"))
-    val oe = edges
+    // three consumers (both wedge legs + the closure probe): materialize
+    // once or the degree/orientation joins re-execute per consumer
+    val oe = pins.pin(edges
       .join(ordOf.select(col("n").as("sa"), col("ord").as("orda")), Seq("sa"))
       .join(ordOf.select(col("n").as("sb"), col("ord").as("ordb")), Seq("sb"))
       .select(
         when(col("orda") < col("ordb"), col("sa")).otherwise(col("sb")).as("src"),
         when(col("orda") < col("ordb"), col("ordb")).otherwise(col("orda")).as("dstord"),
-        when(col("orda") < col("ordb"), col("sb")).otherwise(col("sa")).as("dst"))
-      // three consumers (both wedge legs + the closure probe): materialize
-      // once or the degree/orientation joins re-execute per consumer
-      .localCheckpoint()
+        when(col("orda") < col("ordb"), col("sb")).otherwise(col("sa")).as("dst")))
     // wedges from the small endpoint; close with an oriented-edge probe
     val tri = oe.as("e1").join(oe.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dstord") < col("e2.dstord"))
@@ -91,7 +90,7 @@ object Triangles extends graft.QueryModule {
       .groupBy(col("n")).agg(count(lit(1)).as("triangles"))
     val total = tri.agg(count(lit(1)).as("total_triangles"))
     val rankW = Window.orderBy(col("triangles").desc, col("n"))
-    val out = perNode.join(deg, Seq("n"))
+    perNode.join(deg, Seq("n"))
       .withColumn("rk", row_number().over(rankW))
       .filter(col("rk") <= TopK)
       .crossJoin(broadcast(total))
@@ -101,14 +100,9 @@ object Triangles extends graft.QueryModule {
           .as("clustering_permille"),
         col("total_triangles"))
       .orderBy(col("rank"))
-      // pin the TopK result, release the edge + oriented-edge
-      // checkpoints (round-14 advice item: these stayed pinned for the
-      // session, and bench median-of-5 repeats a query 5×)
+      // pin the TopK result before the scope releases the edge and
+      // oriented-edge pins (bench median-of-5 repeats a query 5×)
       .localCheckpoint()
-    (graft.ml.Similarity.pinnedRdds(edges) ++
-      graft.ml.Similarity.pinnedRdds(oe))
-      .foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** The li→edges→deg CTE chain both graph oracles share. */

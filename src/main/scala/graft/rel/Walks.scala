@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.Pins
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -32,9 +33,9 @@ object Walks extends graft.QueryModule {
   private val WalksPerNode = 2
   private val WalkLen = 4
 
-  def q167_deepwalk_corpus(s: SparkSession, dir: String): DataFrame = {
+  def q167_deepwalk_corpus(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
     import s.implicits._
-    val edges = Triangles.significantEdges(s, dir)
+    val edges = Triangles.significantEdges(pins, s, dir)
     val both = edges.select(col("sa").as("u"), col("sb").as("v"))
       .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
     val adj = both.groupBy(col("u"))
@@ -57,14 +58,12 @@ object Walks extends graft.QueryModule {
           concat(col("path"), lit("-"), col("nxt").cast("string"))
             .as("path"))
     }
-    val out = walk
+    walk
       .select(col("s"), col("w").cast("long").as("w"), col("path"),
         (size(array_distinct(split(col("path"), "-")))).cast("long")
           .as("n_distinct"))
       .orderBy(col("s"), col("w"))
-    val pinned = out.localCheckpoint()
-    graft.ml.Similarity.pinnedRdds(edges).foreach(_.unpersist(false))
-    pinned
+      .localCheckpoint() // the walk corpus, pinned before the scope releases the edges
   }
 
   // ---------------------------------------------------------------- oracle
@@ -150,9 +149,9 @@ object Walks extends graft.QueryModule {
     * At web scale the per-hop O(deg²) prefix scan is replaced by
     * precomputed per-(prev,cur) alias tables — a table change, not a
     * plan change. */
-  def q223_node2vec_walks(s: SparkSession, dir: String): DataFrame = {
+  def q223_node2vec_walks(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
     import s.implicits._
-    val edges = Triangles.significantEdges(s, dir)
+    val edges = Triangles.significantEdges(pins, s, dir)
     val both = edges.select(col("sa").as("u"), col("sb").as("v"))
       .unionByName(edges.select(col("sb").as("u"), col("sa").as("v")))
     val adj = both.groupBy(col("u"))
@@ -194,15 +193,12 @@ object Walks extends graft.QueryModule {
           concat(col("path"), lit("-"), col("nxt").cast("string"))
             .as("path"))
     }
-    val out = walk
+    walk
       .select(col("s"), col("w").cast("long").as("w"), col("path"),
         size(array_distinct(split(col("path"), "-"))).cast("long")
           .as("n_distinct"))
       .orderBy(col("s"), col("w"))
-    // pin the walk corpus, release the edge checkpoint (q167 discipline)
-    val pinned = out.localCheckpoint()
-    graft.ml.Similarity.pinnedRdds(edges).foreach(_.unpersist(false))
-    pinned
+      .localCheckpoint() // the walk corpus, pinned before the scope releases the edges
   }
 
   private lazy val node2vecOracle: String = {

@@ -1,5 +1,6 @@
 package graft.sink
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -135,19 +136,19 @@ object Lake extends graft.QueryModule {
       .select(col("lang")).distinct()
     val changed = oldLangs.unionByName(newLangs).distinct()
       .collect().map(_.getString(0)).toSeq.sorted // partition-cardinality
-    if (changed.nonEmpty) {
-      val rows = stored.filter(col("lang").isin(changed: _*))
+    if (changed.nonEmpty) Pins.scoped { pins =>
+      // pin BEFORE overwriting what it reads
+      val rows = pins.pin(stored.filter(col("lang").isin(changed: _*))
         .join(keys, Seq("doc_id"), "left_anti")
         .unionByName(changes.filter(col("op") === "U")
           .filter(col("lang").isin(changed: _*))
-          .select(col("doc_id"), col("text"), col("lang"), col("source")))
-        .localCheckpoint() // pin BEFORE overwriting what it reads
+          .select(col("doc_id"), col("text"), col("lang"), col("source"))))
       rows.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("lang").parquet(lakeDir)
       val stillPresent = rows.select(col("lang")).distinct()
         .collect().map(_.getString(0)).toSet
-      graft.ml.Similarity.pinnedRdds(rows).foreach(_.unpersist(blocking = false))
+      pins.release(rows)
       (changed.toSet -- stillPresent).foreach(dropPartition(s, lakeDir, _))
     }
     changed

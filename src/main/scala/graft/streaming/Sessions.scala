@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.Pins
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -292,8 +293,9 @@ object Sessions extends graft.QueryModule {
     * swap here keeps the operator self-contained while exercising the
     * identical read path (the probe re-plans `current` per micro-batch). */
   final class BandIndex(initial: DataFrame) {
-    @volatile private var cur: DataFrame = initial.localCheckpoint()
-    // Superseded pin whose release is DEFERRED one batch: the candidates
+    private var pins = new Pins // owns `cur`
+    @volatile private var cur: DataFrame = pins.pin(initial)
+    // Owns the superseded pin, whose release is DEFERRED one batch: the candidates
     // frame handed to batch N's handler references batch N-1's checkpoint
     // blocks (checkpoint lineage is truncated, so unpersisting them while a
     // consumer still holds the frame means missing-block errors). Releasing
@@ -302,20 +304,19 @@ object Sessions extends graft.QueryModule {
     // materialization up to one full micro-batch past its return. Handlers
     // that hold candidate frames LONGER than one batch must copy
     // (e.g. collect or write) before returning.
-    private var prevPinned: Seq[org.apache.spark.rdd.RDD[_]] = Nil
+    private var superseded = new Pins
     def current: DataFrame = cur
     private[streaming] def append(bands: DataFrame): Unit = synchronized {
-      val old = cur
-      cur = old.unionByName(bands)
-        .dropDuplicates("doc_id", "band", "h").localCheckpoint()
-      prevPinned.foreach(_.unpersist(blocking = false))
-      prevPinned = graft.ml.Similarity.pinnedRdds(old)
+      superseded.close() // two appends old: every probe has re-planned since
+      val next = superseded
+      cur = next.pin(cur.unionByName(bands).dropDuplicates("doc_id", "band", "h"))
+      superseded = pins
+      pins = next
     }
     /** Release every live pin (call once the stream is stopped). */
     def close(): Unit = synchronized {
-      prevPinned.foreach(_.unpersist(blocking = false))
-      prevPinned = Nil
-      graft.ml.Similarity.pinnedRdds(cur).foreach(_.unpersist(blocking = false))
+      superseded.close()
+      pins.close()
     }
   }
 
@@ -385,7 +386,7 @@ object Sessions extends graft.QueryModule {
     // batch N's perDoc pin is released at batch N+1 (same deferred-release
     // contract as BandIndex: a handler may hold its frames one batch; the
     // final batch's pin is released with the session)
-    var prevPinned: Seq[org.apache.spark.rdd.RDD[_]] = Nil
+    var (pins, previous) = (new Pins, new Pins)
     docs.writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val b = batch.toDF()
@@ -403,12 +404,11 @@ object Sessions extends graft.QueryModule {
           .select(col(s"x.$idCol").as(idCol))
         val dupIds = fromIndex.unionByName(local).distinct()
           .withColumn("dup", lit(true))
-        val perDoc = verdicts.join(dupIds, Seq(idCol), "left")
+        // pin: both outputs derive from it, and the handler may hold the
+        // frames past this batch while the index pin rotates
+        val perDoc = pins.pin(verdicts.join(dupIds, Seq(idCol), "left")
           .withColumn("dup", coalesce(col("dup"), lit(false)))
-          .withColumn("keep", col("keep_quality") && !col("dup"))
-          // pin: both outputs derive from it, and the handler may hold the
-          // frames past this batch while the index pin rotates
-          .localCheckpoint()
+          .withColumn("keep", col("keep_quality") && !col("dup")))
         // q73b's six columns keep their DEDUP-scoped semantics (n_dropped
         // counts dup drops only, so the frame is comparable with the batch
         // survivorship audit), and two explicit quality columns make the
@@ -433,8 +433,10 @@ object Sessions extends graft.QueryModule {
               .as("final_survival_rate"))
         handler(perDoc, survivorship, id)
         index.append(bandRows)
-        prevPinned.foreach(_.unpersist(blocking = false))
-        prevPinned = graft.ml.Similarity.pinnedRdds(perDoc)
+        previous.close()
+        val spare = previous
+        previous = pins
+        pins = spare
       }
   }
 

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -982,8 +982,8 @@ object CorpusFilters extends graft.QueryModule {
     * non-synthetic text) would break the literal or silently corrupt the
     * merge in BOTH engines; fail loudly. */
   private def bpeMergeLoopOver(syms0: DataFrame, guard: String)
-      : Seq[(Int, String, String, Long)] = {
-    var syms = syms0.localCheckpoint() // vocabulary-sized (31 words at any SF)
+      : Seq[(Int, String, String, Long)] = Pins.scoped { pins =>
+    var syms = pins.pin(syms0) // vocabulary-sized (31 words at any SF)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     for (round <- 1 to BpeRounds) {
       val best = syms
@@ -1003,12 +1003,10 @@ object CorpusFilters extends graft.QueryModule {
       require(l.matches(guard) && r.matches(guard),
         s"BPE merge symbols must match $guard: '$l', '$r'")
       merges += ((round, l, r, c))
-      val next = syms.withColumn("sym",
-        expr(s"replace(sym, '|$l||$r|', '|$l$r|')")).localCheckpoint()
-      graft.ml.Similarity.pinnedRdds(syms).foreach(_.unpersist(blocking = false))
+      val next = pins.pin(syms.withColumn("sym", expr(s"replace(sym, '|$l||$r|', '|$l$r|')")))
+      pins.release(syms)
       syms = next
     }
-    graft.ml.Similarity.pinnedRdds(syms).foreach(_.unpersist(blocking = false))
     merges.toSeq
   }
 
@@ -1377,9 +1375,9 @@ object CorpusFilters extends graft.QueryModule {
     * score_key). Driver-side exact argmax over collected vocab-sized
     * round stats (BigInt cross-check of the HUGEINT oracle). */
   private[graft] def wpLearnMerges(s: SparkSession, dir: String)
-      : Seq[(Int, String, String, String, Long, Long)] = {
-    var syms = bpeWordFreqs(s, dir).select(col("word"), col("cnt"),
-      expr(wpSymInitSpark).as("sym")).localCheckpoint()
+      : Seq[(Int, String, String, String, Long, Long)] = Pins.scoped { pins =>
+    var syms = pins.pin(bpeWordFreqs(s, dir).select(col("word"), col("cnt"),
+      expr(wpSymInitSpark).as("sym")))
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long, Long)]
     for (round <- 1 to WpRounds) {
@@ -1406,12 +1404,10 @@ object CorpusFilters extends graft.QueryModule {
         s"WordPiece merge symbols out of charset: '$l', '$r'")
       val merged = l + r.substring(2)
       merges += ((round, l, r, merged, c, sk))
-      val next = syms.withColumn("sym",
-        expr(s"replace(sym, '|$l||$r|', '|$merged|')")).localCheckpoint()
-      graft.ml.Similarity.pinnedRdds(syms).foreach(_.unpersist(blocking = false))
+      val next = pins.pin(syms.withColumn("sym", expr(s"replace(sym, '|$l||$r|', '|$merged|')")))
+      pins.release(syms)
       syms = next
     }
-    graft.ml.Similarity.pinnedRdds(syms).foreach(_.unpersist(blocking = false))
     merges.toSeq
   }
 
@@ -1948,11 +1944,11 @@ object CorpusFilters extends graft.QueryModule {
     * (spends the final vocabulary): returns (prune trajectory rows,
     * final piece → score model). */
   private[graft] def uniTrain(s: SparkSession, dir: String)
-      : (Seq[(Int, String, String, Long)], Map[String, Long]) = {
-    val words = docToks(s, dir)
+      : (Seq[(Int, String, String, Long)], Map[String, Long]) = Pins.scoped { pins =>
+    // the distinct-word table: Heaps-bounded metadata
+    val words = pins.pin(docToks(s, dir)
       .select(explode(col("t")).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // distinct-word table: Heaps-bounded metadata
+      .groupBy(col("word")).agg(count(lit(1)).as("cnt")))
     val maxLen = words.agg(max(length(col("word")))).collect()(0).getInt(0)
     require(maxLen <= UniMaxWordLen,
       s"word length $maxLen exceeds the unrolled DP bound $UniMaxWordLen")
@@ -2009,7 +2005,6 @@ object CorpusFilters extends graft.QueryModule {
       requireScoreBound(vocab) // M-step scores are usage counts — re-check
       bc.destroy()
     }
-    graft.ml.Similarity.pinnedRdds(words).foreach(_.unpersist(blocking = false))
     (trajectory.toSeq, vocab)
   }
 
@@ -2731,12 +2726,11 @@ object CorpusFilters extends graft.QueryModule {
     // its shuffle wants — but they now share the pinned PRE-explode token
     // frame instead of re-running scan+tokenize per pass (round-6 verdict).
     // On a cluster this is a reliable checkpoint of the tokenized corpus.
-    val toksAll = q70TokenFrame(s, dir).localCheckpoint()
-    // Eagerly pin the 8-row funnel table, then drop the corpus-sized token
-    // pin — callers (and long-lived sessions) hold only the result rows.
-    val out = q70FunnelOver(s, toksAll).localCheckpoint()
-    graft.ml.Similarity.pinnedRdds(toksAll).foreach(_.unpersist(blocking = false))
-    out.orderBy(col("stage"))
+    // Eagerly pin the 8-row funnel table before the scope drops the
+    // corpus-sized token pin — callers (and long-lived sessions) hold only
+    // the result rows.
+    Pins.scoped(pins => q70FunnelOver(s, pins.pin(q70TokenFrame(s, dir))).localCheckpoint())
+      .orderBy(col("stage"))
   }
 
   /** The (doc_id, bucket, text_md5, t) frame every q70 pass derives from —

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -195,13 +195,12 @@ object Keywords extends graft.QueryModule {
     * one for adjacent pairs filtered to the broadcast budget
     * vocabulary; the PageRank loop runs on a ≤ TrV-node graph —
     * catalog-sized forever. */
-  def q246_textrank(s: SparkSession, dir: String): DataFrame = {
+  def q246_textrank(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
     // One tokenize pass shared by the vocab and adjacent-pair passes —
     // the q70/q73 pre-explode token frame discipline (each pass re-ran
-    // Cleanse.tokens over the full corpus before r20); released below.
-    val toks = Tables.documentsFanned(s, dir)
-      .select(col("doc_id"), Cleanse.tokens(col("text")).as("t"))
-      .localCheckpoint()
+    // Cleanse.tokens over the full corpus before r20); the scope releases it.
+    val toks = pins.pin(Tables.documentsFanned(s, dir)
+      .select(col("doc_id"), Cleanse.tokens(col("text")).as("t")))
     val vocab = toks.select(explode(col("t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("w")).limit(TrV)
@@ -227,7 +226,7 @@ object Keywords extends graft.QueryModule {
     // asserts it bit-identical to the distributed Graph.pagerankRanks.
     val (ranks, deg, _, converged) =
       graft.rel.Graph.pagerankRanksDriver(edges, TrIters)
-    val out = ranks
+    ranks
       .join(deg.select(col("src").as("node"), col("deg")), Seq("node"))
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -237,11 +236,9 @@ object Keywords extends graft.QueryModule {
         col("deg").as("degree"), col("r").as("rank_u"),
         lit(converged).as("converged"))
       .orderBy(col("rank"))
-      // pin the ≤TrTopK-row result, release the corpus-scale token frame
-      // (q88 pin-and-release discipline)
+      // the ≤TrTopK-row result, pinned before the scope releases the
+      // corpus-scale token frame
       .localCheckpoint()
-    graft.ml.Similarity.pinnedRdds(toks).foreach(_.unpersist(blocking = false))
-    out
   }
 
   private lazy val textrankOracle: String = {

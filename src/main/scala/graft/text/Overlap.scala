@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -113,10 +113,9 @@ object Overlap extends graft.QueryModule {
     * the verify join touches Σ_candidates |A| rows; the documented
     * dense-id swap (q79's long-id lesson) applies when gram strings
     * outgrow comfortable join keys. */
-  def q150_containment_join(s: SparkSession, dir: String): DataFrame = {
-    val grams = gramFrame(s, dir)
-      .select(col("doc_id"), col("g")).distinct()
-      .localCheckpoint() // feeds df, sizes, prefix, and both verify sides
+  def q150_containment_join(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
+    // feeds df, sizes, prefix, and both verify sides
+    val grams = pins.pin(gramFrame(s, dir).select(col("doc_id"), col("g")).distinct())
     val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val dfG = grams.groupBy(col("g")).agg(count(lit(1)).as("df_g"))
     val wPfx = Window.partitionBy(col("doc_id"))
@@ -139,7 +138,7 @@ object Overlap extends graft.QueryModule {
       .groupBy(col("doc_a"), col("doc_b"), col("n_a"))
       .agg(count(lit(1)).as("inter"))
       .filter(col("inter") * 1000 >= lit(ContainT) * col("n_a"))
-    val result = inter
+    inter
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")),
         Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
@@ -149,15 +148,11 @@ object Overlap extends graft.QueryModule {
       .withColumn("subset_not_neardup",
         col("jaccard_permille") < ContainT)
       .orderBy(col("doc_a"), col("doc_b"))
-      // pin-and-release (the Graph/Similarity discipline): the result is
-      // pair-count-sized; the checkpointed gram table is corpus-scale and
-      // would otherwise stay pinned for the session — bench median-of-5
-      // repeats a query 5×, and accumulated pins measurably inflate
-      // later in-sequence queries (round-14 advice item).
+      // the pair-count-sized result, pinned before the scope releases the
+      // corpus-scale gram table — bench median-of-5 repeats a query 5×,
+      // and accumulated pins measurably inflate later in-sequence queries
+      // (round-14 advice item)
       .localCheckpoint()
-    graft.ml.Similarity.pinnedRdds(grams)
-      .foreach(_.unpersist(blocking = false))
-    result
   }
 
   private lazy val containOracle: String =

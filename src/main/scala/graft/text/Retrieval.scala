@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -383,13 +383,13 @@ object Retrieval extends graft.QueryModule {
     * token table on doc_id. The oracle replays BOTH rounds — the
     * derived expansion terms are recomputed in SQL, so a drift in
     * either round or in the mining rule fails the hash. */
-  def q147_prf_expansion(s: SparkSession, dir: String): DataFrame = {
+  def q147_prf_expansion(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
     import s.implicits._
     val qterms = Bm25Queries
       .flatMap { case (q, ts) => ts.map(t => (q, t)) }
       .toDF("qid", "term")
     // one tokenize pass feeds round 1, the feedback mining, and round 2
-    val toks = docToks(s, dir).localCheckpoint()
+    val toks = pins.pin(docToks(s, dir))
     val fbDocs = bm25RankedOn(toks, PrfFeedbackK, qterms)
       .select(col("qid"), col("doc_id"))
     // feedback-document frequency per (qid, term), original terms out
@@ -409,18 +409,14 @@ object Retrieval extends graft.QueryModule {
     val audit = expTerms.groupBy(col("qid"))
       .agg(array_join(array_sort(collect_set(col("term"))), ",")
         .as("exp_terms"))
-    val result = bm25RankedOn(toks, 10, expanded)
+    bm25RankedOn(toks, 10, expanded)
       .join(broadcast(audit), Seq("qid"), "left")
       .select(col("qid"), col("rank"), col("doc_id"), col("n_terms_hit"),
         col("score_unat"), coalesce(col("exp_terms"), lit("")).as("exp_terms"))
       .orderBy(col("qid"), col("rank"))
-      // pin-and-release: the result is top-k·|queries| rows; the shared
-      // tokenized corpus checkpoint is corpus-scale and must not stay
-      // pinned after the call (round-14 advice item).
+      // the result is top-k·|queries| rows, pinned before the scope
+      // releases the corpus-scale token pin (round-14 advice item)
       .localCheckpoint()
-    graft.ml.Similarity.pinnedRdds(toks)
-      .foreach(_.unpersist(blocking = false))
-    result
   }
 
   private val DToks =

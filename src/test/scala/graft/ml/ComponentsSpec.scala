@@ -159,7 +159,7 @@ class ComponentsSpec extends AnyFunSuite {
       val jobs = JobCount.of(spark) { out = Similarity.componentsWithRounds(df) }
       val (labels, rounds) = out
       assert(jobs <= rounds + 3, s"$name: $jobs jobs for $rounds rounds")
-      val pinned = Similarity.pinnedRdds(labels).map(_.id).toSet
+      val pinned = Set(graft.Pins.rddOf(labels).id)
       assert(pinned.size == 1, name)
       assert(sc.getPersistentRDDs.keySet -- before == pinned,
         s"$name: the loop left RDDs persisted")

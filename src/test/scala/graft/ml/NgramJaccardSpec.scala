@@ -206,7 +206,7 @@ class NgramJaccardSpec extends AnyFunSuite {
     assert(JobCount.of(spark) { pairs = Similarity.ngramJaccardPairs(toks) } == 0)
     assert(JobCount.of(spark) { pairs.collect() } == 1)
     assert(sc.getPersistentRDDs.keySet == before)
-    Similarity.pinnedRdds(toks).foreach(_.unpersist(blocking = true))
+    graft.Pins.rddOf(toks).unpersist(blocking = true)
   }
 
   test("a non-integral doc_id fails naming the column") {

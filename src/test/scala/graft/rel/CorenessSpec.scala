@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.Pins
 import graft.text.SparkTestSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,7 +35,7 @@ class CorenessSpec extends AnyFunSuite {
 
   test("H-index fixpoint equals peeling coreness; convergence reported") {
     // the same thresholded edge set the query builds
-    val edges = Triangles.significantEdges(spark, sf).collect()
+    val edges = Pins.scoped(Triangles.significantEdges(_, spark, sf).collect())
       .map(r => (r.getLong(0), r.getLong(1)))
     val adj = edges.flatMap(p => Seq(p, p.swap))
       .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
@@ -89,45 +90,48 @@ class CorenessSpec extends AnyFunSuite {
 
   test("convergence probe: K4+path exits early, values equal peeling") {
     // round 1 already lands on the coreness; round 2 changes nothing
-    val (c, rounds, converged) = Coreness.hIndexWithRounds(arcs(k4Path), 6)
-    assert(converged, "fixpoint must be detected")
-    assert(rounds < 6, s"expected early exit, ran $rounds rounds")
-    assert(rounds == ParentRounds("k4+path"))
-    val got = c.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
-      5L -> 1L, 6L -> 1L))
+    Pins.scoped { pins =>
+      val (c, rounds, converged) = Coreness.hIndexWithRounds(pins, arcs(k4Path), 6)
+      assert(converged, "fixpoint must be detected")
+      assert(rounds < 6, s"expected early exit, ran $rounds rounds")
+      assert(rounds == ParentRounds("k4+path"))
+      val got = c.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+      assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
+        5L -> 1L, 6L -> 1L))
+      val degree = c.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(degree == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 4L, 5L -> 2L, 6L -> 1L))
+    }
   }
 
   test("convergence probe: starved round budget reports NOT converged") {
     // c1 ≠ c0 (degrees are not the coreness here), so one round cannot
     // confirm a fixpoint — the late case must gate loudly, not lie
-    val (_, rounds, converged) = Coreness.hIndexWithRounds(arcs(k4Path), 1)
+    val (_, rounds, converged) = Pins.scoped(Coreness.hIndexWithRounds(_, arcs(k4Path), 1))
     assert(!converged, "one round cannot certify this graph")
     assert(rounds == 1)
   }
 
   test("q148's loop takes the pinned rounds at sf0.001 and sf0.01") {
-    for (dir <- Seq(sf, "/root/testdata/sf0.01")) {
-      val edges = Triangles.significantEdges(spark, dir)
-      val (c, rounds, converged) = Coreness.hIndexWithRounds(Triangles.arcsOf(edges), 6)
+    for (dir <- Seq(sf, "/root/testdata/sf0.01")) Pins.scoped { pins =>
+      val edges = Triangles.significantEdges(pins, spark, dir)
+      val (_, rounds, converged) = Coreness.hIndexWithRounds(pins, Triangles.arcsOf(edges), 6)
       assert((rounds, converged) == (ParentRounds(dir), true), dir)
-      (graft.ml.Similarity.pinnedRdds(c) ++ graft.ml.Similarity.pinnedRdds(edges))
-        .foreach(_.unpersist(blocking = true))
     }
   }
 
   test("one call runs at most rounds + 3 jobs and leaves only its result pinned") {
-    import graft.ml.{JobCount, Similarity}
+    import graft.ml.JobCount
     val sc = spark.sparkContext
     val in = arcs(k4Path)
-    val before = sc.getPersistentRDDs.keySet
-    var out: (org.apache.spark.sql.DataFrame, Int, Boolean) = null
-    val jobs = JobCount.of(spark) { out = Coreness.hIndexWithRounds(in, 6) }
-    assert(jobs <= out._2 + 3, s"$jobs jobs for ${out._2} rounds")
-    val pinned = Similarity.pinnedRdds(out._1).map(_.id).toSet
-    assert(pinned.size == 1)
-    assert(sc.getPersistentRDDs.keySet -- before == pinned, "the loop left RDDs persisted")
-    pinned.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+    Pins.scoped { pins =>
+      val before = sc.getPersistentRDDs.keySet
+      var out: (org.apache.spark.sql.DataFrame, Int, Boolean) = null
+      val jobs = JobCount.of(spark) { out = Coreness.hIndexWithRounds(pins, in, 6) }
+      assert(jobs <= out._2 + 3, s"$jobs jobs for ${out._2} rounds")
+      val pinned = Set(Pins.rddOf(out._1).id)
+      assert(pinned.size == 1)
+      assert(sc.getPersistentRDDs.keySet -- before == pinned, "the loop left RDDs persisted")
+    }
   }
 
   /** Rounds the fingerprint-probe loop took before the loop moved onto

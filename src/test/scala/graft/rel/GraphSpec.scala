@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.Pins
 import graft.text.SparkTestSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,10 +34,16 @@ class GraphSpec extends AnyFunSuite {
   private def run(edges: Seq[(Long, Long)], iters: Int,
       expected: (Int, Boolean)): Map[Long, Long] = {
     import spark.implicits._
-    val (ranks, _, rounds, converged) = Graph.pagerankRanks(edges.toDF("src", "dst"), iters)
-    assert((rounds, converged) == expected)
-    ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Pins.scoped { pins =>
+      val (ranks, rounds, converged) = Graph.pagerankRanks(pins, edges.toDF("src", "dst"), iters)
+      assert((rounds, converged) == expected)
+      values(ranks)
+    }
   }
+
+  /** (node → value) of a (node, degree, value) frame. */
+  private def values(ranks: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    ranks.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
 
   test("path graph A-B-C: distributed == in-memory reference, ends symmetric") {
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
@@ -87,27 +94,25 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("one call runs at most rounds + 3 jobs and leaves only its result pinned") {
-    import graft.ml.{JobCount, Similarity}
+    import graft.ml.JobCount
     import spark.implicits._
     val sc = spark.sparkContext
     val in = (2L to 6L).flatMap(l => Seq((1L, l), (l, 1L))).toDF("src", "dst")
-    val before = sc.getPersistentRDDs.keySet
-    var out: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Int, Boolean) = null
-    val jobs = JobCount.of(spark) { out = Graph.pagerankRanks(in, 4) }
-    assert(jobs <= out._3 + 3, s"$jobs jobs for ${out._3} rounds")
-    val pinned = Similarity.pinnedRdds(out._1).map(_.id).toSet
-    assert(pinned.size == 1)
-    assert(sc.getPersistentRDDs.keySet -- before == pinned, "the loop left RDDs persisted")
-    pinned.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+    Pins.scoped { pins =>
+      val before = sc.getPersistentRDDs.keySet
+      var out: (org.apache.spark.sql.DataFrame, Int, Boolean) = null
+      val jobs = JobCount.of(spark) { out = Graph.pagerankRanks(pins, in, 4) }
+      assert(jobs <= out._2 + 3, s"$jobs jobs for ${out._2} rounds")
+      val pinned = Set(Pins.rddOf(out._1).id)
+      assert(pinned.size == 1)
+      assert(sc.getPersistentRDDs.keySet -- before == pinned, "the loop left RDDs persisted")
+    }
   }
 
   test("q138's loop takes the pinned rounds at sf0.001 and sf0.01") {
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      val edges = Graph.tradeEdges(spark, dir)
-      val (ranks, _, rounds, converged) = Graph.pagerankRanks(edges, 5)
+    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) Pins.scoped { pins =>
+      val (_, rounds, converged) = Graph.pagerankRanks(pins, Graph.tradeEdges(pins, spark, dir), 5)
       assert((rounds, converged) == ParentRounds(dir), dir)
-      (graft.ml.Similarity.pinnedRdds(ranks) ++ graft.ml.Similarity.pinnedRdds(edges))
-        .foreach(_.unpersist(blocking = true))
     }
   }
 
@@ -118,12 +123,13 @@ class GraphSpec extends AnyFunSuite {
     // early-exit values must STILL equal the full-depth reference (a
     // fixpoint persists under the deterministic update)
     val edges = Seq((1L, 2L), (2L, 1L), (10L, 11L), (11L, 10L))
-    val (ranks, _, rounds, converged) =
-      Graph.pagerankRanks(edges.toDF("src", "dst"), 5)
-    assert(converged, "exact integer fixpoint must be detected")
-    assert(rounds == 1, s"expected exit after round 1, ran $rounds")
-    val got = ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == reference(edges, 5), "early exit == full-depth values")
+    Pins.scoped { pins =>
+      val (ranks, rounds, converged) = Graph.pagerankRanks(pins, edges.toDF("src", "dst"), 5)
+      assert(converged, "exact integer fixpoint must be detected")
+      assert(rounds == 1, s"expected exit after round 1, ran $rounds")
+      val got = values(ranks)
+      assert(got == reference(edges, 5), "early exit == full-depth values")
+    }
   }
 
   test("driver kernel ≡ distributed fixpoint (ranks, deg, rounds, converged)") {
@@ -133,11 +139,12 @@ class GraphSpec extends AnyFunSuite {
     val leaves = (2L to 6L)
     val edges = leaves.flatMap(l => Seq((1L, l), (l, 1L))) ++
       Seq((10L, 11L), (11L, 10L))
-    for (iters <- Seq(1, 4)) {
+    for (iters <- Seq(1, 4)) Pins.scoped { pins =>
       val (dr, dd, drounds, dconv) =
         Graph.pagerankRanksDriver(edges.toDF("src", "dst"), iters)
-      val (xr, xd, xrounds, xconv) =
-        Graph.pagerankRanks(edges.toDF("src", "dst"), iters)
+      val (x, xrounds, xconv) =
+        Graph.pagerankRanks(pins, edges.toDF("src", "dst"), iters)
+      val (xr, xd) = (x.select("node", "value"), x.select("node", "degree"))
       def m(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(m(dr) == m(xr), s"ranks diverge at iters=$iters")
@@ -184,12 +191,13 @@ class GraphSpec extends AnyFunSuite {
     // many rounds — no exact fixpoint within 4
     val leaves = (2L to 6L)
     val edges = leaves.flatMap(l => Seq((1L, l), (l, 1L)))
-    val (ranks, _, rounds, converged) =
-      Graph.pagerankRanks(edges.toDF("src", "dst"), 4)
-    assert(!converged, "no exact fixpoint expected within 4 rounds")
-    assert(rounds == 4, "late case must use the full round budget")
-    val got = ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == reference(edges, 4))
+    Pins.scoped { pins =>
+      val (ranks, rounds, converged) = Graph.pagerankRanks(pins, edges.toDF("src", "dst"), 4)
+      assert(!converged, "no exact fixpoint expected within 4 rounds")
+      assert(rounds == 4, "late case must use the full round budget")
+      val got = values(ranks)
+      assert(got == reference(edges, 4))
+    }
   }
 
   /** (rounds, converged) of the fingerprint-probe loop before the loop

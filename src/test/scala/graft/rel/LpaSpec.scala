@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.Pins
 import graft.text.SparkTestSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,8 +12,10 @@ class LpaSpec extends AnyFunSuite {
 
   private def labelsOf(edges: Seq[(Long, Long)]): (Map[Long, Long], Int, Boolean) = {
     import spark.implicits._
-    val (df, rounds, converged) = Lpa.propagateLabels(edges.toDF("sa", "sb"))
-    (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds, converged)
+    Pins.scoped { pins =>
+      val (df, rounds, converged) = Lpa.propagateLabels(pins, edges.toDF("sa", "sb"))
+      (df.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap, rounds, converged)
+    }
   }
 
   test("two cliques with a bridge resolve to two communities") {
@@ -53,28 +56,27 @@ class LpaSpec extends AnyFunSuite {
   }
 
   test("q166's loop takes the pinned rounds at sf0.001 and sf0.01") {
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      val edges = Triangles.significantEdges(spark, dir)
-      val (labels, rounds, converged) = Lpa.propagateLabels(edges)
+    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) Pins.scoped { pins =>
+      val edges = Triangles.significantEdges(pins, spark, dir)
+      val (_, rounds, converged) = Lpa.propagateLabels(pins, edges)
       assert((rounds, converged) == ParentRounds(dir), dir)
-      (graft.ml.Similarity.pinnedRdds(labels) ++ graft.ml.Similarity.pinnedRdds(edges))
-        .foreach(_.unpersist(blocking = true))
     }
   }
 
   test("one call runs at most rounds + 3 jobs and leaves only its result pinned") {
-    import graft.ml.{JobCount, Similarity}
+    import graft.ml.JobCount
     import spark.implicits._
     val sc = spark.sparkContext
     val in = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 10L), (10L, 11L)).toDF("sa", "sb")
-    val before = sc.getPersistentRDDs.keySet
-    var out: (org.apache.spark.sql.DataFrame, Int, Boolean) = null
-    val jobs = JobCount.of(spark) { out = Lpa.propagateLabels(in) }
-    assert(jobs <= out._2 + 3, s"$jobs jobs for ${out._2} rounds")
-    val pinned = Similarity.pinnedRdds(out._1).map(_.id).toSet
-    assert(pinned.size == 1)
-    assert(sc.getPersistentRDDs.keySet -- before == pinned, "the loop left RDDs persisted")
-    pinned.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+    Pins.scoped { pins =>
+      val before = sc.getPersistentRDDs.keySet
+      var out: (org.apache.spark.sql.DataFrame, Int, Boolean) = null
+      val jobs = JobCount.of(spark) { out = Lpa.propagateLabels(pins, in) }
+      assert(jobs <= out._2 + 3, s"$jobs jobs for ${out._2} rounds")
+      val pinned = Set(Pins.rddOf(out._1).id)
+      assert(pinned.size == 1)
+      assert(sc.getPersistentRDDs.keySet -- before == pinned, "the loop left RDDs persisted")
+    }
   }
 
   test("q166 report: modularity identity and community accounting hold") {

@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.Pins
 import graft.text.SparkTestSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,8 +16,8 @@ class WalksSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     // rebuild the graph's adjacency the same way and replay each walk
     // with a plain Scala loop
-    val edges = Triangles.significantEdges(spark, "/root/testdata/sf0.001")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val edges = Pins.scoped(Triangles.significantEdges(_, spark, "/root/testdata/sf0.001")
+      .collect().map(r => (r.getLong(0), r.getLong(1))))
     val adj = (edges.map(e => e._1 -> e._2) ++ edges.map(e => e._2 -> e._1))
       .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).sorted.toIndexedSeq }
     def refWalk(s: Long, w: Long): String = {
@@ -46,8 +47,8 @@ class WalksSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     val rows = Walks.q223_node2vec_walks(spark, sf).collect()
     assert(rows.nonEmpty)
-    val edges = Triangles.significantEdges(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val edges = Pins.scoped(Triangles.significantEdges(_, spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1))))
     val adj = (edges.map(e => e._1 -> e._2) ++ edges.map(e => e._2 -> e._1))
       .groupBy(_._1)
       .map { case (u, vs) => u -> vs.map(_._2).sorted.toIndexedSeq }

@@ -96,6 +96,6 @@ class MinhashSignatureSpec extends AnyFunSuite {
     val perRow = toks.select(TextFunctions.minhash_signature(col("t")))
     assert(JobCount.of(spark) { perRow.collect() } == 1)
     assert(sc.getPersistentRDDs.keySet == before)
-    graft.ml.Similarity.pinnedRdds(toks).foreach(_.unpersist(blocking = true))
+    graft.Pins.rddOf(toks).unpersist(blocking = true)
   }
 }
