@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** SQL-surface registration for graft's native expressions, so
   * `spark.sql("SELECT normalize_nfkc(s) ...")` works like any builtin.
@@ -12,19 +15,28 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    (standard SparkSessionExtensions injection at session build);
   *  - library call: `GraftExtensions.register(spark)` for an
   *    already-running session (tests, notebooks).
+  *
+  * Both install the same functions and the same two lists:
+  * [[GraftExtensions.optimizerRules]] (`BoundedLevenshtein`,
+  * `JaroPrefilter`, `LocalSort`) and [[GraftExtensions.strategies]]
+  * (`AsofStrategy`). A rule added to a list reaches both entry points.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => plans.BoundedLevenshtein)
-    ext.injectOptimizerRule(_ => plans.JaroPrefilter)
-    ext.injectPlannerStrategy(_ => plans.AsofStrategy)
+    GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
 object GraftExtensions {
+
+  val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(plans.BoundedLevenshtein, plans.JaroPrefilter, plans.LocalSort)
+
+  val strategies: Seq[SparkStrategy] = Seq(plans.AsofStrategy)
 
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "")
@@ -72,21 +84,17 @@ object GraftExtensions {
       (args: Seq[Expression]) =>
         ml.SimhashAgg(args(0), args(1)).toAggregateExpression()))
 
-  /** Register into a live session: function registry + optimizer rules
-    * (experimental.extraOptimizations is the post-build hook for
-    * Rule[LogicalPlan]; it runs as a final optimizer batch). */
+  /** Register into a live session: function registry, optimizer rules
+    * and planner strategies (experimental.extraOptimizations is the
+    * post-build hook for Rule[LogicalPlan]; it runs as a final optimizer
+    * batch). Idempotent: a rule or strategy already there is not added
+    * again. */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (name, inf, builder) =>
       GraftSqlBridge.registerFunction(spark, name, inf, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(plans.BoundedLevenshtein))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.BoundedLevenshtein
-    if (!spark.experimental.extraOptimizations.contains(plans.JaroPrefilter))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.JaroPrefilter
-    if (!spark.experimental.extraStrategies.contains(plans.AsofStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ plans.AsofStrategy
+    val x = spark.experimental
+    x.extraOptimizations ++= optimizerRules.filterNot(x.extraOptimizations.contains)
+    x.extraStrategies ++= strategies.filterNot(x.extraStrategies.contains)
   }
 }

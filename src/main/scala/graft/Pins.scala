@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -66,7 +67,7 @@ object Pins {
   }
 
   /** The RDD a pinned frame reads: the one at its plan's root. */
-  private[graft] def rddOf(pinned: DataFrame): RDD[_] = pinned.queryExecution.analyzed match {
+  private[graft] def rddOf(pinned: DataFrame): RDD[InternalRow] = pinned.queryExecution.analyzed match {
     case l: LogicalRDD => l.rdd
     case p => throw new IllegalArgumentException(
       s"not a pinned frame: its plan's root is ${p.nodeName}, not a LogicalRDD")

@@ -3,18 +3,23 @@ package graft.ml
 import breeze.linalg.{all, sum => bsum, DenseMatrix => BDM, DenseVector => BDV}
 import breeze.numerics.{exp, trigamma}
 import breeze.stats.distributions.{Gamma, RandBasis}
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.text.Cleanse
 import org.apache.commons.math3.random.MersenneTwister
 import org.apache.spark.TaskContext
 import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.clustering.{GraftLdaBridge, LDA, LDAModel, LocalLDAModel}
 import org.apache.spark.ml.feature.CountVectorizerModel
+import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.mllib.clustering.{GraftLdaBridge => OldBridge}
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors, Vector => OldVector}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.random.PoissonSampler
 
@@ -47,11 +52,23 @@ import org.apache.spark.util.random.PoissonSampler
   * The inputs `LDA.fit` rejects are rejected, and so are a frame with no
   * rows and rows whose size is not V.
   *
-  * Persistence follows `ml.LDA`: the converted (id, vector) RDD is
-  * persisted only when the input Dataset is not cached, and unpersisted
-  * (blocking) before `train` returns. The `private` MLlib pieces are
-  * reached through the two `GraftLdaBridge` objects in
-  * `org.apache.spark.{ml,mllib}.clustering`. Driver memory per iteration:
+  * Persistence: the E-step reads the input's rows in place. A pinned
+  * frame (its plan's root a `LogicalRDD` over a persisted RDD, as a
+  * `localCheckpoint` leaves it) is read as its own `InternalRow`s, and a
+  * cached frame through its cache; any other frame gets one lazy
+  * [[graft.Pins]] pin of its features column, which adds no job of its
+  * own (the first iteration fills it) and is released before `train`
+  * returns. So the fit keeps no second copy of the corpus, and a pinned
+  * input costs no persist and no unpersist. Each task Poisson-samples
+  * the rows first and decodes only the sampled rows' features into MLlib
+  * vectors; the first iteration also checks every row as `LDA.fit` does
+  * (no null vector, no NaN or infinite value) and that its size is V.
+  * Every column type `LDA.fit` accepts is read: an ML vector,
+  * `array<double>` and `array<float>`. MLlib's own conversion,
+  * `LDA.getOldDataset`, is not used (it re-plans the input on every call
+  * and builds a (Long, Vector) copy of every row), so the ml-side
+  * `GraftLdaBridge` only builds the model; the mllib-side one reaches the
+  * `private` E-step kernels. Driver memory per iteration:
   * a few k × V matrices (lambda, its expectation, the update's
   * temporaries) plus the task results, at most one k × V partial per
   * partition — P × k × V × 8 bytes, 3 × 6 × V × 8 bytes at most in the
@@ -105,6 +122,43 @@ object Lda extends graft.QueryModule {
   private final case class EStep(stat: Array[Double], logphat: Array[Double],
       sampled: Long, nonEmpty: Long, rows: Long)
 
+  /** The features column of an `InternalRow`, read in place, for each
+    * type `LDA.transformSchema` accepts: an ML vector (the `VectorUDT`
+    * struct: type 0 sparse / 1 dense, size, indices, values),
+    * `array<double>` or `array<float>`. [[check]] is `LDA.fit`'s row check
+    * plus the size check; [[vector]] is the vector MLlib would train on. */
+  private final case class Features(name: String, at: Int, dataType: DataType) {
+    private val isVector = dataType == SQLDataTypes.VectorType
+    private val isFloat = dataType == ArrayType(FloatType, true) || dataType == ArrayType(FloatType, false)
+
+    /** (size, values, sparse indices or null); a null vector fails. */
+    private def read(row: InternalRow): (Int, ArrayData, ArrayData) = {
+      require(!row.isNullAt(at), s"LDA features column '$name': Vectors MUST NOT be Null")
+      val v = if (isVector) row.getStruct(at, 4) else null
+      val vs = if (isVector) v.getArray(3) else row.getArray(at)
+      if (isVector && v.getByte(0) == 0) (v.getInt(1), vs, v.getArray(2))
+      else (vs.numElements(), vs, null)
+    }
+
+    private def value(vs: ArrayData, i: Int): Double =
+      if (isFloat) vs.getFloat(i).toDouble else vs.getDouble(i)
+
+    def size(row: InternalRow): Int = read(row)._1
+
+    def check(row: InternalRow, vocabSize: Int): Unit = {
+      val (n, vs, _) = read(row)
+      require((0 until vs.numElements()).forall { i => val x = value(vs, i); !x.isNaN && !x.isInfinite },
+        s"LDA features column '$name': Vector values MUST NOT be NaN or Infinity")
+      require(n == vocabSize, s"LDA features column '$name': a row has size $n, expected $vocabSize")
+    }
+
+    def vector(row: InternalRow): OldVector = {
+      val (n, vs, indices) = read(row)
+      val values = Array.tabulate(vs.numElements())(value(vs, _))
+      if (indices == null) OldVectors.dense(values) else OldVectors.sparse(n, indices.toIntArray(), values)
+    }
+  }
+
   /** `lda.fit(dataset)` for `lda`'s default online optimizer, one Spark
     * job per iteration (see the object doc). Same checks, same model, same
     * numbers: each step below names the MLlib code it stands for. */
@@ -116,21 +170,35 @@ object Lda extends graft.QueryModule {
     val tau0 = lda.getLearningOffset
     val kappa = lda.getLearningDecay
     val optimizeAlpha = lda.getOptimizeDocConcentration
-    val docs = GraftLdaBridge.trainingRdd(dataset, featuresCol).setName("training instances")
-    val persist = dataset.storageLevel == StorageLevel.NONE
-    if (persist) docs.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    val column = dataset.select(col(featuresCol))
+    // the rows read in place: a pinned frame's own, or a cached frame's
+    // (its reader may reuse one row object: the E-step is done with a row
+    // before it pulls the next); any other frame gets a lazy pin below
+    val (inPlace, at) = dataset.queryExecution.analyzed match {
+      case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE =>
+        (Some(l.rdd), dataset.schema.fieldIndex(featuresCol))
+      case _ if dataset.storageLevel != StorageLevel.NONE =>
+        (Some(column.queryExecution.toRdd), 0)
+      case _ => (None, 0)
+    }
+    val field = dataset.schema(featuresCol)
+    val features = Features(featuresCol, at, field.dataType)
+    val empty = s"LDA features column '$featuresCol' has no rows"
+    // V from a vector column's metadata (CountVectorizer sets it); MLlib
+    // reads the first row's size
+    val metaSize =
+      if (field.dataType == SQLDataTypes.VectorType) AttributeGroup.fromStructField(field).size
+      else -1
+    val vocabSize =
+      if (metaSize >= 0 && lda.getMaxIter > 0) metaSize
+      else {
+        val first = inPlace.getOrElse(column.queryExecution.toRdd).map(features.size).take(1)
+        require(first.nonEmpty, empty)
+        if (metaSize >= 0) metaSize else first.head
+      }
+    Pins.scoped { pins =>
+      val docs = inPlace.getOrElse(Pins.rddOf(pins.pin(column, eager = false)))
       val sc = docs.sparkContext
-      val empty = s"LDA features column '$featuresCol' has no rows"
-      // V from CountVectorizer's metadata; MLlib reads the first row's size
-      val metaSize = AttributeGroup.fromStructField(dataset.schema(featuresCol)).size
-      val vocabSize =
-        if (metaSize >= 0 && lda.getMaxIter > 0) metaSize
-        else {
-          val first = docs.take(1)
-          require(first.nonEmpty, empty)
-          if (metaSize >= 0) metaSize else first.head._2.size
-        }
       // OnlineLDAOptimizer.initialize: alpha and eta default to 1/k
       // (transformSchema has checked a set alpha's length and signs)
       val alpha0 =
@@ -168,24 +236,26 @@ object Lda extends graft.QueryModule {
         val expElogbetaBc = sc.broadcast(expElogbeta)
         val alphaNow = alpha
         val countRows = corpusSize < 0
-        val eStep = (ctx: TaskContext, rows: Iterator[(Long, OldVector)]) => {
+        val eStep = (ctx: TaskContext, rows: Iterator[InternalRow]) => {
           val part = ctx.partitionId()
           var n = 0L
+          // the first iteration checks every row; later ones decode only
+          // the sampled rows
           val seen = if (!countRows) rows else rows.map { r =>
-            require(r._2.size == vocabSize,
-              s"LDA features column '$featuresCol': a row has size ${r._2.size}, expected $vocabSize")
+            features.check(r, vocabSize)
             n += 1
             r
           }
-          val sampler = new PoissonSampler[(Long, OldVector)](fraction)
+          val sampler = new PoissonSampler[InternalRow](fraction)
           sampler.setSeed(partSeeds(part))
           var stat: Array[Double] = null
           val logphat = if (optimizeAlpha) new Array[Double](k) else null
           var sampled = 0L
           var nonEmpty = 0L
           // submitMiniBatch's partition function, per sampled document
-          sampler.sample(seen).foreach { case (_, termCounts) =>
+          sampler.sample(seen).foreach { row =>
             sampled += 1
+            val termCounts = features.vector(row)
             if (termCounts.numNonzeros > 0) {
               nonEmpty += 1
               val (gammad, sstats, ids) = OldBridge.variationalTopicInference(
@@ -253,7 +323,7 @@ object Lda extends graft.QueryModule {
       val old = OldBridge.localModel(lambda, OldVectors.dense(alpha.toArray), eta,
         GammaShape, draw())
       GraftLdaBridge.localModel(lda, vocabSize, old, dataset.sparkSession)
-    } finally if (persist) docs.unpersist(blocking = true)
+    }
   }
 
   /** M5: topics described as (topic, rank, term, weight). */

@@ -353,13 +353,15 @@ object Eval extends graft.QueryModule {
   private def fusionRanks(s: SparkSession, dir: String): DataFrame = {
     val pred = logitU(s, dir)
     // ONE corpus pass computes both text signals (r21): entropy and
-    // distinct-token ratio each re-scanned documentsFanned before; the
-    // shared frame is checkpointed LAZILY so tokenize + entropy run once
-    // — the first branch to touch a partition materializes it inside the
-    // main job (an eager pin here measured ~0.3 s WORSE: it serialized
-    // the corpus scan into its own barrier where the old plan overlapped
-    // the signal branches, stageWall ≫ wall). dtr is null for tokenless
-    // docs — exactly the rows the old `size(t) >= 1` filter dropped.
+    // distinct-token ratio each re-scanned documentsFanned before. The
+    // shared frame is pinned eagerly (r21 measured a lazy pin ~0.3 s
+    // faster; q183/q283 at sf0.1 now time the same either way). A lazy pin
+    // is filled by the first of the branches' concurrent shuffle jobs,
+    // which clears its lineage and lets the plan's SQL metrics be
+    // collected while the other branches' tasks still report to them
+    // (~130 "non-existent accumulator" errors per call in graft.Verify).
+    // dtr is null for tokenless docs — exactly the rows the old
+    // `size(t) >= 1` filter dropped.
     // The pin stays referenced by the returned plan; the bench/Verify
     // between-query sweep releases it (house convention).
     val feats = Tables.documentsFanned(s, dir)
@@ -370,7 +372,7 @@ object Eval extends graft.QueryModule {
         when(size(col("t")) >= 1,
           expr("CAST(size(array_distinct(t)) AS DOUBLE) " +
             "/ CAST(size(t) AS DOUBLE)")).as("dtr"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // long frame: same score values, same per-signal buckets as the
     // retired per-signal descRank calls
     val g = pred.select(lit(1).as("sig"), col("doc_id"),

@@ -290,7 +290,9 @@ object Retrieval extends graft.QueryModule {
   def q135_phrase_search(s: SparkSession, dir: String): DataFrame = {
     val posts = docToks(s, dir)
       .select(col("doc_id"), posexplode(col("t")).as(Seq("pos", "term")))
-      .localCheckpoint(false) // one tokenize feeds all phrase legs
+      // one tokenize feeds all phrase legs; eager, as the legs' jobs run
+      // concurrently (see Eval.fusionRanks)
+      .localCheckpoint()
     val perQuery = PhraseQueries.map { case (qid, ts) =>
       var m = posts.filter(col("term") === ts.head)
         .select(col("doc_id"), col("pos"))

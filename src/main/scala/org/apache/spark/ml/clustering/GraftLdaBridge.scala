@@ -2,19 +2,12 @@ package org.apache.spark.ml.clustering
 
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.mllib.clustering.{LocalLDAModel => OldLocalLDAModel}
-import org.apache.spark.mllib.linalg.{Vector => OldVector}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Bridge into `ml.clustering.LDA`'s `private[clustering]` training-data
-  * conversion and `LocalLDAModel`'s `private[ml]` constructor, so
-  * that `graft.ml.Lda` can fit with its own loop and still return the
-  * model `LDA.fit` returns. */
+/** Bridge into `LocalLDAModel`'s `private[ml]` constructor, so that
+  * `graft.ml.Lda` can fit with its own loop and still return the model
+  * `LDA.fit` returns. */
 object GraftLdaBridge {
-  /** `LDA.fit`'s training RDD: (monotonic id, features), NaN-checked. */
-  def trainingRdd(dataset: Dataset[_], featuresCol: String): RDD[(Long, OldVector)] =
-    LDA.getOldDataset(dataset, featuresCol)
-
   /** The model `LDA.fit` builds: the estimator's uid, its explicitly set
     * params copied (defaults stay defaults), the estimator as parent. */
   def localModel(lda: LDA, vocabSize: Int, old: OldLocalLDAModel,

@@ -90,10 +90,9 @@ class PinsSpec extends AnyFunSuite {
   test("unpersist appears under src/main only in Pins, GraftSession.sweep " +
     "and Lda's Dataset caches") {
     // (file, enclosing member) pairs allowed to call unpersist: the pin
-    // owner itself, the between-query sweep, and the two Dataset caches
-    // of the LDA fits (MLlib's own persist/unpersist pattern)
-    val allowed = Set(("GraftSession.scala", "sweep"), ("Lda.scala", "fitOnline"),
-      ("Lda.scala", "m_lda_sweep"))
+    // owner itself, the between-query sweep, and the Dataset cache of the
+    // LDA sweep's features (fitOnline pins through Pins)
+    val allowed = Set(("GraftSession.scala", "sweep"), ("Lda.scala", "m_lda_sweep"))
     val member = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r.unanchored
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")

@@ -1,7 +1,13 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
+import graft.Pins
 import graft.text.SparkTestSession
 import org.apache.spark.SparkException
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.ml.clustering.{LDA, LDAModel}
 import org.apache.spark.ml.feature.CountVectorizerModel
 import org.apache.spark.ml.linalg.{Vector, Vectors}
@@ -178,5 +184,90 @@ class LdaOnlineSpec extends AnyFunSuite {
       .toDF("doc_id", "features").coalesce(1)
     val e3 = intercept[SparkException](Lda.train(ragged, k = 2, maxIter = 2))
     assert(e3.getMessage.contains("has size 5, expected 3"), e3.getMessage)
+  }
+
+  private def persistent(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** `f`'s Spark job count, and the persisted RDDs those jobs read. */
+  private def jobsReading(f: => Any): (Int, Set[Int]) = {
+    val sc = spark.sparkContext
+    val read = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.flatMap(_.rddInfos).filter(_.storageLevel != StorageLevel.NONE)
+          .foreach(r => read.add(r.id))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val n = JobCount.of(spark)(f)
+      (n, read.asScala.toSet)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("same model as LDA.fit on pinned, lazy, cached and array<double>/array<float> inputs") {
+    val pinned = corpus(160, 3)
+    val doubles = pinned.select(col("doc_id"), vector_to_array(col("features")).as("features"))
+    val floats = pinned.select(col("doc_id"),
+      vector_to_array(col("features"), "float32").as("features"))
+    assert(floats.schema("features").dataType.simpleString == "array<float>")
+    val inputs = Seq("pinned" -> pinned, "lazy" -> pinned.select(col("features"), col("doc_id")),
+      "array<double>" -> doubles, "array<float>" -> floats,
+      "pinned array<double>" -> doubles.localCheckpoint(),
+      "pinned array<float>" -> floats.localCheckpoint())
+    for ((what, df) <- inputs) {
+      val before = persistent()
+      val ours = Lda.fitOnline(lda(4, 5), df)
+      assert(persistent() == before, s"$what: nothing left persisted")
+      assertSameModel(ours, lda(4, 5).fit(df), pinned, what)
+    }
+    val cached = floats.cache()
+    try {
+      cached.count()
+      val before = persistent()
+      val (jobs, read) = jobsReading(Lda.fitOnline(lda(3, 4), cached))
+      assert(jobs == 1 + 4, "a take(1) for V (arrays carry no size metadata), then one per iteration")
+      assert(read.subsetOf(before), "the jobs read the cache, not a new pin")
+      assert(persistent() == before)
+      assertSameModel(Lda.fitOnline(lda(3, 4), cached), lda(3, 4).fit(cached), pinned, "cached")
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("a pinned input is read in place; any other input gets one pin, released on return") {
+    val df = corpus(160, 3)
+    val before = persistent()
+    val (jobs, read) = jobsReading(Lda.train(df, k = 4, maxIter = 5))
+    assert(jobs == 5)
+    assert(read == Set(Pins.rddOf(df).id), "every job reads the input's own pinned rows")
+    assert(persistent() == before)
+    val (lazyJobs, lazyRead) = jobsReading(Lda.train(df.select(col("features")), k = 4, maxIter = 5))
+    assert(lazyJobs == 5, "the lazy pin adds no job")
+    assert((lazyRead -- before).size == 1, s"one pin of the features: $lazyRead vs $before")
+    assert(persistent() == before, "and it is released")
+  }
+
+  test("bad input fails loudly on a pinned input too") {
+    import spark.implicits._
+    def pinned(rows: (Long, Vector)*): DataFrame =
+      rows.toDF("doc_id", "features").coalesce(1).localCheckpoint()
+    // (input, message, LDA.fit rejects it too: it does not check sizes)
+    val cases = Seq(
+      (pinned((0L, Vectors.dense(1.0, 2.0)), (1L, Vectors.dense(Double.NaN, 1.0))), "NaN", true),
+      (pinned((0L, Vectors.dense(1.0, 2.0)),
+        (1L, Vectors.sparse(2, Array(1), Array(Double.NegativeInfinity)))), "Infinity", true),
+      (pinned((0L, Vectors.dense(1.0, 2.0)), (1L, null)), "MUST NOT be Null", true),
+      (pinned((0L, Vectors.dense(1.0, 2.0, 0.0)), (1L, Vectors.sparse(5, Array(4), Array(1.0)))),
+        "has size 5, expected 3", false))
+    for ((df, message, mllibToo) <- cases) {
+      assert(Pins.rddOf(df).getStorageLevel != StorageLevel.NONE)
+      val e = intercept[SparkException](Lda.train(df, k = 2, maxIter = 2))
+      assert(e.getMessage.contains(message), e.getMessage)
+      if (mllibToo) intercept[Exception](lda(2, 2).fit(df))
+    }
+    val empty = corpus(40, 3).filter(lit(false))
+    for (frame <- Seq(empty, empty.select(col("features").as("features", Metadata.empty)));
+         iters <- Seq(0, 5)) {
+      val e = intercept[IllegalArgumentException](Lda.train(frame.localCheckpoint(), k = 2, maxIter = iters))
+      assert(e.getMessage.contains("'features'") && e.getMessage.contains("no rows"), e.getMessage)
+    }
   }
 }
