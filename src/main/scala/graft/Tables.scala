@@ -60,8 +60,6 @@ object Tables {
     * must any filtered consumer (the exchange blocks predicate pushdown). */
   def lineitemFanned(s: SparkSession, d: String): DataFrame =
     fanned(lineitem(s, d), s)
-  def eventsFanned(s: SparkSession, d: String): DataFrame =
-    fanned(events(s, d), s)
 
   /** `events.parquet`'s `ts` encoding has varied across driver-generated
     * datasets: TIMESTAMP(NANOS) (which Spark's parquet reader only accepts

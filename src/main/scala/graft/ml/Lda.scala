@@ -13,15 +13,18 @@ import org.apache.spark.ml.feature.CountVectorizerModel
 import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.mllib.clustering.{GraftLdaBridge => OldBridge}
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors, Vector => OldVector}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StructField,
+  StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.random.PoissonSampler
+
+import scala.jdk.CollectionConverters._
 
 /** LDA topic modeling (SURVEY.md §2.6 M2/M3/M5/M6) — the Spark-native
   * replacement for gensim `LdaMulticore` (LDA_logic.py:69-95, 338-341).
@@ -326,13 +329,25 @@ object Lda extends graft.QueryModule {
     }
   }
 
-  /** M5: topics described as (topic, rank, term, weight). */
+  /** M5: topics described as (topic, rank, term, weight).
+    * `describeTopics` is a driver-side relation. Its rows are flattened to
+    * one (topic, rank, term index, weights) row per term on the driver, in
+    * one `LocalRelation`, so Spark's `ConvertToLocalRelation` folds the
+    * projection and [[graft.plans.LocalSort]] a caller's global sort: the
+    * frame and its `orderBy` run no job. */
   def describe(s: SparkSession, model: LDAModel,
       vocab: Array[String], topN: Int = 5): DataFrame = {
     val vocabCol = typedlit(vocab.toSeq)
-    model.describeTopics(topN)
-      .select(col("topic"), posexplode(col("termIndices")).as(Seq("rank", "term_idx")),
-        col("termWeights"))
+    val topics = model.describeTopics(topN)
+    val indices = topics.schema("termIndices").dataType.asInstanceOf[ArrayType]
+    val perTerm = StructType(Seq(topics.schema("topic"),
+      StructField("rank", IntegerType, nullable = false),
+      StructField("term_idx", indices.elementType, indices.containsNull),
+      topics.schema("termWeights")))
+    val rows = topics.select("topic", "termIndices", "termWeights").collect().toSeq
+      .flatMap(r => r.getSeq[Any](1).zipWithIndex.map { case (t, i) =>
+        Row(r.get(0), i, t, r.get(2)) })
+    s.createDataFrame(rows.asJava, perTerm)
       .select(col("topic"), (col("rank") + 1).as("rank"),
         element_at(vocabCol, col("term_idx") + 1).as("term"),
         round(element_at(col("termWeights"), col("rank") + 1), 6).as("weight"))

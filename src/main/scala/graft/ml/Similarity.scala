@@ -315,20 +315,6 @@ object Similarity extends graft.QueryModule {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Band-bucket size distribution for the seeded-hyperplane LSH keys —
-    * the measurement behind [[BandBucketCap]] (spec/probe surface). */
-  private[graft] def bandBucketStats(s: SparkSession, dir: String)
-      : (Long, Long, Double) = {
-    val e = emb(s, dir)
-      .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
-      .select(col("vec_id"),
-        transform(col("emb"), x => x / col("nrm")).as("emb"))
-    val r = bandKeys(s, e, bands = 8, planes = 6)
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("n"))
-      .agg(max(col("n")), count(lit(1)), avg(col("n"))).head()
-    (r.getLong(0), r.getLong(1), r.getDouble(2))
-  }
-
   /** Global top-20 most-similar embedding pairs via banded LSH candidates
     * (threshold-free: labels are uncorrelated with cosine in this corpus,
     * max pair cosine ≈0.51, so a 0.9-style cutoff would be vacuous).

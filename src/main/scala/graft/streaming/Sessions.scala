@@ -788,22 +788,6 @@ object Sessions extends graft.QueryModule {
           .when(col("out_of_control"), "low").otherwise("in").as("side"))
   }
 
-  /** The q234 center line of a sealed horizon — two scalars
-    * (metadata-scale collect), the batch half of
-    * [[controlChartStream]]'s learn→apply loop. */
-  def controlChartReference(events: DataFrame, hitCol: String)
-      : (Long, Long) = {
-    val r = events.agg(
-      // sum() over zero rows is NULL — coalesce so an empty horizon
-      // reaches the descriptive require below, not an opaque NPE
-      coalesce(sum(when(col(hitCol), 1L).otherwise(0L)), lit(0L))
-        .as("c"),
-      count(lit(1)).as("n")).collect().head
-    require(r.getLong(1) > 0,
-      "center line must come from a non-empty sealed horizon")
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** The q203-binning reference histogram of a sealed corpus — the
     * collect is 16 rows (metadata-scale), the batch half of
     * [[psiDriftStream]]'s learn→apply loop. */

@@ -25,9 +25,6 @@ object Cleanse {
   val Ipv4Re  = "^([0-9]{1,3}\\.){3}[0-9]{1,3}$"
   val PiiRe: String = Seq(EmailRe, UrlRe, UuidRe, Md5Re, Ipv4Re).mkString("|")
 
-  /** T3: newlines/CR → single space (wrangler.py:319-320). */
-  def stripNewlines(c: Column): Column = regexp_replace(c, "[\\n\\r]+", " ")
-
   /** T4: split to lines, keep only alnum/space lines, re-join
     * (wrangler.py:316-325 intent — drop blank/punct-only noise lines). */
   def keepAlnumLines(c: Column): Column =
@@ -43,13 +40,6 @@ object Cleanse {
 
   /** T4∘T5 composed cleanse to a token array (the wrangling core). */
   def cleanseTokens(text: Column): Column = scrubPii(tokens(keepAlnumLines(text)))
-
-  /** T6 `corpus_concat` — the reconstructed `create_corpus`
-    * (wrangler.py:301 docstring; the method body never existed): one
-    * document per record, subject + bodies joined with single spaces —
-    * never one driver-side global string (SURVEY §1.4). */
-  def corpusConcat(parts: Column*): Column =
-    concat_ws(" ", parts.map(p => array_join(cleanseTokens(p), " ")): _*)
 
   /** T1: html unescape — native codegen'd expression, see expressions.scala. */
   def htmlUnescape(c: Column): Column = TextFunctions.html_unescape(c)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** M1 `tokenize_lemmatize` (SURVEY §2.6; LDA_logic.py:230-261) — the
@@ -139,10 +140,25 @@ object Tokenize extends graft.QueryModule {
 
 /** Compiled kernel behind the LemmaTokens expression — static, public,
   * deterministic (referenced from generated code). Token scan: runs of
-  * ASCII letters case-folded in place (identical piece set to
-  * `split(lower(text), "[^a-zA-Z]+")` — non-ASCII characters are
-  * separators on both paths), length/stopword filter against a hash set,
-  * then the first matching precompiled suffix rule. */
+  * ASCII letters in the text's UTF-8 bytes, case-folded (identical piece
+  * set to `split(lower(text), "[^a-zA-Z]+")` — every byte of a non-ASCII
+  * character is 0x80 or above, so such characters are separators on both
+  * paths), length/stopword filter against a hash set, then the first
+  * matching precompiled suffix rule.
+  *
+  * Text repeats its tokens (pipebench's topics input draws 120k
+  * occurrences from 12,200 words), so each thread keeps a [[TokenMemo]] of
+  * the case-folded tokens it has seen, with each token's lemma, or null
+  * for a stopword, beside it: a repeated token costs one in-place hash and
+  * compare instead of a `String`, a stopword probe and up to eight regex
+  * matchers. A token longer than `TokenMemo.MaxKeyBytes` is evaluated and
+  * not kept. Per thread this holds the memo's 576 KiB plus, per entry, one
+  * reference and at most one lemma of at most 32 ASCII bytes (a
+  * `UTF8String` and its array, under 80 bytes): under 2 MiB in all, and
+  * the table clears itself when full. Lemmas are immutable and shared by
+  * every row that holds the token. The memo pays off once a thread sees a
+  * token more than once; on text where every token is new it costs a few
+  * percent. */
 object LemmaUtil {
   private val stop: java.util.HashSet[String] = {
     val h = new java.util.HashSet[String]()
@@ -164,23 +180,54 @@ object LemmaUtil {
     tok
   }
 
+  /** A token's lemma, or null for a stopword. */
+  private def evaluate(tok: String): UTF8String =
+    if (stop.contains(tok)) null else UTF8String.fromString(applyRules(tok))
+
+  /** One thread's memo; `token` holds the current token's case-folded bytes. */
+  private final class Memo {
+    val tokens = new TokenMemo
+    val lemmas = new Array[UTF8String](TokenMemo.Capacity)
+    val token = new Array[Byte](TokenMemo.MaxKeyBytes)
+
+    def lemmaOf(len: Int): UTF8String = {
+      val e = tokens.find(token, Platform.BYTE_ARRAY_OFFSET, len)
+      if (e >= 0) return lemmas(e)
+      val l = evaluate(new String(token, 0, len, java.nio.charset.StandardCharsets.US_ASCII))
+      lemmas(tokens.add(token, Platform.BYTE_ARRAY_OFFSET, len)) = l
+      l
+    }
+  }
+  private val memos = ThreadLocal.withInitial[Memo](() => new Memo)
+
+  private def foldedString(base: AnyRef, at: Long, len: Int): String = {
+    val cs = new Array[Char](len)
+    var j = 0
+    while (j < len) { cs(j) = (Platform.getByte(base, at + j) | 0x20).toChar; j += 1 }
+    new String(cs)
+  }
+
   def lemmaTokens(u: UTF8String): ArrayData = {
-    val s = u.toString
+    val memo = memos.get()
+    val base = u.getBaseObject
+    val off = u.getBaseOffset
+    val n = u.numBytes
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val sb = new java.lang.StringBuilder
+    var len = 0
     var i = 0
-    val n = s.length
     while (i <= n) { // one past the end flushes the final token
-      val c = if (i < n) s.charAt(i) else ' '
-      if (c >= 'a' && c <= 'z') sb.append(c)
-      else if (c >= 'A' && c <= 'Z') sb.append((c + 32).toChar)
-      else {
-        if (sb.length >= 2) {
-          val tok = sb.toString
-          if (!stop.contains(tok))
-            out += UTF8String.fromString(applyRules(tok))
+      val b = if (i < n) Platform.getByte(base, off + i) else ' '.toByte
+      if ((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')) {
+        if (len < TokenMemo.MaxKeyBytes) memo.token(len) = (b | 0x20).toByte
+        len += 1
+      } else {
+        if (len >= 2) {
+          val l =
+            if (len <= TokenMemo.MaxKeyBytes) memo.lemmaOf(len)
+            else evaluate(foldedString(base, off + i - len, len))
+          if (l != null) out += l
         }
-        sb.setLength(0)
+        len = 0
       }
       i += 1
     }

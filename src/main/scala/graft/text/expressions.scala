@@ -299,39 +299,82 @@ case class JaroWinkler(left: Expression, right: Expression)
 /** The 4-permutation MinHash signature of one token array: for each seed
   * s of `TextOps.MinhashSeeds`, the least md5(s ‖ token) over the
   * array's tokens, as the 32-character lowercase hex string Spark's `md5`
-  * returns. Each token's UTF-8 bytes are digested in place; digests
-  * compare as unsigned 128-bit numbers, the order of their hex strings,
-  * and only the winners are hex-encoded. Null tokens are skipped (a
-  * non-empty array of nulls gives null fields); an empty array gives no
-  * signature (null). */
+  * returns. Digests compare as unsigned 128-bit numbers, the order of
+  * their hex strings, and only the winners are hex-encoded. Null tokens
+  * are skipped (a non-empty array of nulls gives null fields); an empty
+  * array gives no signature (null).
+  *
+  * Text repeats its tokens (pipebench's dedup input draws 720k
+  * occurrences from 1,000 words), so each thread keeps a [[TokenMemo]] of
+  * the tokens it has digested, with their four 16-byte digests beside it:
+  * a repeated token costs one in-place hash and compare instead of four
+  * md5 runs. A token is digested from the memo's copy of its UTF-8 bytes;
+  * one longer than `TokenMemo.MaxKeyBytes` is digested in place and not
+  * kept. Per thread this holds the memo's 576 KiB plus 64 bytes per entry,
+  * about 1.6 MiB in all, and the table clears itself when full. It pays
+  * off once a thread sees a token more than once; on text where every
+  * token is new it costs about a tenth more than digesting alone.
+  */
 object MinhashKernel {
   private val seeds: Array[Array[Byte]] =
     TextOps.MinhashSeeds.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
   val Fields: StructType =
     StructType(seeds.indices.map(i => StructField(s"h${i + 1}", StringType)))
-  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
-    () => java.security.MessageDigest.getInstance("MD5"))
   private val Hex = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val Width = 16 * seeds.length
+
+  /** One thread's memo: entry e's digests are `digests(e·Width until (e + 1)·Width)`;
+    * the extra last block holds an unkept token's digests. */
+  private final class Memo {
+    val tokens = new TokenMemo
+    val digests = new Array[Byte]((TokenMemo.Capacity + 1) * Width)
+    private val md = java.security.MessageDigest.getInstance("MD5")
+
+    /** Where `u`'s digests start in `digests`. */
+    def digestsOf(u: UTF8String): Int = {
+      val base = u.getBaseObject
+      val off = u.getBaseOffset
+      val len = u.numBytes
+      var e = tokens.find(base, off, len)
+      if (e >= 0) return e * Width
+      e = tokens.add(base, off, len)
+      if (e >= 0) digest(tokens.keys, tokens.keyStart(e), len, e * Width)
+      else {
+        val bb = u.getByteBuffer
+        digest(bb.array, bb.arrayOffset + bb.position, len, TokenMemo.Capacity * Width)
+      }
+    }
+
+    private def digest(src: Array[Byte], from: Int, len: Int, at: Int): Int = {
+      var s = 0
+      while (s < seeds.length) {
+        md.update(seeds(s))
+        md.update(src, from, len)
+        md.digest(digests, at + 16 * s, 16)
+        s += 1
+      }
+      at
+    }
+  }
+  private val memos = ThreadLocal.withInitial[Memo](() => new Memo)
 
   def signature(t: ArrayData): InternalRow = {
     val n = t.numElements()
     if (n == 0) return null
     val k = seeds.length
     val best = new Array[Byte](16 * k)
-    val d = new Array[Byte](16)
-    val md = md5.get()
+    val memo = memos.get()
+    val d = memo.digests
     var found = false
     var i = 0
     while (i < n) {
       if (!t.isNullAt(i)) {
-        val bb = t.getUTF8String(i).getByteBuffer
+        val at = memo.digestsOf(t.getUTF8String(i))
         var s = 0
         while (s < k) {
-          md.update(seeds(s))
-          md.update(bb.array, bb.arrayOffset + bb.position, bb.remaining)
-          md.digest(d, 0, 16)
-          if (!found || java.util.Arrays.compareUnsigned(d, 0, 16, best, 16 * s, 16 * s + 16) < 0)
-            System.arraycopy(d, 0, best, 16 * s, 16)
+          val from = at + 16 * s
+          if (!found || java.util.Arrays.compareUnsigned(d, from, from + 16, best, 16 * s, 16 * s + 16) < 0)
+            System.arraycopy(d, from, best, 16 * s, 16)
           s += 1
         }
         found = true

@@ -1,8 +1,9 @@
 package graft
 
-import graft.text.{Cleanse, Phrases, SparkTestSession, Tokenize}
-import org.apache.spark.sql.SparkSession
+import graft.text.{Cleanse, Phrases, SparkTestSession, TokenMemo, TokenMemoSpec, Tokenize}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.{Gen, Prop, Properties, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -226,10 +227,33 @@ class ColumnPropertySpec extends AnyFunSuite {
     import spark.implicits._
     val texts = randomTexts(400) ++ Seq(
       "", "   ", "a b c", "Loading QUERIES slowly!!", "the and of",
-      "mixed123tokens999loaded", "ünïcödé Straße amazingly")
-    val df = texts.toDF("s").select(
+      "mixed123tokens999loaded", "ünïcödé Straße amazingly",
+      // the token memo: byte prefixes, case folds, its key limit and past it
+      "ab abc abcd abcde AB Abc", "load loads LOADING Loaded loadings",
+      "x" * TokenMemo.MaxKeyBytes, "X" * (TokenMemo.MaxKeyBytes + 1),
+      "Amazingly" * 4 + " " + "s" * 200 + " " + "ab" * 16 + "s", "é中😀ab cd", null)
+    def mismatches(df: DataFrame): Long = df.select(
       Tokenize.lemmaTokens(col("s")).as("fast"),
       Tokenize.lemmaTokensHof(col("s")).as("ref"))
-    assert(df.filter(not(col("fast") <=> col("ref"))).count() == 0)
+      .filter(not(col("fast") <=> col("ref"))).count()
+    assert(mismatches(texts.toDF("s")) == 0)
+
+    // a pinned UnsafeRow frame of 3 partitions, each with more distinct
+    // tokens than the memo holds, and tokens whose memo hashes collide
+    def letters(n: Int): String =
+      (0 until 5).map(k => ('a' + n / math.pow(26, k).toInt % 26).toChar).mkString
+    val pairs = TokenMemoSpec.collidingPairs(400000)(i => s"q${letters(i)}x")
+    assert(pairs.size >= 3, pairs)
+    val rows = (0 until 10200).map { i =>
+      val (a, b) = pairs(i % pairs.size)
+      (Seq(a, b.toUpperCase, s"w${letters(i * 7 % 3400 + 5000 * (i % 3))}ing") ++
+        (0 until 6).map(j => s"z${letters(i * 6 + j)}") ++ Seq("the", "loads", "é"))
+        .mkString(" ")
+    }
+    assert(10200 / 3 * 6 > TokenMemo.Capacity) // distinct z-tokens per partition
+    val pinned = spark.createDataFrame(spark.sparkContext.parallelize(rows.map(Row(_)), 3),
+      StructType.fromDDL("s STRING")).localCheckpoint()
+    try assert(mismatches(pinned) == 0)
+    finally Pins.rddOf(pinned).unpersist(blocking = true)
   }
 }

@@ -107,6 +107,29 @@ class MlSpec extends AnyFunSuite {
     }
   }
 
+  test("describe and m_lda_topics' sort run no job after train, with the posexplode form's rows") {
+    val (feats, cv) = Lda.prepare(spark, dir)
+    val model = Lda.train(feats, k = 5, maxIter = 5)
+    val vocabCol = typedlit(cv.vocabulary.toSeq)
+    val exploded = model.describeTopics(5)
+      .select(col("topic"), posexplode(col("termIndices")).as(Seq("rank", "term_idx")),
+        col("termWeights"))
+      .select(col("topic"), (col("rank") + 1).as("rank"),
+        element_at(vocabCol, col("term_idx") + 1).as("term"),
+        round(element_at(col("termWeights"), col("rank") + 1), 6).as("weight"))
+      .orderBy(col("topic"), col("rank"))
+    var got: Array[org.apache.spark.sql.Row] = null
+    val jobs = JobCount.of(spark) {
+      val sorted = Lda.describe(spark, model, cv.vocabulary).orderBy(col("topic"), col("rank"))
+      assert(sorted.schema == exploded.schema)
+      assert(sorted.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      got = sorted.collect()
+    }
+    assert(jobs == 0)
+    assert(got.toSeq == exploded.collect().toSeq)
+  }
+
   test("m_lda_sweep scores each k once: the LDA.fit-era log_likelihood and log_perplexity, bit for bit") {
     val got = Lda.m_lda_sweep(spark, dir).collect()
       .map(r => (r.getAs[Int]("k"), r.getAs[Double]("log_likelihood"), r.getAs[Double]("log_perplexity")))

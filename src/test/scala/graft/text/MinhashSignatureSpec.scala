@@ -36,7 +36,7 @@ class MinhashSignatureSpec extends AnyFunSuite {
     val want = sqlReference(toks)
     assert(got.schema == want.schema, s"schema ${got.schema} vs ${want.schema}")
     val (g, w) = (rowsOf(got), rowsOf(want))
-    assert(g == w, s"kernel=${g.size} reference=${w.size} " +
+    if (g != w) fail(s"kernel=${g.size} reference=${w.size} " +
       s"onlyKernel=${g.diff(w).take(3)} onlyReference=${w.diff(g).take(3)}")
     g
   }
@@ -68,6 +68,39 @@ class MinhashSignatureSpec extends AnyFunSuite {
     val base = corpus(9, 60)
     val dup = base ++ base.map { case (d, t) => (java.lang.Long.valueOf(d % 7), t.reverse :+ "w") }
     assertSame(frame(dup))
+  }
+
+  test("the token memo: long tokens, byte prefixes, empty, multi-byte and null tokens") {
+    val long = "é" * 16 + "x" // 33 bytes: one past the memo's key limit
+    val words = Seq("", "a", "ab", "abc", "abcd", "é", "e\u0301", "中", "中文", "😀",
+      "x" * TokenMemo.MaxKeyBytes, "x" * (TokenMemo.MaxKeyBytes + 1), long, long.init, "y" * 500)
+    val rnd = new scala.util.Random(3)
+    val rows = (0 until 400).map(i => (java.lang.Long.valueOf(i.toLong),
+      Seq.fill(1 + rnd.nextInt(6))(if (rnd.nextInt(9) == 0) null else words(rnd.nextInt(words.size)))))
+    assertSame(frame(rows))
+  }
+
+  test("the token memo over a pinned UnsafeRow frame: it clears mid-partition, and colliding tokens stay apart") {
+    // The kernel reads the pinned rows through a shuffle, whose reader puts
+    // every row in one reused buffer: the two tokens of a colliding pair,
+    // in consecutive rows of one doc, sit at the same offset of it. Each
+    // partition holds more distinct tokens than the memo.
+    val pairs = TokenMemoSpec.collidingPairs(400000)(i => f"m$i%07d")
+    assert(pairs.size >= 3, pairs)
+    val rows = (0 until 10500).flatMap { i =>
+      val d = java.lang.Long.valueOf(i.toLong)
+      val (a, b) = pairs(i % pairs.size)
+      if (i % 2 == 0) Seq((d, Seq(a)), (d, Seq(b)))
+      else Seq((d, (0 until 12).map(j => s"u${i * 12 + j}") ++
+        Seq(s"v${i % 50}", "ab", "abc", null, "é", "")))
+    }
+    assert(10500 / 2 / 3 * 12 > TokenMemo.Capacity) // distinct u-tokens per partition
+    val pinned = frame(rows, parts = 3).localCheckpoint()
+    try {
+      assert(pinned.rdd.getNumPartitions == 3)
+      assert(assertSame(pinned).size == 10500)
+      assert(assertSame(pinned.repartition(3, col("doc_id"))).size == 10500)
+    } finally graft.Pins.rddOf(pinned).unpersist(blocking = true)
   }
 
   test("streamBandRows carries the same per-doc minima as the band table") {
