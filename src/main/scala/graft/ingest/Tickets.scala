@@ -138,21 +138,30 @@ object Tickets extends graft.QueryModule {
     tickets.join(flat, Seq("ticket_id"), "left_outer")
   }
 
-  /** T6 corpus: one document per ticket — subject + every comment body in
-    * (created_at, body) order, full cleanse chain (T1 unescape → T2 NFKC →
-    * T4 line filter → T5 PII scrub). Never a driver-side global string. */
-  def corpus(s: SparkSession, tickets: DataFrame,
+  /** Aggregate over [[allComments]] rows: a ticket's comment bodies in
+    * (created_at, body) order, joined by spaces. */
+  private def orderedBodies: Column =
+    array_join(transform(sort_array(collect_list(struct(col("created_at"), col("body")))),
+      x => x.getField("body")), " ")
+
+  /** T6 corpus text before cleansing: one document per ticket — subject +
+    * every comment body in (created_at, body) order. Never a driver-side
+    * global string. */
+  private def corpusText(s: SparkSession, tickets: DataFrame,
       commentsDir: String = s"$FixturesDir/comments"): DataFrame = {
     val bodies = allComments(s, tickets, commentsDir)
-      .select(col("ticket_id"), struct(col("created_at"), col("body")).as("c"))
-      .groupBy(col("ticket_id"))
-      .agg(array_join(transform(sort_array(collect_list(col("c"))),
-        x => x.getField("body")), " ").as("bodies"))
+      .groupBy(col("ticket_id")).agg(orderedBodies.as("bodies"))
     tickets.select(col("ticket_id"), col("subject"))
       .join(bodies, Seq("ticket_id"), "left_outer")
-      .select(col("ticket_id"),
-        Cleanse.cleanse(concat_ws(" ", col("subject"), col("bodies"))).as("doc"))
+      .select(col("ticket_id"), concat_ws(" ", col("subject"), col("bodies")).as("text"))
   }
+
+  /** T6 corpus: [[corpusText]] through the full cleanse chain (T1 unescape
+    * → T2 NFKC → T4 line filter → T5 PII scrub). */
+  def corpus(s: SparkSession, tickets: DataFrame,
+      commentsDir: String = s"$FixturesDir/comments"): DataFrame =
+    corpusText(s, tickets, commentsDir)
+      .select(col("ticket_id"), Cleanse.cleanse(col("text")).as("doc"))
 
   // --------------------------------------------------------------- queries
   /** Oracle-facing tokens: T4+T5 only (NFKC/unescape are not expressible in
@@ -177,32 +186,21 @@ object Tickets extends graft.QueryModule {
   def q36_bind_comments(s: SparkSession, dir: String): DataFrame = {
     val t = reshapeTickets(scanTickets(s))
     allComments(s, t)
-      .select(col("ticket_id"), struct(col("created_at"), col("body")).as("c"))
       .groupBy(col("ticket_id"))
       .agg(count(lit(1)).as("n_comments"),
-        min(col("c.created_at")).as("first_at"),
-        max(col("c.created_at")).as("last_at"),
-        md5(array_join(transform(sort_array(collect_list(col("c"))),
-          x => x.getField("body")), " ").cast("binary")).as("bodies_md5"))
+        min(col("created_at")).as("first_at"),
+        max(col("created_at")).as("last_at"),
+        md5(orderedBodies.cast("binary")).as("bodies_md5"))
       .orderBy(col("ticket_id"))
   }
 
   /** T6 corpus check (oracle-safe cleanse subset). */
-  def q37_ticket_corpus(s: SparkSession, dir: String): DataFrame = {
-    val t = reshapeTickets(scanTickets(s))
-    val bodies = allComments(s, t)
-      .select(col("ticket_id"), struct(col("created_at"), col("body")).as("c"))
-      .groupBy(col("ticket_id"))
-      .agg(array_join(transform(sort_array(collect_list(col("c"))),
-        x => x.getField("body")), " ").as("bodies"))
-    t.select(col("ticket_id"), col("subject"))
-      .join(bodies, Seq("ticket_id"), "left_outer")
-      .select(col("ticket_id"),
-        oracleTokens(concat_ws(" ", col("subject"), col("bodies"))).as("toks"))
+  def q37_ticket_corpus(s: SparkSession, dir: String): DataFrame =
+    corpusText(s, reshapeTickets(scanTickets(s)))
+      .select(col("ticket_id"), oracleTokens(col("text")).as("toks"))
       .select(col("ticket_id"), size(col("toks")).as("n_tokens"),
         md5(array_join(col("toks"), " ").cast("binary")).as("doc_md5"))
       .orderBy(col("ticket_id"))
-  }
 
   /** Engine-only: builds the full nested Ticket shape (SURVEY §1.4) with
     * the complete cleanse chain on the corpus column, then projects scalar

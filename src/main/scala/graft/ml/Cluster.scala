@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -123,42 +123,18 @@ object Cluster extends graft.QueryModule {
       .groupBy(col("vec_id"), col("xu"))
       .agg(min(col("pk")).as("packed"))
 
-  private val fitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** Embedding-table file fingerprint (length+mtime digest, the
-    * Similarity.corpusFingerprint shape) — keys the trainer memo so a
-    * changed input re-trains. */
-  private def embFingerprint(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      entries += s"${f.getPath.toUri.getPath}|${f.getLen}|${f.getModificationTime}"
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-  }
-
-  /** The fitted model (cid, c, n), trained ONCE per (application,
-    * corpus) through the trainer-memo pattern (the r15-verdict-item-5
-    * shape, like Pca.fittedDirection): the fit is deterministic
-    * (seeded init, fixed synchronous rounds, exact integer updates),
-    * so the memoized K·(d+1) longs are bit-identical to a fresh fit
-    * and every oracle contract is unchanged — consumers (q178-q180,
-    * q254, q256, q261) broadcast the model instead of re-running
-    * Lloyd's corpus passes per consumer. */
+  /** The fitted model (cid, c, n), trained once per session and
+    * `embeddings.parquet` listing through [[Memo]]: the fit is
+    * deterministic (seeded init, fixed synchronous rounds, exact integer
+    * updates), so the memoized K·(d+1) longs are bit-identical to a
+    * fresh fit and every oracle contract is unchanged — consumers
+    * (q178-q180, q254, q256, q261) broadcast the model instead of
+    * re-running Lloyd's corpus passes per consumer. */
   private[graft] def kmeans(s: SparkSession, dir: String): DataFrame = {
-    val model = fitMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|kmeans|$dir|" +
-        embFingerprint(s, dir),
-      _ => fitKmeans(s, dir).select(col("cid"), col("c"), col("n"))
+    val model = Memo(s, dir, Seq("embeddings"), "kmeans")(
+      fitKmeans(s, dir).select(col("cid"), col("c"), col("n"))
         .collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))).toSeq
-    ).asInstanceOf[Seq[(Long, Seq[Long], Long)]]
+        .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))).toSeq)
     import s.implicits._
     model.toDF("cid", "c", "n")
   }

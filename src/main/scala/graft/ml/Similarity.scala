@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Pins, Tables}
+import graft.{Memo, Pins, Tables}
 import graft.text.Cleanse
 import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1568,45 +1568,17 @@ object Similarity extends graft.QueryModule {
        |FROM na CROSS JOIN nb CROSS JOIN mm CROSS JOIN nj CROSS JOIN nu"""
       .stripMargin
 
-  /** Metadata-only SNAPSHOT FINGERPRINT of the documents table under
-    * `dir`: md5 over the sorted (file path, length, mtime) listing — the
-    * same information a table format's snapshot id summarizes. Listing a
-    * directory is a metadata operation (no data read), so the probe costs
-    * what a lake manifest read costs at any scale. Any in-place mutation
-    * (a CDC merge into the corpus, a partition rewrite, a driver
-    * regenerating the dir) changes file names/sizes/mtimes and therefore
-    * the fingerprint. In production on Iceberg/Delta this is the
-    * table's current snapshot/version id. */
-  private[graft] def corpusFingerprint(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      entries += s"${f.getPath.toUri.getPath}|${f.getLen}|${f.getModificationTime}"
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-  }
-
-  /** Scratch path for the materialized dedup stage, keyed by
-    * (applicationId, input dir, CONTENT fingerprint): the app id scopes
-    * the stage to the session, the dir md5 keeps a sf0.001 warmup stage
-    * from serving a sf0.1 read (two dirs with identical content still get
-    * distinct stages), and the snapshot fingerprint invalidates the stage
-    * when the corpus mutates IN PLACE mid-session — exactly what
-    * `sink.Lake.applyChangesInto` does to a lake; the round-12 path-only
-    * key silently served stale labels after such a merge. Lives for the
-    * session like a curation DAG's intermediate table lives for the
+  /** Scratch path for the materialized dedup stage, keyed through
+    * [[Memo.key]] on the documents table: the application id scopes
+    * the stage to the session, and the listing of `documents.parquet`
+    * (whose paths carry `dir`) keeps a sf0.001 warmup stage from serving a
+    * sf0.1 read and moves the stage when the corpus is rewritten in place
+    * — exactly what `sink.Lake.applyChangesInto` does to a lake. Lives for
+    * the session like a curation DAG's intermediate table lives for the
     * pipeline run. */
-  private[graft] def dedupStageDir(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+  private[graft] def dedupStageDir(s: SparkSession, dir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_dedup_stage_" +
-      s"${s.sparkContext.applicationId}_${key}_${corpusFingerprint(s, dir)}"
-  }
+      Memo.key(s, dir, Seq("documents"), "dedup")
 
   /** MATERIALIZED dedup stage — the production curation-DAG shape
     * (round-11 verdict item 4): the q73 union-fixpoint runs ONCE per

@@ -20,8 +20,7 @@ import org.apache.spark.sql.types.LongType
   * The reference prunes with `filter_extremes(no_below=5, no_above=0.5,
   * keep_n=5000)` (LDA_logic.py:276). On the synthetic `documents` corpus a
   * 0.5 ceiling keeps 1 term (tiny 31-word vocabulary, df up to 80%), so the
-  * declared queries use no_above=0.9 to stay meaningful; `countVectorize`
-  * exposes the knobs with the reference defaults.
+  * declared queries use no_above=0.9 to stay meaningful.
   */
 object Vocab extends graft.QueryModule {
 
@@ -68,20 +67,6 @@ object Vocab extends graft.QueryModule {
       .groupBy(col("doc_id"), col("term_id"))
       .agg(count(lit(1)).as("freq"))
       .orderBy(col("doc_id"), col("term_id"))
-
-  /** MLlib path (engine-only): CountVectorizer with the reference's pruning
-    * semantics; returns (doc_id, tokens, features SparseVector). */
-  def countVectorize(s: SparkSession, dir: String,
-      minDF: Double = MinDF, maxDF: Double = MaxDFFrac,
-      vocabSize: Int = VocabSize): DataFrame = {
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), Cleanse.tokens(col("text")).as("tokens"))
-    val cv = new CountVectorizer()
-      .setInputCol("tokens").setOutputCol("features")
-      .setMinDF(minDF).setMaxDF(maxDF)
-      .setVocabSize(vocabSize)
-    cv.fit(docs).transform(docs)
-  }
 
   /** Engine-only query: CountVectorizer vocabulary as (term_id, term). */
   def m_vocab_countvectorizer(s: SparkSession, dir: String): DataFrame = {

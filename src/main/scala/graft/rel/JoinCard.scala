@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -166,38 +166,16 @@ object JoinCard extends graft.QueryModule {
   // ---------------------------------------------------------------- q159b
 
   /** Advisor→executor loop: the broadcast decision q159b applies IS the
-    * advisor's reported `broadcast_ok` for that join (trainer-memo keyed
-    * on applicationId + audit fingerprint of the two tables, so an
-    * in-place data change re-advises instead of serving a stale plan).
-    * The memoized value is one boolean — metadata, never corpus data. */
-  private val adviceMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-
-  private def tablesFingerprint(s: SparkSession, dir: String,
-      tables: Seq[String]): String = {
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    tables.foreach { t =>
-      val path = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val f = it.next()
-        entries +=
-          s"${f.getPath.toUri.getPath}|${f.getLen}|${f.getModificationTime}"
-      }
-    }
-    entries.sorted.mkString(",")
-  }
-
+    * advisor's reported `broadcast_ok` for that join, computed once per
+    * session and listing of the join's two tables through [[Memo]] (a
+    * join is named `<a>_<b>` after them), so an in-place data change
+    * re-advises instead of serving a stale plan. */
   private[graft] def recommendedBroadcast(s: SparkSession, dir: String,
       joinName: String): Boolean =
-    adviceMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|$joinName|" +
-        tablesFingerprint(s, dir, Seq("orders", "customer")),
-      _ => java.lang.Boolean.valueOf(
-        q159_join_cardinality(s, dir)
-          .filter(col("join_name") === joinName)
-          .select(col("broadcast_ok")).head().getBoolean(0)))
+    Memo(s, dir, joinName.split('_').toSeq.distinct, s"broadcast-$joinName")(
+      q159_join_cardinality(s, dir)
+        .filter(col("join_name") === joinName)
+        .select(col("broadcast_ok")).head().getBoolean(0))
 
   /** The advised physical form: hint the build side iff the advisor said
     * broadcast-tiny. Parameterized so specs can drive it with fixtures

@@ -910,8 +910,9 @@ object Relational extends graft.QueryModule {
     * shuffle parallelism so a low-cardinality key still spreads over the
     * full reducer width (splitting the hot key `factor` ways equalizes
     * SHARD sizes; the floor keeps shard COUNT ≥ the cluster's lanes).
-    * Memoized per (session, corpus) via the trainer-memo pattern —
-    * SkewAdvisorSpec asserts the fixture-level factor identity. */
+    * The factor is memoized per session and listing of the audited
+    * tables (`SkewAdvisor.recommendedSaltFactor`) — SkewAdvisorSpec
+    * asserts the fixture-level factor identity. */
   def q46_skew_salted_agg(s: SparkSession, dir: String): DataFrame = {
     val salt = q46SaltCount(s, dir)
     Tables.events(s, dir)

@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -124,42 +124,17 @@ object SkewAdvisor extends graft.QueryModule {
 
   /** Advisor→executor loop (round-14 verdict item 4): the salting factor
     * a consumer (q46) applies IS the advisor's reported ⌈top1/mean⌉ for
-    * that audit key — the trainer-memo pattern (CorpusFilters.memoTrained):
-    * keyed on (applicationId, audit key, corpus-content fingerprint) so an
-    * in-place corpus mutation re-advises instead of serving a stale
-    * factor. The memoized value is ONE scalar — metadata, never corpus
-    * data; the first consumer in a session pays the advisor pass (the
-    * same catalog-sized aggregate q153 itself runs). */
-  private val saltMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-  /** Content fingerprint of the audited tables (name|length|mtime of
-    * every file — the Similarity.corpusFingerprint recipe pointed at the
-    * relational side the advisor actually reads). */
-  private def tablesFingerprint(s: SparkSession, dir: String): String = {
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    Seq("events.parquet", "lineitem.parquet", "orders.parquet").foreach { t =>
-      val path = new org.apache.hadoop.fs.Path(s"$dir/$t")
-      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val f = it.next()
-        entries +=
-          s"${f.getPath.toUri.getPath}|${f.getLen}|${f.getModificationTime}"
-      }
-    }
-    entries.sorted.mkString(",")
-  }
-
+    * that audit key, computed once per session and listing of the
+    * audited tables (events, lineitem, orders) through [[Memo]], so an
+    * in-place data change re-advises instead of serving a stale factor.
+    * The first consumer in a session pays the advisor pass (the same
+    * catalog-sized aggregate q153 itself runs). */
   def recommendedSaltFactor(s: SparkSession, dir: String,
       auditKey: String): Int =
-    saltMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|$auditKey|" +
-        tablesFingerprint(s, dir),
-      _ => java.lang.Long.valueOf(
-        q153_skew_advisor(s, dir)
-          .filter(col("audit_key") === auditKey)
-          .select(col("salt_factor")).head().getLong(0))).toInt
+    Memo(s, dir, Seq("events", "lineitem", "orders"), s"salt-$auditKey")(
+      q153_skew_advisor(s, dir)
+        .filter(col("audit_key") === auditKey)
+        .select(col("salt_factor")).head().getLong(0)).toInt
 
   // ------------------------------------------------------------- registry
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

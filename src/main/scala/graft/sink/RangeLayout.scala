@@ -1,6 +1,6 @@
 package graft.sink
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.rel.JoinCard
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -90,29 +90,12 @@ object RangeLayout extends graft.QueryModule {
 
   // ---------------------------------------------------------------- q163b
 
-  /** Memoized advice: the boundary array IS what the writer consumes
-    * (trainer-memo keyed on applicationId + events fingerprint). */
-  private val boundaryMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]
-
-  private def eventsFingerprint(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      entries +=
-        s"${f.getPath.toUri.getPath}|${f.getLen}|${f.getModificationTime}"
-    }
-    entries.sorted.mkString(",")
-  }
-
+  /** The advised boundary array — what the writer consumes — computed
+    * once per session and `events.parquet` listing through [[Memo]]. */
   private[graft] def recommendedBoundaries(s: SparkSession,
       dir: String): Seq[Long] =
-    boundaryMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|${eventsFingerprint(s, dir)}",
-      _ => boundaryArr(s, dir).head().getSeq[Long](0))
+    Memo(s, dir, Seq("events"), "boundaries")(
+      boundaryArr(s, dir).head().getSeq[Long](0))
 
   /** Advised writer: lays events out as one file per advisor bucket and
     * reports the physical per-bucket counts next to the advisor's

@@ -667,7 +667,7 @@ object Sessions extends graft.QueryModule {
   /** Streaming PSI drift gate — q203's continuous learn→apply twin (the
     * seventh advisor→executor loop): the BATCH reference histogram
     * (16 length bins over the sealed corpus, collected once — a
-    * metadata-scale plan constant, the trainer-memo pattern) broadcasts
+    * metadata-scale plan constant) broadcasts
     * into a stateless windowed aggregate, and every watermarked window
     * emits its exact integer PSI against that reference plus a
     * `drift_alert` breach flag. Quantization is identical to q203
@@ -751,7 +751,7 @@ object Sessions extends graft.QueryModule {
 
   /** Streaming p-chart gate — q234's continuous twin (advisor→executor
     * loop #8): the BATCH center line (C hits / N rows over the sealed
-    * horizon — two metadata-scale scalars, the trainer-memo pattern)
+    * horizon — two metadata-scale scalars, collected once)
     * broadcasts into a stateless windowed aggregate, and every
     * watermarked window emits its exact integer 3σ verdict via the
     * squared cross-multiplication (cN − nC)² > 9·C·(N−C)·n — identical

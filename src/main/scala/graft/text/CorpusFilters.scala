@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.{Pins, Tables}
+import graft.{Memo, Pins, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -1010,27 +1010,6 @@ object CorpusFilters extends graft.QueryModule {
     merges.toSeq
   }
 
-  /** Session-scoped memo for deterministic tokenizer trainings — the
-    * `ml.Similarity.dedupStage` materialize-once pattern applied to the
-    * trainer family: keyed on (applicationId, family, CONTENT fingerprint
-    * of the corpus dir), so an in-place corpus mutation re-trains instead
-    * of serving a stale model. The LEARN queries (q94/q105/q112/q116)
-    * stay self-contained — training cost remains bench-visible on its own
-    * line — while apply/report consumers (q94b/q105b/q112b/q116b/q111)
-    * read the memo; the first consumer to run pays the training if no
-    * learn query preceded it. Values are vocabulary-sized driver tables
-    * (merge lists, piece→score maps) — metadata, never corpus data.
-    * Same sequential-session INVARIANT as dedupStage's _SUCCESS probe:
-    * Bench/Verify run queries one at a time. */
-  private val trainerMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
-  private def memoTrained[T <: AnyRef](s: SparkSession, dir: String,
-      family: String)(train: => T): T =
-    trainerMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|$family|" +
-        graft.ml.Similarity.corpusFingerprint(s, dir),
-      _ => train).asInstanceOf[T]
-
   private def bpeWordFreqs(s: SparkSession, dir: String): DataFrame =
     docToks(s, dir)
       .select(explode(col("t")).as("word"))
@@ -1103,9 +1082,11 @@ object CorpusFilters extends graft.QueryModule {
     * length in learned-BPE units next to its word count. Oracle:
     * re-learn the identical merges (the q94 CTE chain), re-apply, and
     * re-aggregate — data-dependent vocab, still hash-gated exactly. */
-  /** Memoized learned BPE merges (consumer-side; q94 itself re-trains). */
+  /** The learned BPE merges, trained once per session and
+    * `documents.parquet` listing through [[Memo]] (consumer-side; q94
+    * itself re-trains). */
   private def bpeMergesLearned(s: SparkSession, dir: String): Seq[(String, String)] =
-    memoTrained(s, dir, "bpe") {
+    Memo(s, dir, Seq("documents"), "bpe") {
       q94_bpe_learn(s, dir).orderBy(col("round")).collect()
         .map(r => (r.getAs[String]("merge_left"), r.getAs[String]("merge_right")))
         .toSeq
@@ -1144,7 +1125,7 @@ object CorpusFilters extends graft.QueryModule {
     * BPE pieces the LEARNED q94 vocabulary spends per 100 words and how
     * many characters ride in each piece. A language the vocabulary
     * under-serves shows high fertility — the signal that reweights the
-    * tokenizer-training mixture. Consumes the q94 trainer memo
+    * tokenizer-training mixture. Consumes the memoized q94 merges
     * (learn→apply consumer, the q94b pattern) and stays integer-exact:
     * fertility as (100·pieces) div words, piece width as
     * (1000·chars) div pieces.
@@ -1248,9 +1229,10 @@ object CorpusFilters extends graft.QueryModule {
   }
 
   /** Apply chain for the learned byte merges (shared by q112b and the
-    * q111 report row). */
+    * q111 report row), trained once per session and `documents.parquet`
+    * listing through [[Memo]]. */
   private def byteBpeChain(s: SparkSession, dir: String): String = {
-    val merges = memoTrained(s, dir, "bytebpe") {
+    val merges = Memo(s, dir, Seq("documents"), "bytebpe") {
       q112_bytebpe_learn(s, dir).orderBy(col("round")).collect()
         .map(r => (r.getAs[String]("merge_left"), r.getAs[String]("merge_right")))
         .toSeq
@@ -1478,10 +1460,11 @@ object CorpusFilters extends graft.QueryModule {
     * recursive CTE whose step length is the MAX matching piece length —
     * identical MaxMatch semantics. */
   /** Broadcast-vocab MaxMatch piece counter over one word — shared by
-    * q116b and the q111 report's fifth row. */
+    * q116b and the q111 report's fifth row. The vocabulary is trained
+    * once per session and `documents.parquet` listing through [[Memo]]. */
   private def wpTrainedNPiecesUdf(s: SparkSession, dir: String)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val (plain, cont, maxP, maxC) = memoTrained(s, dir, "wordpiece") {
+    val (plain, cont, maxP, maxC) = Memo(s, dir, Seq("documents"), "wordpiece") {
       val merged = wpLearnMerges(s, dir).map(_._4)
       // alphabet in positional form, from the same distinct-word table the
       // trainer seeds from (vocab-sized collect: ≤ 2 × charset)
@@ -1631,7 +1614,8 @@ object CorpusFilters extends graft.QueryModule {
       .select(col(key).as(as))
 
   /** The trained LM as driver sets (tri, bi, uni) for the streaming gate
-    * — memoized like any other training. Metadata-sized here; at 100 TB
+    * — trained once per session and `documents.parquet` listing through
+    * [[Memo]]. Metadata-sized here; at 100 TB
     * a pruned trigram table outgrows a closure, and the documented swaps
     * are the stream-static gram join (the [[graft.streaming.Sessions
     * .decontaminateStream]] shape) or a constant-size Bloom of each gram
@@ -1639,7 +1623,7 @@ object CorpusFilters extends graft.QueryModule {
     * a Bloom false positive only inflates a token's level). */
   private[graft] def lmModelSets(s: SparkSession, dir: String)
       : (Set[String], Set[String], Set[String]) =
-    memoTrained(s, dir, "ngramlm") {
+    Memo(s, dir, Seq("documents"), "ngramlm") {
       val pos = lmPositions(s, dir)
       def setOf(k: String): Set[String] =
         lmTable(pos, k, "x").collect().map(_.getString(0)).toSet
@@ -2107,9 +2091,11 @@ object CorpusFilters extends graft.QueryModule {
     * Oracle: re-TRAIN the identical model (the shared CTE chain), re-run
     * the apply DP round against the final vocabulary, re-aggregate —
     * the data-dependent vocabulary stays hash-gated exactly. */
-  /** Memoized unigram model (consumer-side; q105 itself re-trains). */
+  /** The unigram model, trained once per session and
+    * `documents.parquet` listing through [[Memo]] (consumer-side; q105
+    * itself re-trains). */
   private def uniTrained(s: SparkSession, dir: String): Map[String, Long] =
-    memoTrained(s, dir, "unigram")(uniTrain(s, dir)._2)
+    Memo(s, dir, Seq("documents"), "unigram")(uniTrain(s, dir)._2)
 
   def q105b_unigram_tokenize(s: SparkSession, dir: String): DataFrame = {
     val vocab = uniTrained(s, dir)
@@ -2964,13 +2950,14 @@ object CorpusFilters extends graft.QueryModule {
   }
 
   /** The trained per-bucket micro-nat λ table, exported for the streaming
-    * gate ([[graft.streaming.Sessions.dsirGateStream]]) through the
-    * trainer memo — 512 entries, a broadcast-scale model like
+    * gate ([[graft.streaming.Sessions.dsirGateStream]]), trained once per
+    * session and `documents.parquet` listing through [[Memo]] — 512
+    * entries, a broadcast-scale model like
     * [[lmModelSets]]. Buckets absent from the training corpus have no
     * entry; the stream scores them 0 (an unseen feature is evidence for
     * neither distribution). */
   private[graft] def dsirLambda(s: SparkSession, dir: String): Map[Int, Long] =
-    memoTrained(s, dir, "dsir") {
+    Memo(s, dir, Seq("documents"), "dsir") {
       dsirScoresLambda(s, dir).collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
     }

@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -140,11 +140,15 @@ object Tokenize extends graft.QueryModule {
 
 /** Compiled kernel behind the LemmaTokens expression — static, public,
   * deterministic (referenced from generated code). Token scan: runs of
-  * ASCII letters in the text's UTF-8 bytes, case-folded (identical piece
-  * set to `split(lower(text), "[^a-zA-Z]+")` — every byte of a non-ASCII
-  * character is 0x80 or above, so such characters are separators on both
-  * paths), length/stopword filter against a hash set, then the first
-  * matching precompiled suffix rule.
+  * ASCII letters in the text's UTF-8 bytes, case-folded, length/stopword
+  * filter against a hash set, then the first matching precompiled suffix
+  * rule. The pieces are those of `split(lower(text), "[^a-zA-Z]+")`: on
+  * all-ASCII text the scan folds case itself; at the first byte of 0x80
+  * or above it re-scans the document lower-cased as Spark's `lower` does
+  * (ICU case mappings, Spark's default), because a few non-ASCII
+  * characters lower-case to ASCII letters (U+212A KELVIN SIGN to `k`,
+  * U+0130 to `i` and a combining dot). Every byte of a non-ASCII
+  * character is 0x80 or above, so what stays non-ASCII separates tokens.
   *
   * Text repeats its tokens (pipebench's topics input draws 120k
   * occurrences from 12,200 words), so each thread keeps a [[TokenMemo]] of
@@ -208,6 +212,14 @@ object LemmaUtil {
   }
 
   def lemmaTokens(u: UTF8String): ArrayData = {
+    val lemmas = scan(u, lowered = false)
+    new GenericArrayData(
+      if (lemmas != null) lemmas else scan(CollationSupport.Lower.execBinaryICU(u), lowered = true))
+  }
+
+  /** The lemmas of `u`'s tokens, or null if `u` has a non-ASCII byte and
+    * is not `lowered` yet. */
+  private def scan(u: UTF8String, lowered: Boolean): Array[Any] = {
     val memo = memos.get()
     val base = u.getBaseObject
     val off = u.getBaseOffset
@@ -221,6 +233,7 @@ object LemmaUtil {
         if (len < TokenMemo.MaxKeyBytes) memo.token(len) = (b | 0x20).toByte
         len += 1
       } else {
+        if (b < 0 && !lowered) return null
         if (len >= 2) {
           val l =
             if (len <= TokenMemo.MaxKeyBytes) memo.lemmaOf(len)
@@ -231,7 +244,7 @@ object LemmaUtil {
       }
       i += 1
     }
-    new GenericArrayData(out.toArray)
+    out.toArray
   }
 }
 

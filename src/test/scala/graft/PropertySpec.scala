@@ -152,8 +152,8 @@ class ColumnPropertySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private val seed = new scala.util.Random(42)
-  private def randomTexts(n: Int): Seq[String] = {
-    val alphabet = "abcXYZ019 .,&#;<>@/-\n\r\tﬁ１"
+  private def randomTexts(n: Int, extra: String = ""): Seq[String] = {
+    val alphabet = "abcXYZ019 .,&#;<>@/-\n\r\tﬁ１" + extra
     Seq.fill(n)(Seq.fill(seed.nextInt(80))(
       alphabet(seed.nextInt(alphabet.length))).mkString)
   }
@@ -225,13 +225,15 @@ class ColumnPropertySpec extends AnyFunSuite {
 
   test("native LemmaTokens kernel ≡ builtin-HOF pipeline on random text") {
     import spark.implicits._
-    val texts = randomTexts(400) ++ Seq(
+    // U+212A KELVIN SIGN and U+0130 lower-case to ASCII letters
+    val texts = randomTexts(400, "\u212A\u0130") ++ Seq(
       "", "   ", "a b c", "Loading QUERIES slowly!!", "the and of",
       "mixed123tokens999loaded", "ünïcödé Straße amazingly",
       // the token memo: byte prefixes, case folds, its key limit and past it
       "ab abc abcd abcde AB Abc", "load loads LOADING Loaded loadings",
       "x" * TokenMemo.MaxKeyBytes, "X" * (TokenMemo.MaxKeyBytes + 1),
-      "Amazingly" * 4 + " " + "s" * 200 + " " + "ab" * 16 + "s", "é中😀ab cd", null)
+      "Amazingly" * 4 + " " + "s" * 200 + " " + "ab" * 16 + "s", "é中😀ab cd",
+      "\u212Aelvin x\u0130y", null)
     def mismatches(df: DataFrame): Long = df.select(
       Tokenize.lemmaTokens(col("s")).as("fast"),
       Tokenize.lemmaTokensHof(col("s")).as("ref"))
@@ -255,5 +257,12 @@ class ColumnPropertySpec extends AnyFunSuite {
       StructType.fromDDL("s STRING")).localCheckpoint()
     try assert(mismatches(pinned) == 0)
     finally Pins.rddOf(pinned).unpersist(blocking = true)
+  }
+
+  test("LemmaTokens lower-cases a non-ASCII capital whose lower case is ASCII") {
+    import spark.implicits._
+    val lemmas = Seq("\u212Aelvin loads").toDF("s") // U+212A KELVIN SIGN, not ASCII K
+      .select(Tokenize.lemmaTokens(col("s"))).head().getSeq[String](0)
+    assert(lemmas == Seq("kelvin", "load"))
   }
 }
