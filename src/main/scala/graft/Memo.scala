@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The session memo: work that is computed once per session and again
   * when an input table changes — a trained tokenizer, a fitted model, an
-  * advisor's decision, the key of a materialized stage.
+  * advisor's decision, the key of a materialized stage, the listener that
+  * deletes an application's stages.
   *
   * A key is the application id, a name, and one md5 over the sorted
   * (path, length, mtime) listing of every file under each named

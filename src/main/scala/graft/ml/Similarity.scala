@@ -3,6 +3,7 @@ package graft.ml
 import graft.{Memo, Pins, Tables}
 import graft.text.Cleanse
 import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1575,10 +1576,33 @@ object Similarity extends graft.QueryModule {
     * sf0.1 read and moves the stage when the corpus is rewritten in place
     * — exactly what `sink.Lake.applyChangesInto` does to a lake. Lives for
     * the session like a curation DAG's intermediate table lives for the
-    * pipeline run. */
+    * pipeline run: [[StageCleanup]] deletes it when the session's
+    * SparkContext stops. */
   private[graft] def dedupStageDir(s: SparkSession, dir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_dedup_stage_" +
       Memo.key(s, dir, Seq("documents"), "dedup")
+
+  /** Deletes the dedup stages one application wrote when it ends. Only
+    * the directories [[writeStage]] handed it are touched, so another
+    * application's stages stay. */
+  private[graft] final class StageCleanup extends SparkListener {
+    private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def track(dir: String): Unit = dirs.add(dir)
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+      dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+      dirs.clear()
+    }
+  }
+
+  /** This application's [[StageCleanup]], registered on the listener bus
+    * at the first stage write (the memo key names no table, so it is one
+    * per application id). */
+  private[graft] def stageCleanup(s: SparkSession): StageCleanup =
+    Memo(s, "", Nil, "dedup_stage_cleanup") {
+      val c = new StageCleanup
+      s.sparkContext.addSparkListener(c)
+      c
+    }
 
   /** MATERIALIZED dedup stage — the production curation-DAG shape
     * (round-11 verdict item 4): the q73 union-fixpoint runs ONCE per
@@ -1619,6 +1643,7 @@ object Similarity extends graft.QueryModule {
     * if left to the session sweep). */
   private def writeStage(s: SparkSession, dir: String, labels0: DataFrame,
       out: String): Unit = Pins.scoped { pins =>
+    stageCleanup(s).track(out)
     val labels = pins.adopt(labels0)
       .select(col("doc_id"), col("component"), col("is_canonical"))
     val stage = Tables.documents(s, dir).select(col("doc_id"), col("source"))

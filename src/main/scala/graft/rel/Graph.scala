@@ -98,8 +98,9 @@ object Graph extends graft.QueryModule {
   private[rel] def rankUpdate(base: Long, contribs: Array[Long]): Long =
     base + (85L * contribs.sum) / 100L
 
-  /** Edge cap for [[pagerankRanksDriver]] — compute-derived (the LinkPred
-    * DriverClosureCap discipline): the kernel is O(maxIters·E) long ops
+  /** Edge cap for [[pagerankRanksDriver]] — compute-derived and
+    * re-asserted on the collected rows (the LinkPred DriverClosureCap
+    * discipline): the kernel is O(maxIters·E) long ops
     * plus two ≤V-entry hash maps, so at the cap (2¹⁷ edges × ≤10 rounds ≈
     * 1.3·10⁶ map updates, ~4 MB of collected rows) it runs in single-digit
     * milliseconds on one core. Callers may take this path ONLY for

@@ -135,59 +135,41 @@ object LinkPred extends graft.QueryModule {
     * small-graph form of what HyperANF approximates at web scale:
     * Boldi, Rosa & Vigna WWW 2011; avg distance / effective-diameter
     * definitions per Palmer et al. KDD 2002's ANF): all-pairs shortest
-    * hop counts via simultaneous BFS — the symmetric pair frontier
-    * expands one join per round with an anti-join against the reached
-    * set, first discovery = shortest distance (unweighted BFS
-    * invariant), with the loop exiting as soon as a frontier empties
-    * (a frontier-count job per round) and a gated
-    * `converged` flag (frontier empty by round [[MaxDist]] — the oracle
-    * derives the same flag as r8 == r7). Output: one row per distance
-    * with exact pair counts, cumulative ECDF, the 90 % effective
-    * diameter (min d with 10·cum ≥ 9·reachable), and the exact
-    * mean-distance milli units ((1000·Σ d·n_d) div reachable).
+    * hop counts by a BFS from every node of the collected adjacency
+    * ([[distanceHistogramDriver]]), first discovery = shortest distance
+    * (unweighted BFS invariant), with a `converged` flag (no pair at
+    * distance exactly [[MaxDist]] — the oracle derives the same flag as
+    * r8 == r7). Output: one row per distance with exact pair counts,
+    * cumulative ECDF, the 90 % effective diameter (min d with
+    * 10·cum ≥ 9·reachable), and the exact mean-distance milli units
+    * ((1000·Σ d·n_d) div reachable).
     *
-    * Scale shape: every loop frame is GRAPH-bounded, not corpus-bounded
-    * — nodes ≤ 2·[[EdgeBudget]] by construction, so the pair closure is
-    * ≤ (2·budget)² regardless of corpus size (the 100 TB posture
-    * inherited from q191: the corpus only contributes edge weights
-    * through one aggregate). Web-scale graphs where the closure itself
-    * is too big swap this exact kernel for the HyperANF register-merge —
-    * same output schema, approximate counts. Loop checkpoints
-    * pin-and-release.
-    *
-    * ADAPTIVE kernel (r18 verdict item 2, the componentsAdaptive
-    * pattern at Similarity's union-find): because the edge list is a
-    * top-K BUDGET — a corpus-independent constant — the closure is a
-    * constant-size object, and below [[DriverClosureCap]] edges the
-    * all-pairs BFS runs as a driver kernel over the collected adjacency
-    * (O(V·E) ≤ 8000·8000 integer ops — microseconds against the ~7
-    * sequential shuffle barriers the distributed fixpoint pays). The
-    * distributed pair-frontier fixpoint remains the above-cap path for
-    * an unbudgeted graph and is asserted BIT-IDENTICAL to the driver
-    * kernel by LinkPredSpec on both testdata graphs. */
+    * Scale shape: the graph is a top-[[EdgeBudget]] BUDGET, a
+    * corpus-independent constant, so nodes ≤ 2·[[EdgeBudget]] and the
+    * pair closure is ≤ (2·budget)² regardless of corpus size (the 100 TB
+    * posture inherited from q191: the corpus only contributes edge
+    * weights through one aggregate). The BFS therefore runs on the
+    * driver, guarded by [[DriverClosureCap]]; q239 is the register-merge
+    * form for graphs whose closure is too big — same output schema,
+    * approximate counts. */
   def q201_distance_histogram(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
-    val edges = budgetEdges(pins, s, dir)
-    if (EdgeBudget <= DriverClosureCap) distanceHistogramDriver(s, edges)
-    else distanceHistogramDistributed(s, edges)
+    distanceHistogramDriver(s, budgetEdges(pins, s, dir))
   }
 
-  /** Edge cap under which the pair-closure BFS runs driver-side. Sized
-    * from COMPUTE, not just memory (ADVICE r19): the all-sources BFS is
-    * O(V·(V+E)) and V ≤ 2E, so worst-case work ≈ 2E·3E = 6E² integer
-    * ops — at the former 2²⁰-edge memory-derived cap that is ~6·10¹²,
-    * a silent driver hang if EdgeBudget were ever raised near it. 2¹³
-    * edges bound the kernel at ~4·10⁸ ops (sub-second on one core)
-    * while staying 2× above any plausible EdgeBudget raise; past it the
-    * distributed pair-frontier fixpoint takes over.
-    * [[distanceHistogramDriver]] re-asserts the bound on the ACTUAL
-    * collected graph, so a misuse fails loudly instead of hanging. */
-  private val DriverClosureCap = 1 << 13
+  /** Edge cap of the driver kernels ([[distanceHistogramDriver]],
+    * [[anfNsDriver]]). Sized from COMPUTE, not just memory (ADVICE r19):
+    * the all-sources BFS is O(V·(V+E)) and V ≤ 2E, so worst-case work ≈
+    * 2E·3E = 6E² integer ops — at the former 2²⁰-edge memory-derived cap
+    * that is ~6·10¹², a silent driver hang if EdgeBudget were ever raised
+    * near it. 2¹³ edges bound the kernel at ~4·10⁸ ops (sub-second on one
+    * core) while staying 2× above [[EdgeBudget]]. Each kernel re-asserts
+    * the bound on the ACTUAL collected graph, so raising the budget past
+    * it fails loudly instead of hanging. */
+  private[graft] val DriverClosureCap = 1 << 13
 
-  /** Driver kernel: exact all-pairs hop histogram of a SMALL edge list
-    * (≤ [[DriverClosureCap]] edges — callers guarantee it). BFS from
-    * every node over an adjacency map, depths capped at [[MaxDist]];
-    * emits the identical schema and integer algebra as the distributed
-    * kernel. */
+  /** Exact all-pairs hop histogram of a SMALL edge list
+    * (≤ [[DriverClosureCap]] edges). BFS from every node over an
+    * adjacency map, depths capped at [[MaxDist]]; emits q201's schema. */
   private[graft] def distanceHistogramDriver(s: SparkSession,
       edges: DataFrame): DataFrame = {
     import scala.collection.mutable
@@ -197,8 +179,8 @@ object LinkPred extends graft.QueryModule {
     // is ≤ ~4·10⁸ integer ops. Fail loudly on a graph the cap's sizing
     // never contemplated rather than hang the driver.
     require(es.length <= DriverClosureCap,
-      s"driver BFS kernel got ${es.length} edges (> $DriverClosureCap); " +
-        "use distanceHistogramDistributed for unbudgeted graphs")
+      s"driver BFS kernel got ${es.length} edges, past its compute cap " +
+        s"$DriverClosureCap; it serves only the $EdgeBudget-edge budget graph")
     val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
     es.foreach { case (a, b) =>
       adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
@@ -246,64 +228,6 @@ object LinkPred extends graft.QueryModule {
     rows.toDF("dist", "n_pairs", "cum_pairs", "n_nodes", "total_pairs",
       "reachable_pairs", "eff_diam_p90", "avg_dist_milli", "converged")
       .orderBy(col("dist"))
-  }
-
-  /** Distributed kernel: the pair-frontier fixpoint (one exchange + one
-    * probe job per BFS round; min-dist aggregate = first discovery). */
-  private[graft] def distanceHistogramDistributed(s: SparkSession,
-      edges: DataFrame): DataFrame = Pins.scoped { pins =>
-    import org.apache.spark.sql.expressions.Window
-    val bidir = pins.pin(edges.select(col("sa").as("a"), col("sb").as("b"))
-      .unionByName(edges.select(col("sb").as("a"), col("sa").as("b"))))
-    var reached = pins.pin(bidir.withColumn("dist", lit(1)))
-    var frontier = reached
-    var converged = false
-    var d = 1
-    while (!converged && d < MaxDist) {
-      d += 1
-      // ONE exchange per round: the budget-bounded adjacency broadcasts
-      // into the expansion, and candidate-dedup + already-reached
-      // suppression + the running union collapse into a single
-      // min-dist aggregate (a candidate that was reached earlier keeps
-      // its smaller dist — the BFS first-discovery invariant as
-      // arithmetic). The lazy checkpoint materializes under the
-      // frontier-count probe job.
-      val expanded = frontier.select(col("a"), col("b").as("m"))
-        .join(broadcast(bidir.select(col("a").as("m"), col("b").as("c"))),
-          Seq("m"))
-        .filter(col("c") =!= col("a"))
-        .select(col("a"), col("c").as("b"), lit(d).as("dist"))
-      val merged = pins.pin(reached.unionByName(expanded)
-        .groupBy(col("a"), col("b")).agg(min(col("dist")).as("dist")), eager = false)
-      val newPairs = merged.filter(col("dist") === d).count()
-      if (newPairs == 0L) converged = true
-      else {
-        frontier = merged.filter(col("dist") === d)
-        reached = merged
-      }
-    }
-    val nNodes = bidir.select(col("a")).distinct().count()
-    val hist = reached.filter(col("a") < col("b"))
-      .groupBy(col("dist")).agg(count(lit(1)).as("n_pairs"))
-    // the remaining algebra runs on ≤ MaxDist rows — catalog-sized, the
-    // single-partition global window is deliberate
-    val wCum = Window.orderBy(col("dist"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val h2 = hist.withColumn("cum_pairs", sum(col("n_pairs")).over(wCum))
-    val summ = h2.agg(sum(col("n_pairs")).as("reachable_pairs"),
-      sum(col("dist") * col("n_pairs")).as("dsum"))
-    val h3 = h2.crossJoin(broadcast(summ))
-    val eff = h3.agg(min(when(col("cum_pairs") * 10 >=
-      col("reachable_pairs") * 9, col("dist"))).as("eff_diam_p90"))
-    h3.crossJoin(broadcast(eff))
-      .select(col("dist"), col("n_pairs"), col("cum_pairs"),
-        lit(nNodes).as("n_nodes"),
-        lit(nNodes * (nNodes - 1L) / 2L).as("total_pairs"),
-        col("reachable_pairs"), col("eff_diam_p90"),
-        expr("(1000 * dsum) div reachable_pairs").as("avg_dist_milli"),
-        lit(converged).as("converged"))
-      .orderBy(col("dist"))
-      .localCheckpoint() // pinned before the scope releases the loop's pins
   }
 
   private lazy val distanceOracle: String = {
@@ -402,40 +326,6 @@ object LinkPred extends graft.QueryModule {
     * ~6.5 % theoretical RSE of a 256-register counter). */
   private val AnfReachBound = 150L
 
-  /** Per-node counter estimate + exact convergence stats of a register
-    * table (v, bucket, mj): one aggregation pass. No 256-grid join —
-    * present buckets always carry mj ≥ 1, so v_zero = m − n_present
-    * and the absent harmonic mass is (m − n_present)·2^57 added in
-    * DECIMAL(38,0). Returns one row (n_regs, sum_mj, n_hat): the first
-    * two are an EXACT convergence probe (registers form a monotone
-    * lattice — any change strictly increases register count or Σmj, so
-    * equality is convergence, no fingerprint collision risk). */
-  private def anfStats(regs: DataFrame): DataFrame = anfStatsBy(regs, Nil)
-
-  /** The same one-pass stats, grouped by `keys` — the paired-round loop
-    * tags two register states and reads BOTH rounds' stats from one job
-    * (r18 verdict item 2: the stats probe was the per-round barrier). */
-  private def anfStatsBy(regs: DataFrame, keys: Seq[String]): DataFrame =
-    regs.groupBy((keys :+ "v").map(col): _*)
-      .agg(count(lit(1)).as("np"), sum(col("mj")).as("smj"),
-        sum(expr(s"CAST(shiftleft(1L, CAST($AnfMaxRho - mj AS INT)) " +
-          "AS DECIMAL(38,0))")).as("sp"))
-      .withColumn("s_dec",
-        col("sp") + expr(s"CAST($AnfM - np AS DECIMAL(38,0)) * " +
-          s"CAST(${BigInt(1) << AnfMaxRho.toInt} AS DECIMAL(38,0))"))
-      .withColumn("raw_est", expr(
-        s"CAST(CAST('$AnfNumer' AS DECIMAL(38,0)) " +
-          "div (CAST(1000000 AS DECIMAL(38,0)) * s_dec) AS BIGINT)"))
-      .withColumn("vz", lit(AnfM) - col("np"))
-      .withColumn("est",
-        when(col("vz") > 0L && col("raw_est") * 2 <= lit(5L * AnfM),
-          expr(s"($AnfM * ($AnfLnMMicro - " +
-            "CAST(round(1000000.0 * ln_shared(vz)) AS BIGINT))) div 1000000"))
-          .otherwise(col("raw_est")))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("np")).as("n_regs"), sum(col("smj")).as("sum_mj"),
-        sum(col("est")).as("n_hat"))
-
   /** The exact q201 histogram, collected once per session and
     * `lineitem.parquet` listing (the table q201's budget edges read)
     * through [[Memo]]: q239's contract columns consume the exact kernel
@@ -474,34 +364,21 @@ object LinkPred extends graft.QueryModule {
     * half-differences of the monotone N, and the effective diameter
     * uses q201's 10·cum ≥ 9·reach rule on the estimated ECDF.
     *
-    * Convergence probe: (register count, Σ mj) — both monotone under
-    * max-merge, so equality round-over-round is EXACT convergence (no
-    * fingerprint collision), and the loop early-exits with
-    * pin-and-release like every fixpoint in this file; post-convergence
-    * rounds would be no-ops, so the padded N tail equals the oracle's
-    * unconditionally-unrolled rounds. */
+    * The register rounds run on the driver ([[anfNsDriver]]): the graph
+    * is the same [[EdgeBudget]] budget as q201's, so its state is a
+    * constant of the budget. Convergence probe: (register count, Σ mj) —
+    * both monotone under max-merge, so equality round-over-round is
+    * EXACT convergence (no fingerprint collision), and the loop exits
+    * early; post-convergence rounds would be no-ops, so the padded N
+    * tail equals the oracle's unconditionally-unrolled rounds. */
   def q239_distance_approx(s: SparkSession, dir: String): DataFrame = Pins.scoped { pins =>
     import s.implicits._
-    val edges = budgetEdges(pins, s, dir)
-    // Budget-bounded register fixpoint path choice (r20) — the q201
-    // componentsAdaptive discipline applied to the OTHER budgeted-graph
-    // fixpoint in this file: EdgeBudget (4000) ≤ DriverClosureCap (2¹³)
-    // selects the driver register kernel (anfNsDriver — every step is
-    // integer or IEEE-deterministic, so it is bit-identical to the
-    // distributed loop; LinkPredSpec asserts it on real budget edges and
-    // synthetic graphs). The distributed loop (anfNsDistributed) remains
-    // the above-cap path, unchanged. Before r20 the 8-round loop paid
-    // ~5 sequential stats-job barriers — the whole wall cost of a
-    // 4000-edge graph (q239 4.7 s official, taskTime 15 s on 32 cores).
-    val (nsRaw, nNodes, converged) =
-      if (EdgeBudget <= DriverClosureCap) anfNsDriver(s, edges)
-      else anfNsDistributed(s, edges)
+    // converged ⇔ some round up to the horizon changed nothing (the
+    // oracle's regs8-vs-regs7 comparison)
+    val (nsRaw, nNodes, converged) = anfNsDriver(s, budgetEdges(pins, s, dir))
     val ns = scala.collection.mutable.ArrayBuffer[Long](nsRaw: _*)
     // stable before the horizon ⇒ remaining rounds are no-ops: pad N
     while (ns.size < MaxDist + 1) ns += ns.last
-    // registers stable by the horizon ⇔ the last probed round changed
-    // nothing (mirrors the oracle's regs8-vs-regs7 comparison)
-    val horizonConverged = converged
     // monotonize (running max), then pair counts as half-differences
     val nMono = ns.scanLeft(Long.MinValue)(math.max).drop(1)
     val cumHat = (1 to MaxDist).map(k => (nMono(k) - nMono(0)) / 2L)
@@ -511,7 +388,7 @@ object LinkPred extends graft.QueryModule {
     val effHat = (1 to MaxDist)
       .find(k => 10L * cumHat(k - 1) >= 9L * reachHat)
       .map(_.toLong).getOrElse(-1L)
-    // exact twin through the memo
+    // the exact q201 histogram, through the memo
     val exact = exactDistance(s, dir)
     val exactByDist = exact.map(t => t._1 -> (t._2, t._3)).toMap
     val reachExact = exact.map(_._3).max
@@ -526,7 +403,7 @@ object LinkPred extends graft.QueryModule {
       (k.toLong, pairsHat(k - 1), cumHat(k - 1),
         exactByDist.get(k.toLong).map(_._1).getOrElse(0L), cumExact,
         nNodes, reachHat, reachExact, errPermille, effHat, effExact,
-        within, horizonConverged)
+        within, converged)
     }
     rows.toDF("dist", "n_pairs_hat", "cum_pairs_hat", "n_pairs_exact",
       "cum_pairs_exact", "n_nodes", "reach_hat", "reach_exact",
@@ -535,27 +412,24 @@ object LinkPred extends graft.QueryModule {
       .orderBy(col("dist"))
   }
 
-  /** Driver-side twin of [[anfNsDistributed]] for the budget-bounded
-    * (≤ [[DriverClosureCap]]-edge) graph: the identical splitmix64
-    * register init, max-merge rounds, DECIMAL-exact per-node estimates
-    * and (n_regs, Σmj) convergence ladder, run over byte arrays on one
-    * core. Compute at the cap: rounds·E·m ≈ 8·2¹³·2·256 ≈ 3·10⁷ byte
-    * maxes plus V·58 BigInt terms per stats pass — milliseconds. Every
-    * operation is integer or IEEE-deterministic double (SharedLnUtil.ln
-    * is the ln_shared kernel itself; math.round equals Spark's HALF_UP
-    * round for these positive micro-nat arguments — LinkPredSpec sweeps
-    * all 255 reachable linear-counting arguments), so the returned
-    * (N-sequence, node count, converged) is bit-identical to the
-    * distributed loop — asserted by LinkPredSpec on the real budget
-    * edges and on synthetic graphs. */
+  /** The HyperANF register rounds of q239 over a SMALL edge list
+    * (≤ [[DriverClosureCap]] edges): splitmix64 register init, max-merge
+    * rounds, DECIMAL-exact per-node estimates and the (n_regs, Σmj)
+    * convergence ladder, run over byte arrays on one core. Returns
+    * (N-sequence up to convergence, node count, converged). Compute at
+    * the cap: rounds·E·m ≈ 8·2¹³·2·256 ≈ 3·10⁷ byte maxes plus V·58
+    * BigInt terms per stats pass — milliseconds. Every operation is
+    * integer or IEEE-deterministic double (SharedLnUtil.ln is the
+    * ln_shared kernel itself), so q239's DuckDB oracle replays it
+    * exactly. */
   private[graft] def anfNsDriver(s: SparkSession, edges: DataFrame)
       : (Seq[Long], Long, Boolean) = {
     val m = AnfM.toInt
     val es = edges.select(col("sa"), col("sb")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     require(es.length <= DriverClosureCap,
-      s"anfNsDriver got ${es.length} edges (> $DriverClosureCap); " +
-        "use the distributed register loop")
+      s"driver ANF kernel got ${es.length} edges, past its compute cap " +
+        s"$DriverClosureCap; it serves only the $EdgeBudget-edge budget graph")
     val bidir = es ++ es.map(e => (e._2, e._1)) // (receiver, owner)
     val nodes = bidir.map(_._1).distinct
     val nV = nodes.length
@@ -574,8 +448,8 @@ object LinkPred extends graft.QueryModule {
       regs(i)(bucket) = mj.toByte
       i += 1
     }
-    // anfStats twin: (Σ present, Σ mj, Σ per-node est) with s_dec built
-    // from an mj histogram (≤57 BigInt terms per node, exact)
+    // (Σ present, Σ mj, Σ per-node est) with s_dec built from an mj
+    // histogram (≤57 BigInt terms per node, exact)
     def stats(rg: Array[Array[Byte]]): (Long, Long, Long) = {
       var nRegs = 0L; var sumMj = 0L; var nHat = 0L
       var v = 0
@@ -633,82 +507,6 @@ object LinkPred extends graft.QueryModule {
       else { ns += nh; cur = next; prev = (nr, sm) }
     }
     (ns.toSeq, nNodes, converged)
-  }
-
-  /** The distributed HyperANF register loop (the above-cap path; the
-    * r18-r19 production form, unchanged except for being factored out of
-    * q239's body): returns (N-sequence up to convergence, node count,
-    * converged). All loop checkpoints are released before returning —
-    * the outputs are scalars. */
-  private[graft] def anfNsDistributed(s: SparkSession, edges: DataFrame)
-      : (Seq[Long], Long, Boolean) = Pins.scoped { pins =>
-    val bidir = pins.pin(edges.select(col("sa").as("a"), col("sb").as("b"))
-      .unionByName(edges.select(col("sb").as("a"), col("sa").as("b"))))
-    var regs = pins.pin(bidir.select(col("a").as("v")).distinct()
-      .select(col("v"), JoinCard.splitmix64(col("v")).as("h"))
-      .select(col("v"), pmod(col("h"), lit(AnfM)).as("bucket"),
-        expr(s"shiftrightunsigned(h, $AnfP)").as("w"))
-      .select(col("v"), col("bucket"),
-        when(col("w") === 0L, lit(AnfMaxRho))
-          .otherwise(lit(AnfMaxRho) - length(bin(col("w")))).as("mj")))
-    val st0 = anfStats(regs).collect().head
-    val nNodes = st0.getLong(0) // one register per node at d = 0
-    var prev = (st0.getLong(0), st0.getLong(1))
-    val ns = scala.collection.mutable.ArrayBuffer[Long](st0.getLong(2))
-    var converged = false
-    var d = 0
-    while (!converged && d < MaxDist) {
-      // TWO max-merge rounds per stats job (r18 verdict item 2): the
-      // remaining cost is sequential job barriers, not register volume
-      // (state is nodes×256 and the graph is EdgeBudget-bounded). Each
-      // round is the same single exchange — broadcast adjacency into
-      // the propagation, own + neighbor registers collapse in one max
-      // aggregate — but the two rounds' convergence stats are TAGGED
-      // and read from ONE aggregate job, and both lazy checkpoints
-      // materialize under it (merged1 is a shared subplan of merged2,
-      // so it computes once). The ns sequence and the (n_regs, Σmj)
-      // convergence ladder are bit-identical to the one-round-per-job
-      // form — only the barrier count halves.
-      def stepOnce(r: DataFrame): DataFrame = {
-        val prop = r
-          .join(broadcast(bidir.select(col("b").as("v"), col("a").as("dst"))),
-            Seq("v"))
-          .select(col("dst").as("v"), col("bucket"), col("mj"))
-        pins.pin(r.unionByName(prop)
-          .groupBy(col("v"), col("bucket")).agg(max(col("mj")).as("mj")), eager = false)
-      }
-      val two = d + 1 < MaxDist
-      val merged1 = stepOnce(regs)
-      val merged2 = if (two) stepOnce(merged1) else merged1
-      val stats =
-        if (two) anfStatsBy(
-          merged1.withColumn("tg", lit(1))
-            .unionByName(merged2.withColumn("tg", lit(2))), Seq("tg"))
-          .collect().map(r => r.getInt(0) -> r).toMap
-        else Map(1 -> anfStats(merged1).collect().head)
-      val s1 = stats(1)
-      val (o1, o2, o3) = if (two) (1, 2, 3) else (0, 1, 2)
-      val c1 = (s1.getLong(o1), s1.getLong(o2))
-      d += 1
-      if (c1 == prev) converged = true
-      else {
-        ns += s1.getLong(o3)
-        regs = merged1
-        prev = c1
-        if (two) {
-          val s2 = stats(2)
-          val c2 = (s2.getLong(o1), s2.getLong(o2))
-          d += 1
-          if (c2 == prev) converged = true
-          else {
-            ns += s2.getLong(o3)
-            regs = merged2
-            prev = c2
-          }
-        }
-      }
-    }
-    (ns.toSeq, nNodes, converged) // driver scalars: the scope releases every loop pin
   }
 
   private lazy val distanceApproxOracle: String = {

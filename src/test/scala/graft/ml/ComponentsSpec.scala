@@ -444,6 +444,41 @@ class ComponentsSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(key2))
   }
 
+  test("dedup stages are deleted when their application ends; another application's stay") {
+    import spark.implicits._
+    import org.apache.commons.io.FileUtils.deleteQuietly
+    val dupText = "the quick brown fox jumps over the lazy dog tonight"
+    val dirs = Seq("web", "wiki").map { src =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-stage-end").toString
+      Seq((1L, dupText, src), (2L, dupText, src),
+        (3L, s"an unrelated document from $src about parquet files", src))
+        .toDF("doc_id", "text", "source")
+        .coalesce(1).write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    val stages = dirs.map { dir =>
+      Similarity.dedupStage(spark, dir).collect()
+      new java.io.File(Similarity.dedupStageDir(spark, dir))
+    }
+    assert(stages.distinct.size == 2 && stages.forall(_.isDirectory), "two stages written")
+    val other = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_dedup_stage_local-0000000000000_dedup_0")
+    assert(other.mkdirs() && new java.io.File(other, "_SUCCESS").createNewFile())
+    try {
+      val cleanup = Similarity.stageCleanup(spark)
+      assert(Similarity.stageCleanup(spark) eq cleanup, "one cleanup per application")
+      cleanup.onApplicationEnd(
+        org.apache.spark.scheduler.SparkListenerApplicationEnd(System.currentTimeMillis()))
+      stages.foreach(st => assert(!st.exists(), s"$st outlived its application"))
+      assert(new java.io.File(other, "_SUCCESS").exists(), "another application's stage stays")
+      // the session itself goes on: the next read writes the stage again
+      assert(Similarity.dedupStage(spark, dirs.head).count() == 3)
+    } finally {
+      deleteQuietly(other)
+      dirs.foreach(d => deleteQuietly(new java.io.File(d)))
+    }
+  }
+
   test("q274 capture-recapture: Chapman arithmetic replays from the " +
     "gated counts; estimator dominance invariants hold") {
     val sf = "/root/testdata/sf0.001"

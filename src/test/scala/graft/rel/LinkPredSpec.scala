@@ -13,163 +13,47 @@ class LinkPredSpec extends AnyFunSuite {
   // measured property) — invariants run at sf0.01 where candidates exist
   private val sf = "/root/testdata/sf0.01"
 
-  test("predictions are non-edges with bounded AA mass (q191)") {
-    val rows = LinkPred.q191_link_prediction(spark, sf).collect()
-    assert(rows.length == 20)
-    // rebuild the budgeted edge set the operator predicts against
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
+  /** The budgeted co-occurrence graph q191, q201 and q239 read: the
+    * top-4000 supplier pairs by co-order count, (w desc, sa, sb). */
+  private def budgetGraph(dir: String): Array[(Long, Long)] = {
+    val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .selectExpr("l_orderkey AS ok", "l_suppkey AS sk").distinct()
-    val edges = li.alias("a").join(li.alias("b"),
-        col("a.ok") === col("b.ok") && col("a.sk") < col("b.sk"))
-      .groupBy(col("a.sk").as("sa"), col("b.sk").as("sb"))
-      .agg(count(lit(1)).as("w"))
-      .orderBy(col("w").desc, col("sa"), col("sb")).limit(4000)
-      .select("sa", "sb").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    rows.foreach { r =>
-      val (u, w, cn, aa) =
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      assert(u < w, "canonical pair order")
-      assert(!edges.contains((u, w)), "predicted pair must be a non-edge")
-      assert(cn >= 1, "distance-2 requires a common neighbor")
-      // each wedge contributes at most 1e9 div round(1e6 ln 2) = 1442
-      assert(aa >= 1 && aa <= cn * 1442L, s"AA mass $aa vs cn=$cn")
-    }
-  }
-
-  test("power-law MLE is coherent (q192)") {
-    val r = LinkPred.q192_powerlaw_fit(spark, sf).head()
-    val (n, dmin, dmax) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    assert(n > 0 && dmin >= 1 && dmax >= dmin)
-    assert(r.getLong(3) >= 1 && r.getLong(3) <= n, "n_at_dmin in [1, n]")
-    if (!r.isNullAt(5)) {
-      assert(r.getLong(5) > 1000, "alpha > 1 whenever some deg > dmin")
-    } else {
-      assert(dmin == dmax, "null alpha only for a degree-regular graph")
-    }
-  }
-
-  test("q201 distance profile: brute-force BFS agrees, identities hold") {
-    val rows = LinkPred.q201_distance_histogram(spark, sf).collect()
-    // rebuild the budgeted graph and BFS it driver-side
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-      .selectExpr("l_orderkey AS ok", "l_suppkey AS sk").distinct()
-    val edges = li.alias("a").join(li.alias("b"),
+    li.alias("a").join(li.alias("b"),
         col("a.ok") === col("b.ok") && col("a.sk") < col("b.sk"))
       .groupBy(col("a.sk").as("sa"), col("b.sk").as("sb"))
       .agg(count(lit(1)).as("w"))
       .orderBy(col("w").desc, col("sa"), col("sb")).limit(4000)
       .select("sa", "sb").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val adj = scala.collection.mutable.Map
-      .empty[Long, scala.collection.mutable.Set[Long]]
-    edges.foreach { case (a, b) =>
-      adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
-      adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
-    }
-    val hist = scala.collection.mutable.Map.empty[Int, Long]
-      .withDefaultValue(0L)
-    for (s0 <- adj.keys) {
+  }
+
+  private val MaxDist = 8
+
+  /** Brute-force BFS: for every node, the hop distance of each node it
+    * reaches within MaxDist hops (itself at 0). */
+  private def distances(edges: Seq[(Long, Long)]): Map[Long, Map[Long, Int]] = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    adj.keys.map { s0 =>
       val seen = scala.collection.mutable.Map(s0 -> 0)
       var fr = List(s0); var d = 0
-      while (fr.nonEmpty && d < 8) {
+      while (fr.nonEmpty && d < MaxDist) {
         d += 1
         fr = fr.flatMap(adj(_)).distinct.filterNot(seen.contains)
         fr.foreach(seen(_) = d)
       }
-      seen.foreach { case (v, dd) => if (v > s0) hist(dd) += 1 }
-    }
-    val got = rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(got == hist.toMap.filter(_._1 >= 1),
-      s"histogram $got vs brute ${hist.toMap}")
-    val n = adj.size.toLong
-    val reach = hist.values.sum
-    rows.foreach { r =>
-      assert(r.getLong(3) == n, "n_nodes")
-      assert(r.getLong(4) == n * (n - 1) / 2, "total_pairs")
-      assert(r.getLong(5) == reach, "reachable_pairs")
-      assert(r.getBoolean(8), "converged at this SF (measured diam 2)")
-      assert(r.getLong(7) ==
-        1000L * hist.map { case (d, c) => d * c }.sum / reach, "avg milli")
-    }
-    // cum_pairs staircase + effective diameter definition
-    val byDist = rows.sortBy(_.getInt(0))
-    var cum = 0L
-    var eff = Int.MaxValue
-    byDist.foreach { r =>
-      cum += r.getLong(1)
-      assert(r.getLong(2) == cum, "cum_pairs")
-      if (10 * cum >= 9 * reach && eff == Int.MaxValue) eff = r.getInt(0)
-    }
-    byDist.foreach(r => assert(r.getInt(6) == eff, "eff_diam_p90"))
+      s0 -> seen.toMap
+    }.toMap
   }
 
-  test("q201 adaptive: driver kernel ≡ distributed fixpoint, bit-identical") {
-    // the componentsAdaptive discipline: the below-cap driver path must
-    // emit exactly the rows the distributed pair-frontier fixpoint emits
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-      .selectExpr("l_orderkey AS ok", "l_suppkey AS sk").distinct()
-    val edges = li.alias("a").join(li.alias("b"),
-        col("a.ok") === col("b.ok") && col("a.sk") < col("b.sk"))
-      .groupBy(col("a.sk").as("sa"), col("b.sk").as("sb"))
-      .agg(count(lit(1)).as("w"))
-      .orderBy(col("w").desc, col("sa"), col("sb")).limit(4000)
-      .select("sa", "sb").localCheckpoint()
-    val drv = LinkPred.distanceHistogramDriver(spark, edges)
-      .collect().map(_.toSeq).toSeq
-    val dist = LinkPred.distanceHistogramDistributed(spark, edges)
-      .collect().map(_.toSeq).toSeq
-    assert(drv == dist, s"adaptive paths diverge:\n$drv\nvs\n$dist")
-  }
+  /** Unordered pairs per hop distance ≥ 1. */
+  private def histogram(dists: Map[Long, Map[Long, Int]]): Map[Int, Long] =
+    dists.toSeq.flatMap { case (s0, seen) => seen.collect { case (v, d) if v > s0 => d } }
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
 
-  test("q239 adaptive: driver register kernel ≡ distributed loop, bit-identical") {
-    // r20: the ANF register loop got the same componentsAdaptive split as
-    // q201 — the driver kernel must reproduce the distributed loop's
-    // N-sequence, node count and convergence flag EXACTLY, on the real
-    // budget edges and on a tiny early-converging synthetic
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-      .selectExpr("l_orderkey AS ok", "l_suppkey AS sk").distinct()
-    val edges = li.alias("a").join(li.alias("b"),
-        col("a.ok") === col("b.ok") && col("a.sk") < col("b.sk"))
-      .groupBy(col("a.sk").as("sa"), col("b.sk").as("sb"))
-      .agg(count(lit(1)).as("w"))
-      .orderBy(col("w").desc, col("sa"), col("sb")).limit(4000)
-      .select("sa", "sb").localCheckpoint()
-    val (nsD, nD, cD) = LinkPred.anfNsDriver(spark, edges)
-    val (nsX, nX, cX) = LinkPred.anfNsDistributed(spark, edges)
-    assert(nsD == nsX, s"N-sequences diverge:\n$nsD\nvs\n$nsX")
-    assert(nD == nX && cD == cX,
-      s"loop contract diverges: driver ($nD,$cD) vs distributed ($nX,$cX)")
-    import spark.implicits._
-    val tiny = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("sa", "sb")
-      .localCheckpoint()
-    val (tD, tnD, tcD) = LinkPred.anfNsDriver(spark, tiny)
-    val (tX, tnX, tcX) = LinkPred.anfNsDistributed(spark, tiny)
-    assert(tD == tX && tnD == tnX && tcD == tcX)
-    assert(tcD, "diameter-2 components must converge inside the horizon")
-  }
-
-  test("q239 HyperANF: driver replay of registers, N(d), envelope") {
-    val rows = LinkPred.q239_distance_approx(spark, sf).collect()
-      .sortBy(_.getLong(0))
-    assert(rows.length == 8)
-    // rebuild the budgeted graph driver-side (q201 test's recipe)
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-      .selectExpr("l_orderkey AS ok", "l_suppkey AS sk").distinct()
-    val edges = li.alias("a").join(li.alias("b"),
-        col("a.ok") === col("b.ok") && col("a.sk") < col("b.sk"))
-      .groupBy(col("a.sk").as("sa"), col("b.sk").as("sb"))
-      .agg(count(lit(1)).as("w"))
-      .orderBy(col("w").desc, col("sa"), col("sb")).limit(4000)
-      .select("sa", "sb").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val adj = scala.collection.mutable.Map
-      .empty[Long, scala.collection.mutable.Set[Long]]
-    edges.foreach { case (a, b) =>
-      adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
-      adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
-    }
-    // the operator's exact hash/register/estimate arithmetic, replayed
+  /** N(d) for d = 0..MaxDist: the operator's hash/register/estimate
+    * arithmetic replayed on every BFS ball. */
+  private def anfNs(dists: Map[Long, Map[Long, Int]]): IndexedSeq[Long] = {
     def smix(v: Long): Long = {
       var z = v + 0x9E3779B97F4A7C15L
       z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -199,30 +83,110 @@ class LinkPredSpec extends AnyFunSuite {
           1000000L
       else raw
     }
-    // BFS balls per radius 0..8 and the exact per-distance histogram
-    val maxD = 8
-    val ns = Array.fill(maxD + 1)(0L)
-    val hist = scala.collection.mutable.Map.empty[Long, Long]
-      .withDefaultValue(0L)
-    for (s0 <- adj.keys) {
-      val seen = scala.collection.mutable.Map(s0 -> 0)
-      var fr = List(s0)
-      var d = 0
-      ns(0) += estOf(seen.keys)
-      while (d < maxD) {
-        d += 1
-        if (fr.nonEmpty) {
-          fr = fr.flatMap(adj(_)).distinct.filterNot(seen.contains)
-          fr.foreach(seen(_) = d)
-        }
-        ns(d) += estOf(seen.keys)
-        if (d >= 1) fr.foreach(v => if (v > s0) hist(d.toLong) += 1)
-      }
+    (0 to MaxDist).map { d =>
+      dists.values.map(seen => estOf(seen.collect { case (v, dv) if dv <= d => v })).sum
     }
+  }
+
+  test("predictions are non-edges with bounded AA mass (q191)") {
+    val rows = LinkPred.q191_link_prediction(spark, sf).collect()
+    assert(rows.length == 20)
+    val edges = budgetGraph(sf).toSet
+    rows.foreach { r =>
+      val (u, w, cn, aa) =
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+      assert(u < w, "canonical pair order")
+      assert(!edges.contains((u, w)), "predicted pair must be a non-edge")
+      assert(cn >= 1, "distance-2 requires a common neighbor")
+      // each wedge contributes at most 1e9 div round(1e6 ln 2) = 1442
+      assert(aa >= 1 && aa <= cn * 1442L, s"AA mass $aa vs cn=$cn")
+    }
+  }
+
+  test("power-law MLE is coherent (q192)") {
+    val r = LinkPred.q192_powerlaw_fit(spark, sf).head()
+    val (n, dmin, dmax) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    assert(n > 0 && dmin >= 1 && dmax >= dmin)
+    assert(r.getLong(3) >= 1 && r.getLong(3) <= n, "n_at_dmin in [1, n]")
+    if (!r.isNullAt(5)) {
+      assert(r.getLong(5) > 1000, "alpha > 1 whenever some deg > dmin")
+    } else {
+      assert(dmin == dmax, "null alpha only for a degree-regular graph")
+    }
+  }
+
+  test("q201 distance profile: brute-force BFS agrees, identities hold") {
+    val rows = LinkPred.q201_distance_histogram(spark, sf).collect()
+    val dists = distances(budgetGraph(sf).toSeq)
+    val hist = histogram(dists)
+    val got = rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(got == hist, s"histogram $got vs brute $hist")
+    val n = dists.size.toLong
+    val reach = hist.values.sum
+    rows.foreach { r =>
+      assert(r.getLong(3) == n, "n_nodes")
+      assert(r.getLong(4) == n * (n - 1) / 2, "total_pairs")
+      assert(r.getLong(5) == reach, "reachable_pairs")
+      assert(r.getBoolean(8), "converged at this SF (measured diam 2)")
+      assert(r.getLong(7) ==
+        1000L * hist.map { case (d, c) => d * c }.sum / reach, "avg milli")
+    }
+    // cum_pairs staircase + effective diameter definition
+    val byDist = rows.sortBy(_.getInt(0))
+    var cum = 0L
+    var eff = Int.MaxValue
+    byDist.foreach { r =>
+      cum += r.getLong(1)
+      assert(r.getLong(2) == cum, "cum_pairs")
+      if (10 * cum >= 9 * reach && eff == Int.MaxValue) eff = r.getInt(0)
+    }
+    byDist.foreach(r => assert(r.getInt(6) == eff, "eff_diam_p90"))
+  }
+
+  test("driver kernels on an early-converging graph agree with the brute-force references") {
+    import spark.implicits._
+    val tiny = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+    val edges = tiny.toDF("sa", "sb")
+    val dists = distances(tiny)
+    val expected = Map(1 -> 3L, 2 -> 1L)
+    assert(histogram(dists) == expected)
+    val rows = LinkPred.distanceHistogramDriver(spark, edges).collect()
+    assert(rows.map(r => r.getInt(0) -> r.getLong(1)).toMap == expected)
+    rows.foreach { r =>
+      assert(r.getLong(3) == 5L, "n_nodes")
+      assert(r.getBoolean(8), "diameter-2 components converge inside the horizon")
+    }
+    val (ns, nNodes, converged) = LinkPred.anfNsDriver(spark, edges)
+    assert(nNodes == 5L && converged)
+    assert(ns.size < MaxDist + 1, "the register loop stops at convergence")
+    val padded = ns ++ Seq.fill(MaxDist + 1 - ns.size)(ns.last)
+    assert(padded == anfNs(dists), s"N(d) $ns vs replay ${anfNs(dists)}")
+  }
+
+  test("driver kernels refuse an edge list past the compute cap") {
+    val big = spark.range(0, LinkPred.DriverClosureCap + 1L)
+      .selectExpr("id AS sa", "id + 1 AS sb")
+    val e1 = intercept[IllegalArgumentException] {
+      LinkPred.distanceHistogramDriver(spark, big)
+    }
+    assert(e1.getMessage.contains("compute cap"))
+    val e2 = intercept[IllegalArgumentException] {
+      LinkPred.anfNsDriver(spark, big)
+    }
+    assert(e2.getMessage.contains("compute cap"))
+  }
+
+  test("q239 HyperANF: driver replay of registers, N(d), envelope") {
+    val rows = LinkPred.q239_distance_approx(spark, sf).collect()
+      .sortBy(_.getLong(0))
+    assert(rows.length == 8)
+    val dists = distances(budgetGraph(sf).toSeq)
+    val hist = histogram(dists)
+    val ns = anfNs(dists)
     val nMono = ns.scanLeft(Long.MinValue)(math.max).drop(1)
-    val cumHat = (1 to maxD).map(k => (nMono(k) - nMono(0)) / 2L)
+    val cumHat = (1 to MaxDist).map(k => (nMono(k) - nMono(0)) / 2L)
     val reachHat = cumHat.last
-    val effHat = (1 to maxD)
+    val effHat = (1 to MaxDist)
       .find(k => 10L * cumHat(k - 1) >= 9L * reachHat)
       .map(_.toLong).getOrElse(-1L)
     val reachExact = hist.values.sum
@@ -231,8 +195,8 @@ class LinkPredSpec extends AnyFunSuite {
       assert(r.getLong(2) == cumHat(k - 1), s"cum_pairs_hat at $k")
       assert(r.getLong(1) == cumHat(k - 1) -
         (if (k == 1) 0L else cumHat(k - 2)), s"n_pairs_hat at $k")
-      assert(r.getLong(3) == hist(k.toLong), s"n_pairs_exact at $k")
-      assert(r.getLong(5) == adj.size.toLong, "n_nodes")
+      assert(r.getLong(3) == hist.getOrElse(k, 0L), s"n_pairs_exact at $k")
+      assert(r.getLong(5) == dists.size.toLong, "n_nodes")
       assert(r.getLong(6) == reachHat, "reach_hat")
       assert(r.getLong(7) == reachExact, "reach_exact")
       assert(r.getLong(8) == 1000L * math.abs(reachHat - reachExact) /
